@@ -89,18 +89,26 @@ object GraftSession {
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.conf.set("spark.sql.ansi.enabled", "false")
-    graft.functions.ImpalaFunctions.registerAll(s)
-    installOptimizerRules(s)
+    if (installed.get(s) != java.lang.Boolean.TRUE) synchronized {
+      if (installed.get(s) != java.lang.Boolean.TRUE) {
+        graft.functions.ImpalaFunctions.registerAll(s)
+        installOptimizerRules(s)
+        graft.discard(installed.put(s, java.lang.Boolean.TRUE))
+      }
+    }
     s
   }
 
-  /** Sessions whose extraOptimizations already carry the engine rules.
-    * The GraftExtensions injectOptimizerRule builder re-invokes
-    * [[installOptimizerRules]] on EVERY optimizer-batches evaluation —
-    * without this weak per-session flag each query would take the
-    * global lock just to discover the rules are already installed.
-    * Weak keys: a dropped session must not be pinned by the guard. */
-  private val rulesInstalled = java.util.Collections.synchronizedMap(
+  /** What each session already carries: absent → nothing, FALSE → the
+    * engine's optimizer rules, TRUE → the rules and the function surface
+    * (registered by [[attach]]). The GraftExtensions injectOptimizerRule
+    * builder re-invokes [[installOptimizerRules]] on EVERY optimizer-
+    * batches evaluation, and every query runs [[attach]] — without this
+    * flag each query would take the global lock to re-install the rules,
+    * and re-register every function with one "replaced a previously
+    * registered function" WARN each. Weak keys: a dropped session must
+    * not be pinned by the guard; a `newSession()` is a new key. */
+  private val installed = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Append the engine's optimizer rules to the session's
@@ -109,8 +117,8 @@ object GraftSession {
     * require; see GraftExtensions). Idempotent; lock-free after the
     * first install per session. */
   def installOptimizerRules(s: SparkSession): Unit =
-    if (rulesInstalled.get(s) == null) synchronized {
-      if (rulesInstalled.get(s) == null) {
+    if (installed.get(s) == null) synchronized {
+      if (installed.get(s) == null) {
         Seq(graft.plans.RangeBucketJoinRewrite, graft.plans.AppxCountDistinctRewrite,
           graft.plans.BoundedLevenshteinRewrite, graft.plans.PartitionKeyScans,
           graft.plans.SmallQueryFastPath)
@@ -119,7 +127,7 @@ object GraftSession {
               s.experimental.extraOptimizations =
                 s.experimental.extraOptimizations :+ r
           }
-        graft.discard(rulesInstalled.put(s, java.lang.Boolean.TRUE))
+        graft.discard(installed.put(s, java.lang.Boolean.FALSE))
       }
     }
 }

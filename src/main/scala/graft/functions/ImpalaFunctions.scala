@@ -165,10 +165,15 @@ object ImpalaFunctions {
     acc.result() ++ SketchAggregates.builders
   }
 
+  /** Registers every builder the session does not already carry. A
+    * session built with [[graft.engine.GraftExtensions]] holds these same
+    * builder instances, and replacing one with itself would only log a
+    * "replaced a previously registered function" WARN. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
+        reg.createOrReplaceTempFunction(name, b, "scala_udf")
     }
   }
 

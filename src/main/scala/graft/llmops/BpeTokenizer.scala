@@ -1,7 +1,7 @@
 package graft.llmops
 
 import graft.QuerySpec
-import graft.llmops.Checkpoints.{obsLong, obsRows, Stageable}
+import graft.llmops.Checkpoints.{obsRows, Stageable}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,12 +9,14 @@ import org.apache.spark.sql.functions._
 /** Distributed BPE tokenizer TRAINING — the merge-table learning loop of
   * Sennrich et al. 2016 ("Neural Machine Translation of Rare Words with
   * Subword Units", the algorithm behind GPT/Llama tokenizers), run as
-  * pure DataFrame algebra. Each round counts adjacent symbol-pair
-  * frequencies across the corpus, picks the single most frequent pair
-  * (deterministic tie-break: count DESC, then the pair lexicographically),
-  * and rewrites every word by greedy LEFT-TO-RIGHT non-overlapping
-  * replacement of that pair — the exact textbook loop, so the learned
-  * merge table is reproducible bit-for-bit on any partitioning.
+  * pure DataFrame algebra. ONE loop, [[BpeTokenizer.trainMerges]]: each
+  * round counts adjacent symbol-pair frequencies across the corpus,
+  * picks up to m NON-INTERACTING winners (deterministic tie-break:
+  * count DESC, then the pair lexicographically), and rewrites every word
+  * by greedy LEFT-TO-RIGHT non-overlapping replacement. At m = 1 that is
+  * the exact textbook loop (q401), so the learned merge table is
+  * reproducible bit-for-bit on any partitioning; m > 1 (q407, q422)
+  * learns K merges in K/m rounds.
   *
   * Scale shape — the decisive trick is the GRAIN: training never touches
   * the corpus again after one groupBy. The working relation is the
@@ -22,22 +24,21 @@ import org.apache.spark.sql.functions._
   * average word length rows (~10⁸·6 at web scale, vs 10¹¹+ corpus
   * tokens), where `freq` carries each word's corpus weight so pair
   * counts stay corpus-exact. Per round: pair counting is a map-side-
-  * combined groupBy; the winner is a TopN (never a global sort); the
-  * rewrite joins the ONE-ROW winner via an explicit broadcast and uses
-  * only windows PARTITIONED BY word — each partition is one word's
-  * symbols, bounded by the longest word's character count, so no tie
-  * block, boilerplate or otherwise, can pin a task (the q383/suffix-
+  * combined groupBy; the winners are a TopN (never a global sort); the
+  * rewrite joins the ≤ m-row winner relation via an explicit broadcast
+  * and uses only windows PARTITIONED BY word — each partition is one
+  * word's symbols, bounded by the longest word's character count, so no
+  * tie block, boilerplate or otherwise, can pin a task (the q383/suffix-
   * array skew discipline). Per-round SYMBOL state is localCheckpoint-ed
-  * and transients released, like the suffix-array doubling loop; the
-  * round's winner is COLLECTED (≤ m rows — the documented O(1)-result
-  * driver probe) and rejoined as a literal relation, so no winner
-  * checkpoint is ever retained and the K-row merge-table artifact is a
-  * local relation.
+  * and its predecessor released, like the suffix-array doubling loop;
+  * the round's winners are read back as ≤ m observed rows and the K-row
+  * merge-table artifact is a local relation, so no winner checkpoint is
+  * ever retained.
   *
   * Greedy left-to-right on "aaaa" with winner (a,a) must yield
   * [aa, aa] — NOT three overlapping matches. Encoded without any
   * per-word UDF: a match CANDIDATE is a position whose (sym, next-sym)
-  * equals the winner; within each maximal run of consecutive candidates
+  * equals a winner; within each maximal run of consecutive candidates
   * the kept matches are the 1st, 3rd, 5th, … (odd row number inside the
   * run — runs delimited by the running count of non-candidates), and a
   * row is consumed when its LEFT neighbour was kept. BpeSpec pins the
@@ -62,13 +63,32 @@ object BpeTokenizer {
     * correctness bound: stopping early is always well-defined, and the
     * loop also stops on its own the round no adjacent pair is left
     * anywhere (every word fully merged), so no corpus can run it off
-    * the end. Real trainings use K≈30k–100k; the loop cost is K·(one
-    * vocab-grain groupBy + one TopN + one broadcast-join rewrite).
-    * The K-SEQUENTIAL envelope this implies (30k–100k driver-barrier
-    * rounds at production K) is what [[trainMergesBatched]] bounds:
-    * its per-round top-m non-interacting batch cuts the round count to
-    * K/m with the SAME per-round plan shape. */
+    * the end. Real trainings use K≈30k–100k; the loop cost is
+    * K/m·(one vocab-grain groupBy + one TopN + one broadcast-join
+    * rewrite), so at production K the round count is bounded by the
+    * batch size m, not by K. */
   private[graft] val Merges = 6
+
+  /** Batch size of q407: merges applied per round. K merges need K/m
+    * rounds. */
+  private[graft] val BatchM = 3
+
+  /** Candidate-pool depth the per-round batch is selected from — a
+    * documented cap: a pair blocked only by candidates BELOW the pool
+    * cut cannot be selected this round (it returns in a later round, so
+    * no merge is ever lost, only deferred). Pool² drives the blocking
+    * self-join: 16² = 256 comparisons, broadcast-trivial. */
+  private[graft] val BatchPool = 16
+
+  /** Batched training rounds for q407: 2 × [[BatchM]] = the same merge
+    * budget as q401's K = 6, in one third the rounds. */
+  private[graft] val BatchRounds = 2
+
+  /** The larger-K budget of q416/q422: rounds × m = 48 merges — 8×
+    * q401's K. */
+  private[graft] val K48Rounds = 6
+  private[graft] val K48M = 8
+  private[graft] val K48Pool = 32
 
   /** Corpus words with total occurrence counts — the ONLY corpus-grain
     * pass in the whole training (one map-side-combinable groupBy). */
@@ -85,7 +105,7 @@ object BpeTokenizer {
     * single character. Character extraction is an explicit
     * sequence/substring transform (not a regex split) so Spark and the
     * DuckDB oracle (`word[i]`) index characters identically. */
-  private def seedSyms(sp: SparkSession): DataFrame =
+  private[graft] def seedSyms(sp: SparkSession): DataFrame =
     wordFreqs(sp)
       .select(col("word"), col("freq"),
         posexplode(expr(
@@ -96,10 +116,9 @@ object BpeTokenizer {
 
   private def wordW = Window.partitionBy(col("word")).orderBy(col("pos"))
 
-  /** Symbol table with each position's right neighbour attached —
-    * consumed by both the pair count and the rewrite, so staged by the
-    * caller. The window partitions by WORD: bounded by the longest
-    * word's length, never a corpus- or vocab-grain partition. */
+  /** Symbol table with each position's right neighbour attached. The
+    * window partitions by WORD: bounded by the longest word's length,
+    * never a corpus- or vocab-grain partition. */
   private[graft] def withNext(syms: DataFrame): DataFrame =
     syms.withColumn("nxt", lead(col("sym"), 1).over(wordW))
 
@@ -107,47 +126,63 @@ object BpeTokenizer {
     * neighbour-attached symbol table — the relation every winner
     * selection ranks. GroupBy is map-side combined; the relation is
     * PAIR-grain (distinct adjacent pairs), far below the symbol grain. */
-  private[graft] def pairCounts(next: DataFrame): DataFrame =
+  private def pairCounts(next: DataFrame): DataFrame =
     next.filter(col("nxt").isNotNull)
       .groupBy(col("sym"), col("nxt")).agg(sum(col("freq")).as("pair_freq"))
       .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
 
-  /** The round's winning pair (l, r, pair_freq) — corpus-weighted count
-    * DESC, ties broken lexicographically on (l, r). Empty iff no word
-    * has ≥ 2 symbols left. GroupBy is map-side combined; the top-1 is
-    * TakeOrdered, not a sort. */
-  private[graft] def roundWinner(next: DataFrame): DataFrame =
-    pairCounts(next)
-      .orderBy(col("pair_freq").desc, col("l"), col("r")).limit(1)
+  /** The round's batch of up to m NON-INTERACTING winners, selected
+    * from the top-`pool` candidate pairs: ranked by corpus-weighted
+    * count DESC then (l, r), a candidate is kept iff NO higher-ranked
+    * candidate in the pool shares a symbol with it (rank-blind blocking
+    * — a pure per-pair predicate over the pool, fully parallel;
+    * kept-aware greedy would chain sequentially). Because kept rules
+    * share no symbol, every position matches at most one rule and all
+    * batch counts/candidates are consistently evaluated against the
+    * ROUND-START state. Returns (l, r, pair_freq, brk) with brk the
+    * 1-based in-batch rank. */
+  private[graft] def batchWinners(next: DataFrame, m: Int, pool: Int): DataFrame = {
+    // TakeOrdered pool, then windows over the ≤pool-row relation only
+    val pooled = pairCounts(next)
+      .orderBy(col("pair_freq").desc, col("l"), col("r")).limit(pool)
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("pair_freq").desc, col("l"), col("r"))))
+    val blockers = pooled.select(col("rk").as("q_rk"), col("l").as("q_l"),
+      col("r").as("q_r"))
+    pooled.join(blockers,
+        col("q_rk") < col("rk") &&
+          (col("q_l") === col("l") || col("q_l") === col("r") ||
+            col("q_r") === col("l") || col("q_r") === col("r")),
+        "left_anti")
+      .orderBy(col("rk")).limit(m)
+      .withColumn("brk",
+        row_number().over(Window.orderBy(col("rk"))).cast("long"))
+      .select(col("l"), col("r"), col("pair_freq"), col("brk"))
+  }
 
-  /** Winner-candidate marking: each position's (sym, nxt) equality-left-
-    * joined against the (≤ m-row, broadcast) winner relation; `cand` = 1
-    * iff the position opens a match. Shared by [[rewriteMarked]] and the
-    * incremental trainer's delta accounting (which also needs the
-    * per-WORD touched flag off the same join). */
-  private[graft] def mark(next: DataFrame, winner: DataFrame): DataFrame =
-    next.join(broadcast(winner.select(col("l"), col("r"))),
-        col("sym") === col("l") && col("nxt") === col("r"), "left")
-      .withColumn("cand", when(col("l").isNotNull, 1L).otherwise(0L))
+  /** The round's winners in [[batchWinners]]' shape; empty iff no word
+    * has ≥ 2 symbols left. At m = 1 the batch is the top-1 pair — rank 1
+    * is never blocked — so a plain TopN replaces the pool window and
+    * blocking anti-join (measurably cheaper per round; BpeSpec pins the
+    * two selections equal). */
+  private[graft] def winners(next: DataFrame, m: Int, pool: Int): DataFrame =
+    if (m == 1)
+      pairCounts(next).orderBy(col("pair_freq").desc, col("l"), col("r"))
+        .limit(1).withColumn("brk", lit(1L))
+    else batchWinners(next, m, pool)
 
-  /** Greedy left-to-right rewrite of every word by the winner relation —
-    * ONE row (the textbook trainer) or a NON-INTERACTING batch of m
-    * (the q407 batched trainer; no two rules share a symbol, so each
-    * position matches at most one rule and candidates of different
-    * rules can never be consecutive — consecutive candidates are always
-    * the same (s, s) rule, which keeps the run-parity algebra exact):
+  /** Greedy left-to-right rewrite of every word by the ≤ m-row,
+    * broadcast winner relation. The winners share no symbol, so each
+    * position matches at most one rule and candidates of different rules
+    * can never be consecutive — consecutive candidates are always the
+    * same (s, s) rule, which keeps the run-parity algebra exact:
     * candidates → run parity → keep odd matches, drop each kept match's
     * right neighbour, renumber. All windows partition by word. An empty
     * winner relation leaves every word untouched (equality left join). */
-  private[graft] def rewrite(next: DataFrame, winner: DataFrame): DataFrame =
-    rewriteMarked(mark(next, winner), Nil)
-
-  /** The rewrite proper, over a [[mark]]-ed relation; `carry` names
-    * extra columns to thread through to the output (the incremental
-    * trainer carries its per-word `touched` flag so the post-rewrite
-    * pair deltas can filter to the touched slice without re-deriving
-    * it). */
-  private def rewriteMarked(m: DataFrame, carry: Seq[String]): DataFrame = {
+  private[graft] def rewrite(next: DataFrame, winner: DataFrame): DataFrame = {
+    val m = next.join(broadcast(winner.select(col("l"), col("r"))),
+        col("sym") === col("l") && col("nxt") === col("r"), "left")
+      .withColumn("cand", when(col("l").isNotNull, 1L).otherwise(0L))
     val g = m.withColumn("grp",
       sum(when(col("cand") === 0, 1L).otherwise(0L)).over(wordW))
     val h = g.withColumn("take",
@@ -155,64 +190,69 @@ object BpeTokenizer {
         row_number().over(Window.partitionBy(col("word"), col("grp"),
           col("cand")).orderBy(col("pos"))) % 2 === 1, 1L)
         .otherwise(0L))
-    val out = h.withColumn("ptake", lag(col("take"), 1, 0L).over(wordW))
+    h.withColumn("ptake", lag(col("take"), 1, 0L).over(wordW))
       .filter(col("ptake") === 0)
       .withColumn("sym2",
         when(col("take") === 1, concat(col("sym"), col("r")))
           .otherwise(col("sym")))
       .withColumn("pos2", row_number().over(wordW).cast("long"))
-    out.select((Seq(col("word"), col("freq"), col("pos2").as("pos"),
-      col("sym2").as("sym")) ++ carry.map(col)): _*)
+      .select(col("word"), col("freq"), col("pos2").as("pos"),
+        col("sym2").as("sym"))
   }
 
-  /** Run the training loop: returns (merge table with 1-based `round`,
-    * final symbol table). Per-round state checkpoint ledger mirrors the
-    * suffix-array loop: each round's symbol table is staged and its
-    * predecessor released. The round's winner is selected INSIDE the
+  /** The training loop: `rounds` rounds of up to `m` merges each,
+    * selected from the top-`pool` pairs ([[winners]]). Returns (merge
+    * table `(round, brk, l, r, pair_freq)` with 1-based `round` and
+    * in-batch rank `brk`, final symbol table). Stops early, recording no
+    * merge, the round no adjacent pair is left.
+    *
+    * Per round ONE execution: the winners are selected INSIDE the
     * rewrite's own execution (the TopN relation joins the rewrite as a
-    * broadcast subtree) and its one row is read back as OBSERVED METRICS
-    * off the round's checkpoint job — ONE execution per round instead of
-    * the r20 shape's two (winner collect + rewrite checkpoint), the same
-    * probe-fusing as the suffix-array loops (r21; guide §2.4 fewer
-    * barriers). The merge table is reconstructed on the driver from the
-    * per-round observations, so it stays a local relation and the loop
-    * still retains ZERO winner checkpoints. */
-  private[graft] def trainMerges(sp: SparkSession,
-                                 rounds: Int = Merges): (DataFrame, DataFrame) = {
+    * broadcast subtree) and read back as an observed collect_list metric
+    * off the round's checkpoint job. The symbol table is staged and its
+    * predecessor released; the merge table is rebuilt on the driver
+    * from the observations, so it stays a local relation and the loop
+    * retains ZERO winner checkpoints. At m = 256, K ≈ 30k merges take
+    * ~120 rounds instead of 30k sequential job rounds.
+    *
+    * Pair counts are recounted every round: delta-maintained counts
+    * measured 1.2–1.3× slower at 48 merges, because the recount's groupBy
+    * is map-side combined and the rewrite scans every symbol anyway. */
+  private[graft] def trainMerges(
+      sp: SparkSession, rounds: Int = Merges, m: Int = 1,
+      pool: Int = BatchPool): (DataFrame, DataFrame) = {
     import sp.implicits._
     var syms = seedSyms(sp).staged
-    val merges = Seq.newBuilder[(Long, String, String, Long)]
+    val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
     var k = 0
     var exhausted = false
     while (k < rounds && !exhausted) {
-      // NOT staged: the lead() window re-evaluates in the rewrite's own
-      // word-partitioned sort (same partition key, one pipeline), so
-      // re-deriving it from the checkpointed symbol table is cheaper
-      // than a third per-round materialization (r20). The winner's
-      // pairCounts subtree re-derives it once more on the broadcast side
-      // of the SAME execution — the same two reads of the checkpoint the
-      // two-execution shape paid, minus one driver barrier.
+      // NOT staged: the winner selection and the rewrite each derive the
+      // lead() column from the checkpointed symbol table in their own
+      // (already word-sorted) pipeline, within ONE execution — cheaper
+      // than a second per-round materialization
       val next = withNext(syms)
       val obs = Observation()
-      val winner = roundWinner(next)
-        .observe(obs, max(col("l")).as("__l"), max(col("r")).as("__r"),
-          max(col("pair_freq")).as("__f"), count(lit(1)).as("__n"))
-      val rewritten = rewrite(next, winner).staged
-      if (obsLong(obs, "__n", 0L) == 0L) {
-        // no adjacent pair anywhere: the rewrite was an identity copy —
-        // release it, keep the previous state, record no merge
-        Checkpoints.unpersist(rewritten)
+      val win = winners(next, m, pool)
+        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
+          col("pair_freq"))).as("__ws"))
+      val rewritten = rewrite(next, win).staged
+      // collect_list order is nondeterministic — brk restores batch rank
+      val batch = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
+      if (batch.isEmpty) {
+        Checkpoints.unpersist(rewritten) // identity copy; keep prior state
         exhausted = true
       } else {
-        merges += ((k + 1L, obs.get("__l").toString,
-          obs.get("__r").toString, obsLong(obs, "__f", 0L)))
+        merges ++= batch.map(w => (k + 1L, w.getAs[Long]("brk"),
+          w.getAs[String]("l"), w.getAs[String]("r"),
+          w.getAs[Long]("pair_freq")))
         Checkpoints.unpersist(syms) // rewritten is eager; input is dead
         syms = rewritten
         k += 1
       }
     }
     val mergeTable = merges.result()
-      .toDF("round", "l", "r", "pair_freq")
+      .toDF("round", "brk", "l", "r", "pair_freq")
     (mergeTable, syms)
   }
 
@@ -395,245 +435,6 @@ object BpeTokenizer {
     TextAnalysis.perSourceCompression(ws, tk)
   }
 
-  // ---------------------------------------------------------------------
-  // q407 — the BATCHED trainer: top-m non-interacting merges per round,
-  // bounding the K-sequential envelope to K/m rounds.
-  // ---------------------------------------------------------------------
-
-  /** Batch size: merges applied per round. K merges need K/m rounds. */
-  private[graft] val BatchM = 3
-
-  /** Candidate-pool depth the per-round batch is selected from — a
-    * documented cap: a pair blocked only by candidates BELOW the pool
-    * cut cannot be selected this round (it returns in a later round, so
-    * no merge is ever lost, only deferred). Pool² drives the blocking
-    * self-join: 16² = 256 comparisons, broadcast-trivial. */
-  private[graft] val BatchPool = 16
-
-  /** Batched training rounds for q407: 2 × [[BatchM]] = the same merge
-    * budget as q401's K = 6, in one third the rounds. */
-  private[graft] val BatchRounds = 2
-
-  /** The round's batch of up to m NON-INTERACTING winners, selected
-    * from the top-[[BatchPool]] candidate pairs: ranked by corpus-
-    * weighted count DESC then (l, r), a candidate is kept iff NO
-    * higher-ranked candidate in the pool shares a symbol with it
-    * (rank-blind blocking — a pure per-pair predicate over the pool,
-    * fully parallel; kept-aware greedy would chain sequentially).
-    * Because kept rules share no symbol, every position matches at most
-    * one rule and all batch counts/candidates are consistently
-    * evaluated against the ROUND-START state — the documented batched-
-    * BPE variant (cf. the m=1 case, which IS the textbook trainer:
-    * rank 1 is never blocked, so the first batch member of round 1
-    * equals q401's first merge). Returns (l, r, pair_freq, brk) with
-    * brk the 1-based in-batch rank. */
-  private[graft] def batchWinners(next: DataFrame, m: Int, pool: Int): DataFrame =
-    batchWinnersFromCounts(pairCounts(next), m, pool)
-
-  /** Batch selection off an ALREADY-COUNTED pair relation — the form the
-    * incremental trainer ([[trainMergesIncremental]]) ranks its staged
-    * delta-maintained counts with (no per-round recount anywhere in its
-    * selection path). */
-  private[graft] def batchWinnersFromCounts(counts: DataFrame, m: Int,
-                                            pool: Int): DataFrame = {
-    // TakeOrdered pool, then windows over the ≤pool-row relation only
-    val pooled = counts
-      .orderBy(col("pair_freq").desc, col("l"), col("r")).limit(pool)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("pair_freq").desc, col("l"), col("r"))))
-    val blockers = pooled.select(col("rk").as("q_rk"), col("l").as("q_l"),
-      col("r").as("q_r"))
-    pooled.join(blockers,
-        col("q_rk") < col("rk") &&
-          (col("q_l") === col("l") || col("q_l") === col("r") ||
-            col("q_r") === col("l") || col("q_r") === col("r")),
-        "left_anti")
-      .orderBy(col("rk")).limit(m)
-      .withColumn("brk",
-        row_number().over(Window.orderBy(col("rk"))).cast("long"))
-      .select(col("l"), col("r"), col("pair_freq"), col("brk"))
-  }
-
-  /** The batched training loop: identical ledger discipline to
-    * [[trainMerges]], but each round applies a batch of up to `m`
-    * non-interacting winners through the SAME [[rewrite]] algebra —
-    * K merges in K/m driver-barrier rounds, the fix for the trainer's
-    * one production-parameter gap (at K ≈ 30k, 30k sequential Spark
-    * job rounds are hours of pure stage latency at ANY corpus size;
-    * m = 256 makes that ~120 rounds). Returns (merge table with
-    * 1-based `round` and in-batch `brk`, final symbol table). */
-  private[graft] def trainMergesBatched(
-      sp: SparkSession, rounds: Int = BatchRounds, m: Int = BatchM,
-      pool: Int = BatchPool): (DataFrame, DataFrame) = {
-    import sp.implicits._
-    var syms = seedSyms(sp).staged
-    val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
-      // NOT staged — same one-materialization-per-round ledger as
-      // [[trainMerges]]: the batch selection and the rewrite each derive
-      // the lead() column from the checkpointed symbol table in their
-      // own (already word-sorted) pipeline, within ONE execution.
-      val next = withNext(syms)
-      // the ≤ m-row batch is selected inside the rewrite's execution
-      // (broadcast subtree) and read back as ONE observed collect_list
-      // metric — no separate winner-collect execution per round (r21)
-      val obs = Observation()
-      val winners = batchWinners(next, m, pool)
-        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
-          col("pair_freq"))).as("__ws"))
-      val rewritten = rewrite(next, winners).staged
-      // collect_list order is nondeterministic — brk restores batch rank
-      val win = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
-      if (win.isEmpty) {
-        Checkpoints.unpersist(rewritten) // identity copy; keep prior state
-        exhausted = true
-      } else {
-        merges ++= win.map(w => (k + 1L, w.getAs[Long]("brk"),
-          w.getAs[String]("l"), w.getAs[String]("r"),
-          w.getAs[Long]("pair_freq")))
-        Checkpoints.unpersist(syms) // rewritten is eager; input is dead
-        syms = rewritten
-        k += 1
-      }
-    }
-    val mergeTable = merges.result()
-      .toDF("round", "brk", "l", "r", "pair_freq")
-    (mergeTable, syms)
-  }
-
-  // ---------------------------------------------------------------------
-  // q416 — the INCREMENTAL trainer: the pair-count relation is staged
-  // across rounds and updated with +/- deltas from only the words the
-  // previous batch rewrote. q407 bounded the round COUNT (K/m); this
-  // bounds per-round COST — the classic incremental-BPE bookkeeping
-  // (Sennrich's reference trainer keeps a pair-statistics dict updated
-  // in place) re-expressed as relational delta maintenance.
-  // ---------------------------------------------------------------------
-
-  /** q416's merge budget: rounds × m = 48 merges — 8× q401's K, the
-    * "larger K" drill point where per-round recount cost separates from
-    * per-round delta cost. */
-  private[graft] val IncRounds = 6
-  private[graft] val IncM = 8
-  private[graft] val IncPool = 32
-
-  /** The batched loop with INCREMENTAL pair-count maintenance. Exactly
-    * [[trainMergesBatched]]'s semantics (same [[batchWinnersFromCounts]]
-    * ranking, same [[rewriteMarked]] algebra — BpeSpec pins the merge
-    * tables equal), but each round's counts come from the staged
-    * pair-count relation of the previous round plus two TOUCHED-SLICE
-    * deltas: −(old pairs of words containing a winner) and +(new pairs
-    * of the same words after the rewrite). Untouched words' pairs are
-    * untouched by the rewrite, so the maintained relation equals a full
-    * recount ALGEBRAICALLY (exact integer +/−; the spec pins the
-    * equality after the full run).
-    *
-    * MEASURED OUTCOME (r18, the reason this is NOT the production
-    * path): the classic incremental trainer's win does not transfer to
-    * the relational formulation. The hypothesis was that the full
-    * recount pays a symbol-grain pass per round where only a shrinking
-    * slice changed; measured at K = 48 (6 rounds × m = 8, BpeDrill,
-    * local[32], warm), the delta loop is the SLOWER one at BOTH ends —
-    * ~1.3× on the 31-word fixture vocab (sf0.1) and ~1.2× on a
-    * synthetic 200k-word vocab (~1.4M-row symbol table; recount ~12.5 s
-    * vs delta ~14.6 s). Two mechanisms: (a) the
-    * recount's groupBy is map-side combined, so its SHUFFLE is already
-    * pair-grain — the full pass the delta scheme saves is one narrow
-    * scan of a cached relation; (b) the rewrite + neighbour windows are
-    * themselves O(symbols) passes every round (identifying candidates
-    * IS a scan without a pair→word index, which a relational plan
-    * cannot maintain without breaking the hash(word) co-partitioning
-    * the window rounds reuse), so the delta bookkeeping ADDS two
-    * touched-slice aggregations, a pair-grain merge, and one extra
-    * checkpoint per round while removing only (a)'s cheap scan. Per-
-    * round cost is dominated by FIXED stage latency at every vocab size
-    * tested (~0.5 s/round at 31 words, ~2 s/round at 200k words for a
-    * 6500× vocab growth) — the production-K axis that actually matters
-    * is the ROUND COUNT, owned by the m-batching (q407). Kept, spec-
-    * pinned and oracle-gated (q416), as the measured-and-documented
-    * alternative.
-    *
-    * The per-word `touched` flag is a word-partitioned window max over
-    * the [[mark]] join (no shuffle on the cached hash(word) layout) and
-    * rides through the rewrite so the +delta filters the ALREADY-
-    * renumbered table without a re-derive.
-    *
-    * Returns (merge table, final symbol table, final maintained counts
-    * — the spec's recount-equality handle). All three are live staged
-    * relations; the caller releases what it does not keep. */
-  private[graft] def trainMergesIncremental(
-      sp: SparkSession, rounds: Int = IncRounds, m: Int = IncM,
-      pool: Int = IncPool): (DataFrame, DataFrame, DataFrame) = {
-    import sp.implicits._
-    // ONE staged relation carries the symbol state per round: the
-    // neighbour-attached table (`next`). The bare symbol table is a
-    // projection of it, so staging both (the trainMergesBatched ledger)
-    // would checkpoint the same rows twice per round.
-    var next = withNext(seedSyms(sp)).staged
-    var counts = pairCounts(next).staged // the maintained relation
-    val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
-      // batch selected inside the marked relation's execution (broadcast
-      // subtree over the staged counts) and read back as one observed
-      // metric — no separate winner-collect execution per round (r21)
-      val obs = Observation()
-      val winners = batchWinnersFromCounts(counts, m, pool)
-        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
-          col("pair_freq"))).as("__ws"))
-      val marked = mark(next, winners)
-        .withColumn("touched",
-          max(col("cand")).over(Window.partitionBy(col("word"))))
-        .staged // the −delta AND the rewrite read it
-      val win = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
-      if (win.isEmpty) {
-        Checkpoints.unpersist(marked) // no winner: round never happened
-        exhausted = true
-      } else {
-        merges ++= win.map(w => (k + 1L, w.getAs[Long]("brk"),
-          w.getAs[String]("l"), w.getAs[String]("r"),
-          w.getAs[Long]("pair_freq")))
-        // −delta: every adjacent pair of the words the batch will
-        // rewrite, at round-START state
-        val negd = marked
-          .filter(col("touched") === 1L && col("nxt").isNotNull)
-          .groupBy(col("sym"), col("nxt"))
-          .agg((-sum(col("freq"))).as("pair_freq"))
-          .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
-        val next2 = withNext(rewriteMarked(marked, carry = Seq("touched")))
-          .staged // the +delta AND the next round both read it
-        // +delta: the same words' pairs AFTER the rewrite
-        val posd = next2
-          .filter(col("touched") === 1L && col("nxt").isNotNull)
-          .groupBy(col("sym"), col("nxt"))
-          .agg(sum(col("freq")).as("pair_freq"))
-          .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
-        // pair-grain merge; a pair whose count reaches 0 drops out (it
-        // re-enters as a fresh row if a later round recreates it)
-        val counts2 = counts.unionByName(negd).unionByName(posd)
-          .groupBy(col("l"), col("r"))
-          .agg(sum(col("pair_freq")).as("pair_freq"))
-          .filter(col("pair_freq") > 0)
-          .staged
-        Checkpoints.unpersist(marked)
-        Checkpoints.unpersist(next)
-        Checkpoints.unpersist(counts)
-        next = next2
-        counts = counts2
-        k += 1
-      }
-    }
-    val mergeTable = merges.result()
-      .toDF("round", "brk", "l", "r", "pair_freq")
-    // the final symbol table is the neighbour/bookkeeping projection of
-    // the live `next` state (both extra columns absent on a zero-round
-    // run, where drop is a no-op)
-    (mergeTable, next.drop("nxt").drop("touched"), counts)
-  }
-
   /** One batched round, unrolled for DuckDB — the same candidate pool,
     * rank-blind blocking, top-m batch, and run-parity rewrite. */
   private def batchedOracleRound(k: Int, m: Int, pool: Int): String = {
@@ -675,10 +476,9 @@ object BpeTokenizer {
 
   /** The full batched-trainer oracle text at an arbitrary (rounds, m,
     * pool) budget — the programmatically-unrolled full-recount replay,
-    * shared VERBATIM by q407 (textbook budget), q416 (the delta
-    * variant at the 48-merge budget) and q422 (the production recount
-    * path at the same 48-merge budget), so no two gates can drift on
-    * the batching semantics. */
+    * shared VERBATIM by q407 (q401's budget) and q416/q422 (the
+    * 48-merge budget), so no two gates can drift on the batching
+    * semantics. */
   private def batchedMergesOracle(rounds: Int, m: Int, pool: Int): String =
     s"""WITH ${(oracleSeed +: (0 until rounds)
         .map(batchedOracleRound(_, m, pool))).mkString(",\n")},
@@ -689,72 +489,44 @@ object BpeTokenizer {
        |       l AS left_sym, r AS right_sym, l || r AS merged, c AS pair_freq
        |FROM merges ORDER BY round, batch_rank""".stripMargin
 
-  /** The batched merge table — q401's artifact shape plus the in-batch
-    * rank. q401 stays the textbook semantics pin; this is the variant
-    * that survives production K (and, per the r18 measurement recorded
-    * on [[trainMergesIncremental]], the PRODUCTION path outright: the
-    * full-recount batched loop measured faster than delta maintenance
-    * at every vocabulary size this container can hold). */
+  /** The batched merge table at q401's budget in one third the rounds —
+    * q401's artifact shape plus the in-batch rank. */
   val q407BpeBatchedMerges: QuerySpec = QuerySpec(
     "q407_bpe_batched_merges",
     batchedMergesOracle(BatchRounds, BatchM, BatchPool)) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
-    val (mergeTable, finalSyms) = trainMergesBatched(sp)
+    val (mergeTable, finalSyms) =
+      trainMerges(sp, rounds = BatchRounds, m = BatchM, pool = BatchPool)
     Checkpoints.unpersist(finalSyms)
-    mergeTable.select(col("round"), col("brk").cast("long").as("batch_rank"),
-      col("l").as("left_sym"), col("r").as("right_sym"),
-      concat(col("l"), col("r")).as("merged"), col("pair_freq"))
-      .orderBy(col("round"), col("batch_rank"))
+    batchedArtifact(mergeTable)
   }
 
-  /** The larger-K incremental drill under the oracle gate: 48 merges
-    * ([[IncRounds]] × [[IncM]] — 8× q401's budget) through the delta-
-    * maintained loop, against the SAME programmatically-unrolled
-    * full-recount oracle at (m = 8, pool = 32). Benched: this is the
-    * delta variant's standing measurement next to q401/q407 — the
-    * number behind the measured-outcome note on
-    * [[trainMergesIncremental]]. */
-  val q416BpeIncrementalMerges: QuerySpec = QuerySpec(
-    "q416_bpe_incremental_merges",
-    batchedMergesOracle(IncRounds, IncM, IncPool)) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val (mergeTable, finalSyms, finalCounts) = trainMergesIncremental(sp)
-    Checkpoints.unpersist(finalSyms)
-    Checkpoints.unpersist(finalCounts)
-    mergeTable.select(col("round"), col("brk").cast("long").as("batch_rank"),
-      col("l").as("left_sym"), col("r").as("right_sym"),
-      concat(col("l"), col("r")).as("merged"), col("pair_freq"))
-      .orderBy(col("round"), col("batch_rank"))
-  }
-
-  /** The PRODUCTION trainer at the 48-merge drill budget: the full-
-    * recount batched loop ([[trainMergesBatched]]) at q416's exact
-    * (rounds = [[IncRounds]], m = [[IncM]], pool = [[IncPool]])
-    * parameters, under the SAME unrolled oracle — the two trainers are
-    * algebraically equal (BpeSpec pins the merge tables), so the gate
-    * text is shared verbatim. This is the query the BENCH set times
-    * (r18 VERDICT: the bench must track the path a production run
-    * takes; q416's delta variant is the measured-slower alternative,
-    * kept oracle-gated for its own correctness but no longer the
-    * family's timing sentinel — a recount-path regression was
-    * previously invisible). */
+  /** The trainer at the 48-merge budget ([[K48Rounds]] × [[K48M]],
+    * pool [[K48Pool]]) under the same unrolled oracle — the bench's
+    * timing sentinel for the larger-K path. */
   val q422BpeBatchedMergesK48: QuerySpec = QuerySpec(
     "q422_bpe_batched_merges_k48",
-    batchedMergesOracle(IncRounds, IncM, IncPool)) { (s, dir) =>
+    batchedMergesOracle(K48Rounds, K48M, K48Pool)) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val (mergeTable, finalSyms) =
-      trainMergesBatched(sp, rounds = IncRounds, m = IncM, pool = IncPool)
+      trainMerges(sp, rounds = K48Rounds, m = K48M, pool = K48Pool)
     Checkpoints.unpersist(finalSyms)
+    batchedArtifact(mergeTable)
+  }
+
+  /** The 48-merge gate under its older name: identical to q422. */
+  val q416BpeIncrementalMerges: QuerySpec =
+    q422BpeBatchedMergesK48.copy(name = "q416_bpe_incremental_merges")
+
+  private def batchedArtifact(mergeTable: DataFrame): DataFrame =
     mergeTable.select(col("round"), col("brk").cast("long").as("batch_rank"),
       col("l").as("left_sym"), col("r").as("right_sym"),
       concat(col("l"), col("r")).as("merged"), col("pair_freq"))
       .orderBy(col("round"), col("batch_rank"))
-  }
 
   // q401 joins the bench headline set: it exercises the iterative
   // checkpointed-loop envelope (like q325/q381) at the vocab grain;
-  // q422 benches the PRODUCTION (full-recount batched) loop at the
-  // 48-merge budget — q416's delta variant stays oracle-gated only
+  // q422 benches the same loop at the 48-merge budget
   val all: Seq[QuerySpec] = Seq(q401BpeMerges.benched, q402BpeCompression,
     q406BpeTrainedEncode, q407BpeBatchedMerges,
     q416BpeIncrementalMerges, q422BpeBatchedMergesK48.benched)

@@ -1,6 +1,9 @@
 package graft.llmops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage hygiene for iterative (fixpoint / bounded-round) dataflows.
   * Every loop that localCheckpoints its per-round state must release the
@@ -31,24 +34,22 @@ private[graft] object Checkpoints {
     * lives; entries vanish with the relation), so the map never grows a
     * long-running job's heap. Test observability only — never read by
     * planning. */
-  private[graft] val stagedProvenance:
-      java.util.Map[org.apache.spark.rdd.RDD[_],
-                    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+  private[graft] val stagedProvenance: java.util.Map[RDD[_], LogicalPlan] =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_],
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
+      new java.util.WeakHashMap[RDD[_], LogicalPlan])
+
+  /** The checkpointed RDD a LogicalRDD leaf scans — the handle both
+    * the provenance map and [[unpersist]] key on (Dataset offers no
+    * public one). */
+  private def rddOf(node: LogicalPlan): Option[RDD[_]] = node match {
+    case l: LogicalRDD => Some(l.rdd)
+    case _ => None
+  }
 
   /** The pre-stage plan behind a (possibly staged) LogicalRDD leaf, if
-    * this JVM staged it. Reflection keeps us off private[sql] API. */
-  private[graft] def provenanceOf(
-      node: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-    if (node.getClass.getName == "org.apache.spark.sql.execution.LogicalRDD") {
-      node.getClass.getMethod("rdd").invoke(node) match {
-        case r: org.apache.spark.rdd.RDD[_] => Option(stagedProvenance.get(r))
-        case _ => None
-      }
-    } else None
+    * this JVM staged it. */
+  private[graft] def provenanceOf(node: LogicalPlan): Option[LogicalPlan] =
+    rddOf(node).flatMap(r => Option(stagedProvenance.get(r)))
 
   /** Materialize a staging point: every pipeline that consumes an
     * intermediate relation more than once stages it through here. */
@@ -59,15 +60,9 @@ private[graft] object Checkpoints {
     val out = if (reliable) df.checkpoint() else df.localCheckpoint()
     // record provenance: the checkpoint is eager, so the source's
     // optimizedPlan is already computed — this is a map put, not a plan
-    out.queryExecution.analyzed.foreach { node =>
-      if (node.getClass.getName == "org.apache.spark.sql.execution.LogicalRDD") {
-        node.getClass.getMethod("rdd").invoke(node) match {
-          case r: org.apache.spark.rdd.RDD[_] =>
-            stagedProvenance.put(r, df.queryExecution.optimizedPlan)
-          case _ => ()
-        }
-      }
-    }
+    out.queryExecution.analyzed.foreach(rddOf(_).foreach { r =>
+      graft.discard(stagedProvenance.put(r, df.queryExecution.optimizedPlan))
+    })
     out
   }
 
@@ -109,15 +104,8 @@ private[graft] object Checkpoints {
 
   /** Releases the block-manager storage behind a localCheckpoint-ed
     * DataFrame (the checkpointed RDD sits inside the plan's LogicalRDD
-    * leaf, which Dataset offers no public handle to — matched by class
-    * name so we stay off private[sql] API). */
+    * leaf). */
   def unpersist(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach { node =>
-      if (node.getClass.getName == "org.apache.spark.sql.execution.LogicalRDD") {
-        node.getClass.getMethod("rdd").invoke(node) match {
-          case r: org.apache.spark.rdd.RDD[_] => r.unpersist(blocking = false)
-          case _ => ()
-        }
-      }
-    }
+    df.queryExecution.analyzed.foreach(
+      rddOf(_).foreach(r => graft.discard(r.unpersist(blocking = false))))
 }

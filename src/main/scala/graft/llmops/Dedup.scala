@@ -1866,8 +1866,8 @@ object Dedup {
   /** One k=2 peel round: degree rollup + two semi-joins. `keep` is NOT
     * staged: both semi-joins consume the SAME degree rollup subtree,
     * whose exchange canonicalizes identically, so ReuseExchange
-    * computes it once per execution (r20; verified via the Profile job
-    * ledger). */
+    * computes it once per execution (verified by counting the jobs
+    * each peel round runs). */
   private[graft] def kCorePeel(edges: org.apache.spark.sql.DataFrame):
       org.apache.spark.sql.DataFrame = {
     val keep = edges.select(col("a").as("doc_id"))

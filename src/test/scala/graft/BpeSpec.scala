@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 /** Pins the distributed BPE trainer (llmops.BpeTokenizer): greedy
   * left-to-right overlap parity, the deterministic tie-break, the
   * empty-winner stop, and the invariant that the symbol table always
   * re-concatenates to the original words — the properties the q401
   * DuckDB oracle relies on matching bit-for-bit. */
-class BpeSpec extends EngineSuite {
+class BpeSpec extends EngineSuite with TimeLimits {
+
+  /** failAfter interrupts the training thread at the deadline. */
+  private implicit val signaler: Signaler = ThreadSignaler
 
   /** A session whose `documents` view is the given (doc_id, text)
     * rows — isolated temp-view registry, shared SparkContext. */
@@ -121,7 +126,7 @@ class BpeSpec extends EngineSuite {
   test("q407 batch is non-interacting: (b,c) is blocked by the " +
     "higher-ranked (a,b) sharing 'b'") {
     val sp = docs("ab ab bc bc")
-    val (merges, _) = llmops.BpeTokenizer.trainMergesBatched(
+    val (merges, _) = llmops.BpeTokenizer.trainMerges(
       sp, rounds = 1, m = 2, pool = 16)
     val m = merges.collect()
     assert(m.length == 1,
@@ -131,7 +136,7 @@ class BpeSpec extends EngineSuite {
 
   test("q407 batched rewrite keeps the greedy overlap parity: aaaa -> [aa, aa]") {
     val sp = docs("aaaa aaa ab")
-    val (merges, finalSyms) = llmops.BpeTokenizer.trainMergesBatched(
+    val (merges, finalSyms) = llmops.BpeTokenizer.trainMerges(
       sp, rounds = 1, m = 2, pool = 16)
     // (a,b) shares 'a' with the winner (a,a): batch of 1
     assert(merges.count() == 1L)
@@ -141,7 +146,7 @@ class BpeSpec extends EngineSuite {
 
   test("q407 packs a full batch of disjoint winners into ONE round") {
     val sp = docs("ab cd ef", "ab cd ef")
-    val (merges, _) = llmops.BpeTokenizer.trainMergesBatched(
+    val (merges, _) = llmops.BpeTokenizer.trainMerges(
       sp, rounds = 1, m = 3, pool = 16)
     val m = merges.collect()
     assert(m.length == 3, s"three disjoint pairs must all merge: ${m.toSeq}")
@@ -156,7 +161,8 @@ class BpeSpec extends EngineSuite {
     // are symbol-disjoint, so the encoder's one-rule-per-round replay
     // commutes with the trainer's simultaneous application
     val sp = QuerySpec.prepared(spark, sfDir)
-    val (bm, bSyms) = llmops.BpeTokenizer.trainMergesBatched(sp)
+    val (bm, bSyms) = llmops.BpeTokenizer.trainMerges(
+      sp, rounds = llmops.BpeTokenizer.BatchRounds, m = llmops.BpeTokenizer.BatchM)
     val learned = bm.select(
       concat_ws(" ", col("l"), col("r")).as("pair"),
       ((col("round") - 1L) * llmops.BpeTokenizer.BatchM + col("brk"))
@@ -177,7 +183,8 @@ class BpeSpec extends EngineSuite {
   test("q407 on the fixture: first batch member = q401's first merge; " +
     "every batch non-interacting; words re-concatenate") {
     val sp = QuerySpec.prepared(spark, sfDir)
-    val (bm, bSyms) = llmops.BpeTokenizer.trainMergesBatched(sp)
+    val (bm, bSyms) = llmops.BpeTokenizer.trainMerges(
+      sp, rounds = llmops.BpeTokenizer.BatchRounds, m = llmops.BpeTokenizer.BatchM)
     val batched = bm.orderBy(col("round"), col("brk")).collect()
     assert(batched.nonEmpty && batched.length <=
       llmops.BpeTokenizer.BatchRounds * llmops.BpeTokenizer.BatchM)
@@ -204,52 +211,33 @@ class BpeSpec extends EngineSuite {
       "every word must re-concatenate from its batched-merge symbols")
   }
 
-  test("q416 incremental == full-recount batched: identical merge table " +
-    "at the q407 parameters on the fixture") {
-    val sp = QuerySpec.prepared(spark, sfDir)
-    val (bm, bSyms) = llmops.BpeTokenizer.trainMergesBatched(sp)
-    val (im, iSyms, iCounts) = llmops.BpeTokenizer.trainMergesIncremental(
-      sp, llmops.BpeTokenizer.BatchRounds, llmops.BpeTokenizer.BatchM,
-      llmops.BpeTokenizer.BatchPool)
-    val b = bm.orderBy(col("round"), col("brk")).collect().toSeq
-    val i = im.orderBy(col("round"), col("brk")).collect().toSeq
-    assert(b == i,
-      s"delta-maintained counts must reproduce the full recount: $b vs $i")
-    // and the final symbol tables agree row-for-row
-    val cols = Seq("word", "freq", "pos", "sym").map(col)
-    val ic = iSyms.select(cols: _*); val bc = bSyms.select(cols: _*)
-    assert(ic.exceptAll(bc).isEmpty && bc.exceptAll(ic).isEmpty)
-    llmops.Checkpoints.unpersist(bSyms)
-    llmops.Checkpoints.unpersist(iSyms)
-    llmops.Checkpoints.unpersist(iCounts)
+  test("at m = 1 the top-1 selection picks the same row as the batch " +
+    "selection (tie-break corpus and fixture seed table)") {
+    for (sp <- Seq(docs("ab ab bc bc"), QuerySpec.prepared(spark, sfDir))) {
+      val next = llmops.BpeTokenizer.withNext(llmops.BpeTokenizer.seedSyms(sp))
+      val pool = llmops.BpeTokenizer.BatchPool
+      val top1 = llmops.BpeTokenizer.winners(next, 1, pool).collect().toSeq
+      val batch = llmops.BpeTokenizer.batchWinners(next, 1, pool).collect().toSeq
+      assert(top1.length == 1 && top1 == batch,
+        s"m = 1 selections diverge: $top1 vs $batch")
+    }
   }
 
-  test("q416 maintained pair counts equal a full recount of the final " +
-    "symbol table after the full multi-round run") {
-    val sp = QuerySpec.prepared(spark, sfDir)
-    val (im, iSyms, iCounts) = llmops.BpeTokenizer.trainMergesIncremental(sp)
-    assert(im.count() >= 2L, "the equality must be exercised past round 1")
-    val full = llmops.BpeTokenizer.pairCounts(
-      llmops.BpeTokenizer.withNext(iSyms))
-    val maintained = iCounts.select(col("l"), col("r"), col("pair_freq"))
-    assert(maintained.exceptAll(full).isEmpty && full.exceptAll(maintained).isEmpty,
-      "the delta-maintained relation drifted from ground truth")
-    llmops.Checkpoints.unpersist(iSyms)
-    llmops.Checkpoints.unpersist(iCounts)
-  }
-
-  test("incremental at m = 1, pool = 1 degenerates to the textbook loop") {
-    val sp = QuerySpec.prepared(spark, sfDir)
-    val (im, iSyms, iCounts) = llmops.BpeTokenizer.trainMergesIncremental(
-      sp, rounds = llmops.BpeTokenizer.Merges, m = 1, pool = 1)
-    val (tm, tSyms) = llmops.BpeTokenizer.trainMerges(sp)
-    val i = im.orderBy(col("round"))
-      .select(col("round"), col("l"), col("r"), col("pair_freq")).collect().toSeq
-    val t = tm.orderBy(col("round")).collect().toSeq
-    assert(i == t, s"m=1 incremental is not the textbook trainer: $i vs $t")
-    llmops.Checkpoints.unpersist(iSyms)
-    llmops.Checkpoints.unpersist(iCounts)
-    llmops.Checkpoints.unpersist(tSyms)
+  test("an empty and an all-single-character corpus end cleanly at " +
+    "m = 1 and m = 3: no merge, seed table untouched") {
+    for (texts <- Seq(Seq.empty[String], Seq("a b c a b")); m <- Seq(1, 3)) {
+      val sp = docs(texts: _*)
+      val seed = llmops.BpeTokenizer.seedSyms(sp)
+      // bounded: an empty-winner round must exit, never wait on a
+      // metric that AQE pruned away
+      val (merges, finalSyms) = failAfter(120.seconds) {
+        llmops.BpeTokenizer.trainMerges(sp, m = m)
+      }
+      assert(merges.count() == 0L, s"texts=$texts m=$m learned a merge")
+      assert(finalSyms.exceptAll(seed).isEmpty &&
+        seed.exceptAll(finalSyms).isEmpty, s"texts=$texts m=$m")
+      llmops.Checkpoints.unpersist(finalSyms)
+    }
   }
 
   /** The q433 frozen drop coordinate, replayed in Scala (a THIRD

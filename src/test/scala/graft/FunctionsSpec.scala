@@ -11,6 +11,23 @@ class FunctionsSpec extends EngineSuite {
     spark.sql(sql).collect().head
   }
 
+  test("attach registers the function surface once per session; a " +
+    "newSession() gets its own") {
+    val s2 = spark.newSession()
+    val reg = s2.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("strleft")
+    discard(reg.dropFunction(id))
+    graft.engine.GraftSession.attach(s2)
+    assert(reg.lookupFunctionBuilder(id).isDefined,
+      "a session's first attach must register its functions")
+    // a second attach on the same session registers nothing: the
+    // dropped function stays dropped (and no function is re-registered
+    // with a "replaced" WARN per query)
+    discard(reg.dropFunction(id))
+    graft.engine.GraftSession.attach(s2)
+    assert(reg.lookupFunctionBuilder(id).isEmpty)
+  }
+
   test("fnv_hash known vectors (FNV-1a 64)") {
     // public FNV-1a test vectors: hash of empty = offset basis; "a"; "abc"
     assert(functions.FnvHashUtil.hashBytes(Array.empty) == 0xcbf29ce484222325L)
