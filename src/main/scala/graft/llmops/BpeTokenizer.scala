@@ -1,8 +1,8 @@
 package graft.llmops
 
 import graft.QuerySpec
-import graft.llmops.Checkpoints.{obsRows, Stageable}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import graft.llmops.Checkpoints.Stageable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -210,7 +210,8 @@ object BpeTokenizer {
     * rewrite's own execution (the TopN relation joins the rewrite as a
     * broadcast subtree) and read back as an observed collect_list metric
     * off the round's checkpoint job. The symbol table is staged and its
-    * predecessor released; the merge table is rebuilt on the driver
+    * predecessor released ([[Checkpoints.iterate]]); the merge table is
+    * rebuilt on the driver
     * from the observations, so it stays a local relation and the loop
     * retains ZERO winner checkpoints. At m = 256, K ≈ 30k merges take
     * ~120 rounds instead of 30k sequential job rounds.
@@ -222,34 +223,25 @@ object BpeTokenizer {
       sp: SparkSession, rounds: Int = Merges, m: Int = 1,
       pool: Int = BatchPool): (DataFrame, DataFrame) = {
     import sp.implicits._
-    var syms = seedSyms(sp).staged
+    // the exhausting round (no winner) rewrites nothing, so its identity
+    // copy is the final table
     val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
+    val (syms, _) = Checkpoints.iterate(seedSyms(sp).staged, rounds) { r =>
       // NOT staged: the winner selection and the rewrite each derive the
       // lead() column from the checkpointed symbol table in their own
       // (already word-sorted) pipeline, within ONE execution — cheaper
       // than a second per-round materialization
-      val next = withNext(syms)
-      val obs = Observation()
-      val win = winners(next, m, pool)
-        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
-          col("pair_freq"))).as("__ws"))
-      val rewritten = rewrite(next, win).staged
+      val next = withNext(r.prev)
+      rewrite(next, r.observe(winners(next, m, pool),
+        collect_list(struct(col("brk"), col("l"), col("r"),
+          col("pair_freq"))).as("__ws")))
+    } { (r, _, observed) =>
       // collect_list order is nondeterministic — brk restores batch rank
-      val batch = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
-      if (batch.isEmpty) {
-        Checkpoints.unpersist(rewritten) // identity copy; keep prior state
-        exhausted = true
-      } else {
-        merges ++= batch.map(w => (k + 1L, w.getAs[Long]("brk"),
-          w.getAs[String]("l"), w.getAs[String]("r"),
-          w.getAs[Long]("pair_freq")))
-        Checkpoints.unpersist(syms) // rewritten is eager; input is dead
-        syms = rewritten
-        k += 1
-      }
+      val batch = observed.rows("__ws").sortBy(_.getAs[Long]("brk"))
+      merges ++= batch.map(w => (r.n.toLong, w.getAs[Long]("brk"),
+        w.getAs[String]("l"), w.getAs[String]("r"),
+        w.getAs[Long]("pair_freq")))
+      batch.nonEmpty
     }
     val mergeTable = merges.result()
       .toDF("round", "brk", "l", "r", "pair_freq")

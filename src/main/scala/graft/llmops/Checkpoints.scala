@@ -1,26 +1,29 @@
 package graft.llmops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage hygiene for iterative (fixpoint / bounded-round) dataflows.
-  * Every loop that localCheckpoints its per-round state must release the
-  * superseded round's blocks once the next round is materialized, or
-  * block-manager storage grows O(rounds) — harmless in a test JVM,
-  * an executor-memory leak on a long-running 100 TB job.
+/** Staging and the one staged-loop primitive for iterative (fixpoint /
+  * bounded-round) dataflows. [[iterate]] owns the per-round loop:
+  *   - each round is staged through [[stage]];
+  *   - a round's observed metrics ride its own checkpoint job and are
+  *     read back here only ([[Observed]]), so a change of the readback
+  *     mechanism is a change at one site;
+  *   - a superseded round is released only AFTER its successor is
+  *     materialized and the stop probe has read both — otherwise
+  *     block-manager storage grows O(rounds), an executor-memory leak on
+  *     a long-running 100 TB job;
+  *   - rounds are retained (`release = false`) only where later rounds or
+  *     the result read every round: the suffix-array rank and chunked-LCP
+  *     loops, whose storage is the shrinking-active-set envelope Σ|active|.
   *
-  * Durability note (the 100 TB story for the whole llmops package): the
-  * corpus-staging pattern throughout (Dedup, Retrieval, CorpusStats, …)
-  * stages through [[Checkpoints.stage]]/`.staged`, which defaults to
-  * `localCheckpoint()` — executor-pinned, lineage-truncated, cheap, and
-  * exactly right at test scope — but flips to RELIABLE checkpoints
+  * Durability: [[stage]] defaults to `localCheckpoint()` (executor-pinned,
+  * lineage-truncated, cheap) and flips to RELIABLE checkpoints
   * (HDFS-backed, lineage-free recovery after executor loss) when the
-  * session sets `spark.graft.stage.reliable=true` and a
-  * `sparkContext.setCheckpointDir` is configured: the one-switch
-  * durability story a multi-hour 1000-executor run needs, with zero
-  * changes at the staging sites. */
+  * session sets `spark.graft.stage.reliable=true` and a checkpoint dir —
+  * one switch for every staging site in the llmops package. */
 private[graft] object Checkpoints {
 
   /** Conf key: "true" + a set checkpoint dir → reliable checkpoints. */
@@ -71,41 +74,76 @@ private[graft] object Checkpoints {
     def staged: DataFrame = stage(df)
   }
 
-  /** A Long observed metric with NULL (empty observed input) mapped to
-    * `default`. Observations ride the checkpoint job that materializes
-    * the observed relation — the r21 fuse that folds per-round
-    * O(1)-result driver probes (`isEmpty`, max-pos, winner rows) into
-    * the job the round already runs, instead of a separate barrier+AQE
-    * execution per probe (guide §2.4: each execution is a cluster-wide
-    * barrier at 100 TB; ~0.2–0.4 s of driver fixed cost each at bench
-    * scale). `Observation.get` blocks until the observed plan's action
-    * completes — always call it AFTER the eager stage()/checkpoint.
-    * A MISSING key (not just a NULL value) also maps to `default`:
-    * when the observed relation materializes empty, AQE's
-    * empty-relation propagation can replace the subtree — CollectMetrics
-    * node included — with an empty LocalRelation, so the metric never
-    * reports; emptiness is exactly what every caller's default
-    * encodes. */
-  def obsLong(obs: org.apache.spark.sql.Observation, key: String,
-              default: Long): Long =
-    obs.get.get(key).flatMap(Option(_)).fold(default) {
+  /** Metrics observed on a staging job — the r21 fuse that folds each
+    * round's O(1)-result driver probe (`isEmpty`, max-pos, winner rows)
+    * into the job the round already runs instead of a separate
+    * barrier + AQE execution. A NULL value (empty observed input) or an
+    * absent key reads as the caller's default. */
+  final class Observed private[Checkpoints] (values: Map[String, Any]) {
+    private def value(key: String): Option[Any] = values.get(key).flatMap(Option(_))
+
+    def long(key: String, default: Long): Long = value(key).fold(default) {
       case l: java.lang.Long => l.longValue
       case other => other.toString.toLong
     }
 
-  /** The observed rows of a collect_list(struct(…)) metric — empty when
-    * the observed relation was empty (including the AQE-pruned case
-    * [[obsLong]] documents). */
-  def obsRows(obs: org.apache.spark.sql.Observation,
-              key: String): Seq[org.apache.spark.sql.Row] =
-    obs.get.get(key).flatMap(Option(_))
-      .map(_.asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]].toSeq)
-      .getOrElse(Seq.empty)
+    /** The rows of a collect_list(struct(…)) metric. */
+    def rows(key: String): Seq[Row] = value(key)
+      .fold(Seq.empty[Row])(_.asInstanceOf[scala.collection.Seq[Row]].toSeq)
+  }
 
-  /** Releases the block-manager storage behind a localCheckpoint-ed
-    * DataFrame (the checkpointed RDD sits inside the plan's LogicalRDD
-    * leaf). */
+  /** `Observation.get` blocks until the observed plan's action completes:
+    * only ever call this after the eager [[stage]] that runs it. */
+  private def readback(obs: Option[Observation]): Observed =
+    new Observed(obs.fold(Map.empty[String, Any])(_.get))
+
+  /** [[stage]] with `metrics` observed on the staging job itself. */
+  def stageObserved(df: DataFrame, metric: Column,
+                    metrics: Column*): (DataFrame, Observed) = {
+    val obs = Observation()
+    (stage(df.observe(obs, metric, metrics: _*)), readback(Some(obs)))
+  }
+
+  /** One round of [[iterate]]: the state it refines and its 1-based number. */
+  final class Round private[Checkpoints] (val prev: DataFrame, val n: Int) {
+    private[Checkpoints] var observation: Option[Observation] = None
+
+    /** `df` with `metrics` observed on this round's checkpoint job — at
+      * most once per round, and `df` must feed the returned relation. */
+    def observe(df: DataFrame, metric: Column, metrics: Column*): DataFrame = {
+      require(observation.isEmpty, s"round $n observes twice")
+      observation = Some(Observation())
+      df.observe(observation.get, metric, metrics: _*)
+    }
+  }
+
+  /** The staged loop: round n = 1, 2, … stages `step` over the previous
+    * state (`init` first) and then asks `more(round, next, observed)`;
+    * the round where `more` is false is the last, and none runs past
+    * `maxRounds` (≤ 0 returns `init`). With `release`, every superseded
+    * state — `init` included, so it must not be a view over a checkpoint
+    * still needed elsewhere — is released after `more` returns. Returns
+    * the last state and the number of rounds run. */
+  def iterate(init: DataFrame, maxRounds: Int, release: Boolean = true)(
+      step: Round => DataFrame)(
+      more: (Round, DataFrame, Observed) => Boolean): (DataFrame, Int) = {
+    @annotation.tailrec
+    def loop(prev: DataFrame, n: Int): (DataFrame, Int) =
+      if (n >= maxRounds) (prev, n)
+      else {
+        val round = new Round(prev, n + 1)
+        val next = stage(step(round))
+        val goOn = more(round, next, readback(round.observation))
+        if (release) unpersist(prev)
+        if (goOn) loop(next, n + 1) else (next, n + 1)
+      }
+    loop(init, 0)
+  }
+
+  /** Releases the block-manager storage behind a checkpointed DataFrame
+    * (the RDD inside the plan's LogicalRDD leaf) — not via `RDD.unpersist`,
+    * which WARNs "lineage has been truncated" for every locally
+    * checkpointed RDD, the very point of staging. */
   def unpersist(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach(
-      rddOf(_).foreach(r => graft.discard(r.unpersist(blocking = false))))
+    df.queryExecution.analyzed.foreach(rddOf(_).foreach(GraftShims.unpersistRDD))
 }

@@ -236,10 +236,10 @@ object Clustering {
     QuerySpec("q228_embed_pca_axis", oracle) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val e = vecs(sp).staged // consumed by both rounds
-      var w = sp.range(1)
+      val w0 = sp.range(1)
         .select(expr("transform(sequence(0, 63), i -> CAST(0.125 AS DOUBLE))").as("wv"))
-      for (_ <- 1 to 2) {
-        val dots = e.join(broadcast(w), lit(true))
+      val (w, _) = Checkpoints.iterate(w0, 2) { r =>
+        val dots = e.join(broadcast(r.prev), lit(true))
           .select(col("vec_id"), col("v"),
             expr("aggregate(zip_with(v, wv, (a, b) -> a * b), CAST(0.0 AS DOUBLE), (acc, p) -> acc + p)")
               .as("dot"))
@@ -247,14 +247,13 @@ object Clustering {
           .select(col("dot"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy(col("pos"))
           .agg(sum((col("x") * col("dot")).cast("decimal(27,18)")).cast("double").as("m"))
-        w = sums
+        sums
           .agg(expr("transform(sort_array(collect_list(struct(pos, m))), s -> s.m)").as("raw"))
           .select(expr(
             """transform(raw, x -> x / sqrt(
               |  aggregate(transform(raw, y -> y * y), CAST(0.0 AS DOUBLE), (acc, p) -> acc + p)))""".stripMargin)
             .as("wv"))
-          .staged
-      }
+      } { (_, _, _) => true }
       w.select(posexplode(col("wv")).as(Seq("pos", "x")))
         .withColumn("sgn",
           first(when(col("x") < 0, -1.0).otherwise(1.0))

@@ -223,6 +223,18 @@ object Dedup {
       .filter(col("j") >= 0.8)
   }
 
+  /** The near-dup graph as directed `(src, dst)` edges, both directions —
+    * the edge relation of the graph loops (q215, q220, q244, q395).
+    * Staged: the pairs feed both directions, and the edges feed every
+    * round. */
+  private def nearDupEdges(sp: SparkSession): DataFrame = {
+    val pairs = nearDupJaccard(sp)
+      .select(col("doc_id_a"), col("doc_id_b")).staged
+    pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+      .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
+      .staged
+  }
+
   /** The DuckDB-side exact all-pairs grounding of [[nearDupJaccard]]:
     * CTEs `g` (word-3-gram shingle sets) and `np` (verified pairs). */
   private val nearDupOracleCtes =
@@ -727,10 +739,6 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
-  /** See [[Checkpoints.unpersist]] — shared by every fixpoint loop. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Checkpoints.unpersist(df)
-
   /** Connected components by min-label propagation WITH POINTER DOUBLING,
     * iterated to fixpoint: each round every node adopts the smallest of
     * (its own label, its neighbors' labels, its label's label). The
@@ -745,24 +753,22 @@ object Dedup {
     * components, and the loop still stops only when a round changes zero
     * labels (a fixed round count would silently under-merge). Two joins
     * + one groupBy per round plus an O(1)-result convergence probe;
-    * labels are localCheckpoint-ed so lineage stays flat, and each
-    * round's superseded checkpoint is unpersisted once the next one is
-    * materialized, so block-manager storage stays O(1) in the round
-    * count. */
+    * labels are staged per round so lineage stays flat, and each
+    * round's superseded checkpoint is released once the next one is
+    * materialized ([[Checkpoints.iterate]]), so block-manager storage
+    * stays O(1) in the round count. */
   def connectedComponents(edges: DataFrame): DataFrame =
     connectedComponentsWithRounds(edges)._1
 
   /** [[connectedComponents]] plus the number of rounds the fixpoint loop
     * ran — exposed so tests can pin the O(log diameter) bound. */
   def connectedComponentsWithRounds(edges: DataFrame): (DataFrame, Int) = {
-    var labels = edges.select(col("src").as("doc_id"), col("src").as("cluster"))
+    val init = edges.select(col("src").as("doc_id"), col("src").as("cluster"))
       .unionAll(edges.select(col("dst").as("doc_id"), col("dst").as("cluster")))
       .groupBy("doc_id").agg(min("cluster").as("cluster"))
       .staged
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
+    Checkpoints.iterate(init, Int.MaxValue) { r =>
+      val labels = r.prev
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
         .select(col("src").as("doc_id"), col("cluster"))
@@ -772,17 +778,15 @@ object Dedup {
         .join(labels.select(col("doc_id").as("cluster"),
           col("cluster").as("grand")), Seq("cluster"))
         .select(col("doc_id"), col("grand").as("cluster"))
-      val next = labels.unionAll(viaNeighbor).unionAll(viaParent)
+      labels.unionAll(viaNeighbor).unionAll(viaParent)
         .groupBy("doc_id").agg(min("cluster").as("cluster"))
-        .staged
-      converged = next
-        .join(labels.withColumnRenamed("cluster", "prev"), Seq("doc_id"))
+    } { (r, next, _) =>
+      // not converged while some label changed
+      !next
+        .join(r.prev.withColumnRenamed("cluster", "prev"), Seq("doc_id"))
         .filter(col("cluster") =!= col("prev"))
         .isEmpty
-      unpersistCheckpoint(labels)
-      labels = next
     }
-    (labels, rounds)
   }
 
   /** Near-duplicate clusters: [[connectedComponents]] over the verified
@@ -1293,43 +1297,59 @@ object Dedup {
          |ORDER BY pr_e6 DESC, doc_id LIMIT 20""".stripMargin) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val nodes = sp.table("documents").select(col("doc_id"))
-      // localCheckpoint: pairs feed both edge directions; edges feed the
-      // degree aggregate and every round's contribution join
-      val pairs = nearDupJaccard(sp)
-        .select(col("doc_id_a"), col("doc_id_b")).staged
-      val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-        .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-        .staged
+      val edges = nearDupEdges(sp)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-      var pr = nodes.select(col("doc_id"), lit(1000000L).as("pr"))
-      for (_ <- 1 to 3) {
+      val (pr, _) = Checkpoints.iterate(
+          nodes.select(col("doc_id"), lit(1000000L).as("pr")), 3) { r =>
+        val pr = r.prev
         val contrib = pr.join(deg, pr("doc_id") === deg("src"))
           .select(col("src"), expr("pr DIV dg").as("c"))
           .join(edges, Seq("src"))
           .groupBy(col("dst")).agg(sum(col("c")).as("ss"))
-        pr = nodes.join(contrib, nodes("doc_id") === contrib("dst"), "left")
+        nodes.join(contrib, nodes("doc_id") === contrib("dst"), "left")
           .select(col("doc_id"),
             (lit(150000L) + expr("(85 * coalesce(ss, 0L)) DIV 100")).as("pr"))
-          .staged
-      }
+      } { (_, _, _) => true }
       pr.orderBy(col("pr").desc, col("doc_id")).limit(20)
         .select(col("doc_id"), col("pr").as("pr_e6"))
     }
   }
+
+  /** `rounds` of synchronous label propagation: each round every
+    * still-unlabeled node adopts the label most of its labeled `edges`
+    * neighbors carry (count DESC, label ASC — a total order, so the
+    * result is deterministic at any parallelism). `seeds` and the
+    * result are `(doc_id, label)`. Scale shape: each round is one
+    * edge-keyed shuffle (votes) + a rank window keyed on the
+    * destination node (group = candidate labels, bounded by label
+    * cardinality); label state is staged per round and the superseded
+    * round released ([[Checkpoints.iterate]]). */
+  private def labelPropagation(edges: DataFrame, seeds: DataFrame,
+                               rounds: Int): DataFrame =
+    Checkpoints.iterate(seeds, rounds) { r =>
+      val labels = r.prev
+      val votes = edges
+        .join(labels.select(col("doc_id").as("src"), col("label")), "src")
+        .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
+        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
+      val adopted = votes
+        .withColumn("rn", row_number().over(win))
+        .filter(col("rn") === 1)
+        .select(col("dst").as("doc_id"), col("label"))
+      labels.unionByName(adopted)
+    } { (_, _, _) => true }._1
 
   /** Two-round synchronous label propagation over the near-dup graph —
     * the semi-supervised step that spreads a small set of trusted
     * source labels (here: every 3rd doc seeds its own `source`) to
     * unlabeled neighbors by majority vote, the cheap cluster-labeling
     * pass curation uses between CC ([[q79DedupClusters]]) and a real
-    * classifier. SYNCHRONOUS rounds + a total-order vote (count DESC,
-    * label ASC) make the fixpoint deterministic at any parallelism —
-    * asynchronous LPA is famously order-dependent; this one is
-    * replayed round-for-round by the oracle. Scale shape: each round
-    * is one edge-keyed shuffle (votes) + a rank window keyed on the
-    * destination node (group = candidate labels, bounded by label
-    * cardinality); label state checkpoints per round with the q79
-    * superseded-state release. */
+    * classifier. SYNCHRONOUS rounds + a total-order vote make the
+    * fixpoint deterministic at any parallelism — asynchronous LPA is
+    * famously order-dependent; this one is replayed round-for-round by
+    * the oracle ([[labelPropagation]]). */
   val q220LabelPropagation: QuerySpec = {
     def roundSql(prev: String): String =
       s"""SELECT doc_id, label FROM $prev
@@ -1354,30 +1374,12 @@ object Dedup {
          |l2 AS (${roundSql("l1")})
          |SELECT doc_id, label FROM l2 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      val pairs = nearDupJaccard(sp)
-        .select(col("doc_id_a"), col("doc_id_b")).staged
-      val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-        .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-        .staged
-      var labels = sp.table("documents")
+      val edges = nearDupEdges(sp)
+      val seeds = sp.table("documents")
         .filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("source").as("label"))
         .staged
-      for (_ <- 1 to 2) {
-        val votes = edges
-          .join(labels.select(col("doc_id").as("src"), col("label")), "src")
-          .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
-        val adopted = votes
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") === 1)
-          .select(col("dst").as("doc_id"), col("label"))
-        val next = labels.unionByName(adopted).staged
-        labels = next
-      }
-      labels.orderBy(col("doc_id"))
+      labelPropagation(edges, seeds, rounds = 2).orderBy(col("doc_id"))
     }
   }
 
@@ -1532,28 +1534,12 @@ object Dedup {
          |FROM deg LEFT JOIN intra ON deg.label = intra.label CROSS JOIN m
          |ORDER BY deg.label""".stripMargin) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      val pairs = nearDupJaccard(sp)
-        .select(col("doc_id_a"), col("doc_id_b")).staged
-      val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-        .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-        .staged
-      var labels = sp.table("documents")
+      val edges = nearDupEdges(sp)
+      val seeds = sp.table("documents")
         .filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("source").as("label"))
         .staged
-      for (_ <- 1 to 2) {
-        val votes = edges
-          .join(labels.select(col("doc_id").as("src"), col("label")), "src")
-          .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
-        val adopted = votes
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") === 1)
-          .select(col("dst").as("doc_id"), col("label"))
-        labels = labels.unionByName(adopted).staged
-      }
+      val labels = labelPropagation(edges, seeds, rounds = 2)
       val mDf = edges.agg((count(lit(1)) / 2).as("m"))
       val la = labels.select(col("doc_id").as("src"), col("label"))
       val lb = labels.select(col("doc_id").as("dst"), col("label").as("label_b"))
@@ -1902,7 +1888,7 @@ object Dedup {
          |FROM (SELECT a AS doc_id FROM e6 UNION ALL SELECT b FROM e6) n
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      var e = nearDupJaccard(sp)
+      val e0 = nearDupJaccard(sp)
         .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
         .staged
       // ONE materialization per peel round. Chaining TWO rounds per
@@ -1915,10 +1901,8 @@ object Dedup {
       // RankStatsSpec still pins the chained≡sequential equality and
       // the degree-rollup exchange reuse (the ADVICE-r20 invariant this
       // round's shape relies on).
-      for (_ <- 1 to 6) {
-        val peeled = kCorePeel(e).staged
-        Checkpoints.unpersist(e) // peeled is eager; the input round is dead
-        e = peeled
+      val (e, _) = Checkpoints.iterate(e0, 6)(r => kCorePeel(r.prev)) {
+        (_, _, _) => true
       }
       e.select(col("a").as("doc_id")).unionAll(e.select(col("b").as("doc_id")))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("core_deg"))
@@ -2029,27 +2013,17 @@ object Dedup {
        |ORDER BY harmonic_e6 DESC, doc_id
        |LIMIT 20""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
-    val pairs = nearDupJaccard(sp)
-      .select(col("doc_id_a"), col("doc_id_b")).staged
-    val edges = pairs
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      .unionByName(pairs.select(col("doc_id_b").as("src"),
-        col("doc_id_a").as("dst")))
-      .staged
+    val edges = nearDupEdges(sp)
     val lm = sp.table("documents").filter(col("doc_id") % 25 === 0)
       .select(col("doc_id"))
-    var reach = lm.select(col("doc_id").as("l"), col("doc_id").as("v"),
-      lit(0).as("d")).staged
-    for (r <- 1 to 3) {
-      val frontier = reach.filter(col("d") === r - 1)
+    val (reach, _) = Checkpoints.iterate(lm.select(col("doc_id").as("l"),
+        col("doc_id").as("v"), lit(0).as("d")).staged, 3) { r =>
+      val frontier = r.prev.filter(col("d") === r.n - 1)
       val expand = frontier.join(edges, col("v") === col("src"))
-        .select(col("l"), col("dst").as("v"), lit(r).as("d"))
-      val prev = reach
-      reach = reach.unionByName(expand)
+        .select(col("l"), col("dst").as("v"), lit(r.n).as("d"))
+      r.prev.unionByName(expand)
         .groupBy(col("l"), col("v")).agg(min(col("d")).as("d"))
-        .staged
-      Checkpoints.unpersist(prev)
-    }
+    } { (_, _, _) => true }
     reach.groupBy(col("v").as("doc_id"))
       .agg(sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_landmarks"),
         sum(when(col("d") === 1, 1000000L).when(col("d") === 2, 500000L)

@@ -3,7 +3,7 @@ package graft.llmops
 import graft.QuerySpec
 import graft.llmops.Checkpoints.Stageable
 import graft.operators.Prefix
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed suffix-array construction and the duplicate-text
@@ -91,8 +91,6 @@ object SuffixArray {
     math.max(SeedShift,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(maxLen - 1L, 1L)))
 
-  import Checkpoints.obsLong
-
   /** Tokens with order-preserving dictionary ids: (doc_id, pos, wid)
     * where `wid` is the 1-based rank of the word in the SORTED distinct
     * vocabulary — so ranking id sequences is EXACTLY ranking word
@@ -170,16 +168,15 @@ object SuffixArray {
       .withColumn("pre", collect_list(col("wid")).over(wPre))
       .select(col("doc_id"), col("pos"), col("pre"))
       .staged
-    // maxLen (round-count bound) and the round-0 active size observed on
-    // the checkpoint job itself — two driver probes fused away (r21)
-    val obs = Observation()
     val (ranked, parts) = Prefix.globalRankTiesWithCountsStaged(
       sufs, Seq(col("pre")), "rank", "gs")
-    val seed = ranked
-      .select(col("doc_id"), col("pos"), col("rank"), col("gs"))
-      .observe(obs, max(col("pos")).as("__maxpos"),
-        sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__nactive"))
-      .staged // read by the settled/active filters and every round's lookup
+    // maxLen (round-count bound) and the round-0 active size observed on
+    // the checkpoint job itself — two driver probes fused away (r21); the
+    // seed is read by the settled/active filters and every round's lookup
+    val (seed, observed) = Checkpoints.stageObserved(
+      ranked.select(col("doc_id"), col("pos"), col("rank"), col("gs")),
+      max(col("pos")).as("__maxpos"),
+      sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__nactive"))
     Checkpoints.unpersist(sufs) // the ranked seed is eager; input is dead
     // the rank pass's internal range partition still carries the FULL
     // 2^SeedShift-id prefix arrays — the widest retained relation of
@@ -187,7 +184,7 @@ object SuffixArray {
     // per build left behind otherwise, compounding per query in a
     // multi-query JVM / per release job on a long-lived cluster)
     Checkpoints.unpersist(parts)
-    (seed, obsLong(obs, "__maxpos", 1L), obsLong(obs, "__nactive", 0L))
+    (seed, observed.long("__maxpos", 1L), observed.long("__nactive", 0L))
   }
 
   private def suffixRanks(seed: DataFrame, rounds: Int,
@@ -196,16 +193,19 @@ object SuffixArray {
     // settled in it forever, so none is ever released; total storage
     // is n + Σ|active_k| ≈ n·(1+ε), vs rounds·n for a re-rank-all
     // loop. (A row re-ranked in round k+1 leaves its round-k copy
-    // dead, but dead mass is bounded by the same Σ|active|; per-round
-    // transients are released as soon as their successor materializes.)
-    var settled = seed.filter(col("gs") === 1)
-      .select(col("doc_id"), col("pos"), col("rank"))
-    var active = seed.filter(col("gs") > 1)
-      .select(col("doc_id"), col("pos"), col("rank"))
-    var nActive = nActive0 // maintained by each round's observed metric
-    var k = SeedShift // context 2^SeedShift already covered by the seed
-    while (k < rounds && nActive > 0) { // probe fused into the round's job
+    // dead, but dead mass is bounded by the same Σ|active|.)
+    def settledOf(ranks: DataFrame): DataFrame = ranks
+      .filter(col("gs") === 1).select(col("doc_id"), col("pos"), col("rank"))
+    def activeOf(ranks: DataFrame): DataFrame = ranks
+      .filter(col("gs") > 1).select(col("doc_id"), col("pos"), col("rank"))
+    val settled = scala.collection.mutable.ListBuffer(settledOf(seed))
+    // context 2^SeedShift is already covered by the seed, and each round
+    // multiplies it by 4; the active-set probe rides each round's job
+    val maxRounds = if (nActive0 > 0) (rounds - SeedShift + 1) / 2 else 0
+    val (last, _) = Checkpoints.iterate(seed, maxRounds, release = false) { r =>
+      val k = SeedShift + 2 * (r.n - 1)
       val shift = 1L << k
+      val active = activeOf(r.prev)
       // RADIX-4 round: the ranks 2^k, 2·2^k and 3·2^k words later attach
       // in ONE pass, so each round multiplies the resolved context by 4
       // — two doubling rounds fused into one driver-barrier execution
@@ -224,7 +224,7 @@ object SuffixArray {
       // joins, a third of the exchanges) and the pivot back to one row
       // per suffix reuses the join's hash(doc, pos) partitioning, so it
       // adds NO exchange. No per-row window anywhere.
-      val lookup = settled.unionByName(active)
+      val lookup = settled.reduce(_.unionByName(_)).unionByName(active)
       val arms = Seq(1, 2, 3).map(i => lookup.select(col("doc_id"),
           (col("pos") - shift * i).as("pos"), lit(i).as("__a"),
           col("rank").as("__r")))
@@ -243,21 +243,15 @@ object SuffixArray {
       // measurement; the r16 staging predated the single-execution
       // shape). The next round's active size rides the checkpoint job
       // as an observed metric — no per-round isEmpty execution (r21).
-      val obs = Observation()
-      val refined = joined
+      r.observe(joined
         .join(refineBlocks(joined), Seq("r1", "r2", "r3", "r4"))
-        .select(col("doc_id"), col("pos"), col("rank"), col("gs"))
-        .observe(obs, sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__na"))
-        .staged
-      settled = settled.unionByName(
-        refined.filter(col("gs") === 1)
-          .select(col("doc_id"), col("pos"), col("rank")))
-      active = refined.filter(col("gs") > 1)
-        .select(col("doc_id"), col("pos"), col("rank"))
-      nActive = obsLong(obs, "__na", 0L)
-      k += 2 // context ×4 per round
+        .select(col("doc_id"), col("pos"), col("rank"), col("gs")),
+        sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__na"))
+    } { (_, refined, observed) =>
+      settled += settledOf(refined)
+      observed.long("__na", 0L) > 0
     }
-    settled.unionByName(active)
+    settled.reduce(_.unionByName(_)).unionByName(activeOf(last))
   }
 
   /** One refinement round's re-rank, collapsed before the window: the
@@ -353,19 +347,18 @@ object SuffixArray {
     // the untied-pair count rides adj's own staging job as an observed
     // metric, so the chunk loop needs no round-0 staging/probe of its
     // own — the untied branch is a cheap filter re-scan of this
-    // checkpoint (r21; replaces one execution + one retained checkpoint)
-    val obs = Observation()
+    // checkpoint (r21; replaces one execution + one retained checkpoint).
+    // The tied and untied branches below both read adj.
     val (adjRaw, adjParts) = Prefix.adjacentBySortStaged(
       suffixRanksOf(docs).select(col("rank"), col("doc_id"), col("pos")),
       Seq(col("rank"), col("doc_id"), col("pos")), "idx")
-    val adj = adjRaw
+    val (adj, observed) = Checkpoints.stageObserved(adjRaw
       .select(col("idx"), col("a.rank").as("rank_a"),
         col("a.doc_id").as("doc_a"), col("a.pos").as("pos_a"),
         col("b.rank").as("rank_b"),
-        col("b.doc_id").as("doc_b"), col("b.pos").as("pos_b"))
-      .observe(obs, sum(when(col("rank_a") =!= col("rank_b"), 1L)
-        .otherwise(0L)).as("__nuntied"))
-      .staged // the tied and untied branches below both read it
+        col("b.doc_id").as("doc_b"), col("b.pos").as("pos_b")),
+      sum(when(col("rank_a") =!= col("rank_b"), 1L).otherwise(0L))
+        .as("__nuntied"))
     Checkpoints.unpersist(adjParts) // pairs are eager; the range copy is dead
     // EQUAL final rank ⟺ IDENTICAL suffixes (the doubling resolves every
     // real difference, and the rank-0 end sentinel strictly orders a
@@ -391,7 +384,7 @@ object SuffixArray {
     val untied = adj.filter(col("rank_a") =!= col("rank_b"))
       .select(col("idx"), col("doc_a"), col("pos_a"), col("doc_b"),
         col("pos_b"))
-    chunkedLcp(docs, untied, obsLong(obs, "__nuntied", 0L))
+    chunkedLcp(docs, untied, observed.long("__nuntied", 0L))
       .unionByName(tied)
   }
 
@@ -434,12 +427,17 @@ object SuffixArray {
         .select(col(s"doc_$arm"), (col("p0") + 1).cast("long").as(s"pos_$arm"),
           expr(s"slice(w, p0 + 1 + $off, $len)").as(out))
     }
-    var active = pairs0
-    var nActive = n0
+    // round n compares words [off, off + len) of both suffixes
+    def chunk(n: Int): (Long, Int) = (1 until n).foldLeft((0L, LcpChunk)) {
+      case ((off, len), _) => (off + len, len * LcpGrowth)
+    }
+    // every pair starts unresolved: NULL lcp ⇔ still active
+    val init = pairs0.withColumn("lcp", lit(null).cast("long"))
     val resolved = List.newBuilder[DataFrame]
-    var off = 0L
-    var len = LcpChunk
-    while (nActive > 0) { // probe fused into each round's checkpoint job
+    graft.discard(Checkpoints.iterate(init, if (n0 > 0) Int.MaxValue else 0,
+        release = false) { r =>
+      val (off, len) = chunk(r.n)
+      val active = r.prev.filter(col("lcp").isNull).select(keys: _*)
       // ONE slim materialization per round: keys + the resolved lcp
       // (NULL ⇔ chunk-equal and not ended ⇔ still active). The wide
       // ca/cb chunk arrays are projected away BEFORE the checkpoint, so
@@ -452,8 +450,7 @@ object SuffixArray {
       // steps stay persisted until the build completes — total retained
       // mass is Σ|active_k| slim rows, the same shrinking-active-set
       // envelope as the rank loop's settled argument.
-      val obs = Observation()
-      val step = active
+      r.observe(active
         .join(chunkOf(active, "a", off, len, "ca"), Seq("doc_a", "pos_a"))
         .join(chunkOf(active, "b", off, len, "cb"), Seq("doc_b", "pos_b"))
         .withColumn("__p", p)
@@ -461,15 +458,12 @@ object SuffixArray {
           .when(size(col("ca")) < len && size(col("cb")) < len,
             // both suffixes end inside this chunk: min-length cutoff
             lit(off) + least(size(col("ca")), size(col("cb"))))
-          .cast("long").as("lcp"): _*)
-        .observe(obs, sum(when(col("lcp").isNull, 1L).otherwise(0L)).as("__na"))
-        .staged
+          .cast("long").as("lcp"): _*),
+        sum(when(col("lcp").isNull, 1L).otherwise(0L)).as("__na"))
+    } { (_, step, observed) =>
       resolved += step.filter(col("lcp").isNotNull)
-      active = step.filter(col("lcp").isNull).select(keys: _*)
-      nActive = obsLong(obs, "__na", 0L)
-      off += len
-      len *= LcpGrowth
-    }
+      observed.long("__na", 0L) > 0
+    })
     resolved.result() match {
       case Nil => pairs0.withColumn("lcp", lit(0L)).filter(lit(false))
       case parts => parts.reduce(_.unionByName(_))

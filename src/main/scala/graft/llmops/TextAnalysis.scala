@@ -966,7 +966,7 @@ object TextAnalysis {
       mdf: org.apache.spark.sql.DataFrame,
       rounds: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, explode, expr, min, struct, when}
-    var state = vocab
+    val seeded = vocab
       // position-based seeds (callers filter word != '' — sequence(1, 0)
       // throws): identical characters to the DuckDB oracle's word[i] and
       // to [[bpeEncodeExpr]]'s substr seeds, newlines included — a regexp
@@ -974,10 +974,14 @@ object TextAnalysis {
       .selectExpr("word", "n",
         "concat(' ', concat_ws('  ', transform(sequence(1, length(word)), i -> substring(word, i, 1))), ' ') AS seq")
       .staged
-    for (_ <- 1 to rounds) {
+    // checkpoint per round: keeps the plan linear (the state is consumed
+    // by BOTH the applicable-join and the next round) and the state is
+    // vocabulary-sized; the superseded round's blocks are released so
+    // storage stays O(1) in the round count ([[Checkpoints.iterate]])
+    Checkpoints.iterate(seeded, rounds) { r =>
       // per word: the lowest-rank merge-table pair present in its
       // current symbol sequence (broadcast join, vocab-sized)
-      val applicable = state
+      val applicable = r.prev
         .select(col("word"), expr("split(trim(seq), '  ')").as("ss"))
         .select(col("word"), explode(expr(
           """CASE WHEN size(ss) >= 2
@@ -987,21 +991,13 @@ object TextAnalysis {
         .join(broadcast(mdf), "pair")
         .groupBy("word").agg(min(struct(col("rank"), col("pair"))).as("mp"))
         .select(col("word"), col("mp.pair").as("pair"))
-      // checkpoint per round: keeps the plan linear (state is consumed
-      // by BOTH the applicable-join and the next round) and the state
-      // is vocabulary-sized; the superseded round's blocks are released
-      // so storage stays O(1) in the round count ([[Checkpoints]])
-      val next = state.join(applicable, Seq("word"), "left")
+      r.prev.join(applicable, Seq("word"), "left")
         .withColumn("seq", when(col("pair").isNull, col("seq"))
           .otherwise(expr(
             """replace(seq, concat(' ', replace(pair, ' ', '  '), ' '),
               |             concat(' ', replace(pair, ' ', ''), ' '))""".stripMargin)))
         .select("word", "n", "seq")
-        .staged
-      Checkpoints.unpersist(state)
-      state = next
-    }
-    state
+    } { (_, _, _) => true }._1
   }
 
   /** Stateless greedy BPE ENCODE of one word as a SINGLE expression —

@@ -10,4 +10,9 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Drops an RDD's blocks without `RDD.unpersist`'s per-call WARN for
+    * locally checkpointed RDDs (`SparkContext.unpersistRDD` is
+    * `private[spark]`). */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }
