@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -153,7 +153,7 @@ object ResourceEstimates {
         // whole subtree silently accounts as 0 bytes (ADVICE r15) —
         // recurse into the materialized plan so the Exchange cases fire
         case q: adaptive.QueryStageExec => visit(q.plan)
-        case r: exchange.ReusedExchangeExec =>
+        case _: exchange.ReusedExchangeExec =>
           // the original exchange is accounted where it first appears;
           // a broadcast reuse adds no per-host memory (one copy/host)
           notes += "reused exchange"

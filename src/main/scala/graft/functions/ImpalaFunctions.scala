@@ -21,8 +21,6 @@ import org.apache.spark.sql.types.{LongType, StringType}
   */
 object ImpalaFunctions {
 
-  private def fid(name: String) = FunctionIdentifier(name)
-
   /** Truncation-unit map for Impala `trunc(ts, fmt)`
     * (BuiltinsDb/ScalarBuiltins; units per Impala 2.x docs). Impala's
     * 'DAY'/'DY' truncate to the start of the week. Spark's native unit

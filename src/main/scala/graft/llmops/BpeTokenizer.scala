@@ -2,7 +2,7 @@ package graft.llmops
 
 import graft.QuerySpec
 import graft.llmops.Checkpoints.Stageable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -248,6 +248,15 @@ object BpeTokenizer {
     (mergeTable, syms)
   }
 
+  /** A learned merge table as [[TextAnalysis.bpeEncodeRules]]'s rule
+    * literal: `("l r", rank)` rows. The table is the driver-local
+    * relation [[trainMerges]] builds (at most `rounds × m` rows), so the
+    * collect stages nothing and leaves nothing to release. */
+  private[graft] def mergeRules(mergeTable: DataFrame,
+                                rank: Column): Seq[(String, Int)] =
+    mergeTable.select(concat_ws(" ", col("l"), col("r")), rank.cast("int"))
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+
   /** DuckDB oracle: the same loop with each round unrolled into one CTE
     * chain (pairs → winner → candidates → run parity → rewrite) —
     * generated programmatically so the two engines can never drift on
@@ -371,19 +380,21 @@ object BpeTokenizer {
   /** Encode the corpus, per source split, with the merge table q401
     * LEARNED — the composition that makes the trainer a tokenizer
     * pipeline (train → ship artifact → encode) instead of two halves
-    * that never meet. The encoder is [[TextAnalysis.bpeEncodeStateWith]]
-    * (the q167 greedy lowest-rank-first loop) fed the TRAINED table,
-    * not the static literal; per-source compression is the held-out
-    * signal (the table was learned on the FULL corpus, each source is
-    * encoded as its own split). [[Merges]] encode rounds suffice: each
-    * round applies one rule per word, so a word needs at most one round
-    * per distinct applicable rule.
+    * that never meet. The encoder is [[TextAnalysis.bpeEncodeRules]]
+    * (the q167 greedy lowest-rank-first encode) fed the TRAINED table,
+    * collected to the driver (at most [[Merges]] rows) and passed as the
+    * rule literal; per-source compression is the held-out signal (the
+    * table was learned on the FULL corpus, each source is encoded as its
+    * own split). One encode round per learned rule suffices: each round
+    * applies one rule per word, so a word needs at most one round per
+    * distinct applicable rule.
     *
     * Scale shape: training is the q401 envelope (vocab-grain rounds);
     * the encode adds one corpus-grain (word, source) rollup — the only
-    * new corpus pass — then vocab-grain broadcast-join rounds (the
-    * learned table is K rows — a few MB at K=100k) and one grouped
-    * join back to the rollup. BpeSpec pins that encoding the TRAINING
+    * new corpus pass — then one per-row encode expression over its
+    * distinct words and one grouped join back to the rollup. The rule
+    * literal bounds the table at [[TextAnalysis.BpeMaxRules]] rows.
+    * BpeSpec pins that encoding the TRAINING
     * corpus with the learned table reproduces the trainer's own final
     * symbol table (the standard BPE replay property; it can break only
     * when a later merge recreates an earlier rule's pair string —
@@ -415,15 +426,14 @@ object BpeTokenizer {
     val sp = QuerySpec.prepared(s, dir)
     val (mergeTable, finalSyms) = trainMerges(sp)
     Checkpoints.unpersist(finalSyms)
-    val learned = mergeTable.select(
-      concat_ws(" ", col("l"), col("r")).as("pair"), col("round").as("rank"))
+    val learned = mergeRules(mergeTable, col("round"))
     val ws = TextAnalysis.perSourceWordCounts(sp)
       .staged // the encode vocab AND the per-source report both read it
-    val vocab = ws.groupBy("word").agg(sum(col("n")).as("n"))
-    val enc = TextAnalysis.bpeEncodeStateWith(sp, vocab, learned, Merges)
-    val tk = enc.selectExpr("word",
-      "cast(size(split(trim(seq), '  ')) as long) AS n_tokens",
-      "cast(length(word) as long) AS n_chars")
+    val tk = ws.select(col("word")).distinct()
+      .select(col("word"),
+        size(split(trim(TextAnalysis.bpeEncodeRules(col("word"), learned)
+          .getField("seq")), "  ")).cast("long").as("n_tokens"),
+        length(col("word")).cast("long").as("n_chars"))
     TextAnalysis.perSourceCompression(ws, tk)
   }
 

@@ -2127,7 +2127,6 @@ object Dedup {
       |FROM pairs
       |WHERE inter_tokens >= 0.95 * un
       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     prefixFilterJoin(QuerySpec.prepared(s, dir), t = 0.95)
   }
 

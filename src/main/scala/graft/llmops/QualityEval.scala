@@ -454,9 +454,6 @@ object QualityEval {
     * NULL. */
   val q344JonckheereTerpstra: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
       s"""WITH ys AS (SELECT DISTINCT y FROM q344_v),
          |gs AS (SELECT DISTINCT g FROM q344_v),
          |grid AS (SELECT ys.y, gs.g, COALESCE(v.cnt, 0) AS cnt
@@ -587,11 +584,6 @@ object QualityEval {
     * W = 12S/(9(n³−n) − 3T), χ² = 3(n−1)·W alongside. */
   val q346KendallW: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
       def rankCtes(i: Int) =
         s"""v$i AS (SELECT x$i AS x, CAST(COUNT(*) AS BIGINT) AS t FROM q346_d GROUP BY x$i),
            |r$i AS (SELECT x, t,

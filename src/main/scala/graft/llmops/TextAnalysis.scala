@@ -729,11 +729,10 @@ object TextAnalysis {
       // POSITION-based character seeds, not a regexp split: regex `.`
       // excludes line terminators (and Spark's Java regex excludes MORE
       // of them than DuckDB's RE2), so a newline-bearing word would seed
-      // differently across engines AND across the engine's own three
-      // encode formulations. substring/word[i] index characters
+      // differently across engines. substring/word[i] index characters
       // identically everywhere — the one seeding convention shared with
-      // [[bpeEncodeState]], [[bpeEncodeExpr]] and the BpeTokenizer
-      // trainer (BpeSpec pins the parity on a newline-bearing word).
+      // the encoder [[bpeEncodeRules]] and the BpeTokenizer trainer
+      // (BpeSpec pins the parity on a newline-bearing word).
       val chars =
         if (spark)
           "concat_ws('  ', transform(sequence(1, length(word)), i -> substring(word, i, 1)))"
@@ -813,14 +812,13 @@ object TextAnalysis {
     * becomes adjacent after the rank-5 merge that builds 'yz'), so the
     * loop runs to fixpoint, not one pass per rank.
     *
-    * Scale shape: the corpus is scanned exactly ONCE (the word-vocab
-    * build, checkpointed); every encode round is a vocabulary-sized scan
-    * joined against the BROADCAST merge table (real tokenizers ship
-    * 32k-100k merges — a few MB, still broadcast-sized), and the round
-    * count is bounded by the max merges applicable within one word
-    * (≲ word length), never by corpus size. Emits the top-30 token
-    * frequencies after encoding (token counts weighted by word
-    * frequency — the fact table is never rejoined).
+    * Scale shape: the corpus is scanned once for the word-vocab
+    * rollup; the encode is one per-row expression ([[bpeEncodeRules]])
+    * over the distinct words, with the merge table as a plan literal —
+    * no join, no staging, and a round count bounded by the word length,
+    * never by corpus size. Emits the top-30 token frequencies after
+    * encoding (token counts weighted by word frequency — the fact table
+    * is never rejoined).
     *
     * The oracle replays the identical fixpoint as [[Rounds]] unrolled
     * chained CTEs in DuckDB; LlmOpsSpec pins that the fixpoint is
@@ -943,95 +941,80 @@ object TextAnalysis {
        |${bpeEncodeUnrollCtes("m", "w", BpeRounds)}""".stripMargin
   }
 
-  /** The Spark-side greedy BPE encode loop over a `(word, n)` vocab
-    * DataFrame with the static pretrained [[BpeMerges]] table. */
-  private[graft] def bpeEncodeState(
-      sp: org.apache.spark.sql.SparkSession,
-      vocab: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import sp.implicits._
-    bpeEncodeStateWith(sp, vocab, BpeMerges.toDF("pair", "rank"), BpeRounds)
-  }
+  /** Rule-count ceiling of [[bpeEncodeRules]]. The merge table is a
+    * literal inside the plan: it is serialized with every task and
+    * printed by EXPLAIN, and Spark probes a literal map by scanning its
+    * key array, so each pair lookup costs up to one string comparison
+    * per rule. The encoder's tables are 10 static, 6 learned or up to 48
+    * batch-learned rules; a shipped 32k-100k-merge vocabulary is out of
+    * scope for a per-row literal. */
+  private[graft] val BpeMaxRules = 1024
 
-  /** Greedy BPE encode over a `(word, n)` vocab with an ARBITRARY
-    * `(pair, rank)` merge table — the static literal (q167/q176) or the
-    * q401-trained artifact (q406): `rounds` broadcast-join rounds,
-    * per-round localCheckpoint with superseded-state release
-    * ([[Checkpoints]]). Per word per round, the LOWEST-rank pair present
-    * in the sentinel-spaced symbol string is replaced at every
-    * occurrence (left-to-right non-overlapping — the trainer's own
-    * parity). Returns the final `(word, n, seq)` state. */
-  private[graft] def bpeEncodeStateWith(
-      sp: org.apache.spark.sql.SparkSession,
-      vocab: org.apache.spark.sql.DataFrame,
-      mdf: org.apache.spark.sql.DataFrame,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, explode, expr, min, struct, when}
-    val seeded = vocab
-      // position-based seeds (callers filter word != '' — sequence(1, 0)
-      // throws): identical characters to the DuckDB oracle's word[i] and
-      // to [[bpeEncodeExpr]]'s substr seeds, newlines included — a regexp
-      // '.' seed would silently diverge on newline-bearing words
-      .selectExpr("word", "n",
-        "concat(' ', concat_ws('  ', transform(sequence(1, length(word)), i -> substring(word, i, 1))), ' ') AS seq")
-      .staged
-    // checkpoint per round: keeps the plan linear (the state is consumed
-    // by BOTH the applicable-join and the next round) and the state is
-    // vocabulary-sized; the superseded round's blocks are released so
-    // storage stays O(1) in the round count ([[Checkpoints.iterate]])
-    Checkpoints.iterate(seeded, rounds) { r =>
-      // per word: the lowest-rank merge-table pair present in its
-      // current symbol sequence (broadcast join, vocab-sized)
-      val applicable = r.prev
-        .select(col("word"), expr("split(trim(seq), '  ')").as("ss"))
-        .select(col("word"), explode(expr(
-          """CASE WHEN size(ss) >= 2
-            |     THEN transform(sequence(0, size(ss) - 2),
-            |            i -> concat(ss[i], ' ', ss[i + 1]))
-            |     ELSE array() END""".stripMargin)).as("pair"))
-        .join(broadcast(mdf), "pair")
-        .groupBy("word").agg(min(struct(col("rank"), col("pair"))).as("mp"))
-        .select(col("word"), col("mp.pair").as("pair"))
-      r.prev.join(applicable, Seq("word"), "left")
-        .withColumn("seq", when(col("pair").isNull, col("seq"))
-          .otherwise(expr(
-            """replace(seq, concat(' ', replace(pair, ' ', '  '), ' '),
-              |             concat(' ', replace(pair, ' ', ''), ' '))""".stripMargin)))
-        .select("word", "n", "seq")
-    } { (_, _, _) => true }._1
-  }
-
-  /** Stateless greedy BPE ENCODE of one word as a SINGLE expression —
-    * the [[bpeEncodeState]] loop with identical semantics (per round,
-    * replace every occurrence of the lowest-rank merge-table pair
-    * present in the sentinel-spaced symbol string) but zero joins, zero
-    * shuffles, zero state: an `aggregate` over the round sequence whose
-    * lambda picks the first applicable rule via `filter` over the
-    * broadcast-free RULE LITERAL. Lambda variables give the expression
-    * LET semantics, so the accumulator is referenced, never re-expanded
-    * — a naive unrolled WHEN/replace chain would grow ~21^rounds nodes.
-    * Because it is one per-row expression it runs identically over
-    * batch rows and a structured stream (the tokenizer stage of a
-    * streaming ingestion pipeline — see
-    * [[graft.streaming.EventStreams.tokenizedDocs]]); StreamingSpec
-    * pins stream ≡ batch and the vocab-grain token counts ≡ q167's
-    * join-based state loop. Takes the word as a Column so it composes
-    * under an outer per-document `transform` lambda. */
-  private[graft] def bpeEncodeExpr(word: Column): Column = {
-    val rules = array(BpeMerges.sortBy(_._2).map { case (p, _) =>
-      struct(lit(" " + p.replace(" ", "  ") + " ").as("pat"),
-        lit(" " + p.replace(" ", "") + " ").as("rep"))
-    }: _*)
-    val seed = concat(lit(" "),
-      array_join(transform(sequence(lit(1), length(word)),
-        i => substr(word, i, lit(1))), "  "),
-      lit(" "))
-    aggregate(sequence(lit(1), lit(BpeRounds)), seed, (acc, _) => {
-      val applicable = filter(rules, r => acc.contains(r.getField("pat")))
-      when(size(applicable) > 0,
-        replace(acc, element_at(applicable, 1).getField("pat"),
-          element_at(applicable, 1).getField("rep")))
-        .otherwise(acc)
-    })
+  /** Greedy BPE encode of one word as a single per-row expression over
+    * a `(pair, rank)` merge table given as a literal: the static
+    * [[BpeMerges]] (q167, q176, q405, q428, q433, [[bpeTokensExpr]]) or
+    * a collected learned table (q406). Returns `struct(seq, applied)`:
+    * the sentinel-spaced symbol string (symbols joined by DOUBLE spaces,
+    * one space at each end — q163's pair algebra) and the ranks applied,
+    * in order.
+    *
+    * Per round, every adjacent symbol pair is looked up in one
+    * `pair → rank` map literal (no substring scan of the word per rule),
+    * and the lowest `(rank, pair)` among the pairs found that pass
+    * `keep(rank)` is replaced at every occurrence (left-to-right,
+    * non-overlapping — the trainer's own parity). A duplicated pair
+    * string keeps its lowest rank. `keep` is the q433 dropout predicate;
+    * by default every rule is kept. Later merges can re-enable lower
+    * ranks, so the rounds run to fixpoint: one round per rule, capped at
+    * `length(word) − 1`, because every applied round removes at least
+    * one symbol. A round that applies nothing is the fixpoint: it sets
+    * `done`, and the later rounds pass the accumulator through without
+    * re-splitting the word. Most words stop after a merge or two, so
+    * this cut the encode of a 155k-word vocabulary from 13-14 s to
+    * 4 s (4 cores). Seeds are POSITION-based (`substr(word, i, 1)`),
+    * never a regexp `.`, which drops line terminators, differently per
+    * engine; callers filter `word != ''`.
+    *
+    * One expression, no join, no shuffle and no state, so it runs
+    * identically over batch rows and a structured stream, and composes
+    * under an outer per-document `transform` lambda. Lambda variables
+    * give LET semantics: the accumulator and the round's pick are
+    * referenced, never re-expanded. At most [[BpeMaxRules]] rules. */
+  private[graft] def bpeEncodeRules(
+      word: Column,
+      rules: Seq[(String, Int)],
+      keep: Column => Column = _ => lit(true)): Column = {
+    require(rules.size <= BpeMaxRules,
+      s"bpeEncodeRules: ${rules.size} merge rules exceed the " +
+        s"$BpeMaxRules-rule ceiling of a plan literal")
+    val table = rules.groupMapReduce(_._1)(_._2)(math.min).toSeq.sorted
+    val rankOf = map_from_arrays(
+      array(table.map(t => lit(t._1)): _*),
+      array(table.map(t => lit(t._2.toLong)): _*))
+    val seed = struct(
+      concat(lit(" "),
+        array_join(transform(sequence(lit(1), length(word)),
+          i => substr(word, i, lit(1))), "  "),
+        lit(" ")).as("seq"),
+      typedLit(Seq.empty[Long]).as("applied"),
+      lit(false).as("done"))
+    aggregate(array_repeat(lit(0), least(lit(rules.size), length(word) - 1)),
+      seed, (acc, _) => when(acc.getField("done"), acc).otherwise {
+        val ss = split(trim(acc.getField("seq")), "  ")
+        // the last symbol pairs with zip_with's NULL padding: no match
+        val found = transform(
+          zip_with(ss, slice(ss, lit(2), size(ss)), (l, r) => concat(l, lit(" "), r)),
+          p => struct(element_at(rankOf, p).as("rank"), p.as("pair")))
+        val pick = array_min(filter(found, c =>
+          c.getField("rank").isNotNull && keep(c.getField("rank"))))
+        aggregate(array(pick), acc, (a, m) =>
+          when(m.isNull, a.withField("done", lit(true))).otherwise(a
+            .withField("seq", replace(a.getField("seq"),
+              concat(lit(" "), replace(m.getField("pair"), lit(" "), lit("  ")), lit(" ")),
+              concat(lit(" "), replace(m.getField("pair"), lit(" "), lit("")), lit(" "))))
+            .withField("applied",
+              concat(a.getField("applied"), array(m.getField("rank"))))))
+      }, _.dropFields("done"))
   }
 
   // ---------------------------------------------------------------------
@@ -1059,7 +1042,7 @@ object TextAnalysis {
     * the unrolled DuckDB replay a plain join filter (a per-application
     * re-draw would need the replay to thread round state through the
     * hash). */
-  private def dropCoordinate(docId: Column, wp: Column, rank: Column): Column =
+  private[graft] def dropCoordinate(docId: Column, wp: Column, rank: Column): Column =
     ((docId % 1000003L) * 2654435761L + wp * 131L + rank * 524287L) % 1000000L
 
   /** The DuckDB text of [[dropCoordinate]] over columns `doc_id`, `wp`
@@ -1067,71 +1050,6 @@ object TextAnalysis {
     * eyeballed against each other; any drift fails the q433 oracle. */
   private def dropCoordinateSql: String =
     "((doc_id % 1000003) * 2654435761 + wp * 131 + m.rank * 524287) % 1000000"
-
-  /** Greedy BPE encode of one word under BPE-dropout: identical to
-    * [[bpeEncodeExpr]] except the rule literal is first filtered to the
-    * rules whose frozen (doc, word, rank) coordinate clears the drop
-    * threshold — per round, the lowest-rank SURVIVING pair present in
-    * the symbol string is applied. p = 0 keeps every rule and reduces
-    * exactly to the greedy encode (spec-pinned). Still one pure per-row
-    * expression: zero joins, zero shuffles, streaming-safe. */
-  private[graft] def bpeDropoutEncodeExpr(docId: Column, word: Column,
-                                          wp: Column, pE6: Long): Column = {
-    val rules = array(BpeMerges.sortBy(_._2).map { case (p, r) =>
-      struct(lit(" " + p.replace(" ", "  ") + " ").as("pat"),
-        lit(" " + p.replace(" ", "") + " ").as("rep"),
-        lit(r.toLong).as("rank"))
-    }: _*)
-    val kept = filter(rules, r =>
-      dropCoordinate(docId, wp, r.getField("rank")) >= lit(pE6))
-    val seed = concat(lit(" "),
-      array_join(transform(sequence(lit(1), length(word)),
-        i => substr(word, i, lit(1))), "  "),
-      lit(" "))
-    aggregate(sequence(lit(1), lit(BpeRounds)), seed, (acc, _) => {
-      val applicable = filter(kept, r => acc.contains(r.getField("pat")))
-      when(size(applicable) > 0,
-        replace(acc, element_at(applicable, 1).getField("pat"),
-          element_at(applicable, 1).getField("rep")))
-        .otherwise(acc)
-    })
-  }
-
-  /** The greedy encode of one word PLUS the ranks it actually applied:
-    * `struct(seq, applied)` — the [[bpeEncodeExpr]] loop with the
-    * accumulator widened to carry the applied-rank list. The applied
-    * set is what makes the dropout encode cheap at corpus scale
-    * ([[q433BpeDropoutEncode]]): dropping a rule the greedy encode
-    * never APPLIED cannot change the segmentation (by induction the
-    * state evolves identically round for round — the greedy pick at
-    * each round is the lowest-rank applicable rule, which is applied
-    * and therefore kept), so only (doc, word) pairs whose frozen
-    * coordinate drops an APPLIED rank need their own encode; the rest
-    * reuse the word-grain greedy result. */
-  private[graft] def bpeEncodeWithAppliedExpr(word: Column): Column = {
-    val rules = array(BpeMerges.sortBy(_._2).map { case (p, r) =>
-      struct(lit(" " + p.replace(" ", "  ") + " ").as("pat"),
-        lit(" " + p.replace(" ", "") + " ").as("rep"),
-        lit(r.toLong).as("rank"))
-    }: _*)
-    val seed = struct(
-      concat(lit(" "),
-        array_join(transform(sequence(lit(1), length(word)),
-          i => substr(word, i, lit(1))), "  "),
-        lit(" ")).as("seq"),
-      typedLit(Seq.empty[Long]).as("applied"))
-    aggregate(sequence(lit(1), lit(BpeRounds)), seed, (acc, _) => {
-      val applicable = filter(rules,
-        r => acc.getField("seq").contains(r.getField("pat")))
-      when(size(applicable) > 0, struct(
-        replace(acc.getField("seq"),
-          element_at(applicable, 1).getField("pat"),
-          element_at(applicable, 1).getField("rep")).as("seq"),
-        concat(acc.getField("applied"),
-          array(element_at(applicable, 1).getField("rank"))).as("applied")))
-        .otherwise(acc)
-    })
-  }
 
   /** The [[bpeEncodeUnrollCtes]] replay at the (doc_id, word) grain
     * with the dropout filter on the merge join: `dwp(doc_id, word,
@@ -1218,22 +1136,25 @@ object TextAnalysis {
       // the encode grain is (doc, word) — per-document draws are the
       // point — but the EXPENSIVE loop only runs where a draw can
       // matter: the greedy encode + its APPLIED ranks are computed
-      // once per DISTINCT WORD ([[bpeEncodeWithAppliedExpr]]), joined
-      // back (vocab-sized side, AQE broadcasts), and a pair re-encodes
-      // only when its frozen coordinate drops an APPLIED rank —
-      // dropping a never-applied rule provably changes nothing. The
-      // `when` evaluates the dropout loop lazily per row, so most
-      // pairs pay one small array probe, not ten merge rounds.
+      // once per DISTINCT WORD, joined back (vocab-sized side, AQE
+      // broadcasts), and a pair re-encodes only when its frozen
+      // coordinate drops an APPLIED rank. Dropping a never-applied rule
+      // changes nothing: by induction the state evolves identically
+      // round for round, because each round's greedy pick is applied
+      // and therefore kept. The `when` evaluates the dropout encode
+      // lazily per row, so most pairs pay one small array probe, not
+      // ten merge rounds.
       val wg = dw.select(col("word")).distinct()
-        .withColumn("g", bpeEncodeWithAppliedExpr(col("word")))
+        .withColumn("g", bpeEncodeRules(col("word"), BpeMerges))
         .select(col("word"), col("g.seq").as("gseq"),
           col("g.applied").as("gapplied"))
       dw.join(wg, Seq("word"))
         .withColumn("seq",
           when(exists(col("gapplied"), rk =>
             dropCoordinate(col("doc_id"), col("wp"), rk) < lit(BpeDropPE6)),
-            bpeDropoutEncodeExpr(col("doc_id"), col("word"), col("wp"),
-              BpeDropPE6))
+            bpeEncodeRules(col("word"), BpeMerges, rk =>
+              dropCoordinate(col("doc_id"), col("wp"), rk) >= lit(BpeDropPE6))
+              .getField("seq"))
             .otherwise(col("gseq")))
         .select(explode(split(trim(col("seq")), "  ")).as("token"),
           col("nocc"))
@@ -1246,18 +1167,19 @@ object TextAnalysis {
     }
   }
 
-  /** Document text → BPE token array via [[bpeEncodeExpr]]: split to
-    * words (empty tokens from doubled separators guarded — Spark's
-    * sequence(1, 0) throws), encode each word under a lambda, flatten.
+  /** Document text → BPE token array via [[bpeEncodeRules]] over the
+    * static [[BpeMerges]]: split to words (empty tokens from doubled
+    * separators dropped), encode each word under a lambda, flatten.
     * Pure per-row expression — batch and streaming alike. */
   private[graft] def bpeTokensExpr(text: Column): Column =
     flatten(transform(
       filter(split(text, " "), w => w =!= ""),
-      w => split(trim(bpeEncodeExpr(w)), "  ")))
+      w => split(trim(bpeEncodeRules(w, BpeMerges).getField("seq")), "  ")))
 
   /** The unrolled-replay oracle for the BPE ENCODE output grain (top-30
-    * token counts) — shared by the join-based loop (q167) and the
-    * stateless expression path (q405): both must reproduce it exactly. */
+    * token counts) — shared by the vocab-grain encode (q167) and the
+    * document-level token-array path (q405): both must reproduce it
+    * exactly. */
   private def bpeEncodeOracleText: String = bpeOracleUnroll +
     s"""
        |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
@@ -1271,12 +1193,14 @@ object TextAnalysis {
     val oracleText: String = bpeEncodeOracleText
     QuerySpec("q167_text_bpe_encode", oracleText) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      // the ONLY corpus scan (vocab build), checkpointed as in q163
-      val vocab = sp.sql(
+      // the ONLY corpus scan (vocab build); the encoded vocabulary is
+      // left behind as g_bpe_encoded(word, n, seq)
+      sp.sql(
         """SELECT word, COUNT(*) AS n
           |FROM (SELECT explode(split(text, ' ')) AS word FROM documents) x
           |WHERE word != '' GROUP BY word""".stripMargin)
-      bpeEncodeState(sp, vocab).createOrReplaceTempView("g_bpe_encoded")
+        .withColumn("seq", bpeEncodeRules(col("word"), BpeMerges).getField("seq"))
+        .createOrReplaceTempView("g_bpe_encoded")
       sp.sql(
         """SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
           |  SELECT token, SUM(n) AS cnt,
@@ -1287,16 +1211,15 @@ object TextAnalysis {
     }
   }
 
-  /** The STATELESS-EXPRESSION encode path under the oracle gate: q167
-    * pins the join-based per-round state loop; this query pins
+  /** The document-level token-array path under the oracle gate: q167
+    * pins [[bpeEncodeRules]] at vocab grain; this query pins
     * [[bpeTokensExpr]] — the exact code path the streaming tokenizer
     * stage ([[graft.streaming.EventStreams.tokenizedDocs]]) runs per
-    * row — against the SAME unrolled DuckDB replay. Two independent
-    * Spark formulations and one oracle: the strongest cross-check the
-    * harness offers that the greedy-merge algebra is right. Scale
-    * shape: the encode is a pure per-row expression over the distinct
-    * word relation (zero joins), the rollup is vocab-grain and
-    * map-side combined, and the top-30 window is rank-limited. */
+    * row, the same encoder wrapped in the split/flatten — against the
+    * SAME unrolled DuckDB replay. Scale shape: the encode is a pure
+    * per-row expression over the distinct word relation (zero joins),
+    * the rollup is vocab-grain and map-side combined, and the top-30
+    * window is rank-limited. */
   val q405BpeEncodeExprQ: QuerySpec =
     QuerySpec("q405_bpe_encode_expr", bpeEncodeOracleText) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
@@ -1318,15 +1241,15 @@ object TextAnalysis {
     * language, the standard metric for how well a tokenizer serves each
     * language in a multilingual corpus (high fertility = the tokenizer
     * fragments that language, inflating its effective training cost).
-    * Applies the [[BpeMerges]] tokenizer via [[bpeEncodeState]] and
+    * Applies the [[BpeMerges]] tokenizer via [[bpeEncodeRules]] and
     * aggregates token counts per language, weighted by word frequency.
     *
     * Scale shape: ONE corpus scan builds the (word, lang, n) rollup
-    * (checkpointed); the word-level vocab the encode loop runs on is a
-    * vocabulary-sized re-aggregation of that rollup, and the final report
-    * joins the vocabulary-sized encode result back to the rollup — the
-    * fact table is never rejoined, same envelope as q167 plus one tiny
-    * grouped join. */
+    * (checkpointed); the encode runs as a per-row expression over the
+    * distinct words of that rollup, and the final report joins the
+    * vocabulary-sized encode result back to the rollup — the fact table
+    * is never rejoined, same envelope as q167 plus one tiny grouped
+    * join. */
   val q176TokenizerFertility: QuerySpec = {
     val oracleText: String = bpeOracleUnroll +
       s""",
@@ -1347,7 +1270,6 @@ object TextAnalysis {
          |GROUP BY lang ORDER BY lang""".stripMargin
     QuerySpec("q176_tokenizer_fertility", oracleText) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      import org.apache.spark.sql.functions.{col, sum}
       // the ONLY corpus scan: per-(word, lang) rollup, checkpointed
       // because it feeds BOTH the encode vocab and the final report join
       val wl = sp.sql(
@@ -1355,10 +1277,11 @@ object TextAnalysis {
           |FROM (SELECT lang, explode(split(text, ' ')) AS word FROM documents) x
           |WHERE word != '' GROUP BY word, lang""".stripMargin)
         .staged
-      val vocab = wl.groupBy("word").agg(sum("n").as("n"))
-      val tk = bpeEncodeState(sp, vocab)
-        .selectExpr("word", "size(split(trim(seq), '  ')) AS n_tokens",
-          "length(word) AS n_chars")
+      val tk = wl.select(col("word")).distinct()
+        .select(col("word"),
+          size(split(trim(bpeEncodeRules(col("word"), BpeMerges).getField("seq")),
+            "  ")).as("n_tokens"),
+          length(col("word")).as("n_chars"))
       wl.join(tk, "word")
         .createOrReplaceTempView("g_bpe_fertility")
       sp.sql(

@@ -167,10 +167,12 @@ object TokenizerCompare {
       .groupBy(col("word"), col("lang")).agg(count(lit(1)).as("n"))
       .staged // both encode vocabs AND both report joins read it
     val vocab = wl.groupBy("word").agg(sum(col("n")).as("n"))
-    val btk = TextAnalysis.bpeEncodeState(sp, vocab)
-      .selectExpr("word",
-        "cast(size(split(trim(seq), '  ')) as long) AS n_tokens",
-        "cast(length(word) as long) AS n_chars")
+    val btk = vocab
+      .select(col("word"),
+        size(split(trim(TextAnalysis.bpeEncodeRules(col("word"),
+          TextAnalysis.BpeMerges).getField("seq")), "  "))
+          .cast("long").as("n_tokens"),
+        length(col("word")).cast("long").as("n_chars"))
     val utk = vocab
       .select(col("word"),
         size(UnigramTokenizer.unigramTokensExprWith(col("word"), artifact))

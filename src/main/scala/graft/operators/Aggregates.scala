@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.QuerySpec
 
 /** Aggregate surface — catalog/BuiltinsDb.java:679-950: count/min/max/sum/

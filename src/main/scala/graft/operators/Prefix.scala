@@ -74,7 +74,7 @@ object Prefix {
                                    rankCol: String,
                                    localFn: => Column,
                                    offsetFromLocalMax: Boolean,
-                                   cntCol: Option[String] = None):
+                                   cntCol: Option[String]):
       (DataFrame, DataFrame) = {
     val parts = ranged(df, sort)
     val ranked = parts.withColumn("__lrk",

@@ -270,7 +270,7 @@ object AvroSchemas {
   def writeAvro(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
     import org.apache.avro.{Schema => ASchema}
     import org.apache.avro.file.DataFileWriter
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
     val sparkSchema = df.schema
     val schemaJson = toAvroSchema(sparkSchema, "sparkWrite")
     val hconf = new org.apache.spark.util.SerializableConfiguration(

@@ -649,8 +649,8 @@ object EventStreams {
     * shuffle, no state, so it composes under any output mode and holds
     * no watermark state; at 100 TB it is a map-only stage whose
     * throughput scales with input partitions. StreamingSpec pins
-    * stream ≡ batch and the vocab-grain token counts ≡ the q167
-    * join-based encode loop. */
+    * stream ≡ batch and the occurrence-grain token counts ≡ q167's
+    * frequency-weighted vocab-grain counts. */
   def tokenizedDocs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       graft.llmops.TextAnalysis.bpeTokensExpr(col("text")).as("tokens"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
@@ -82,39 +83,37 @@ class BpeSpec extends EngineSuite with TimeLimits {
       "every word must re-concatenate from its merged symbols")
   }
 
-  test("newline-bearing words encode identically in the state loop and " +
-    "the stateless expression (position-based seeds, not regexp '.')") {
+  /** Encoded symbols of column `word` under `rules`. */
+  private def encodedToks(rules: Seq[(String, Int)]): Column =
+    split(trim(llmops.TextAnalysis.bpeEncodeRules(col("word"), rules)
+      .getField("seq")), "  ")
+
+  test("newline-bearing words encode identically in the rule-literal " +
+    "encoder and the Scala reference (position-based seeds, not regexp '.')") {
     val sp = spark.newSession()
     import sp.implicits._
-    val vocab = Seq(("er\ner", 1L), ("ta\nble", 1L), ("table", 2L))
-      .toDF("word", "n")
-    val viaState = llmops.TextAnalysis.bpeEncodeState(sp, vocab)
-      .select(col("word"), expr("split(trim(seq), '  ')").as("toks"))
+    val rules = llmops.TextAnalysis.BpeMerges
+    val words = Seq("er\ner", "ta\nble", "table")
+    val viaExpr = words.toDF("word")
+      .select(col("word"), encodedToks(rules).as("toks"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val viaExpr = vocab
-      .select(col("word"),
-        llmops.TextAnalysis.bpeTokensExpr(col("word")).as("toks"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(viaState == viaExpr,
-      s"state loop and expression diverge on newline words: $viaState vs $viaExpr")
+    val viaRef = words.map(w => w -> greedyWith(w, rules).split("  ").toList).toMap
+    assert(viaExpr == viaRef,
+      s"encoder and Scala reference diverge on newline words: $viaExpr vs $viaRef")
     // the newline is a symbol of its own — a regexp '.' seed would have
     // silently dropped it (differently in Spark and DuckDB, breaking
-    // the three-way formulation parity the oracles pin)
-    assert(viaState("er\ner") == List("er", "\n", "er"))
-    assert(viaState("table") == List("table"))
+    // the parity the oracles pin)
+    assert(viaExpr("er\ner") == List("er", "\n", "er"))
+    assert(viaExpr("table") == List("table"))
   }
 
   test("q406 replay: encoding the training corpus with the LEARNED table " +
     "reproduces the trainer's own final symbol table") {
     val sp = QuerySpec.prepared(spark, sfDir)
     val (mergeTable, finalSyms) = llmops.BpeTokenizer.trainMerges(sp)
-    val learned = mergeTable.select(
-      concat_ws(" ", col("l"), col("r")).as("pair"), col("round").as("rank"))
-    val vocab = finalSyms.groupBy("word").agg(max(col("freq")).as("n"))
-    val enc = llmops.TextAnalysis.bpeEncodeStateWith(
-      sp, vocab, learned, llmops.BpeTokenizer.Merges)
-    val encToks = enc.select(col("word"),
-      expr("split(trim(seq), '  ')").as("toks"))
+    val learned = llmops.BpeTokenizer.mergeRules(mergeTable, col("round"))
+    val encToks = finalSyms.select(col("word")).distinct()
+      .select(col("word"), encodedToks(learned).as("toks"))
     val trainToks = finalSyms.groupBy("word")
       .agg(array_sort(collect_list(struct(col("pos"), col("sym")))).as("ps"))
       .select(col("word"), expr("transform(ps, s -> s.sym)").as("toks"))
@@ -163,15 +162,10 @@ class BpeSpec extends EngineSuite with TimeLimits {
     val sp = QuerySpec.prepared(spark, sfDir)
     val (bm, bSyms) = llmops.BpeTokenizer.trainMerges(
       sp, rounds = llmops.BpeTokenizer.BatchRounds, m = llmops.BpeTokenizer.BatchM)
-    val learned = bm.select(
-      concat_ws(" ", col("l"), col("r")).as("pair"),
-      ((col("round") - 1L) * llmops.BpeTokenizer.BatchM + col("brk"))
-        .as("rank"))
-    val vocab = bSyms.groupBy("word").agg(max(col("freq")).as("n"))
-    val enc = llmops.TextAnalysis.bpeEncodeStateWith(sp, vocab, learned,
-      llmops.BpeTokenizer.BatchRounds * llmops.BpeTokenizer.BatchM)
-    val encToks = enc.select(col("word"),
-      expr("split(trim(seq), '  ')").as("toks"))
+    val learned = llmops.BpeTokenizer.mergeRules(bm,
+      (col("round") - 1L) * llmops.BpeTokenizer.BatchM + col("brk"))
+    val encToks = bSyms.select(col("word")).distinct()
+      .select(col("word"), encodedToks(learned).as("toks"))
     val trainToks = bSyms.groupBy("word")
       .agg(array_sort(collect_list(struct(col("pos"), col("sym")))).as("ps"))
       .select(col("word"), expr("transform(ps, s -> s.sym)").as("toks"))
@@ -240,6 +234,44 @@ class BpeSpec extends EngineSuite with TimeLimits {
     }
   }
 
+  test("degenerate rule tables: an empty learned table keeps the seed " +
+    "segmentation, a duplicated pair keeps its lower rank, and one rule " +
+    "over the ceiling fails loudly with the count") {
+    val sp = spark.newSession()
+    import sp.implicits._
+    val words = Seq("abc", "ab", "x", "er\ner").toDF("word")
+    def encode(rules: Seq[(String, Int)]) =
+      words.select(col("word"), llmops.TextAnalysis.bpeEncodeRules(
+        col("word"), rules).as("g"))
+        .select(col("word"), col("g.seq"), col("g.applied"))
+        .collect().map(r => r.getString(0) ->
+          (r.getString(1), r.getSeq[Long](2).toList)).toMap
+    failAfter(120.seconds) {
+      val (empty, emptySyms) = llmops.BpeTokenizer.trainMerges(docs())
+      llmops.Checkpoints.unpersist(emptySyms)
+      val none = llmops.BpeTokenizer.mergeRules(empty, col("round"))
+      assert(none.isEmpty, s"an empty corpus learned $none")
+      assert(encode(none) == Map(
+        "abc" -> (" a  b  c ", Nil), "ab" -> (" a  b ", Nil),
+        "x" -> (" x ", Nil), "er\ner" -> (" e  r  \n  e  r ", Nil)))
+    }
+    failAfter(120.seconds) {
+      // 'a b' at rank 1 beats 'b c' at rank 3; its rank-5 duplicate
+      // would lose to 'b c' and leave 'a  bc'
+      val dup = encode(Seq("a b" -> 5, "b c" -> 3, "a b" -> 1))
+      assert(dup("abc") == (" ab  c ", List(1L)), s"got ${dup("abc")}")
+      assert(dup("ab") == (" ab ", List(1L)))
+    }
+    failAfter(120.seconds) {
+      val over = llmops.TextAnalysis.BpeMaxRules + 1
+      val e = intercept[IllegalArgumentException] {
+        llmops.TextAnalysis.bpeEncodeRules(col("word"),
+          (1 to over).map(i => s"a$i b" -> i))
+      }
+      assert(e.getMessage.contains(over.toString), e.getMessage)
+    }
+  }
+
   /** The q433 frozen drop coordinate, replayed in Scala (a THIRD
     * formulation next to the Spark expression and the DuckDB text). */
   private def dropCoord(docId: Long, wp: Long, rank: Long): Long =
@@ -260,6 +292,18 @@ class BpeSpec extends EngineSuite with TimeLimits {
     acc.trim
   }
 
+  /** The greedy encode of column `word` under the static table. */
+  private def greedySeq: Column =
+    llmops.TextAnalysis.bpeEncodeRules(col("word"),
+      llmops.TextAnalysis.BpeMerges).getField("seq")
+
+  /** The q433 dropout encode of `(doc_id, word, wp)` at threshold `pE6`. */
+  private def dropoutSeq(pE6: Long): Column =
+    llmops.TextAnalysis.bpeEncodeRules(col("word"),
+      llmops.TextAnalysis.BpeMerges, rk => llmops.TextAnalysis
+        .dropCoordinate(col("doc_id"), col("wp"), rk) >= lit(pE6))
+      .getField("seq")
+
   test("q433 BPE-dropout: p=0 reduces exactly to the greedy encode, " +
     "p=0.1 actually fires on the fixture, and every changed " +
     "segmentation replays from the frozen hash + rule-subset encode") {
@@ -268,19 +312,16 @@ class BpeSpec extends EngineSuite with TimeLimits {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "").distinct()
       .withColumn("wp", expr(llmops.UnigramTokenizer.WordPolySqlSpark))
-    // p = 0: every rule survives — bit-identical to bpeEncodeExpr
+    // p = 0: every rule survives — bit-identical to the greedy encode
     val p0Diff = dw.select(
-        trim(llmops.TextAnalysis.bpeDropoutEncodeExpr(
-          col("doc_id"), col("word"), col("wp"), 0L)).as("d"),
-        trim(llmops.TextAnalysis.bpeEncodeExpr(col("word"))).as("g"))
+        trim(dropoutSeq(0L)).as("d"), trim(greedySeq).as("g"))
       .filter(col("d") =!= col("g"))
     assert(p0Diff.count() == 0L, "p=0 must reduce to the greedy encode")
     // p = 0.1: the regularization is non-degenerate on the fixture,
     // and each changed row replays exactly from the Scala reference
     val diffs = dw.select(col("doc_id"), col("word"), col("wp"),
-        trim(llmops.TextAnalysis.bpeDropoutEncodeExpr(col("doc_id"),
-          col("word"), col("wp"), llmops.TextAnalysis.BpeDropPE6)).as("d"),
-        trim(llmops.TextAnalysis.bpeEncodeExpr(col("word"))).as("g"))
+        trim(dropoutSeq(llmops.TextAnalysis.BpeDropPE6)).as("d"),
+        trim(greedySeq).as("g"))
       .filter(col("d") =!= col("g"))
       .limit(200).collect()
     assert(diffs.nonEmpty,
@@ -309,16 +350,15 @@ class BpeSpec extends EngineSuite with TimeLimits {
       .filter(col("word") =!= "").distinct()
       .withColumn("wp", expr(llmops.UnigramTokenizer.WordPolySqlSpark))
     val wg = dw.select(col("word")).distinct()
-      .withColumn("g", llmops.TextAnalysis.bpeEncodeWithAppliedExpr(col("word")))
+      .withColumn("g", llmops.TextAnalysis.bpeEncodeRules(col("word"),
+        llmops.TextAnalysis.BpeMerges))
       .select(col("word"), col("g.seq").as("gseq"),
         col("g.applied").as("gapplied"))
     val joined = dw.join(wg, Seq("word"))
       .withColumn("needs", exists(col("gapplied"), rk =>
         ((col("doc_id") % 1000003L) * 2654435761L + col("wp") * 131L +
           rk * 524287L) % 1000000L < lit(llmops.TextAnalysis.BpeDropPE6)))
-      .withColumn("full", llmops.TextAnalysis.bpeDropoutEncodeExpr(
-        col("doc_id"), col("word"), col("wp"),
-        llmops.TextAnalysis.BpeDropPE6))
+      .withColumn("full", dropoutSeq(llmops.TextAnalysis.BpeDropPE6))
     // the induction claim, checked empirically on every fixture pair:
     // no dropped APPLIED rank => the dropout loop reproduces greedy
     val broken = joined.filter(!col("needs") && col("full") =!= col("gseq"))
@@ -328,10 +368,10 @@ class BpeSpec extends EngineSuite with TimeLimits {
     // the applied-rank set also matches the plain greedy sequence
     val seqDrift = wg.join(
       dw.select(col("word")).distinct()
-        .withColumn("plain", llmops.TextAnalysis.bpeEncodeExpr(col("word"))),
+        .withColumn("plain", greedySeq),
       Seq("word")).filter(col("gseq") =!= col("plain"))
     assert(seqDrift.count() == 0L,
-      "bpeEncodeWithAppliedExpr's seq drifted from bpeEncodeExpr")
+      "the applied-rank encode's seq drifted from the plain greedy seq")
     // and the prune actually bites: the cheap arm is the majority
     val n = joined.count(); val needsN = joined.filter(col("needs")).count()
     assert(needsN * 2 < n,
@@ -355,9 +395,8 @@ class BpeSpec extends EngineSuite with TimeLimits {
     val out = Seq((docId, "tablet"))
       .toDF("doc_id", "word").withColumn("wp", lit(wp))
       .select(
-        trim(llmops.TextAnalysis.bpeDropoutEncodeExpr(col("doc_id"),
-          col("word"), col("wp"), llmops.TextAnalysis.BpeDropPE6)).as("d"),
-        trim(llmops.TextAnalysis.bpeEncodeExpr(col("word"))).as("g"))
+        trim(dropoutSeq(llmops.TextAnalysis.BpeDropPE6)).as("d"),
+        trim(greedySeq).as("g"))
       .collect()(0)
     assert(out.getAs[String]("g") == "table  t",
       s"greedy must reach 'table t': got '${out.getAs[String]("g")}'")

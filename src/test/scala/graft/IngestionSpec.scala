@@ -134,7 +134,6 @@ class IngestionSpec extends EngineSuite {
 
   test("Avro write → read round-trip preserves rows across partitions") {
     val s = spark
-    import s.implicits._
     import org.apache.spark.sql.functions._
     val df = s.range(0, 100).repartition(4)
       .select(col("id"),

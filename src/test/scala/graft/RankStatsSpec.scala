@@ -702,7 +702,7 @@ class RankStatsSpec extends EngineSuite {
     // whole tie blocks by descending score; decile = ceil(10*cumThrough/n)
     val blocks = docs.groupBy(_._1).toSeq.sortBy(-_._1)
     var cum = 0L
-    val assigned = blocks.map { case (s, xs) =>
+    val assigned = blocks.map { case (_, xs) =>
       cum += xs.length
       (math.ceil(10.0 * cum / n).toLong, xs.length.toLong, xs.count(_._2).toLong)
     }

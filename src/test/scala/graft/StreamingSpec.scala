@@ -326,8 +326,8 @@ class StreamingSpec extends EngineSuite {
   }
 
 
-  test("tokenizedDocs: the stateless BPE encode matches batch, the q167 " +
-    "state loop, and the known merge chain") {
+  test("tokenizedDocs: the stateless BPE encode matches batch, q167's " +
+    "vocab-grain token counts, and the known merge chain") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
@@ -361,8 +361,9 @@ class StreamingSpec extends EngineSuite {
     // seeds), 'er' merges on both sides of it, 'stable' re-fuses
     val tok3 = batch(2).getAs[scala.collection.Seq[String]]("tokens")
     assert(tok3 == Seq("er", "\n", "er", "s", "table"), s"got $tok3")
-    // vocab-grain parity with the q167 join-based state loop on the
-    // REAL fixture corpus: identical token-count table, row for row
+    // occurrence-grain parity with q167's vocab-grain encode (each word
+    // encoded once, counts weighted by frequency) on the REAL fixture
+    // corpus: identical token-count table, row for row
     val viaExpr = QuerySpec.prepared(s, sfDir).table("documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
@@ -377,7 +378,7 @@ class StreamingSpec extends EngineSuite {
     val q167 = SparkEntry.queries("q167_text_bpe_encode")(s, sfDir)
       .select(col("rnk"), col("token"), col("cnt"))
     assert(ranked.exceptAll(q167).isEmpty && q167.exceptAll(ranked).isEmpty,
-      "expression encode and the q167 state loop disagree on token counts")
+      "occurrence-grain and q167's vocab-grain token counts disagree")
   }
 
   test("redactedDocs: the stateless streaming redaction matches batch, " +
