@@ -139,9 +139,9 @@ case class BottomKSample(
   override def createAggregationBuffer(): Buf = new Buf()
 
   private def insert(buf: Buf, h: Long, s: String): Unit = {
-    if (buf.size < k) buf.putIfAbsent(h, s)
+    if (buf.size < k) graft.discard(buf.putIfAbsent(h, s))
     else if (h < buf.lastKey()) {
-      if (buf.putIfAbsent(h, s) == null) buf.remove(buf.lastKey())
+      if (buf.putIfAbsent(h, s) == null) graft.discard(buf.remove(buf.lastKey()))
     }
   }
 
@@ -271,7 +271,7 @@ case class MisraGriesTopK(
   }
 
   override def merge(buf: Buf, other: Buf): Buf = {
-    other.forEach((s, c) => buf.put(s, buf.get(s) + c)) // get(miss) unboxes to 0L
+    other.forEach((s, c) => graft.discard(buf.put(s, buf.get(s) + c))) // get(miss) unboxes to 0L
     if (buf.size > capacity) {
       // (capacity+1)-th largest count, subtracted from all (PODS '12 §3.1)
       val counts = new Array[Long](buf.size)

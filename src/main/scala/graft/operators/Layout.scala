@@ -305,7 +305,7 @@ object Layout {
       import java.util.Comparator
       try {
         Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+          .forEach(p => graft.discard(Files.deleteIfExists(p)))
       } catch { case _: Throwable => () } // best-effort cleanup only
     }))
     dir.toString

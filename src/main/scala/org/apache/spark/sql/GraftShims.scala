@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.{RDD, ReliableRDDCheckpointData}
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge between the public Column API and catalyst Expressions (the
@@ -13,6 +14,20 @@ object GraftShims {
   /** Drops an RDD's blocks without `RDD.unpersist`'s per-call WARN for
     * locally checkpointed RDDs (`SparkContext.unpersistRDD` is
     * `private[spark]`). */
-  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+  def unpersistRDD(rdd: RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Deletes a reliably checkpointed RDD's files now (a no-op for any
+    * other RDD); Spark keeps them until the application ends unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is set. */
+  def cleanCheckpoint(rdd: RDD[_]): Unit =
+    if (rdd.getCheckpointFile.isDefined)
+      ReliableRDDCheckpointData.cleanCheckpoint(rdd.sparkContext, rdd.id)
+
+  /** Deletes a reliably checkpointed RDD's files once the RDD is garbage
+    * collected — the ContextCleaner registration that
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` makes for every
+    * checkpoint, made for this one RDD. */
+  def cleanCheckpointWhenCollected(rdd: RDD[_]): Unit =
+    rdd.sparkContext.cleaner.foreach(_.registerRDDCheckpointDataForCleanup(rdd, rdd.id))
 }

@@ -2,14 +2,17 @@ package graft
 
 import graft.llmops.Checkpoints
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Range}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
 /** Pins the staged-loop primitive (llmops.Checkpoints.iterate): which
-  * rounds it releases, where it stops, the round count it returns, and
-  * that every loop built on it ends cleanly on an empty input. */
+  * rounds it releases, where it stops, the round count it returns, that
+  * every loop built on it ends cleanly on an empty input, and that staged
+  * storage (blocks or reliable checkpoint files) lives no longer than the
+  * DataFrames over it. */
 class CheckpointsSpec extends EngineSuite with TimeLimits {
 
   /** failAfter interrupts the looping thread at the deadline. */
@@ -28,6 +31,14 @@ class CheckpointsSpec extends EngineSuite with TimeLimits {
 
   private def increment(r: Checkpoints.Round): DataFrame =
     r.prev.select((col("x") + 1).as("x"))
+
+  /** Full GCs 200 ms apart, at most 50, until `done`; whether it held. */
+  private def eventually(done: => Boolean): Boolean =
+    Iterator.range(0, 50).exists { _ =>
+      System.gc()
+      Thread.sleep(200)
+      done
+    }
 
   test("iterate releases every superseded round, or retains all of them") {
     for (release <- Seq(true, false)) {
@@ -121,5 +132,84 @@ class CheckpointsSpec extends EngineSuite with TimeLimits {
         Seq.empty[(Long, Long)].toDF("src", "dst"))
     }
     assert(labels.isEmpty && rounds == 1)
+  }
+
+  test("staged lineage is walkable through provenance while the result " +
+    "lives, and no staged RDD outlives the last DataFrame over it") {
+    /** The leaves of `p`, subqueries included. */
+    def leaves(p: LogicalPlan): Seq[LogicalPlan] =
+      p.collectWithSubqueries { case l: LeafNode => l: LogicalPlan }
+    /** Staged leaves on the longest provenance path below `p`; fails on a
+      * recorded plan that still holds an RDD or ends anywhere but a Range. */
+    def depth(p: LogicalPlan): Int = leaves(p).map { l =>
+      Checkpoints.provenanceOf(l) match {
+        case Some(src) =>
+          assert(leaves(src).forall(!_.isInstanceOf[LogicalRDD]),
+            s"a recorded plan holds an RDD:\n$src")
+          1 + depth(src)
+        case None =>
+          assert(l.isInstanceOf[Range], s"walk ended at ${l.nodeName}")
+          0
+      }
+    }.max
+
+    // everything is built and dropped inside this method, so nothing
+    // staged here is reachable once it returns
+    def stagedAndWalked(): Unit = {
+      val a = Checkpoints.stage(spark.range(64).select(col("id").as("x")))
+      val b = Checkpoints.stage(a.select((col("x") * 2).as("x")))
+      val c = Checkpoints.stage(
+        b.filter(col("x") <= a.select(max(col("x"))).scalar()))
+      val (last, n) = Checkpoints.iterate(c, 3, release = false)(increment) {
+        (_, _, _) => true
+      }
+      assert(n == 3 && last.agg(sum(col("x"))).first().getLong(0) ==
+        (0L until 32L).map(x => 2 * x + 3).sum)
+      // last → rounds 2, 1 → c → b (c's subquery reaches a directly) → a
+      assert(depth(last.queryExecution.optimizedPlan) == 6)
+    }
+
+    val before = persisted
+    failAfter(120.seconds) {
+      stagedAndWalked()
+      assert(eventually((persisted -- before).isEmpty),
+        s"still persistent after the result was dropped: ${persisted -- before}")
+    }
+  }
+
+  test("reliable staging deletes a released round's files when iterate " +
+    "returns and the rest once the result is dropped; observed metrics " +
+    "read back exactly") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    spark.sparkContext.setCheckpointDir(root.toString)
+    spark.conf.set(Checkpoints.ReliableKey, "true")
+    import scala.jdk.CollectionConverters._
+    /** The names of the checkpoint directories written so far. */
+    def written: Set[String] = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("rdd-")).toSet
+      finally walk.close()
+    }
+
+    def runAndDrop(): Unit = {
+      val init = counter(0L)
+      val ids = scala.collection.mutable.ArrayBuffer(rddId(init))
+      val (last, n) = Checkpoints.iterate(init, 3) { r =>
+        r.observe(increment(r), count(lit(1)).as("rows"), max(col("x")).as("mx"))
+      } { (r, next, o) =>
+        ids += rddId(next)
+        assert(o.long("rows", -1L) == 1L && o.long("mx", -1L) == r.n.toLong)
+        true
+      }
+      assert(n == 3 && last.first().getLong(0) == 3L)
+      assert(ids.forall(id => written.contains(s"rdd-$id") == (id == rddId(last))),
+        s"rounds ${ids.mkString(",")}, on disk: $written")
+    }
+
+    try failAfter(120.seconds) {
+      runAndDrop()
+      assert(eventually(written.isEmpty), s"left on disk: $written")
+    } finally spark.conf.unset(Checkpoints.ReliableKey)
   }
 }
