@@ -43,14 +43,18 @@ class CheckpointsSpec extends EngineSuite with TimeLimits {
   test("iterate releases every superseded round, or retains all of them") {
     for (release <- Seq(true, false)) {
       val init = counter(0L)
-      val rounds = scala.collection.mutable.ArrayBuffer(rddId(init))
+      // held here as a retaining caller holds its rounds: a staged round
+      // nothing references is collected, and its blocks with it
+      val held = scala.collection.mutable.ArrayBuffer(init)
       val (last, n) = Checkpoints.iterate(init, 4, release)(increment) {
-        (_, next, _) => rounds += rddId(next); true
+        (_, next, _) => held += next; true
       }
       assert(n == 4 && last.first().getLong(0) == 4L)
-      val left = rounds.filter(persisted.contains).toSeq
+      val rounds = held.map(rddId).toSeq
+      val left = rounds.filter(persisted.contains)
+      java.lang.ref.Reference.reachabilityFence(held)
       if (release) assert(left == Seq(rddId(last)), s"left behind: $left")
-      else assert(left == rounds.toSeq, s"released: ${rounds.diff(left)}")
+      else assert(left == rounds, s"released: ${rounds.diff(left)}")
       rounds.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false)))
     }
@@ -183,14 +187,11 @@ class CheckpointsSpec extends EngineSuite with TimeLimits {
     val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
     spark.sparkContext.setCheckpointDir(root.toString)
     spark.conf.set(Checkpoints.ReliableKey, "true")
-    import scala.jdk.CollectionConverters._
-    /** The names of the checkpoint directories written so far. */
-    def written: Set[String] = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("rdd-")).toSet
-      finally walk.close()
-    }
+    /** The names of the checkpoint directories on disk (`<root>/<uuid>/
+      * rdd-<id>`); a snapshot listing, safe while the cleaner deletes. */
+    def written: Set[String] = Option(root.toFile.listFiles()).toSeq.flatten
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      .map(_.getName).filter(_.startsWith("rdd-")).toSet
 
     def runAndDrop(): Unit = {
       val init = counter(0L)

@@ -102,13 +102,16 @@ class LlmOpsSpec extends EngineSuite {
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(llmops.Checkpoints.ReliableKey, "true")
     try {
-      val reliable = llmops.Dedup.q81MinHashLsh.run(spark, sfDir)
-        .collect().map(_.toString).sorted.toSeq
+      // held while the files are counted: a reliable staging's files are
+      // deleted once nothing references its relation
+      val result = llmops.Dedup.q81MinHashLsh.run(spark, sfDir)
+      val reliable = result.collect().map(_.toString).sorted.toSeq
       assert(reliable == baseline, "reliable staging changed the result")
       def files(f: java.io.File): Int =
         if (f.isDirectory) f.listFiles().map(files).sum else 1
       assert(files(new java.io.File(dir)) > 0,
         "reliable mode wrote no checkpoint data — the switch never engaged")
+      java.lang.ref.Reference.reachabilityFence(result)
     } finally spark.conf.unset(llmops.Checkpoints.ReliableKey)
   }
 
