@@ -2,7 +2,7 @@ package graft.llmops
 
 import graft.QuerySpec
 import graft.llmops.Checkpoints.Stageable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,13 +23,16 @@ import org.apache.spark.sql.functions._
   *    [[SubMaxLen]] characters (≤ len·[[SubMaxLen]] edges per word),
   *    joined to the vocabulary on the subword — vocab-grain, never
   *    corpus-grain;
-  *  - the Viterbi DP is ONE per-row expression: an `aggregate` over the
-  *    word's positions whose accumulator is the dp array (best score,
-  *    backpointer, path), each step an `array_max` over the lattice
-  *    edges ending at that position — zero joins, zero shuffles, zero
-  *    iterative rounds, bounded by word length × [[SubMaxLen]]
-  *    comparisons (contrast the BPE trainer's K driver-barrier rounds:
-  *    Viterbi segmentation is embarrassingly parallel);
+  *  - the Viterbi DP is ONE per-row expression, [[viterbiBest]]: an
+  *    `aggregate` over the word's positions whose accumulator holds the
+  *    top-k (score, path) states per position, each step a sort of the
+  *    candidate edges ending at that position — zero joins, zero
+  *    shuffles, zero iterative rounds, bounded by word length ×
+  *    [[SubMaxLen]] × k comparisons (contrast the BPE trainer's K
+  *    driver-barrier rounds: Viterbi segmentation is embarrassingly
+  *    parallel). The 1-best segmentation, the removal DP, the 2-best
+  *    lattice and the literal-vocab encode all call it and differ only
+  *    in where the candidate edges come from;
   *  - EM's M-step is one vocab-grain rollup of segmentation usage
   *    counts, re-normalized — subwords the Viterbi paths never use drop
   *    out (the algorithm's implicit pruning; Kudo prunes by likelihood
@@ -42,7 +45,7 @@ import org.apache.spark.sql.functions._
   * DP sums and compares exact integers — no float-accumulation argmax
   * hazard on any partitioning or engine. Ties break on the larger start
   * position (the SHORTER final token), which identifies the edge
-  * uniquely; the struct-max encodes exactly that order.
+  * uniquely; the DP's candidate sort encodes exactly that order.
   *
   * The reference is a SQL frontend with no tokenizer surface; this
   * module is part of the training-data-pipeline layer the build adds
@@ -113,29 +116,22 @@ object UnigramTokenizer {
         .filter(col("cnt") >= MinFreq || length(col("sub")) === 1))
 
   /** Viterbi-segment every distinct word under a `(sub, lp)` vocabulary:
-    * returns (word, freq, score, toks). The whole DP is ONE per-row
-    * expression — `aggregate` over positions 1..len builds the dp array
-    * (index p holds the best score into position p, its backpointer, and
-    * the path so far); each step is an `array_max` over the ≤[[SubMaxLen]]
-    * lattice edges ending at p whose START position is reachable
-    * (unreachable positions hold NULL — possible under a pruned EM
-    * vocabulary; the word's own previous segmentation keeps the FINAL
-    * position reachable). The struct-max order (score, start j, path)
-    * is the exact tie-break: highest score, then the largest start —
-    * the shortest final token — which identifies the edge uniquely, so
-    * the path field never decides. Scores are e6-quantized BIGINTs:
-    * exact sums, engine- and partitioning-independent argmax.
+    * returns (word, freq, score, toks) — [[viterbiBest]] at k = 1 over
+    * the word's collected lattice edges. Unreachable interior positions
+    * (possible under a pruned EM vocabulary) hold no state, and the
+    * word's own previous segmentation keeps the FINAL position
+    * reachable. Scores are e6-quantized BIGINTs: exact sums, engine-
+    * and partitioning-independent argmax.
     *
     * EVERY word of `ed` comes back: a word with no full lattice path
     * under a non-covering vocabulary (digits/uppercase outside a static
     * cover, or an aggressively pruned model) returns toks = [[[Unk]]]
     * with a NULL score — the same UNK contract as the expression path
-    * [[unigramTokensExpr]], so the two SPARK formulations can never
-    * silently diverge, and a downstream `size(toks)` rollup can never
-    * swallow a NULL. Scope honestly: the score stays NULL on the UNK
-    * arm (no likelihood is defined for an unsegmentable word — q411's
-    * ll_e6 would drop such a word, which is why q414 guards coverage
-    * LOUDLY in-plan), and the dpChain ORACLES assume a covering
+    * [[unigramTokensExpr]], and a downstream `size(toks)` rollup can
+    * never swallow a NULL. Scope honestly: the score stays NULL on the
+    * UNK arm (no likelihood is defined for an unsegmentable word —
+    * q411's ll_e6 would drop such a word, which is why q414 guards
+    * coverage LOUDLY in-plan), and the dpChain ORACLES assume a covering
     * vocabulary (exactly what every oracle-gated query runs; q413's
     * replay is the one that models UNK, via its COALESCE spine). Under
     * the seed/EM vocabularies the single-char coverage guarantee makes
@@ -143,83 +139,112 @@ object UnigramTokenizer {
   private[graft] def viterbi(ed: DataFrame, vocab: DataFrame): DataFrame =
     viterbiLat(ed, latticeOf(ed, vocab))
 
-  /** The lattice join behind [[viterbi]]/[[viterbiScoreWithout]]: the
-    * word edges carrying their vocab log-probs — split out so callers
-    * that feed BOTH consumers (q423) can stage it once. */
+  /** The lattice join behind [[viterbi]]/[[viterbiScoreWithout]]/
+    * [[viterbi2Best]]: the word edges carrying their vocab log-probs —
+    * split out so callers that feed BOTH consumers (q423) can stage it
+    * once. */
   private[graft] def latticeOf(ed: DataFrame, vocab: DataFrame): DataFrame =
     ed.join(vocab.select(col("sub"), col("lp")), Seq("sub"))
 
-  /** The per-position argmax DP as ONE SQL expression over the
-    * collected edge list `es` of one word — shared verbatim by
-    * [[viterbiLat]] (keyed by word) and [[viterbiScoreWithout]] (keyed
-    * by (word, excluded-token)), so the two DPs can never drift. */
-  private val viterbiDpExpr: String =
-    """element_at(
-      |  aggregate(sequence(1, length(word)),
-      |    -- the CAST sets containsNull on the accumulator's array
-      |    -- type: unreachable positions append NULL elements, and a
-      |    -- containsNull=false zero would let codegen skip the null
-      |    -- check on the final element (NPE under the UNK arm)
-      |    CAST(array(named_struct('score', CAST(0 AS BIGINT), 'bt', -1,
-      |                            'path', ''))
-      |         AS ARRAY<STRUCT<score: BIGINT, bt: INT, path: STRING>>),
-      |    (acc, p) -> concat(acc, array(
-      |      array_max(transform(
-      |        filter(es, e -> e.i = p
-      |                        AND element_at(acc, e.j + 1) IS NOT NULL),
-      |        e -> named_struct(
-      |          'score', element_at(acc, e.j + 1).score + e.lp,
-      |          'bt', e.j,
-      |          'path', concat(element_at(acc, e.j + 1).path, ' ',
-      |                         e.sub))))))),
-      |  length(word) + 1) AS dp""".stripMargin
+  /** The ONE unigram Viterbi DP: a per-row Column keeping, for every end
+    * position p of a word of length `len`, the top `k` derivations over
+    * the candidate edges `cands(p)` (`struct(j, sub, lp)` — an edge from
+    * start j to p) in the TOTAL order (score DESC, start j DESC,
+    * predecessor rank ASC). (j, rank) identifies a derivation uniquely,
+    * so the emitted paths are distinct; at k = 1 the order is (score,
+    * larger start — the shorter final token), the argmax tie-break every
+    * oracle replays. The accumulator is the array of per-position state
+    * arrays (an unreachable position is an EMPTY array, so it simply
+    * contributes no candidates); scores are exact e6 BIGINT sums, so
+    * the argmax is engine- and partitioning-independent. Returns
+    * `array<struct<score: bigint, path: string>>` for the final position
+    * — empty when it is unreachable; paths carry a leading space.
+    *
+    * Zero joins, zero shuffles, zero rounds: the work is bounded by
+    * word length × [[SubMaxLen]] × k comparisons per word, and every
+    * caller (lattice edges keyed by word or by (word, ex), or a literal
+    * vocab map probed per substring) only chooses the candidates. */
+  private def viterbiBest(len: Column, k: Int, cands: Column => Column): Column = {
+    // the CAST declares every level nullable: the states' scores are
+    // sums over a nullable lp column, and the accumulator type must not
+    // claim otherwise to a codegen'd consumer
+    val zero = array(array(struct(lit(0L).as("score"), lit("").as("path"))))
+      .cast("array<array<struct<score: bigint, path: string>>>")
+    val dp = aggregate(sequence(lit(1), len), zero, (acc, p) =>
+      concat(acc, array(transform(
+        // ascending natural struct sort on (-score, -j, rank) IS the
+        // total candidate order
+        slice(sort_array(flatten(transform(cands(p), e =>
+          transform(element_at(acc, e("j") + 1), (d, r) => {
+            val score = d("score") + e("lp")
+            struct((-score).as("nscore"), (-e("j")).as("nj"), r.as("r"),
+              score.as("score"),
+              concat(d("path"), lit(" "), e("sub")).as("path"))
+          })))), 1, k),
+        c => struct(c("score").as("score"), c("path").as("path"))))))
+    element_at(dp, len + 1)
+  }
+
+  /** [[viterbiBest]] per `keys` group of a joined lattice (`(word, …,
+    * j, i, sub, lp)` — [[latticeOf]]'s shape): the group's edges are
+    * collected once and the candidates into p are those ending at p.
+    * Returns (keys…, `name`). */
+  private def latticeBest(lat: DataFrame, k: Int, name: String,
+                          keys: String*): DataFrame =
+    lat.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("i"), col("j"), col("lp"), col("sub")))
+        .as("es"))
+      .select(keys.map(col) :+ viterbiBest(length(col("word")), k,
+        p => filter(col("es"), e => e("i") === p)).as(name): _*)
+
+  /** The word spine of `ed` left-joined to a per-word DP relation `dp`
+    * (keyed by (word, freq)): a word with no full path (`c` empty) or no
+    * vocab edge at all (dropped by the lattice join, `c` NULL) takes the
+    * UNK arm `unk`, so no word silently vanishes. The spine comes off
+    * the lattice itself, AGGREGATION-FREE: every word has exactly one
+    * (j = 0, length-1) edge, so a filter IS the distinct-word relation
+    * (no second corpus pass, no shuffle). */
+  private def onWordSpine(ed: DataFrame, dp: DataFrame, c: String,
+                          unk: Column): DataFrame =
+    ed.filter(col("j") === 0 && col("i") === 1)
+      .select(col("word"), col("freq"))
+      .join(dp, Seq("word", "freq"), "left")
+      .withColumn(c, coalesce(when(size(col(c)) > 0, col(c)), unk))
 
   /** [[viterbi]] over an already-joined lattice (`(word, freq, j, i,
     * sub, lp)` — [[latticeOf]]'s shape); `ed` supplies the word spine. */
   private def viterbiLat(ed: DataFrame, lat: DataFrame): DataFrame = {
-    val dp = lat
-      .groupBy(col("word"), col("freq"))
-      .agg(collect_list(struct(col("i"), col("j"), col("lp"), col("sub")))
-        .as("es"))
-      .selectExpr("word", "freq", viterbiDpExpr)
-      .selectExpr("word", "freq", "dp.score AS score",
-        "split(trim(dp.path), ' ') AS toks")
-    // word spine off the lattice itself, AGGREGATION-FREE: every word
-    // has exactly one (j = 0, length-1) edge, so a filter IS the
-    // distinct-word relation (no second corpus pass, no shuffle).
-    // Words whose every substring misses the vocab drop out of the DP
-    // join entirely, and covered words can still lack a FULL path —
-    // both land on the UNK arm
-    ed.filter(col("j") === 0 && col("i") === 1)
-      .select(col("word"), col("freq"))
-      .join(dp, Seq("word", "freq"), "left")
-      .withColumn("toks", coalesce(col("toks"), array(lit(Unk))))
+    val best = try_element_at(col("best"), lit(1))
+    onWordSpine(ed,
+      latticeBest(lat, 1, "best", "word", "freq")
+        .select(col("word"), col("freq"), best("score").as("score"),
+          split(trim(best("path")), " ").as("toks")),
+      "toks", array(lit(Unk)))
   }
 
-  /** Best Viterbi score per (word, excluded token): the exact DP of
-    * [[viterbi]], but run on the word's lattice with ALL edges of one
-    * candidate token removed — the inner computation of Kudo 2018
-    * §3.2's likelihood-loss pruning criterion ("how much does the
-    * corpus LL drop if token x leaves the vocabulary?"), answered
-    * exactly against the current Viterbi segmentations. `cand(word,
-    * ex)` enumerates the pairs to price (a token is only priced
-    * against words whose BEST path uses it — elsewhere its removal
-    * changes nothing). Returns (word, ex, score_wo); score_wo is NULL
-    * when the word has no full path without `ex` — the token is
-    * load-bearing for coverage and must never be pruned. Scale shape:
-    * one (word)-keyed join fans the word-grain lattice out to the
-    * (word, used-token) grain — avg tokens-per-word × word-grain rows,
-    * embarrassingly parallel, one shuffle on the (word, ex) group
-    * key, zero rounds. */
+  /** Best Viterbi score per (word, excluded token): [[viterbiBest]] at
+    * k = 1, but on the word's lattice with ALL edges of one candidate
+    * token removed — the inner computation of Kudo 2018 §3.2's
+    * likelihood-loss pruning criterion ("how much does the corpus LL
+    * drop if token x leaves the vocabulary?"), answered exactly against
+    * the current Viterbi segmentations. `cand(word, ex)` enumerates the
+    * pairs to price (a token is only priced against words whose BEST
+    * path uses it — elsewhere its removal changes nothing). Returns
+    * (word, ex, score_wo); score_wo is NULL (or the pair absent, when
+    * every edge of the word is `ex`'s) when the word has no full path
+    * without `ex` — the token is load-bearing for coverage and must
+    * never be pruned. Scale shape: one (word)-keyed join fans the
+    * word-grain lattice out to the (word, used-token) grain — avg
+    * tokens-per-word × word-grain rows, embarrassingly parallel, one
+    * shuffle on the (word, ex) group key, zero rounds. */
   private[graft] def viterbiScoreWithout(lat: DataFrame,
                                          cand: DataFrame): DataFrame =
-    lat.join(cand.select(col("word"), col("ex")), Seq("word"))
-      .filter(col("sub") =!= col("ex"))
-      .groupBy(col("word"), col("ex"))
-      .agg(collect_list(struct(col("i"), col("j"), col("lp"), col("sub")))
-        .as("es"))
-      .selectExpr("word", "ex", viterbiDpExpr)
-      .select(col("word"), col("ex"), col("dp.score").as("score_wo"))
+    latticeBest(
+      lat.join(cand.select(col("word"), col("ex")), Seq("word"))
+        .filter(col("sub") =!= col("ex")),
+      1, "best", "word", "ex")
+      .select(col("word"), col("ex"),
+        try_element_at(col("best"), lit(1))("score").as("score_wo"))
 
   // ---------------------------------------------------------------------
   // DuckDB oracle: the identical DP with one CTE per word position —
@@ -1110,16 +1135,15 @@ object UnigramTokenizer {
   private[graft] val Unk = "<unk>"
 
   /** Stateless unigram ENCODE of a document as a SINGLE per-row
-    * expression: the exact [[viterbi]] DP — same dp-array accumulator,
-    * same e6-integer scores, same (score, larger-start) struct-max
-    * tie-break — but the lattice is derived INLINE per position and the
-    * vocabulary is a literal map, so there are zero joins, zero
-    * shuffles, zero state. Runs identically over batch rows and a
-    * structured stream (the tokenizer stage of a streaming ingestion
-    * pipeline — [[graft.streaming.EventStreams.unigramTokenizedDocs]]);
-    * words without a full path emit [[Unk]]. */
-  private[graft] def unigramTokensExpr(text: org.apache.spark.sql.Column):
-      org.apache.spark.sql.Column =
+    * expression: [[viterbiBest]] at k = 1 — the DP behind [[viterbi]] —
+    * with each position's candidates derived INLINE (the ≤ [[SubMaxLen]]
+    * substrings ending there, looked up in a literal vocab map, misses
+    * dropped), so there are zero joins, zero shuffles, zero state. Runs
+    * identically over batch rows and a structured stream (the tokenizer
+    * stage of a streaming ingestion pipeline —
+    * [[graft.streaming.EventStreams.unigramTokenizedDocs]]); words
+    * without a full path emit [[Unk]]. */
+  private[graft] def unigramTokensExpr(text: Column): Column =
     unigramTokensExprWith(text, StaticVocab)
 
   /** [[unigramTokensExpr]] parameterized over the vocabulary — the form
@@ -1130,31 +1154,20 @@ object UnigramTokenizer {
     * entries, a few hundred KB; at that size Spark ships it inside the
     * plan like any broadcast parameter, and the per-row DP stays
     * join-free on every executor). */
-  private[graft] def unigramTokensExprWith(
-      text: org.apache.spark.sql.Column,
-      vocab: Seq[(String, Long)]): org.apache.spark.sql.Column = {
+  private[graft] def unigramTokensExprWith(text: Column,
+                                           vocab: Seq[(String, Long)]): Column = {
     val vocabMap = map_from_arrays(
       array(vocab.map(kv => lit(kv._1)): _*),
       array(vocab.map(kv => lit(kv._2)): _*))
-    def wordToks(w: org.apache.spark.sql.Column) = {
-      val dp = aggregate(
-        sequence(lit(1), length(w)),
-        // containsNull cast — same NPE guard as [[viterbi]]'s zero
-        array(struct(lit(0L).as("score"), lit(-1).as("bt"), lit("").as("path")))
-          .cast("array<struct<score: bigint, bt: int, path: string>>"),
-        (acc, p) => concat(acc, array(
-          array_max(filter(
-            transform(sequence(greatest(lit(0), p - SubMaxLen), p - 1), j =>
-              struct(
-                (element_at(acc, j + 1).getField("score") +
-                  element_at(vocabMap, substr(w, j + 1, p - j))).as("score"),
-                j.as("bt"),
-                concat(element_at(acc, j + 1).getField("path"), lit(" "),
-                  substr(w, j + 1, p - j)).as("path"))),
-            c => c.getField("score").isNotNull)))))
-      val fin = element_at(dp, length(w) + 1)
-      when(fin.isNull, array(lit(Unk)))
-        .otherwise(split(trim(fin.getField("path")), " "))
+    def wordToks(w: Column) = {
+      val best = viterbiBest(length(w), 1, p =>
+        filter(
+          transform(sequence(greatest(lit(0), p - SubMaxLen), p - 1), j =>
+            struct(j.as("j"), substr(w, j + 1, p - j).as("sub"),
+              element_at(vocabMap, substr(w, j + 1, p - j)).as("lp"))),
+          e => e("lp").isNotNull))
+      split(trim(coalesce(try_element_at(best, lit(1))("path"), lit(Unk))),
+        " ")
     }
     flatten(transform(
       filter(split(text, " "), w => w =!= ""),
@@ -1163,11 +1176,11 @@ object UnigramTokenizer {
 
   /** The expression encode under the oracle gate (the q405 analogue):
     * corpus-weighted top-30 tokens — `<unk>` included — of the static-
-    * vocab segmentations. The DuckDB replay runs the SAME positional DP
-    * over a VALUES lattice, with uncovered words LEFT-JOIN-defaulted to
-    * [[Unk]]; two independent formulations of the DP (per-row expression
-    * here, lattice-join in UnigramSpec's parity pin) against one
-    * replay. */
+    * vocab segmentations. The DuckDB replay runs the positional DP over
+    * a VALUES lattice, with uncovered words LEFT-JOIN-defaulted to
+    * [[Unk]]; the Spark side is [[viterbiBest]] fed from the literal
+    * vocab map, the same DP UnigramSpec's parity pin runs over the
+    * lattice join. */
   val q413UnigramEncodeExpr: QuerySpec = {
     val vals = StaticVocab.map { case (s2, l) => s"('$s2', CAST($l AS BIGINT))" }
       .mkString(", ")
@@ -1283,69 +1296,25 @@ object UnigramTokenizer {
   // ---------------------------------------------------------------------
 
   /** Top-2 segmentations per word under a `(sub, lp)` vocabulary —
-    * the standard k-best Viterbi DP (k = 2), still ONE per-row
-    * expression: the accumulator holds, per position, the ordered
-    * array of up to 2 (score, path) states; each step flattens
-    * (edges into p) × (predecessor states with their rank), sorts by
-    * the TOTAL candidate order (score DESC, start j DESC, predecessor
-    * rank ASC — (j, rank) identifies a candidate uniquely, so the
-    * order is total and the emitted paths are distinct derivations),
-    * and keeps the first two. Rank 1 is exactly [[viterbi]]'s argmax
-    * path (same tie-break prefix — UnigramSpec pins it and fuzzes the
-    * whole thing against an independent reference). Unreachable
-    * INTERMEDIATE positions are naturally EMPTY arrays (no NULL arm
-    * needed: an empty predecessor state contributes no candidates);
-    * a word UNREACHABLE at its final position under a non-covering
-    * vocabulary returns the same UNK contract as [[viterbi]] — one
-    * element (score = NULL, path = [[Unk]]) — via a left-joined word
-    * spine, so a caller under a pruned vocab can never silently lose
-    * words (ADVICE r18: the previous empty-array return vanished
-    * through posexplode). Returns (word, freq, best2: array of
-    * (score, path)). Same scale shape as [[viterbi]]: zero
-    * joins/shuffles/rounds past the lattice join — the 2-best
-    * bookkeeping multiplies the per-step constant by ≤ 2, nothing
-    * else. */
-  private[graft] def viterbi2Best(ed: DataFrame, vocab: DataFrame): DataFrame = {
-    val dp = ed.join(vocab.select(col("sub"), col("lp")), Seq("sub"))
-      .groupBy(col("word"), col("freq"))
-      .agg(collect_list(struct(col("i"), col("j"), col("lp"), col("sub")))
-        .as("es"))
-      .selectExpr("word", "freq",
-        """element_at(
-          |  aggregate(sequence(1, length(word)),
-          |    CAST(array(array(named_struct('score', CAST(0 AS BIGINT),
-          |                                  'path', '')))
-          |         AS ARRAY<ARRAY<STRUCT<score: BIGINT, path: STRING>>>),
-          |    (acc, p) -> concat(acc, array(
-          |      transform(
-          |        slice(
-          |          -- total candidate order: score DESC, j DESC, pred
-          |          -- rank ASC — encoded as an ascending natural struct
-          |          -- sort on (-score, -j, r)
-          |          array_sort(
-          |            flatten(transform(
-          |              filter(es, e -> e.i = p),
-          |              e -> transform(element_at(acc, e.j + 1), (d, r) ->
-          |                named_struct(
-          |                  'nscore', -(d.score + e.lp),
-          |                  'nj', -e.j,
-          |                  'r', r,
-          |                  'score', d.score + e.lp,
-          |                  'path', concat(d.path, ' ', e.sub)))))),
-          |          1, 2),
-          |        c -> named_struct('score', c.score, 'path', c.path))))),
-          |  length(word) + 1) AS best2""".stripMargin)
-    // word spine, left-joined (the [[viterbi]] idiom): words dropped by
-    // the vocab join or with an empty final state land on the UNK arm
-    ed.filter(col("j") === 0 && col("i") === 1)
-      .select(col("word"), col("freq"))
-      .join(dp, Seq("word", "freq"), "left")
-      .withColumn("best2",
-        when(col("best2").isNull || size(col("best2")) === 0,
-          array(struct(lit(null).cast("long").as("score"),
-            lit(Unk).as("path"))))
-          .otherwise(col("best2")))
-  }
+    * [[viterbiBest]] at k = 2 over [[latticeOf]]: per position the
+    * ordered array of up to 2 (score, path) states, candidates in the
+    * total order (score DESC, start j DESC, predecessor rank ASC), so
+    * the two emitted paths are distinct derivations and rank 1 is
+    * exactly [[viterbi]]'s argmax path (UnigramSpec fuzzes both ranks
+    * against an independent reference). A word UNREACHABLE at its final
+    * position under a non-covering vocabulary returns the same UNK
+    * contract as [[viterbi]] — one element (score = NULL, path =
+    * [[Unk]]) — via the left-joined word spine, so a caller under a
+    * pruned vocab can never silently lose words (an empty array would
+    * vanish through posexplode). Returns
+    * (word, freq, best2: array of (score, path)). Same scale shape as
+    * [[viterbi]]: zero joins/shuffles/rounds past the lattice join —
+    * the 2-best bookkeeping multiplies the per-step constant by ≤ 2,
+    * nothing else. */
+  private[graft] def viterbi2Best(ed: DataFrame, vocab: DataFrame): DataFrame =
+    onWordSpine(ed, latticeBest(latticeOf(ed, vocab), 2, "best2", "word", "freq"),
+      "best2",
+      array(struct(lit(null).cast("long").as("score"), lit(Unk).as("path"))))
 
   /** The 2-best DP chain unrolled for DuckDB: `dp2{p}` holds up to TWO
     * rows per word into position p (rn 1..2), candidates ranked by the
@@ -1623,8 +1592,8 @@ object UnigramTokenizer {
       .select(col("word"),
         element_at(col("best2"), 1).getField("score").as("s1"),
         trim(element_at(col("best2"), 1).getField("path")).as("p1"),
-        element_at(col("best2"), 2).getField("score").as("s2"),
-        trim(element_at(col("best2"), 2).getField("path")).as("p2"))
+        try_element_at(col("best2"), lit(2)).getField("score").as("s2"),
+        trim(try_element_at(col("best2"), lit(2)).getField("path")).as("p2"))
       // the word polynomial of the sampling coordinate rides the
       // word-grain relation: folding it here (once per distinct word)
       // instead of per (doc, word) row leaves the pair grain pure

@@ -659,8 +659,9 @@ object EventStreams {
   /** Streaming UNIGRAM tokenizer stage — [[tokenizedDocs]] for the
     * second tokenizer family: stateless per-row Viterbi segmentation
     * under a pretrained vocabulary (the q413 expression,
-    * [[graft.llmops.UnigramTokenizer.unigramTokensExprWith]]); words
-    * without a full lattice path emit `<unk>`. The vocab defaults to
+    * [[graft.llmops.UnigramTokenizer.unigramTokensExprWith]] — the one
+    * unigram Viterbi DP, fed its candidate edges from a literal vocab
+    * map); words without a full lattice path emit `<unk>`. The vocab defaults to
     * the static platter but accepts a SHIPPED artifact — q414's pruned
     * (token, lp_e6) model — which is how a production ingest deploys
     * the trainer's output (UnigramSpec pins the stage under the q414

@@ -18,9 +18,10 @@ class UnigramSpec extends EngineSuite {
     BigDecimal(math.log(cnt / tot) * 1e6)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** Independent reference: word frequencies, seed vocab, and the
-    * Viterbi DP re-implemented directly in Scala (the Python-prototype
-    * formulation), including the (score, largest-start) tie-break. */
+  /** Independent reference on the fixture: word frequencies, seed
+    * vocab, and [[kBest]] at k = 1 over that vocab — the Viterbi DP
+    * re-implemented directly in Scala, (score, largest-start) tie-break
+    * included. */
   private def referenceViterbi(): (Map[String, Long], Map[String, Long],
       String => (Long, List[String])) = {
     val words = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -36,28 +37,26 @@ class UnigramSpec extends EngineSuite {
     val kept = cnt.filter { case (s, c) => c >= 2L || s.length == 1 }.toMap
     val tot = kept.values.sum.toDouble
     val lp = kept.map { case (s, c) => s -> lpE6(c, tot) }
-    def vit(w: String): (Long, List[String]) = {
-      val dp = Array.fill[Option[(Long, Int, List[String])]](w.length + 1)(None)
-      dp(0) = Some((0L, -1, Nil))
-      for (p <- 1 to w.length) {
-        var best: Option[(Long, Int, List[String])] = None
-        for (j <- math.max(0, p - SubMax) until p) {
-          val s = w.substring(j, p)
-          (lp.get(s), dp(j)) match {
-            case (Some(l), Some((sc, _, path))) =>
-              val cand = (sc + l, j, path :+ s)
-              val better = best.forall(b =>
-                cand._1 > b._1 || (cand._1 == b._1 && cand._2 > b._2))
-              if (better) best = Some(cand)
-            case _ => ()
-          }
-        }
-        dp(p) = best
-      }
-      val (sc, _, path) = dp(w.length).get
-      (sc, path)
+    (words, lp, w => kBest(lp, w, 1).head)
+  }
+
+  /** Independent k-best reference over an explicit lp map: per position
+    * the ordered top-k (score, j, predRank, path) states, candidate order
+    * (score DESC, j DESC, predRank ASC); k = 1 is the plain Viterbi DP.
+    * Empty when the word has no full path. */
+  private def kBest(lp: Map[String, Long], w: String,
+                    k: Int): List[(Long, List[String])] = {
+    val dp = Array.fill[List[(Long, Int, Int, List[String])]](w.length + 1)(Nil)
+    dp(0) = List((0L, -1, 0, Nil))
+    for (p <- 1 to w.length) {
+      val cands = for {
+        j <- math.max(0, p - SubMax) until p
+        l0 <- lp.get(w.substring(j, p)).toList
+        ((sc, _, _, path), r) <- dp(j).zipWithIndex
+      } yield (sc + l0, j, r, path :+ w.substring(j, p))
+      dp(p) = cands.sortBy(c => (-c._1, -c._2, c._3)).take(k).toList
     }
-    (words, lp, vit)
+    dp(w.length).map { case (sc, _, _, path) => (sc, path) }
   }
 
   test("the Viterbi DP reproduces an independent reference on the full " +
@@ -126,6 +125,13 @@ class UnigramSpec extends EngineSuite {
     assert(got.keySet == Set("abc", "zzz"), "every word must come back")
     assert(got("abc") == ((None, List("<unk>"))))
     assert(got("zzz") == ((None, List("<unk>"))))
+    // the literal-map route under the same vocabulary
+    val viaExpr = Seq("abc", "zzz").toDF("word")
+      .select(col("word"), llmops.UnigramTokenizer
+        .unigramTokensExprWith(col("word"), Seq("ab" -> -1L)).as("toks"))
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
+    assert(viaExpr == Map("abc" -> List("<unk>"), "zzz" -> List("<unk>")))
   }
 
   test("every fixture word re-concatenates from its segmentation " +
@@ -175,25 +181,6 @@ class UnigramSpec extends EngineSuite {
     val vocab = subs.filter(s => s.length == 1 || rnd.nextDouble() < 0.6)
       .map(s => s -> -1000000L * (1 + rnd.nextInt(4)))
     val lp = vocab.toMap
-    def ref(w: String): (Long, List[String]) = {
-      val dp = Array.fill[Option[(Long, Int, List[String])]](w.length + 1)(None)
-      dp(0) = Some((0L, -1, Nil))
-      for (p <- 1 to w.length) {
-        var best: Option[(Long, Int, List[String])] = None
-        for (j <- math.max(0, p - 4) until p) {
-          (lp.get(w.substring(j, p)), dp(j)) match {
-            case (Some(l), Some((sc, _, path))) =>
-              val cand = (sc + l, j, path :+ w.substring(j, p))
-              if (best.forall(b => cand._1 > b._1 ||
-                  (cand._1 == b._1 && cand._2 > b._2))) best = Some(cand)
-            case _ => ()
-          }
-        }
-        dp(p) = best
-      }
-      dp(w.length).map { case (sc, _, path) => (sc, path) }
-        .getOrElse((0L, List("<unk>")))
-    }
     val sp = spark.newSession()
     import sp.implicits._
     val wf = words.map(w => (w, 1L)).toDF("word", "freq")
@@ -204,7 +191,7 @@ class UnigramSpec extends EngineSuite {
         r.getSeq[String](r.fieldIndex("toks")).toList).toMap
     assert(got.keySet == words.toSet)
     for (w <- words) {
-      val (_, path) = ref(w)
+      val path = kBest(lp, w, 1).headOption.fold(List("<unk>"))(_._2)
       assert(got(w) == path, s"word '$w': DP gave ${got(w)}, reference $path")
     }
   }
@@ -338,22 +325,6 @@ class UnigramSpec extends EngineSuite {
     val vocab = subs.filter(s => s.length == 1 || rnd.nextDouble() < 0.6)
       .map(s => s -> -1000000L * (1 + rnd.nextInt(4)))
     val lp = vocab.toMap
-    // independent reference: per position the ordered top-2
-    // (score, j, predRank) states, candidate order (score DESC, j DESC,
-    // predRank ASC)
-    def ref2(w: String): List[(Long, List[String])] = {
-      val dp = Array.fill[List[(Long, Int, Int, List[String])]](w.length + 1)(Nil)
-      dp(0) = List((0L, -1, 0, Nil))
-      for (p <- 1 to w.length) {
-        val cands = for {
-          j <- math.max(0, p - 4) until p
-          l0 <- lp.get(w.substring(j, p)).toList
-          ((sc, _, _, path), r) <- dp(j).zipWithIndex
-        } yield (sc + l0, j, r, path :+ w.substring(j, p))
-        dp(p) = cands.sortBy(c => (-c._1, -c._2, c._3)).take(2).toList
-      }
-      dp(w.length).map { case (sc, _, _, path) => (sc, path) }
-    }
     val sp = spark.newSession()
     import sp.implicits._
     val wf = words.map(w => (w, 1L)).toDF("word", "freq")
@@ -372,12 +343,66 @@ class UnigramSpec extends EngineSuite {
       .collect()
       .map(r => r.getAs[String]("word") ->
         r.getSeq[String](r.fieldIndex("toks")).toList).toMap
+    // the literal-map route (the per-row encode) on the same vocab
+    val viaExpr = wf
+      .select(col("word"), llmops.UnigramTokenizer
+        .unigramTokensExprWith(col("word"), vocab).as("toks"))
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
     for (w <- words) {
-      val want = ref2(w)
+      val want = kBest(lp, w, 2)
       assert(got(w) == want, s"word '$w': DP gave ${got(w)}, reference $want")
       assert(got(w).head._2 == vit(w),
         s"word '$w': 2-best rank 1 ${got(w).head._2} != viterbi ${vit(w)}")
+      assert(viaExpr(w) == vit(w),
+        s"word '$w': expression encode ${viaExpr(w)} != viterbi ${vit(w)}")
     }
+  }
+
+  test("the removal DP (viterbiScoreWithout) matches the reference DP " +
+    "with the token removed, NULL exactly when no full path remains") {
+    // q420-fuzz words and tie-heavy prices, but 'c' has no single-char
+    // entry: a word's c's then ride multi-char tokens only, so removing
+    // one can leave no full path (the NULL arm)
+    val rnd = new scala.util.Random(24681357L)
+    val words = Seq.fill(60)(
+      (1 to (1 + rnd.nextInt(10))).map(_ => "abc"(rnd.nextInt(3))).mkString)
+      .distinct
+    val subs = (for {
+      w <- words; j <- 0 until w.length
+      l <- 1 to math.min(4, w.length - j)
+    } yield w.substring(j, j + l)).distinct
+    val vocab = subs
+      .filter(s => if (s.length == 1) s != "c" else rnd.nextDouble() < 0.6)
+      .map(s => s -> -1000000L * (1 + rnd.nextInt(4)))
+    val lp = vocab.toMap
+    // every (word, multi-char token on its best path)
+    val cand = for {
+      w <- words
+      (_, path) <- kBest(lp, w, 1)
+      ex <- path.distinct if ex.length > 1
+    } yield (w, ex)
+    val want = cand.map { case (w, ex) =>
+      (w, ex) -> kBest(lp - ex, w, 1).headOption.map(_._1)
+    }.toMap
+    assert(want.values.exists(_.isEmpty) && want.values.exists(_.nonEmpty),
+      "the fixture must exercise both the NULL and the scored arm")
+    val sp = spark.newSession()
+    import sp.implicits._
+    val ed = llmops.UnigramTokenizer.edges(words.map(w => (w, 1L)).toDF("word", "freq"))
+    // read as q423 reads it: left-joined from the candidate pairs (a
+    // word whose every edge is `ex` has no DP row at all)
+    val cdf = cand.toDF("word", "ex")
+    val got = cdf
+      .join(llmops.UnigramTokenizer.viterbiScoreWithout(
+        llmops.UnigramTokenizer.latticeOf(ed, vocab.toDF("sub", "lp")), cdf),
+        Seq("word", "ex"), "left")
+      .select(col("word"), col("ex"), col("score_wo"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) ->
+        Option(r.get(2)).map(_.asInstanceOf[Long]))
+      .toMap
+    assert(got == want)
   }
 
   test("q420 on the fixture: 10 words, ranks dense from 1, rank-2 never " +
