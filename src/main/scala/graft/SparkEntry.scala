@@ -50,6 +50,23 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     specs.flatMap(s => s.oracle.map(o => s.name -> o)).toMap
 
+  /** The registry names selected by a comma-separated list of name
+    * prefixes (Bench's SPARK_GRAFT_BENCH_ONLY, Verify's third argument),
+    * sorted; None when the list holds no prefix. Blank entries are
+    * dropped, because the empty prefix would match every name. A prefix
+    * that matches no registry query fails the selection, named in the
+    * message, instead of selecting nothing. */
+  def selected(prefixList: String): Option[Seq[String]] = {
+    val prefixes = prefixList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    Option.when(prefixes.nonEmpty) {
+      val names = queries.keys.toSeq.sorted
+      val unmatched = prefixes.filterNot(p => names.exists(_.startsWith(p)))
+      require(unmatched.isEmpty,
+        s"no registry query matches the name prefix(es) ${unmatched.mkString(",")}")
+      names.filter(n => prefixes.exists(n.startsWith))
+    }
+  }
+
   /** Headline subset timed by [[Bench]] at sf0.1 — one representative per
     * heavy plan shape (scan/agg, join, topn, window, dedup, ANN, …). */
   def benchQueries: Seq[String] =

@@ -9,15 +9,9 @@ object Verify {
     val outDir = args(1)
     // Optional 3rd arg: comma-separated name prefixes — verify only the
     // matching queries (fast local iteration; the driver passes 2 args).
-    // blank prefixes (an empty 3rd arg) must not match everything via
-    // the empty-string prefix — same guard as Bench's env filter
-    val filter: String => Boolean = {
-      val ps =
-        if (args.length > 2)
-          args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        else Seq.empty
-      if (ps.isEmpty) _ => true else n => ps.exists(n.startsWith)
-    }
+    // A prefix that matches no query fails here, before any work.
+    val only = if (args.length > 2) SparkEntry.selected(args(2)).map(_.toSet) else None
+    val filter: String => Boolean = n => only.forall(_(n))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.engine.GraftSession.attach(
       graft.engine.GraftSession.configure(

@@ -19,7 +19,15 @@ import org.apache.spark.sql.execution.window.WindowExec
   * would make equal plans print differently across runs. Shuffle
   * exchanges only exist after EnsureRequirements, so their count is
   * read off the initial (pre-execution) prepared plan and appended —
-  * together the two capture "did anything about this plan move". */
+  * together the two capture "did anything about this plan move".
+  *
+  * A fingerprint covers only the plan of the query's FINAL execution:
+  * work a query stages beforehand (`Checkpoints.stage`, the rounds of
+  * `Checkpoints.iterate`) has already run when the DataFrame is built
+  * and appears here as a `ScanExistingRDD` leaf, so a change inside a
+  * staged loop is invisible to it, and moving work out of a loop into
+  * the final plan reads as more work. Execution counts, not
+  * fingerprints, show whether staged work grew or shrank. */
 object PlanFingerprint {
 
   def of(df: DataFrame): String = {

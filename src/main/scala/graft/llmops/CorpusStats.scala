@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.llmops.Checkpoints.Stageable
 import graft.QuerySpec
 import org.apache.spark.sql.expressions.Window
@@ -33,14 +34,16 @@ object CorpusStats {
     * rounding on both engines). */
   val q204GopherRepetition: QuerySpec = {
     def text(spark: Boolean): String = {
-      // per-dialect spellings over the same algebra
-      val ws = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
-      def sz(e: String) = if (spark) s"size($e)" else s"len($e)"
-      def dedup(e: String) = if (spark) s"array_distinct($e)" else s"list_distinct($e)"
-      def filt(e: String, l: String) = if (spark) s"filter($e, $l)" else s"list_filter($e, $l)"
-      def trans(e: String, l: String) =
-        if (spark) s"transform($e, $l)" else s"list_transform($e, $l)"
-      def amax(e: String) = if (spark) s"array_max($e)" else s"list_aggregate($e, 'max')"
+      val ws = Dialect.words(spark)
+      // per array `a`: its length, distinct members, members that occur
+      // more than once, and the most frequent member's count
+      def counts(a: String, n: String): String = {
+        val occ = Dialect.size(spark, Dialect.filter(spark, a, "x -> x = g"))
+        val ds = Dialect.distinct(spark, a)
+        s"""${Dialect.size(spark, a)} AS $n, ${Dialect.size(spark, ds)} AS d_$a,
+           |    ${Dialect.size(spark, Dialect.filter(spark, ds, s"g -> $occ > 1"))} AS dup_$a,
+           |    ${Dialect.arrayMax(spark, Dialect.transform(spark, ds, s"g -> $occ"))} AS top_$a""".stripMargin
+      }
       val bgs =
         if (spark)
           "transform(sequence(0, size(split(text, ' ')) - 2), i -> concat_ws(' ', slice(split(text, ' '), i + 1, 2)))"
@@ -48,15 +51,11 @@ object CorpusStats {
           "list_transform(range(len(string_split(text, ' ')) - 1), i -> array_to_string(string_split(text, ' ')[i + 1 : i + 2], ' '))"
       s"""WITH t AS (
          |  SELECT doc_id, $ws AS w, $bgs AS b FROM documents
-         |  WHERE ${sz(ws)} >= 2),
+         |  WHERE ${Dialect.wordCount(spark)} >= 2),
          |s AS (
          |  SELECT doc_id,
-         |    ${sz("w")} AS n_words, ${sz(dedup("w"))} AS d_w,
-         |    ${sz(filt(dedup("w"), s"g -> ${sz(filt("w", "x -> x = g"))} > 1"))} AS dup_w,
-         |    ${amax(trans(dedup("w"), s"g -> ${sz(filt("w", "x -> x = g"))}"))} AS top_w,
-         |    ${sz("b")} AS n_bigrams, ${sz(dedup("b"))} AS d_b,
-         |    ${sz(filt(dedup("b"), s"g -> ${sz(filt("b", "x -> x = g"))} > 1"))} AS dup_b,
-         |    ${amax(trans(dedup("b"), s"g -> ${sz(filt("b", "x -> x = g"))}"))} AS top_b
+         |    ${counts("w", "n_words")},
+         |    ${counts("b", "n_bigrams")}
          |  FROM t)
          |SELECT doc_id, n_words, n_bigrams,
          |  CAST(ROUND((n_words - d_w + dup_w) * 1e6 / n_words) AS BIGINT) AS dup_word_frac_e6,
@@ -201,7 +200,7 @@ object CorpusStats {
     * (q184 rule). */
   val q225ScoreKsDrift: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val score = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT source, $score AS score FROM documents),
       |sc AS (SELECT score, COUNT(*) AS c FROM d GROUP BY score),
       |g AS (SELECT score,
@@ -249,10 +248,8 @@ object CorpusStats {
     * O(1) algebra after. */
   val q229SubsampleCi: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-      val fan =
-        if (spark) "d LATERAL VIEW explode(sequence(0, 32)) fb AS b"
-        else "d CROSS JOIN range(33) fb(b)"
+      val score = Dialect.wordCount(spark)
+      val fan = Dialect.lateralRange(spark, "d", 0, 32, "fb", "b")
       s"""WITH d AS (SELECT doc_id, $score AS score FROM documents),
          |r AS (SELECT b, score FROM $fan
          |      WHERE b = 32
@@ -293,7 +290,7 @@ object CorpusStats {
     * compare — no interpolation, no float rounding in the output. */
   val q232CalibrationMap: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val score = Dialect.wordCount(spark)
       val deciles =
         if (spark) "SELECT explode(sequence(1, 9)) AS decile"
         else "SELECT unnest(range(1, 10)) AS decile"
@@ -462,7 +459,7 @@ object CorpusStats {
     * uncertain the metric is, this one says who moves it. */
   val q250LosoInfluence: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val score = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT source, $score AS toks FROM documents),
          |s AS (SELECT source, COUNT(*) AS n_i, CAST(SUM(toks) AS BIGINT) AS t_i
          |      FROM d GROUP BY source),
@@ -496,10 +493,8 @@ object CorpusStats {
     * grid is |sources|-sized. */
   val q294KsDriftFdr: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-      val terms =
-        if (spark) "SELECT explode(sequence(1, 50)) AS j"
-        else "SELECT CAST(unnest(range(1, 51)) AS INT) AS j"
+      val score = Dialect.wordCount(spark)
+      val terms = Dialect.intRange(spark, 1, 50, "j")
       s"""WITH d AS (SELECT source, $score AS score FROM documents),
          |sc AS (SELECT score, COUNT(*) AS c FROM d GROUP BY score),
          |g AS (SELECT score,
@@ -564,7 +559,7 @@ object CorpusStats {
     * is |sources|-sized algebra. */
   val q295EbShrinkage: QuerySpec = {
     def text(spark: Boolean): String = {
-      val score = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val score = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT source, $score AS toks FROM documents),
          |s AS (SELECT source, COUNT(*) AS n_i,
          |        CAST(SUM(toks) AS BIGINT) AS t_i,

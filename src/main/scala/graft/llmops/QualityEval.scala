@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.QuerySpec
 import org.apache.spark.sql.functions._
 
@@ -67,8 +68,7 @@ object QualityEval {
     * cancellation argument needed. */
   val q279ClassifierKappa: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val words = Dialect.wordCount(spark)
       val big = if (spark) "DECIMAL(38,0)" else "HUGEINT"
       s"""WITH d AS (SELECT
          |    CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS a,
@@ -117,9 +117,7 @@ object QualityEval {
     * headroom on the rank-weighted sum, one division at the end. */
   val q281TokenGini: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "SELECT explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT unnest(string_split(text, ' ')) AS word FROM documents"
+      val words = s"SELECT ${Dialect.explodeWords(spark)} AS word FROM documents"
       s"""WITH c AS (SELECT word, COUNT(*) AS c FROM ($words) w GROUP BY word),
          |g AS (SELECT c, COUNT(*) AS m FROM c GROUP BY c),
          |w AS (SELECT c, m,
@@ -162,9 +160,7 @@ object QualityEval {
     * rank-moment identity replaces the O(n²) concordance count). */
   val q282SpearmanCorr: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
+      val dw = Dialect.distinctWordCount(spark)
       s"""WITH d AS (SELECT n_chars AS x, $dw AS y FROM documents),
          |j AS (SELECT x, y, COUNT(*) AS cnt FROM d GROUP BY x, y),
          |mx AS (SELECT x, CAST(SUM(cnt) AS BIGINT) AS cx
@@ -354,9 +350,7 @@ object QualityEval {
     // group-limit pushdown and sorted the corpus in one task); the
     // ra≤50 ∧ rb≤50 set is exactly the inner join of the two top-50s
     def tail(spark: Boolean): String = {
-      val depths =
-        if (spark) "SELECT explode(sequence(1, 50)) AS k"
-        else "SELECT CAST(unnest(range(1, 51)) AS INT) AS k"
+      val depths = Dialect.intRange(spark, 1, 50, "k")
       s"""WITH ra AS (SELECT doc_id, rk AS ra FROM (
          |       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY xa DESC, doc_id) AS rk
          |       FROM q290_d) t WHERE rk <= 50),
@@ -411,8 +405,7 @@ object QualityEval {
     * all-pass or all-fail ⇒ zero denominator) report NULL. */
   val q324CochranQ: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val words = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT
          |    CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS fa,
          |    CASE WHEN $words >= 55 THEN 1 ELSE 0 END AS fb,
@@ -508,9 +501,7 @@ object QualityEval {
     // the tie rollup: staged once (q290 pattern — inlined it re-scanned
     // and re-tokenized documents ~5x); the oracle keeps it as a CTE
     def vSql(spark: Boolean): String = {
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
+      val dw = Dialect.distinctWordCount(spark)
       s"""SELECT y, g, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
          |  SELECT CASE WHEN n_chars < 150 THEN 1 WHEN n_chars < 300 THEN 2
          |              WHEN n_chars < 450 THEN 3 ELSE 4 END AS g,
@@ -628,11 +619,8 @@ object QualityEval {
     // midrank join-back: staged once (q290 pattern — inlined it re-scans
     // and re-tokenizes documents ~7x); the oracle keeps it as a CTE
     def dSql(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
+      val words = Dialect.wordCount(spark)
+      val dw = Dialect.distinctWordCount(spark)
       s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS x1,
          |  CAST($words AS BIGINT) AS x2, CAST($dw AS BIGINT) AS x3
          |FROM documents""".stripMargin

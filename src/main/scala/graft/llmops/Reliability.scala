@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.QuerySpec
 import org.apache.spark.sql.functions._
 
@@ -31,11 +32,8 @@ object Reliability {
     * informative. `2·distinct ≥ words` keeps the TTR test exact
     * integer. */
   private def votesSql(spark: Boolean): String = {
-    val words =
-      if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-    val dw =
-      if (spark) "size(array_distinct(split(text, ' ')))"
-      else "len(list_distinct(string_split(text, ' ')))"
+    val words = Dialect.wordCount(spark)
+    val dw = Dialect.distinctWordCount(spark)
     s"""SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END
        |     + CASE WHEN $words >= 55 THEN 1 ELSE 0 END
        |     + CASE WHEN 2 * $dw >= $words THEN 1 ELSE 0 END AS c
@@ -150,9 +148,7 @@ object Reliability {
     * DECIMAL(27,18). Zero ideal gain ⇒ nDCG 0 by convention. */
   val q309NdcgAt10: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
+      val dw = Dialect.distinctWordCount(spark)
       s"""WITH d AS (SELECT doc_id, n_chars AS xa,
          |             LEAST(CAST(1000 AS BIGINT), CAST($dw AS BIGINT)) AS g
          |           FROM documents),
@@ -207,9 +203,6 @@ object Reliability {
     * engines' regex dialects agree; everything is per-row map work at
     * corpus scale. */
   val q311EncodingQc: QuerySpec = {
-    def cnt(spark: Boolean, expr: String, pat: String): String =
-      if (spark) s"size(regexp_extract_all($expr, '$pat', 0))"
-      else s"len(regexp_extract_all($expr, '$pat'))"
     def text(spark: Boolean): String =
       s"""WITH fixture(id, t) AS (VALUES
          |    (1, 'clean ascii text only.'),
@@ -219,9 +212,9 @@ object Reliability {
          |    (5, 'legit accents: café résumé naïve')),
          |sc AS (SELECT id,
          |         LENGTH(t) AS n_cp,
-         |         ${cnt(spark, "t", "[ -~]")} AS n_print,
-         |         ${cnt(spark, "t", "�")} AS n_repl,
-         |         ${cnt(spark, "t", "Ã")} AS n_moji
+         |         ${Dialect.regexCount(spark, "t", "[ -~]")} AS n_print,
+         |         ${Dialect.regexCount(spark, "t", "�")} AS n_repl,
+         |         ${Dialect.regexCount(spark, "t", "Ã")} AS n_moji
          |       FROM fixture)
          |SELECT id, CAST(n_cp AS BIGINT) AS n_cp,
          |  CAST(n_cp - n_print AS BIGINT) AS n_nonprint,
@@ -242,16 +235,12 @@ object Reliability {
     * is one fixed DOUBLE tree over exact integers; the per-source means
     * go through DECIMAL(27,18) sums over the |sources|-group rollup. */
   val q312Readability: QuerySpec = {
-    def cnt(spark: Boolean, pat: String): String =
-      if (spark) s"size(regexp_extract_all(text, '$pat', 0))"
-      else s"len(regexp_extract_all(text, '$pat'))"
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val words = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT source,
          |    $words AS w,
-         |    GREATEST(1, ${cnt(spark, "[.!?]")}) AS s,
-         |    ${cnt(spark, "[aeiouyAEIOUY]+")} AS y
+         |    GREATEST(1, ${Dialect.regexCount(spark, "text", "[.!?]")}) AS s,
+         |    ${Dialect.regexCount(spark, "text", "[aeiouyAEIOUY]+")} AS y
          |  FROM documents),
          |f AS (SELECT source,
          |    CAST(206.835 AS DOUBLE)
@@ -466,8 +455,7 @@ object Reliability {
     * one rollup. No discordant docs ⇒ NULL (test undefined). */
   val q315Mcnemar: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val words = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT
          |    CASE WHEN (n_chars >= 300) = (lang = 'en') THEN 1 ELSE 0 END AS ok_a,
          |    CASE WHEN ($words >= 55) = (lang = 'en') THEN 1 ELSE 0 END AS ok_b
@@ -505,9 +493,7 @@ object Reliability {
     * makes τ undefined ⇒ NULL. */
   val q316KendallTau: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dw =
-        if (spark) "size(array_distinct(split(text, ' ')))"
-        else "len(list_distinct(string_split(text, ' ')))"
+      val dw = Dialect.distinctWordCount(spark)
       s"""WITH d AS (SELECT n_chars AS x, $dw AS y FROM documents),
          |j AS (SELECT x, y, COUNT(*) AS c FROM d GROUP BY x, y),
          |pr AS (SELECT /*+ BROADCAST(a) */
@@ -572,11 +558,8 @@ object Reliability {
     * versions of the binary raters above, for the continuous-agreement
     * statistics. All exact integers per document. */
   private def scoresSql(spark: Boolean): String = {
-    val words =
-      if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-    val dw =
-      if (spark) "size(array_distinct(split(text, ' ')))"
-      else "len(list_distinct(string_split(text, ' ')))"
+    val words = Dialect.wordCount(spark)
+    val dw = Dialect.distinctWordCount(spark)
     s"""SELECT CAST(n_chars AS BIGINT) AS x1, CAST($words AS BIGINT) AS x2,
        |       CAST($dw AS BIGINT) AS x3
        |FROM documents""".stripMargin
@@ -675,8 +658,7 @@ object Reliability {
     * fixed DOUBLE trees; zero combined variance ⇒ NULL CCC. */
   val q331ConcordanceLimits: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val words = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT CAST(n_chars AS BIGINT) AS x,
          |             CAST(5 * $words AS BIGINT) AS y
          |           FROM documents),

@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.llmops.Checkpoints.Stageable
 import graft.QuerySpec
 import org.apache.spark.sql.DataFrame
@@ -276,9 +277,7 @@ object Retrieval {
     def text(spark: Boolean): String = {
       val vcast = if (spark) "CAST(embedding AS ARRAY<DOUBLE>)" else "embedding::DOUBLE[]"
       val cosine = if (spark) "vec_cosine(e.v, q.qv)" else "list_cosine_similarity(e.v, q.qv)"
-      val ranks =
-        if (spark) "relc LATERAL VIEW explode(sequence(1, 10)) t AS i"
-        else "relc CROSS JOIN range(1, 11) t(i)"
+      val ranks = Dialect.lateralRange(spark, "relc", 1, 10, "t", "i")
       s"""WITH e AS (SELECT vec_id, $vcast AS v FROM embeddings),
          |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 100 = 0),
          |d AS (SELECT doc_id, source FROM documents),

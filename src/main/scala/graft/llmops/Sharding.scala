@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.QuerySpec
 
 /** Corpus sharding and split assignment for training pipelines — the
@@ -50,11 +51,8 @@ object Sharding {
     * assignments for unchanged documents. */
   val q165PipelineCurate: QuerySpec = {
     def text(spark: Boolean): String = {
-      val norm =
-        if (spark) "regexp_replace(lower(text), ' +', ' ')"
-        else "regexp_replace(lower(text), ' +', ' ', 'g')"
-      val nWords =
-        if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val norm = Dialect.regexReplace(spark, "lower(text)", " +", " ")
+      val nWords = Dialect.wordCount(spark)
       s"""WITH kept AS (
          |  SELECT doc_id, lang, $nWords AS n_words FROM (
          |    SELECT doc_id, lang, text,

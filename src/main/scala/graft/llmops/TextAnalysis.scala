@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Dialect
 import graft.llmops.Checkpoints.Stageable
 import graft.QuerySpec
 import org.apache.spark.sql.Column
@@ -30,11 +31,8 @@ object TextAnalysis {
     * from the function-word profile scores — used by [[q88LangId]] and
     * the [[q301LangidConfusion]] classification eval. */
   private[llmops] def langidPredSql(spark: Boolean): String = {
-    def scoreCol(pat: String): String =
-      if (spark) s"size(regexp_extract_all(text, '(^| )$pat( |$$)', 0))"
-      else s"len(regexp_extract_all(text, '(^| )$pat( |$$)'))"
     val selects = langProfiles.map { case (l, p) =>
-      s"  ${scoreCol(p)} AS s_$l"
+      s"  ${Dialect.regexCount(spark, "text", s"(^| )$p( |$$)")} AS s_$l"
     }.mkString(",\n")
     val pred =
       """CASE
@@ -106,9 +104,6 @@ object TextAnalysis {
     * mean word length, and a composite quality bucket — the standard
     * pre-training filter features. */
   val q89Quality: QuerySpec = {
-    def n(spark: Boolean, pat: String): String =
-      if (spark) s"size(regexp_extract_all(text, '$pat', 0))"
-      else s"len(regexp_extract_all(text, '$pat'))"
     def text(spark: Boolean): String =
       s"""SELECT doc_id, n_chars, n_words,
          |  ROUND(CAST(n_chars AS DOUBLE) / n_words, 6) AS chars_per_word,
@@ -118,9 +113,9 @@ object TextAnalysis {
          |       WHEN n_words >= 10 THEN 'fair'
          |       ELSE 'poor' END AS quality
          |FROM (SELECT doc_id, LENGTH(text) AS n_chars,
-         |        ${n(spark, "[a-zA-Z0-9]+")} AS n_words,
-         |        ${n(spark, "[^a-zA-Z0-9 ]")} AS n_punct,
-         |        ${n(spark, "[0-9]")} AS n_digit
+         |        ${Dialect.regexCount(spark, "text", "[a-zA-Z0-9]+")} AS n_words,
+         |        ${Dialect.regexCount(spark, "text", "[^a-zA-Z0-9 ]")} AS n_punct,
+         |        ${Dialect.regexCount(spark, "text", "[0-9]")} AS n_digit
          |      FROM documents) f
          |ORDER BY doc_id""".stripMargin
     QuerySpec.sql2("q89_text_quality", text(spark = true), text(spark = false))
@@ -129,13 +124,10 @@ object TextAnalysis {
   /** Token counting: whitespace tokens, BPE-ish regex tokens
     * (alnum runs / single non-alnum), and the chars/4 heuristic. */
   val q90Tokens: QuerySpec = {
-    def n(spark: Boolean, pat: String): String =
-      if (spark) s"size(regexp_extract_all(text, '$pat', 0))"
-      else s"len(regexp_extract_all(text, '$pat'))"
     def text(spark: Boolean): String =
       s"""SELECT doc_id,
-         |  ${n(spark, "[^ ]+")} AS ws_tokens,
-         |  ${n(spark, "[a-z0-9]+|[^a-z0-9 ]")} AS re_tokens,
+         |  ${Dialect.regexCount(spark, "text", "[^ ]+")} AS ws_tokens,
+         |  ${Dialect.regexCount(spark, "text", "[a-z0-9]+|[^a-z0-9 ]")} AS re_tokens,
          |  CAST(CEIL(LENGTH(text) / 4.0) AS BIGINT) AS est_tokens
          |FROM documents
          |ORDER BY doc_id""".stripMargin
@@ -224,9 +216,7 @@ object TextAnalysis {
     * (per-doc terms, per-term doc counts) + a broadcast of the doc count. */
   val q96TfIdf: QuerySpec = {
     def text(spark: Boolean): String = {
-      val wordsRel =
-        if (spark) "SELECT doc_id, explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents"
+      val wordsRel = Dialect.docWords(spark)
       s"""WITH words AS ($wordsRel),
          |tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM words GROUP BY doc_id, word),
          |df AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM words GROUP BY word),
@@ -255,20 +245,7 @@ object TextAnalysis {
     * descending range on short documents. */
   val q122Decontaminate: QuerySpec = {
     def text(spark: Boolean): String = {
-      val g =
-        if (spark)
-          """SELECT doc_id, ngram
-            |  FROM (SELECT doc_id,
-            |          CASE WHEN size(split(text, ' ')) >= 3
-            |               THEN transform(sequence(0, size(split(text, ' ')) - 3),
-            |                      i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))
-            |               ELSE array() END AS ngrams
-            |        FROM documents) t
-            |  LATERAL VIEW explode(ngrams) x AS ngram""".stripMargin
-        else
-          """SELECT doc_id, unnest(list_transform(range(len(string_split(text, ' ')) - 2),
-            |         i -> array_to_string(string_split(text, ' ')[i+1:i+3], ' '))) AS ngram
-            |  FROM documents""".stripMargin
+      val g = Dialect.wordNgrams(spark, 3)
       s"""WITH g AS (
          |$g),
          |bench AS (SELECT DISTINCT ngram FROM g WHERE doc_id % 100 = 0),
@@ -290,20 +267,7 @@ object TextAnalysis {
     * doc per task — so the corpus-sized data crosses the network once. */
   val q123Repetition: QuerySpec = {
     def text(spark: Boolean): String = {
-      val g =
-        if (spark)
-          """SELECT doc_id, ngram
-            |  FROM (SELECT doc_id,
-            |          CASE WHEN size(split(text, ' ')) >= 2
-            |               THEN transform(sequence(0, size(split(text, ' ')) - 2),
-            |                      i -> concat_ws(' ', slice(split(text, ' '), i + 1, 2)))
-            |               ELSE array() END AS ngrams
-            |        FROM documents) t
-            |  LATERAL VIEW explode(ngrams) x AS ngram""".stripMargin
-        else
-          """SELECT doc_id, unnest(list_transform(range(len(string_split(text, ' ')) - 1),
-            |         i -> array_to_string(string_split(text, ' ')[i+1:i+2], ' '))) AS ngram
-            |  FROM documents""".stripMargin
+      val g = Dialect.wordNgrams(spark, 2)
       s"""WITH g AS (
          |$g),
          |c AS (SELECT doc_id, ngram, COUNT(*) AS n FROM g GROUP BY doc_id, ngram),
@@ -334,9 +298,7 @@ object TextAnalysis {
     * HUGEINT). */
   val q125PackBatches: QuerySpec = {
     def text(spark: Boolean): String = {
-      val nTokens =
-        if (spark) "size(split(text, ' '))"
-        else "len(string_split(text, ' '))"
+      val nTokens = Dialect.wordCount(spark)
       s"""SELECT doc_id, n_tokens,
          |  CAST(shard * 1000000 + FLOOR(CAST(cum_before AS DOUBLE) / 4096) AS BIGINT) AS batch_id
          |FROM (
@@ -360,9 +322,7 @@ object TextAnalysis {
     * any corpus size. */
   val q138Vocab: QuerySpec = {
     def text(spark: Boolean): String = {
-      val wordsRel =
-        if (spark) "SELECT doc_id, explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents"
+      val wordsRel = Dialect.docWords(spark)
       s"""WITH words AS ($wordsRel)
          |SELECT word, n_total, n_docs
          |FROM (SELECT word, COUNT(*) AS n_total, COUNT(DISTINCT doc_id) AS n_docs
@@ -385,20 +345,7 @@ object TextAnalysis {
     * once, the rest is per-gram/per-doc rows. */
   val q146Boilerplate: QuerySpec = {
     def text(spark: Boolean): String = {
-      val g =
-        if (spark)
-          """SELECT doc_id, ngram
-            |  FROM (SELECT doc_id,
-            |          CASE WHEN size(split(text, ' ')) >= 3
-            |               THEN transform(sequence(0, size(split(text, ' ')) - 3),
-            |                      i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))
-            |               ELSE array() END AS ngrams
-            |        FROM documents) t
-            |  LATERAL VIEW explode(ngrams) x AS ngram""".stripMargin
-        else
-          """SELECT doc_id, unnest(list_transform(range(len(string_split(text, ' ')) - 2),
-            |         i -> array_to_string(string_split(text, ' ')[i+1:i+3], ' '))) AS ngram
-            |  FROM documents""".stripMargin
+      val g = Dialect.wordNgrams(spark, 3)
       s"""WITH g AS (
          |$g),
          |c AS (SELECT doc_id, ngram, COUNT(*) AS n FROM g GROUP BY doc_id, ngram),
@@ -424,8 +371,8 @@ object TextAnalysis {
     * get exactly one chunk (start 0). */
   val q158ChunkOverlap: QuerySpec = {
     def text(spark: Boolean): String = {
-      val split = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
-      val nw = if (spark) "size(w)" else "len(w)"
+      val split = Dialect.words(spark)
+      val nw = Dialect.size(spark, "w")
       val starts =
         if (spark) "explode(sequence(0, size(w) - 1, 24))"
         else "unnest(range(0, len(w), 24))"
@@ -467,19 +414,13 @@ object TextAnalysis {
     def text(spark: Boolean): String = {
       // Spark SQL string literals process escapes, DuckDB's are literal
       def p(raw: String): String = if (spark) raw.replace("\\", "\\\\") else raw
-      def n(raw: String): String =
-        if (spark) s"size(regexp_extract_all(s, '${p(raw)}', 0))"
-        else s"len(regexp_extract_all(s, '${p(raw)}'))"
-      def repl(src: String, raw: String, tag: String): String =
-        if (spark) s"regexp_replace($src, '${p(raw)}', '$tag')"
-        else s"regexp_replace($src, '${p(raw)}', '$tag', 'g')"
-      val redacted =
-        repl(repl(repl(repl("s", email, "<EMAIL>"), ssn, "<SSN>"), phone, "<PHONE>"), ip, "<IP>")
+      val redacted = Seq(email -> "<EMAIL>", ssn -> "<SSN>", phone -> "<PHONE>", ip -> "<IP>")
+        .foldLeft("s") { case (src, (raw, tag)) => Dialect.regexReplace(spark, src, p(raw), tag) }
       s"""SELECT id,
-         |  CAST(${n(email)} AS INT) AS n_email,
-         |  CAST(${n(ssn)} AS INT) AS n_ssn,
-         |  CAST(${n(phone)} AS INT) AS n_phone,
-         |  CAST(${n(ip)} AS INT) AS n_ip,
+         |  CAST(${Dialect.regexCount(spark, "s", p(email))} AS INT) AS n_email,
+         |  CAST(${Dialect.regexCount(spark, "s", p(ssn))} AS INT) AS n_ssn,
+         |  CAST(${Dialect.regexCount(spark, "s", p(phone))} AS INT) AS n_phone,
+         |  CAST(${Dialect.regexCount(spark, "s", p(ip))} AS INT) AS n_ip,
          |  $redacted AS redacted
          |FROM $fixture
          |ORDER BY id""".stripMargin
@@ -513,18 +454,8 @@ object TextAnalysis {
     * skew is irrelevant at oracle scale, and keeping the texts
     * independent guards against a shared-bug false green. */
   private def substringCtes(spark: Boolean): String = {
-    val split = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
-    val g =
-      if (spark)
-        """SELECT doc_id, pos, concat_ws(' ', slice(w, pos + 1, 8)) AS gram
-          |  FROM (SELECT doc_id, w,
-          |          CASE WHEN size(w) >= 8 THEN sequence(0, size(w) - 8)
-          |               ELSE array() END AS ps
-          |        FROM t) x
-          |  LATERAL VIEW explode(ps) p AS pos""".stripMargin
-      else
-        """SELECT doc_id, pos, array_to_string(w[pos + 1 : pos + 8], ' ') AS gram
-          |  FROM (SELECT doc_id, w, unnest(range(len(w) - 7)) AS pos FROM t) x""".stripMargin
+    val split = Dialect.words(spark)
+    val g = Dialect.positionedGrams(spark, 8)
     val dup =
       if (spark)
         """m AS (SELECT gram, MIN(STRUCT(doc_id, pos)) AS f FROM g GROUP BY gram),
@@ -564,7 +495,7 @@ object TextAnalysis {
     * 8-grams and report 0. */
   val q160SubstringDedup: QuerySpec = {
     def text(spark: Boolean): String = {
-      val size = if (spark) "size(w)" else "len(w)"
+      val size = Dialect.size(spark, "w")
       s"""WITH ${substringCtes(spark)},
          |d AS (SELECT doc_id, COUNT(*) AS n_dup FROM cov GROUP BY doc_id)
          |SELECT t.doc_id, CAST($size AS BIGINT) AS n_tokens,
@@ -640,9 +571,7 @@ object TextAnalysis {
     * value. */
   val q162UnigramLm: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "SELECT doc_id, explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents"
+      val words = Dialect.docWords(spark)
       s"""WITH words AS ($words),
          |f AS (SELECT word, COUNT(*) AS cnt FROM words GROUP BY word),
          |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM words),
@@ -677,9 +606,7 @@ object TextAnalysis {
     * aggregate, broadcast back). */
   val q177PerplexityBuckets: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "SELECT doc_id, lang, explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word FROM documents"
+      val words = s"SELECT doc_id, lang, ${Dialect.explodeWords(spark)} AS word FROM documents"
       s"""WITH words AS ($words),
          |f AS (SELECT word, COUNT(*) AS cnt FROM words GROUP BY word),
          |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM words),
@@ -723,9 +650,7 @@ object TextAnalysis {
     * two rounds pin the fixpoint machinery. */
   val q163BpeMerges: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "SELECT explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT unnest(string_split(text, ' ')) AS word FROM documents"
+      val words = s"SELECT ${Dialect.explodeWords(spark)} AS word FROM documents"
       // POSITION-based character seeds, not a regexp split: regex `.`
       // excludes line terminators (and Spark's Java regex excludes MORE
       // of them than DuckDB's RE2), so a newline-bearing word would seed
@@ -738,8 +663,7 @@ object TextAnalysis {
           "concat_ws('  ', transform(sequence(1, length(word)), i -> substring(word, i, 1)))"
         else
           "array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '  ')"
-      def syms(src: String) =
-        if (spark) s"split(trim($src), '  ')" else s"string_split(trim($src), '  ')"
+      def syms(src: String) = Dialect.split(spark, s"trim($src)", "  ")
       def pairs(rel: String): String =
         if (spark)
           s"""SELECT pair, SUM(n) AS cnt
@@ -1312,13 +1236,10 @@ object TextAnalysis {
     * +, *, / and ln over these well-separated values do not flip the
     * sign: the closest logit to 0 on the fixture is 3.7e-4). */
   private def qualityLogit(spark: Boolean): String = {
-    def words = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
-    def nWords = if (spark) s"size($words)" else s"len($words)"
-    def nDistinct =
-      if (spark) s"size(array_distinct($words))" else s"len(list_distinct($words))"
-    def nStop =
-      if (spark) s"size(filter($words, w -> w = 'the' OR w = 'a'))"
-      else s"len(list_filter($words, w -> w = 'the' OR w = 'a'))"
+    val nWords = Dialect.wordCount(spark)
+    val nDistinct = Dialect.distinctWordCount(spark)
+    val nStop =
+      Dialect.size(spark, Dialect.filter(spark, Dialect.words(spark), "w -> w = 'the' OR w = 'a'"))
     s"""-4.6 + 0.5 * ln(1 + $nWords)
        |    + 0.4 * CAST(length(replace(text, ' ', '')) AS DOUBLE) / $nWords
        |    + 1.2 * CAST($nDistinct AS DOUBLE) / $nWords
@@ -1406,9 +1327,7 @@ object TextAnalysis {
           """list_filter(string_split(regexp_extract(u, '\?([^#]*)', 1), '&'),
             |  p -> p != '' AND substr(p, 1, 4) != 'utm_'
             |       AND substr(p, 1, 7) != 'fbclid=' AND substr(p, 1, 6) != 'gclid=')""".stripMargin
-      val pathExpr =
-        if (spark) "coalesce(nullif(regexp_extract(u, '^[a-zA-Z]+://[^/?#]*(/[^?#]*)', 1), ''), '/')"
-        else "coalesce(nullif(regexp_extract(u, '^[a-zA-Z]+://[^/?#]*(/[^?#]*)', 1), ''), '/')"
+      val pathExpr = "coalesce(nullif(regexp_extract(u, '^[a-zA-Z]+://[^/?#]*(/[^?#]*)', 1), ''), '/')"
       // group size by grouped-count + join, not COUNT() OVER (PARTITION
       // BY canonical): a boilerplate canonical (a crawl's top dup URL)
       // would funnel its whole window partition into one task, while the
@@ -1448,19 +1367,8 @@ object TextAnalysis {
     * the dataflow is n-independent.) */
   val q183DupNgramCoverage: QuerySpec = {
     def text(spark: Boolean): String = {
-      val (split, size) =
-        if (spark) ("split(text, ' ')", "size(w)") else ("string_split(text, ' ')", "len(w)")
-      val g3 =
-        if (spark)
-          """SELECT doc_id, pos, concat_ws(' ', slice(w, pos + 1, 3)) AS gram
-            |  FROM (SELECT doc_id, w,
-            |          CASE WHEN size(w) >= 3 THEN sequence(0, size(w) - 3)
-            |               ELSE array() END AS ps
-            |        FROM t) x
-            |  LATERAL VIEW explode(ps) p AS pos""".stripMargin
-        else
-          """SELECT doc_id, pos, array_to_string(w[pos + 1 : pos + 3], ' ') AS gram
-            |  FROM (SELECT doc_id, w, unnest(range(len(w) - 2)) AS pos FROM t) x""".stripMargin
+      val (split, size) = (Dialect.words(spark), Dialect.size(spark, "w"))
+      val g3 = Dialect.positionedGrams(spark, 3)
       // cov keeps the gram alongside each covered position so ONE
       // doc-keyed aggregate yields both measures (distinct positions
       // covered, distinct repeated grams) — a separate r3 grouping of
@@ -1509,14 +1417,8 @@ object TextAnalysis {
     * across engines. */
   val q196PmiCollocations: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark)
-          """SELECT doc_id, pos, word FROM t
-            |  LATERAL VIEW posexplode(w) p AS pos, word""".stripMargin
-        else
-          """SELECT doc_id, unnest(range(len(w))) AS pos,
-            |         unnest(w) AS word FROM t""".stripMargin
-      val split = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
+      val words = Dialect.positionedWords(spark)
+      val split = Dialect.words(spark)
       s"""WITH t AS (SELECT doc_id, $split AS w FROM documents),
          |words AS (
          |$words),
@@ -1571,14 +1473,8 @@ object TextAnalysis {
     * ROUNDED score. */
   val q184BigramLm: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark)
-          """SELECT doc_id, pos, word FROM t
-            |  LATERAL VIEW posexplode(w) p AS pos, word""".stripMargin
-        else
-          """SELECT doc_id, unnest(range(len(w))) AS pos,
-            |         unnest(w) AS word FROM t""".stripMargin
-      val split = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
+      val words = Dialect.positionedWords(spark)
+      val split = Dialect.words(spark)
       s"""WITH t AS (SELECT doc_id, $split AS w FROM documents),
          |words AS (
          |$words),
@@ -1691,19 +1587,15 @@ object TextAnalysis {
     * rounding can't flap (the q205 ulp rule, solved structurally). */
   val q222CharEntropy: QuerySpec = {
     def text(spark: Boolean): String = {
-      val split = if (spark) "split(text, '')" else "string_split(text, '')"
-      val sz = if (spark) "size" else "len"
-      val sort = if (spark) "array_sort" else "list_sort"
-      val dedup = if (spark) "array_distinct" else "list_distinct"
-      val filt = if (spark) "filter" else "list_filter"
+      val n = Dialect.size(spark, "cs")
+      // the count of the distinct character g in cs
+      val occ = Dialect.size(spark, Dialect.filter(spark, "cs", "x -> x = g"))
       val fold =
-        if (spark)
-          s"aggregate(ds, CAST(0.0 AS DOUBLE), (acc, g) -> acc + $sz($filt(cs, x -> x = g)) * LN($sz($filt(cs, x -> x = g))))"
-        else
-          s"list_aggregate(list_transform(ds, g -> $sz($filt(cs, x -> x = g)) * LN($sz($filt(cs, x -> x = g)))), 'sum')"
-      s"""WITH t AS (SELECT doc_id, $split AS cs FROM documents),
-         |d AS (SELECT doc_id, $sz(cs) AS n, $sort($dedup(cs)) AS ds, cs
-         |      FROM t WHERE $sz(cs) > 0),
+        if (spark) s"aggregate(ds, CAST(0.0 AS DOUBLE), (acc, g) -> acc + $occ * LN($occ))"
+        else s"list_aggregate(list_transform(ds, g -> $occ * LN($occ)), 'sum')"
+      s"""WITH t AS (SELECT doc_id, ${Dialect.split(spark, "text", "")} AS cs FROM documents),
+         |d AS (SELECT doc_id, $n AS n, ${Dialect.sort(spark, Dialect.distinct(spark, "cs"))} AS ds, cs
+         |      FROM t WHERE $n > 0),
          |e AS (SELECT doc_id, n, $fold AS clnc FROM d)
          |SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
          |  ROUND(LN(CAST(n AS DOUBLE)) - clnc / n, 6) AS char_entropy_nats,
@@ -1771,7 +1663,7 @@ object TextAnalysis {
     * rescan of the corpus. */
   val q214ContextFit: QuerySpec = {
     def text(spark: Boolean): String = {
-      val nTok = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
+      val nTok = Dialect.wordCount(spark)
       s"""WITH d AS (SELECT $nTok AS n_tok FROM documents),
          |x AS (SELECT ctx, n_tok
          |      FROM d CROSS JOIN (VALUES (128), (512), (2048)) t(ctx))
@@ -1795,13 +1687,9 @@ object TextAnalysis {
     * tree over exact integers, surfaced in centi-points. */
   val q277Readability: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words = if (spark) "size(split(text, ' '))" else "len(string_split(text, ' '))"
-      val syll =
-        if (spark) "size(regexp_extract_all(lower(text), '[aeiouy]+', 0))"
-        else "len(regexp_extract_all(lower(text), '[aeiouy]+'))"
-      val sent =
-        if (spark) "size(regexp_extract_all(text, '[.!?]+', 0))"
-        else "len(regexp_extract_all(text, '[.!?]+'))"
+      val words = Dialect.wordCount(spark)
+      val syll = Dialect.regexCount(spark, "lower(text)", "[aeiouy]+")
+      val sent = Dialect.regexCount(spark, "text", "[.!?]+")
       s"""WITH c AS (
          |  SELECT doc_id, $words AS w, $syll AS sy,
          |         GREATEST($sent, 1) AS se
@@ -1847,7 +1735,7 @@ object TextAnalysis {
           "size(array_distinct(transform(sequence(0, size(hs) - 4), s -> array_min(slice(hs, s + 1, 4)))))"
         else
           "len(list_distinct(list_transform(range(0, len(hs) - 4 + 1), s -> list_aggregate(hs[s + 1:s + 4], 'min'))))"
-      val ng = if (spark) "size(hs)" else "len(hs)"
+      val ng = Dialect.size(spark, "hs")
       s"""WITH g AS (
          |  SELECT doc_id, $hs AS hs
          |  FROM documents WHERE length(text) >= 11),
@@ -1872,14 +1760,8 @@ object TextAnalysis {
     * after the first rollup are vocab²-bounded. */
   val q291BigramCondEntropy: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark)
-          """SELECT doc_id, pos, word FROM t
-            |  LATERAL VIEW posexplode(w) p AS pos, word""".stripMargin
-        else
-          """SELECT doc_id, unnest(range(len(w))) AS pos,
-            |         unnest(w) AS word FROM t""".stripMargin
-      val split = if (spark) "split(text, ' ')" else "string_split(text, ' ')"
+      val words = Dialect.positionedWords(spark)
+      val split = Dialect.words(spark)
       s"""WITH t AS (SELECT doc_id, $split AS w FROM documents),
          |words AS (
          |$words),
@@ -1995,9 +1877,7 @@ object TextAnalysis {
     * name) — the top of this list is the duplicate-generator report. */
   val q332BurrowsDelta: QuerySpec = {
     def text(spark: Boolean): String = {
-      val words =
-        if (spark) "SELECT source, explode(split(text, ' ')) AS word FROM documents"
-        else "SELECT source, unnest(string_split(text, ' ')) AS word FROM documents"
+      val words = s"SELECT source, ${Dialect.explodeWords(spark)} AS word FROM documents"
       s"""WITH w AS ($words),
          |tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s FROM w GROUP BY source),
          |cw AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY word),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Dialect
 import org.apache.spark.sql.functions._
 import graft.QuerySpec
 
@@ -363,9 +364,7 @@ object Events {
     * keeps micros — floored separately they agree exactly). */
   val q240ConversionLatency: QuerySpec = {
     def text(spark: Boolean): String = {
-      def ep(c: String) =
-        if (spark) s"unix_timestamp($c)"
-        else s"CAST(FLOOR(epoch($c)) AS BIGINT)"
+      val delay = s"${Dialect.epochSeconds(spark, "fp")} - ${Dialect.epochSeconds(spark, "fc")}"
       s"""WITH w AS (
          |  SELECT user_id, ts, event_type,
          |    MIN(CASE WHEN event_type = 'click' THEN ts END)
@@ -380,7 +379,7 @@ object Events {
          |clickers AS (
          |  SELECT COUNT(DISTINCT user_id) AS n_clickers
          |  FROM w WHERE first_click IS NOT NULL),
-         |d AS (SELECT CAST(FLOOR((${ep("fp")} - ${ep("fc")}) / 60.0) AS BIGINT)
+         |d AS (SELECT CAST(FLOOR(($delay) / 60.0) AS BIGINT)
          |        AS delay_min FROM conv),
          |b AS (SELECT CASE WHEN delay_min < 5 THEN 0 WHEN delay_min < 15 THEN 1
          |                  WHEN delay_min < 60 THEN 2 ELSE 3 END AS bno,
@@ -453,12 +452,10 @@ object Events {
     * the plan. */
   val q249JsonExtract: QuerySpec = {
     def text(spark: Boolean): String = {
-      val k =
-        if (spark) "CAST(get_json_object(props, '$.k') AS INT)"
-        else "CAST(json_extract_string(props, '$.k') AS INT)"
-      val miss =
-        if (spark) "get_json_object(props, '$.missing')"
-        else "json_extract_string(props, '$.missing')"
+      def field(path: String) =
+        if (spark) s"get_json_object(props, '$path')" else s"json_extract_string(props, '$path')"
+      val k = s"CAST(${field("$.k")} AS INT)"
+      val miss = field("$.missing")
       s"""WITH x AS (
          |  SELECT event_type, $k AS k,
          |    CASE WHEN $miss IS NULL THEN 1 ELSE 0 END AS no_missing_key
@@ -488,9 +485,7 @@ object Events {
     * spread accumulates via DECIMAL(27,18). */
   val q252AbLiftCi: QuerySpec = {
     def text(spark: Boolean): String = {
-      val fan =
-        if (spark) "u LATERAL VIEW explode(sequence(0, 32)) fb AS b"
-        else "u CROSS JOIN range(33) fb(b)"
+      val fan = Dialect.lateralRange(spark, "u", 0, 32, "fb", "b")
       s"""WITH u AS (
          |  SELECT user_id,
          |         CASE WHEN ((user_id % 1000003) * 2654435761) % 4294967296
@@ -991,12 +986,8 @@ object Events {
     * a pinned epoch (engine DOW numbering conventions differ). */
   val q280Chi2Independence: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dow =
-        if (spark) "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') % 7 AS INT)"
-        else "CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7 AS INT)"
-      val grid =
-        if (spark) "SELECT explode(sequence(0, 6)) AS dow"
-        else "SELECT CAST(unnest(range(0, 7)) AS INT) AS dow"
+      val dow = s"CAST(${Dialect.dayDiff(spark, "CAST(ts AS DATE)", "DATE '2024-01-01'")} % 7 AS INT)"
+      val grid = Dialect.intRange(spark, 0, 6, "dow")
       s"""WITH e AS (SELECT event_type, $dow AS dow FROM events),
          |o AS (SELECT event_type, dow, COUNT(*) AS o
          |      FROM e GROUP BY event_type, dow),
@@ -1038,12 +1029,8 @@ object Events {
     * that lag's pair set rather than silently misaligning it. */
   val q283EventsAcf: QuerySpec = {
     def text(spark: Boolean): String = {
-      val idx =
-        if (spark) "datediff(day, DATE '2024-01-01')"
-        else "datediff('day', DATE '2024-01-01', day)"
-      val lags =
-        if (spark) "SELECT explode(sequence(1, 7)) AS lag"
-        else "SELECT CAST(unnest(range(1, 8)) AS INT) AS lag"
+      val idx = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
+      val lags = Dialect.intRange(spark, 1, 7, "lag")
       s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c
          |           FROM events GROUP BY CAST(ts AS DATE)),
          |x AS (SELECT $idx AS i, c FROM d),
@@ -1107,11 +1094,8 @@ object Events {
     * bit-identical across engines. */
   val q284TheilSenTrend: QuerySpec = {
     def text(spark: Boolean): String = {
-      val idx =
-        if (spark) "datediff(day, DATE '2024-01-01')"
-        else "datediff('day', DATE '2024-01-01', day)"
-      val med =
-        if (spark) "percentile(slope, 0.5D)" else "quantile_cont(slope, 0.5)"
+      val idx = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
+      val med = Dialect.median(spark, "slope")
       s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c
          |           FROM events GROUP BY CAST(ts AS DATE)),
          |x AS (SELECT $idx AS i, c FROM d),
@@ -1136,14 +1120,13 @@ object Events {
     * spelled identically on both engines. */
   val q285EventsBurstiness: QuerySpec = {
     def text(spark: Boolean): String = {
-      def ep(e: String) =
-        if (spark) s"unix_timestamp($e)" else s"CAST(FLOOR(epoch($e)) AS BIGINT)"
+      val gap = s"${Dialect.epochSeconds(spark, "ts")} - ${Dialect.epochSeconds(spark, "pts")}"
       s"""WITH s AS (
          |  SELECT event_type, ts,
          |    LAG(ts) OVER (PARTITION BY user_id, event_type
          |                  ORDER BY ts, event_id) AS pts
          |  FROM events),
-         |gap AS (SELECT event_type, ${ep("ts")} - ${ep("pts")} AS gp
+         |gap AS (SELECT event_type, $gap AS gp
          |        FROM s WHERE pts IS NOT NULL),
          |a AS (SELECT event_type, COUNT(*) AS n,
          |        CAST(SUM(gp) AS BIGINT) AS sg,
@@ -1180,9 +1163,7 @@ object Events {
     * after the first rollup is series-sized. */
   val q293PiecewiseTrend: QuerySpec = {
     def text(spark: Boolean): String = {
-      val idx =
-        if (spark) "datediff(day, DATE '2024-01-01')"
-        else "datediff('day', DATE '2024-01-01', day)"
+      val idx = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
       s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS c
          |           FROM events GROUP BY CAST(ts AS DATE)),
          |x AS (SELECT day, $idx AS i, c FROM d),
@@ -1352,15 +1333,13 @@ object Events {
     * the final per-type rollup is MAX/SUM over series-sized input. */
   val q297MadOutliers: QuerySpec = {
     def text(spark: Boolean): String = {
-      def med(e: String) =
-        if (spark) s"percentile($e, 0.5D)" else s"quantile_cont($e, 0.5)"
       s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr, COUNT(*) AS c
          |           FROM events GROUP BY event_type, date_trunc('hour', ts)),
-         |m AS (SELECT event_type, ${med("c")} AS med
+         |m AS (SELECT event_type, ${Dialect.median(spark, "c")} AS med
          |      FROM h GROUP BY event_type),
          |dev AS (SELECT h.event_type, h.c, ABS(h.c - m.med) AS ad, m.med
          |        FROM h JOIN m ON h.event_type = m.event_type),
-         |md AS (SELECT event_type, ${med("ad")} AS mad
+         |md AS (SELECT event_type, ${Dialect.median(spark, "ad")} AS mad
          |       FROM dev GROUP BY event_type)
          |SELECT d.event_type, COUNT(*) AS n_hours,
          |  CAST(ROUND(MAX(d.med) * 100) AS BIGINT) AS median_e2,
@@ -1422,11 +1401,8 @@ object Events {
     * pass. */
   val q304ChurnLabels: QuerySpec = {
     def text(spark: Boolean): String = {
-      val recency =
-        if (spark)
-          "datediff(DATE '2024-01-21', CAST(MAX(CASE WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN ts END) AS DATE))"
-        else
-          "datediff('day', CAST(MAX(CASE WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN ts END) AS DATE), DATE '2024-01-21')"
+      val recency = Dialect.dayDiff(spark, "DATE '2024-01-21'",
+        "CAST(MAX(CASE WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN ts END) AS DATE)")
       s"""SELECT user_id,
          |  CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_events_obs,
@@ -1468,9 +1444,7 @@ object Events {
     * zero-variance series reports share 0, q299's convention. */
   val q305WeeklySpectrum: QuerySpec = {
     def text(spark: Boolean): String = {
-      val idx =
-        if (spark) "datediff(day, DATE '2024-01-01')"
-        else "datediff('day', DATE '2024-01-01', day)"
+      val idx = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
       val gridRows =
         """(0, CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)),
           |    (1, CAST(0.6234898018587336 AS DOUBLE), CAST(0.7818314824680298 AS DOUBLE)),
@@ -1821,9 +1795,7 @@ object Events {
     * its own grouping key. Horizon = broadcast scalar. */
   val q327KaplanMeier: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dd =
-        if (spark) "datediff(l.last_day, l.first_day)"
-        else "datediff('day', l.first_day, l.last_day)"
+      val dd = Dialect.dayDiff(spark, "l.last_day", "l.first_day")
       s"""WITH u AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS first_day,
          |             MAX(CAST(ts AS DATE)) AS last_day
          |           FROM events GROUP BY user_id),
@@ -2048,12 +2020,8 @@ object Events {
     * denominators yield NULL through the chain. */
   val q340Pacf: QuerySpec = {
     def text(spark: Boolean): String = {
-      val idx =
-        if (spark) "datediff(day, DATE '2024-01-01')"
-        else "datediff('day', DATE '2024-01-01', day)"
-      val lags =
-        if (spark) "SELECT explode(sequence(1, 7)) AS lag"
-        else "SELECT CAST(unnest(range(1, 8)) AS INT) AS lag"
+      val idx = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
+      val lags = Dialect.intRange(spark, 1, 7, "lag")
       val steps = (2 to 7).map { k =>
         val num = s"(r$k - (${(1 until k).map(j => s"p${k - 1}_$j * r${k - j}").mkString(" + ")}))"
         val den = s"(1 - (${(1 until k).map(j => s"p${k - 1}_$j * r$j").mkString(" + ")}))"
@@ -2222,9 +2190,7 @@ object Events {
     * churn, or one empty cohort) ⇒ NULL. */
   val q342LogRank: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dd =
-        if (spark) "datediff(u.last_day, u.first_day)"
-        else "datediff('day', u.first_day, u.last_day)"
+      val dd = Dialect.dayDiff(spark, "u.last_day", "u.first_day")
       s"""WITH u AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS first_day,
          |             MAX(CAST(ts AS DATE)) AS last_day,
          |             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS g1
@@ -2286,9 +2252,8 @@ object Events {
     * single-block or zero-variance series reports NULL. */
   val q343GumbelExtremes: QuerySpec = {
     def text(spark: Boolean): String = {
-      val wk =
-        if (spark) "CAST(FLOOR(datediff(day, DATE '2024-01-01') / 7) AS BIGINT)"
-        else "CAST(FLOOR(datediff('day', DATE '2024-01-01', day) / 7.0) AS BIGINT)"
+      val days = Dialect.dayDiff(spark, "day", "DATE '2024-01-01'")
+      val wk = s"CAST(FLOOR($days / ${if (spark) "7" else "7.0"}) AS BIGINT)"
       s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
          |           FROM events GROUP BY CAST(ts AS DATE)),
          |b AS (SELECT $wk AS wk, CAST(MAX(c) AS BIGINT) AS mx

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Dialect
 import graft.QuerySpec
 
 /** TPC-DS-shaped plan corpus — the reference's third planner golden
@@ -505,9 +506,7 @@ object TpcdsShapes {
     * the CASE-bucketed count pivot every fulfillment report runs. */
   val q272ShipDelayBuckets: QuerySpec = {
     def text(spark: Boolean): String = {
-      val dd =
-        if (spark) "datediff(l_shipdate, o_orderdate)"
-        else "datediff('day', o_orderdate, l_shipdate)"
+      val dd = Dialect.dayDiff(spark, "l_shipdate", "o_orderdate")
       s"""SELECT n_name,
          |  CAST(SUM(CASE WHEN $dd <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS d30,
          |  CAST(SUM(CASE WHEN $dd > 30 AND $dd <= 60 THEN 1 ELSE 0 END) AS BIGINT) AS d60,

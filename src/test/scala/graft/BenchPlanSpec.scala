@@ -23,7 +23,11 @@ import scala.jdk.CollectionConverters._
   * compares against the committed state so registry-wide plan drift
   * fails visibly instead of silently rewriting the ledger. A query
   * that fails to plan records `err:<Exception>` and FAILS the test
-  * either way. */
+  * either way.
+  *
+  * Both files fingerprint only each query's final execution: staged
+  * rounds have already run and show as `ScanExistingRDD` leaves, so
+  * their work is invisible here (see [[graft.engine.PlanFingerprint]]). */
 class BenchPlanSpec extends EngineSuite {
 
   // Derived from the forked test JVM's working dir (the sbt project

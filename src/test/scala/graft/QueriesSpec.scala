@@ -25,6 +25,20 @@ class QueriesSpec extends EngineSuite {
     assert(noOracle.size <= 10, s"too many rows-only queries: $noOracle")
   }
 
+  test("a name-prefix selection fails on, and names, each prefix that matches no query") {
+    assert(SparkEntry.selected(" , ").isEmpty)
+    assert(SparkEntry.selected("q01_,q02_").contains(SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => n.startsWith("q01_") || n.startsWith("q02_"))))
+    val e = intercept[IllegalArgumentException](SparkEntry.selected("q01_, zz_none ,yy_none"))
+    assert(e.getMessage.endsWith("prefix(es) zz_none,yy_none"))
+    // Verify fails before it starts a session or writes anything
+    val tmp = java.nio.file.Files.createTempDirectory("verify-none")
+    val out = tmp.resolve("out")
+    intercept[IllegalArgumentException](Verify.main(Array(sfDir, out.toString, "zz_none")))
+    assert(!java.nio.file.Files.exists(out))
+    java.nio.file.Files.delete(tmp)
+  }
+
   /** The cross-join operator itself is the only query allowed to plan a
     * cartesian product — anywhere else one appears it is a scale bug
     * (the anti-pattern sweep, run per-query so a future query can't
