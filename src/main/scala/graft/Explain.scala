@@ -12,22 +12,13 @@ package graft
   * joins broadcast, do whole-stage-codegen spans cover the hot path, does
   * a shuffle repeat that an earlier stage already produced? */
 object Explain {
-  /** specs whose run() performs writes while constructing the result */
-  private val sideEffecting = Set(
-    "q70_dml_ctas", "q71_dml_insert_partitioned", "q72_dml_update_merge",
-    "q73_dml_delete", "q74_dml_views", "q75_dml_catalog", "q77_dml_formats")
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    // blank prefixes must not act as match-everything — with [""] the
-    // sideEffecting skip below would be bypassed and DML writes would run
-    val prefixes =
-      if (args.length > 1) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else Seq.empty
+    // a prefix that matches no query fails here, before a session starts
+    val named = if (args.length > 1) SparkEntry.selected(args(1)).map(_.toSet) else None
     val spark = graft.engine.GraftSession.local(cores = 8, shufflePartitions = 8)
-    val selected = SparkEntry.specs
-      .filter(s => prefixes.isEmpty || prefixes.exists(s.name.startsWith))
-      .filter(s => !(prefixes.isEmpty && sideEffecting(s.name)))
+    val selected = SparkEntry.specs.filter(s =>
+      named.fold(!SparkEntry.sideEffecting(s.name))(_.contains(s.name)))
     selected.foreach { s =>
       println(s"[explain] ========== ${s.name} ==========")
       try {

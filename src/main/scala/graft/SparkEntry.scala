@@ -67,6 +67,13 @@ object SparkEntry {
     }
   }
 
+  /** Specs whose run() performs writes while constructing the result:
+    * [[Explain]] and the registry-wide plan sweeps build every other
+    * query's DataFrame freely, these only when named. */
+  val sideEffecting: Set[String] = Set(
+    "q70_dml_ctas", "q71_dml_insert_partitioned", "q72_dml_update_merge",
+    "q73_dml_delete", "q74_dml_views", "q75_dml_catalog", "q77_dml_formats")
+
   /** Headline subset timed by [[Bench]] at sf0.1 — one representative per
     * heavy plan shape (scan/agg, join, topn, window, dedup, ANN, …). */
   def benchQueries: Seq[String] =

@@ -91,6 +91,14 @@ object GraftSession {
     s.conf.set("spark.sql.ansi.enabled", "false")
     if (installed.get(s) != java.lang.Boolean.TRUE) synchronized {
       if (installed.get(s) != java.lang.Boolean.TRUE) {
+        // Every global window in the registry is deliberate and audited
+        // by the PlanSpec corpus sweep, so WindowExec's "No Partition
+        // Defined for Window operation!" WARN (one per planned window)
+        // carries no news. Once per session, not per query: each call
+        // re-applies the whole logging configuration.
+        org.apache.logging.log4j.core.config.Configurator.setLevel(
+          "org.apache.spark.sql.execution.window.WindowExec",
+          org.apache.logging.log4j.Level.ERROR)
         graft.functions.ImpalaFunctions.registerAll(s)
         installOptimizerRules(s)
         graft.discard(installed.put(s, java.lang.Boolean.TRUE))

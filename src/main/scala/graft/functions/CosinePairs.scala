@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 object CosinePairsUtil {
   /** All qualifying pairs of a bounded block in one compiled pass: for
@@ -52,44 +50,4 @@ object CosinePairsUtil {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `cosine_pairs(ls, rs, theta, same)` with ls/rs: array<struct<id
-  * bigint, v array<double>>> — fused block-scan kernel for embedding
-  * near-dup (graft.llmops.Dedup q84): explode the result to get the
-  * qualifying (id_a, id_b, cos) pairs of one bounded block. */
-case class CosinePairs(first: Expression, second: Expression, third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = false),
-    StructField("id_b", LongType, nullable = false),
-    StructField("cos", DoubleType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  private def sideOk(dt: DataType): Boolean = dt match {
-    case ArrayType(StructType(Array(a, b)), _) =>
-      a.dataType == LongType && b.dataType.isInstanceOf[ArrayType] &&
-        b.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (sideOk(first.dataType) && sideOk(second.dataType) &&
-      third.dataType == DoubleType && fourth.dataType == BooleanType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "cosine_pairs expects (array<struct<bigint, array<double>>> ×2, double, boolean), got " +
-        Seq(first, second, third, fourth).map(_.dataType.simpleString).mkString(", "))
-
-  override def nullSafeEval(ls: Any, rs: Any, theta: Any, same: Any): Any =
-    CosinePairsUtil.pairs(ls.asInstanceOf[ArrayData], rs.asInstanceOf[ArrayData],
-      theta.asInstanceOf[Double], same.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ls, rs, t, sm) => s"graft.functions.CosinePairsUtil.pairs($ls, $rs, $t, $sm)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): CosinePairs =
-    copy(first = f, second = s, third = t, fourth = q)
-  override def prettyName: String = "cosine_pairs"
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** FNV-1a 64-bit hash utilities, codegen-callable (static methods). */
+/** FNV-1a 64-bit hash kernel, bound to `fnv_hash` by [[Kernel]]. */
 object FnvHashUtil {
   final val Prime = 0x100000001b3L
   final val Seed = 0xcbf29ce484222325L
@@ -60,54 +57,4 @@ object FnvHashUtil {
 
   def hashDecimal(d: org.apache.spark.sql.types.Decimal, precision: Int): Long =
     hashBytes(decimalImage(d, precision))
-}
-
-/** `fnv_hash(expr)` — Impala's FNV-1a hash builtin
-  * (reference: catalog/BuiltinsDb.java:48-61 registers it per primitive
-  * type). Whole-stage-codegen friendly via static helper calls. */
-case class FnvHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any = child.dataType match {
-    case StringType => FnvHashUtil.hashUtf8(v.asInstanceOf[UTF8String])
-    case BinaryType => FnvHashUtil.hashBytes(v.asInstanceOf[Array[Byte]])
-    case BooleanType => FnvHashUtil.hashLong(if (v.asInstanceOf[Boolean]) 1L else 0L, 1)
-    case ByteType => FnvHashUtil.hashLong(v.asInstanceOf[Byte].toLong, 1)
-    case ShortType => FnvHashUtil.hashLong(v.asInstanceOf[Short].toLong, 2)
-    case IntegerType | DateType => FnvHashUtil.hashLong(v.asInstanceOf[Int].toLong, 4)
-    // Timestamps hash their 8-byte microsecond value. Documented divergence:
-    // Impala's BE hashes its 16-byte boost TimestampValue layout (not
-    // defined in the frontend-only reference repo), so timestamp hash
-    // values differ from Impala while remaining stable within this engine.
-    case LongType | TimestampType | TimestampNTZType => FnvHashUtil.hashLong(v.asInstanceOf[Long], 8)
-    case FloatType => FnvHashUtil.hashFloat(v.asInstanceOf[Float])
-    case DoubleType => FnvHashUtil.hashDouble(v.asInstanceOf[Double])
-    case d: DecimalType => FnvHashUtil.hashDecimal(v.asInstanceOf[Decimal], d.precision)
-    case other => throw new UnsupportedOperationException(s"fnv_hash: $other")
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // static forwarders on the companion class — janino can't resolve the
-    // Scala MODULE$ field through the dollar-suffixed object class name
-    val u = "graft.functions.FnvHashUtil"
-    val call: String => String = child.dataType match {
-      case StringType => c => s"$u.hashUtf8($c)"
-      case BinaryType => c => s"$u.hashBytes($c)"
-      case BooleanType => c => s"$u.hashLong($c ? 1L : 0L, 1)"
-      case ByteType => c => s"$u.hashLong((long)$c, 1)"
-      case ShortType => c => s"$u.hashLong((long)$c, 2)"
-      case IntegerType | DateType => c => s"$u.hashLong((long)$c, 4)"
-      case LongType | TimestampType | TimestampNTZType => c => s"$u.hashLong($c, 8)"
-      case FloatType => c => s"$u.hashFloat($c)"
-      case DoubleType => c => s"$u.hashDouble($c)"
-      case d: DecimalType =>
-        c => s"$u.hashDecimal($c, ${d.precision})"
-      case other => throw new UnsupportedOperationException(s"fnv_hash: $other")
-    }
-    defineCodeGen(ctx, ev, call)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): FnvHash = copy(newChild)
-  override def prettyName: String = "fnv_hash"
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 object HyperplaneBands64Util {
   /** Hyperplane seeds stride 2^20 per hyperplane so component seeds never
@@ -93,44 +90,4 @@ object HyperplaneBands64Util {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `hyperplanebands64(array<double>[, planes, bits])` — random-hyperplane
-  * LSH band keys for embedding near-dup blocking in the SELECTIVE regime
-  * (graft.llmops.Dedup q155; see the q84 doc for why no (planes, bits)
-  * is selective when the threshold sits near the random-pair cosine
-  * background). Defaults: 64 planes, 2-bit bands. posexplode yields the
-  * (band, key) pairs. Codegen delegates to the static helper so the
-  * surrounding stage stays in whole-stage codegen. */
-case class HyperplaneBands64(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-  def this(child: Expression) = this(child, Literal(64), Literal(2))
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), IntegerType, IntegerType)
-        if second.foldable && third.foldable =>
-        val p = second.eval().asInstanceOf[Int]
-        val b = third.eval().asInstanceOf[Int]
-        if (p > 0 && b > 0 && b <= 63 && p % b == 0)
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplanebands64 needs planes % bits == 0 and 0 < bits < 64, got planes=$p bits=$b")
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"hyperplanebands64 expects (array<double>, int literal, int literal), got $other")
-    }
-
-  override def nullSafeEval(v: Any, p: Any, b: Any): Any =
-    HyperplaneBands64Util.bands(v.asInstanceOf[ArrayData], p.asInstanceOf[Int], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, p, b) => s"graft.functions.HyperplaneBands64Util.bands($v, $p, $b)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): HyperplaneBands64 =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "hyperplanebands64"
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Registers the Impala builtin-function surface that Spark lacks (or names
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * exists natively in Spark under the same names (abs, concat, substr,
   * regexp_extract, year/month/day, coalesce, stddev/variance families,
   * parse_url, …); this object closes the gaps with thin expression builders
-  * so both SQL text and the Column DSL can call them. Custom sketch
+  * for SQL text. Custom sketch
   * aggregates (histogram/sample/distinctpc — BuiltinsDb.java:721-790) live
   * in [[graft.functions.SketchAggregates]].
   */
@@ -90,22 +89,13 @@ object ImpalaFunctions {
       case Seq(e, sep) => GroupConcat(Cast(e, StringType), sep)
     }
 
-    // --- hashing ---
-    add("fnv_hash") { case Seq(e) => FnvHash(e) }
-    add("murmur_hash") { case Seq(e) => MurmurHash2(e) }
-    // llmops: SimHash / MinHash over a feature-hash array (graft.llmops.Dedup)
-    add("simhash64") { case Seq(e) => SimHash64(e) }
-    add("minhash64") { case Seq(e) => MinHash64(e) }
-    add("lshbands64") { case Seq(e) => LshBands64(e) }
-    add("shingles64") { case Seq(e) => Shingles64(e) }
-    add("vec_cosine") { case Seq(a, b) => VecCosine(a, b) }
-    add("hyperplanebands64") {
-      case Seq(e) => new HyperplaneBands64(e)
-      case Seq(e, p, b) => HyperplaneBands64(e, p, b)
-    }
-    add("cosine_pairs") { case Seq(ls, rs, t, sm) => CosinePairs(ls, rs, t, sm) }
-    add("long_pairs") { case Seq(ls, rs, sm) => LongPairs(ls, rs, sm) }
-    add("long_pairs_len") { case Seq(ls, rs, sm, t) => LongPairsLen(ls, rs, sm, t) }
+    // --- scalar kernels: hashing, llmops dedup/similarity (graft.llmops.Dedup),
+    //     fuzzy matching — each bound through its Kernel.table row ---
+    Kernel.table.keys.toSeq.sorted.foreach(name => add(name) {
+      // hyperplanebands64(v) defaults to 64 planes in 2-bit bands
+      case Seq(v) if name == "hyperplanebands64" => Kernel(name, Seq(v, Literal(64), Literal(2)))
+      case args => Kernel(name, args)
+    })
 
     // --- pattern matching: iregexp = case-insensitive regexp ---
     add("iregexp") { case Seq(s, p) =>
@@ -151,15 +141,6 @@ object ImpalaFunctions {
     // callers keep Spark's DATE-returning TruncDate).
     add("trunc") { case Seq(ts, fmt) => ImpalaTrunc(ts, fmt) }
 
-    add("levenshtein_bounded") {
-      case Seq(a, b, kE: org.apache.spark.sql.catalyst.expressions.Literal) =>
-        BoundedLevenshtein(a, b, kE.eval().asInstanceOf[Number].intValue())
-      case other => throw new IllegalArgumentException(
-        s"levenshtein_bounded(a, b, k) needs a literal k, got $other")
-    }
-
-    add("jaro_winkler") { case Seq(a, b) => JaroWinkler(a, b) }
-
     acc.result() ++ SketchAggregates.builders
   }
 
@@ -175,18 +156,4 @@ object ImpalaFunctions {
     }
   }
 
-  // ------------------------------------------------------------------
-  // Column DSL mirrors (Spark-first callers use these instead of SQL text)
-  // ------------------------------------------------------------------
-  def fnv_hash(c: Column): Column =
-    org.apache.spark.sql.GraftShims.column(FnvHash(expression(c)))
-  def zeroifnull(c: Column): Column = coalesce(c, lit(0))
-  def nullifzero(c: Column): Column = when(c === 0, lit(null)).otherwise(c)
-  def ndv(c: Column): Column = approx_count_distinct(c)
-  def appx_median(c: Column): Column = percentile_approx(c, lit(0.5), lit(10000))
-  def group_concat(c: Column, sep: String = ", "): Column =
-    concat_ws(sep, sort_array(collect_list(c)))
-
-  private def expression(c: Column): Expression =
-    org.apache.spark.sql.GraftShims.expression(c)
 }

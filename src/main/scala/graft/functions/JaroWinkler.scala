@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Jaro-Winkler kernel, codegen-callable (static forwarder). */
+/** Jaro-Winkler kernel, bound to `jaro_winkler` by [[Kernel]]. */
 object JaroWinklerUtil {
 
   /** Classic Jaro-Winkler similarity in [0, 1]: Jaro matching inside the
@@ -65,27 +62,4 @@ object JaroWinklerUtil {
     while (p < maxP && s(p) == t(p)) p += 1
     jaro + p * 0.1 * (1.0 - jaro)
   }
-}
-
-/** `jaro_winkler(a, b)` — the standard fuzzy-name similarity, as a native
-  * codegen'd Expression (stays inside whole-stage codegen in the blocked
-  * entity-resolution verify loop). Semantics pinned to DuckDB's
-  * `jaro_winkler_similarity` so the oracle replays it exactly. */
-case class JaroWinkler(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    JaroWinklerUtil.sim(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.JaroWinklerUtil.sim($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinkler =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaro_winkler"
 }

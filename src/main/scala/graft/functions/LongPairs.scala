@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 object LongPairsUtil {
   /** Length-ORDERED pair expansion over PACKED ids (`(m << 40) | id`,
@@ -101,70 +99,4 @@ object LongPairsUtil {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `long_pairs(array<bigint>, array<bigint>, boolean)` →
-  * array<struct<a bigint, b bigint>> — bounded-block id-pair expansion
-  * for the dedup candidate stages; explode the result. */
-case class LongPairs(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"long_pairs expects (array<bigint>, array<bigint>, boolean), got $other")
-    }
-
-  override def nullSafeEval(ls: Any, rs: Any, same: Any): Any =
-    LongPairsUtil.pairs(ls.asInstanceOf[ArrayData], rs.asInstanceOf[ArrayData],
-      same.asInstanceOf[Boolean])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ls, rs, sm) => s"graft.functions.LongPairsUtil.pairs($ls, $rs, $sm)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): LongPairs =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "long_pairs"
-}
-
-/** `long_pairs_len(array<bigint>, array<bigint>, boolean, bigint)` →
-  * array<struct<a bigint, b bigint>> — [[LongPairs]] over PACKED
-  * `(m << 40) | id` values with the Jaccard length filter applied
-  * DURING generation ([[LongPairsUtil.pairsLen]]): sorted blocks +
-  * sliding window, never touching length-incompatible pairs. */
-case class LongPairsLen(first: Expression, second: Expression,
-                        third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), BooleanType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"long_pairs_len expects (array<bigint>, array<bigint>, boolean, bigint), got $other")
-    }
-
-  override def nullSafeEval(ls: Any, rs: Any, same: Any, tE6: Any): Any =
-    LongPairsUtil.pairsLen(ls.asInstanceOf[ArrayData], rs.asInstanceOf[ArrayData],
-      same.asInstanceOf[Boolean], tE6.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ls, rs, sm, t) =>
-      s"graft.functions.LongPairsUtil.pairsLen($ls, $rs, $sm, $t)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): LongPairsLen =
-    copy(first = f, second = s, third = t, fourth = q)
-  override def prettyName: String = "long_pairs_len"
 }

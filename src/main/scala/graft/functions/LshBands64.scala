@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 object LshBands64Util {
   /** 16 band keys from a 64-element MinHash signature (bands of 4 rows):
@@ -27,27 +24,4 @@ object LshBands64Util {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `lshbands64(array<bigint>)` — MinHash band keys for LSH bucketing
-  * (graft.llmops.Dedup); posexplode yields the (band, key) pairs. */
-case class LshBands64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"lshbands64 expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    LshBands64Util.bands(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LshBands64Util.bands($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): LshBands64 = copy(newChild)
-  override def prettyName: String = "lshbands64"
 }

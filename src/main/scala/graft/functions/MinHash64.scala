@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 object MinHash64Util {
   /** 64 deterministic seeds from splitmix64(j) — no stored model. */
@@ -41,29 +38,4 @@ object MinHash64Util {
     }
     new GenericArrayData(mins)
   }
-}
-
-/** `minhash64(array<bigint>)` — 64-element MinHash signature of a
-  * feature-hash set (llmops dedup; LLM-pipeline extension). One array
-  * traversal instead of 64 lambda-evaluated passes — the hot path of
-  * MinHash+LSH dedup at corpus scale. */
-case class MinHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash64 expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    MinHash64Util.signature(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHash64Util.signature($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHash64 = copy(newChild)
-  override def prettyName: String = "minhash64"
 }

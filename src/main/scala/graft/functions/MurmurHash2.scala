@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MurmurHash2 64A (Appleby's public-domain algorithm — the variant
@@ -53,47 +51,4 @@ object MurmurHash2Util {
   // single source of truth for the decimal byte layout: FnvHashUtil
   def hashDecimal(d: Decimal, precision: Int): Long =
     hashBytes(FnvHashUtil.decimalImage(d, precision))
-}
-
-/** `murmur_hash(expr)` — Impala's murmur_hash builtin (same registration
-  * surface as fnv_hash). Timestamp caveat as [[FnvHash]]: 8-byte micros,
-  * not the backend's 16-byte boost layout. */
-case class MurmurHash2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any = child.dataType match {
-    case StringType => MurmurHash2Util.hashUtf8(v.asInstanceOf[UTF8String])
-    case BinaryType => MurmurHash2Util.hashBytes(v.asInstanceOf[Array[Byte]])
-    case BooleanType => MurmurHash2Util.hashLong(if (v.asInstanceOf[Boolean]) 1L else 0L, 1)
-    case ByteType => MurmurHash2Util.hashLong(v.asInstanceOf[Byte].toLong, 1)
-    case ShortType => MurmurHash2Util.hashLong(v.asInstanceOf[Short].toLong, 2)
-    case IntegerType | DateType => MurmurHash2Util.hashLong(v.asInstanceOf[Int].toLong, 4)
-    case LongType | TimestampType | TimestampNTZType => MurmurHash2Util.hashLong(v.asInstanceOf[Long], 8)
-    case FloatType => MurmurHash2Util.hashFloat(v.asInstanceOf[Float])
-    case DoubleType => MurmurHash2Util.hashDouble(v.asInstanceOf[Double])
-    case d: DecimalType => MurmurHash2Util.hashDecimal(v.asInstanceOf[Decimal], d.precision)
-    case other => throw new UnsupportedOperationException(s"murmur_hash: $other")
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val u = "graft.functions.MurmurHash2Util"
-    val call: String => String = child.dataType match {
-      case StringType => c => s"$u.hashUtf8($c)"
-      case BinaryType => c => s"$u.hashBytes($c)"
-      case BooleanType => c => s"$u.hashLong($c ? 1L : 0L, 1)"
-      case ByteType => c => s"$u.hashLong((long)$c, 1)"
-      case ShortType => c => s"$u.hashLong((long)$c, 2)"
-      case IntegerType | DateType => c => s"$u.hashLong((long)$c, 4)"
-      case LongType | TimestampType | TimestampNTZType => c => s"$u.hashLong($c, 8)"
-      case FloatType => c => s"$u.hashFloat($c)"
-      case DoubleType => c => s"$u.hashDouble($c)"
-      case d: DecimalType => c => s"$u.hashDecimal($c, ${d.precision})"
-      case other => throw new UnsupportedOperationException(s"murmur_hash: $other")
-    }
-    defineCodeGen(ctx, ev, call)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MurmurHash2 = copy(newChild)
-  override def prettyName: String = "murmur_hash"
 }

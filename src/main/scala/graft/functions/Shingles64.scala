@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 object Shingles64Util {
@@ -52,29 +49,4 @@ object Shingles64Util {
     java.util.Arrays.sort(arr) // deterministic order
     new GenericArrayData(arr)
   }
-}
-
-/** `shingles64(text)` — distinct hashed word-3-gram shingles, the input
-  * to MinHash dedup (graft.llmops.Dedup). Replaces a
-  * split/sequence/slice/concat_ws lambda tree with one byte scan: no
-  * per-shingle allocations, far less codegen. */
-case class Shingles64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingles64 expects string, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    Shingles64Util.shingles(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Shingles64Util.shingles($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles64 = copy(newChild)
-  override def prettyName: String = "shingles64"
 }

@@ -24,12 +24,12 @@ import org.apache.spark.unsafe.types.UTF8String
 object SketchAggregates {
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "distinctpc" -> { case Seq(e) => DistinctPC(FnvHash(e), numBitmaps = 1) },
-    "distinctpcsa" -> { case Seq(e) => DistinctPC(FnvHash(e), numBitmaps = 64) },
+    "distinctpc" -> { case Seq(e) => DistinctPC(fnvHash(e), numBitmaps = 1) },
+    "distinctpcsa" -> { case Seq(e) => DistinctPC(fnvHash(e), numBitmaps = 64) },
     "sample" -> { case Seq(e) =>
-      BottomKSample(toStr(e), FnvHash(e), k = 20, histogram = false) },
+      BottomKSample(toStr(e), fnvHash(e), k = 20, histogram = false) },
     "histogram" -> { case Seq(e) =>
-      BottomKSample(toStr(e), FnvHash(e), k = 4096, histogram = true) },
+      BottomKSample(toStr(e), fnvHash(e), k = 4096, histogram = true) },
     // approx_top_k(expr, k[, capacity]) — k/capacity must be literals
     // (they size the aggregation buffer, a plan-time property)
     "mg_top_k" -> { args =>
@@ -45,6 +45,7 @@ object SketchAggregates {
     })
 
   private def toStr(e: Expression): Expression = Cast(e, StringType)
+  private def fnvHash(e: Expression): Expression = Kernel("fnv_hash", Seq(e))
 }
 
 /** Flajolet-Martin probabilistic distinct counting over an FNV64 hash.

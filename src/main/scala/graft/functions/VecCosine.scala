@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 object VecCosineUtil {
   /** Cosine similarity with strictly element-in-order double
@@ -27,29 +24,4 @@ object VecCosineUtil {
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-}
-
-/** `vec_cosine(array<double>, array<double>)` — fused cosine similarity
-  * for the llmops similarity/dedup operators (the ANN hot path). */
-case class VecCosine(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"vec_cosine expects (array<double>, array<double>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecCosineUtil.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VecCosineUtil.cosine($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecCosine =
-    copy(left = l, right = r)
-  override def prettyName: String = "vec_cosine"
 }

@@ -184,7 +184,7 @@ object Dedup {
     * the LSH pipeline shared by [[q81MinHashLsh]] and the dedup-method
     * ablation report (q208/q209). Returns (doc_id_a < doc_id_b, j).
     *
-    * 64 minhashes in one pass (graft.functions.MinHash64); band b hashes
+    * 64 minhashes in one pass (graft.functions.MinHash64Util); band b hashes
     * signature rows [4b, 4b+4). ONE corpus-wide shingle+signature pass:
     * bucket pairs expand through boundedPairs (skew armor — a bucket of
     * identical boilerplate becomes bounded sub-tasks, never one O(k²)
@@ -421,7 +421,7 @@ object Dedup {
   }
 
   /** SimHash near-duplicate pairs: per-row 64-bit signature over word
-    * hashes (custom Expression, graft.functions.SimHash64), then a
+    * hashes (graft.functions.SimHash64Util), then a
     * byte-pigeonhole bucket join — any pair at hamming ≤ 7 shares at
     * least one of the 8 signature bytes, so candidate generation is
     * O(docs × 8), not O(docs²), with 100% recall (≤7 flipped bits
@@ -615,7 +615,7 @@ object Dedup {
     * re-encoded content.
     *
     * Blocking: 256 hyperplanes → 16 bands × 16 sign bits
-    * (graft.functions.HyperplaneBands64, seed-strided xxhash64 parity).
+    * (graft.functions.HyperplaneBands64Util, seed-strided xxhash64 parity).
     * At cos = 0.999 a band matches with a(0.999)¹⁶ ≈ 0.85, so a twin
     * pair is missed by all 16 bands with prob 0.15¹⁶ ≈ 7e-14; a
     * background pair (cos ≈ 0) matches a band with 0.5¹⁶ = 1.5e-5 —

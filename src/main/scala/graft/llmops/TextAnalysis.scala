@@ -1616,7 +1616,7 @@ object TextAnalysis {
     *
     * Scale shape: vocab distinct (one word-keyed shuffle with map-side
     * combine) → 1024-row load relation → one-row report; the hash is a
-    * codegen'd Expression, and at 100 TB the distinct is the only
+    * codegen'd kernel call, and at 100 TB the distinct is the only
     * corpus-sized stage (the same relation the vocab/BPE ops already
     * build). */
   val q213FeatureHashing: QuerySpec = {

@@ -252,6 +252,24 @@ object Functions {
       |  TRY_CAST(JSON_EXTRACT_STRING(props, '$.k') AS INT) AS k_int
       |FROM events ORDER BY event_id""".stripMargin)
 
+  /** DuckDB HUGEINT spellings of wrap-around unsigned 64-bit arithmetic
+    * for the MurmurHash2 64A oracles (q58, [[q128MurmurOracle]], whose doc
+    * gives the recipe): `mul` multiplies by M = 0xc6a4a7935bd1e995,
+    * `sg`/`un` convert to and from signed BIGINT, `shr47` is k >>> 47. */
+  private object U64 {
+    val P64 = "CAST('18446744073709551616' AS HUGEINT)"
+    val P63 = "CAST('9223372036854775808' AS HUGEINT)"
+    val M = "14313749767032793493"
+    def mul(x: String): String =
+      s"((($x) % 4294967296) * $M + (((($x) // 4294967296) * $M) % 4294967296) * 4294967296) % $P64"
+    def sg(x: String): String =
+      s"CAST(CASE WHEN ($x) >= $P63 THEN ($x) - $P64 ELSE ($x) END AS BIGINT)"
+    def un(x: String): String =
+      s"CAST(CASE WHEN ($x) < 0 THEN CAST($x AS HUGEINT) + $P64 ELSE CAST($x AS HUGEINT) END AS HUGEINT)"
+    def xor64(a: String, b: String): String = un(s"xor(${sg(a)}, ${sg(b)})")
+    def shr47(x: String): String = s"(($x) // 140737488355328)"
+  }
+
   /** The float-bit hash surface — fnv_hash / murmur_hash over DOUBLE —
     * plus typeof. Integer/string/decimal/bool images are oracled by
     * [[q120FnvOracle]] / [[q128MurmurOracle]]; this query covers the one
@@ -267,17 +285,7 @@ object Functions {
     * pinned as literals. Normals only — the corpus has no subnormals /
     * zeros / NaNs (|c_acctbal| ∈ [0.01, 10⁴]). */
   val q58HashTypeof: QuerySpec = {
-    val P64 = "CAST('18446744073709551616' AS HUGEINT)"
-    val P63 = "CAST('9223372036854775808' AS HUGEINT)"
-    val M = "14313749767032793493" // murmur2 64A constant, unsigned
-    def mul(x: String): String =
-      s"((($x) % 4294967296) * $M + (((($x) // 4294967296) * $M) % 4294967296) * 4294967296) % $P64"
-    def sg(x: String): String =
-      s"CAST(CASE WHEN ($x) >= $P63 THEN ($x) - $P64 ELSE ($x) END AS BIGINT)"
-    def un(x: String): String =
-      s"CAST(CASE WHEN ($x) < 0 THEN CAST($x AS HUGEINT) + $P64 ELSE CAST($x AS HUGEINT) END AS HUGEINT)"
-    def xor64(a: String, b: String): String = un(s"xor(${sg(a)}, ${sg(b)})")
-    def shr47(x: String): String = s"(($x) // 140737488355328)"
+    import U64._
     QuerySpec.sql2(
       "q58_expr_fnv_hash",
       """SELECT c_custkey,
@@ -317,8 +325,8 @@ object Functions {
          |FROM m5 ORDER BY c_custkey""".stripMargin)
   }
 
-  /** Cross-engine oracle for the custom fnv_hash codegen Expression
-    * (graft.functions.FnvHash; reference registers fnv_hash per primitive
+  /** Cross-engine oracle for the custom fnv_hash kernel
+    * (graft.functions.FnvHashUtil; reference registers fnv_hash per primitive
     * width, catalog/BuiltinsDb.java:48-61): the DuckDB side re-derives
     * FNV-1a 64 from first principles — byte images built with arithmetic
     * shifts (two's complement for negative decimals), the hash loop as a
@@ -370,7 +378,7 @@ object Functions {
          |ORDER BY c_custkey""".stripMargin)
   }
 
-  /** Cross-engine oracle for the murmur_hash codegen Expression
+  /** Cross-engine oracle for the murmur_hash kernel
     * (MurmurHash2 64A, the variant Impala's hash-util uses): DuckDB
     * re-derives the full algorithm in HUGEINT — 64-bit little-endian
     * block loads, the k-mix (k*M, k ^= k>>47, k*M), the fold, the tail
@@ -381,17 +389,7 @@ object Functions {
     * inputs ride one pipeline as tagged byte lists (strings exercise the
     * tail path — name length 18 = 2 blocks + 2 tail bytes). */
   val q128MurmurOracle: QuerySpec = {
-    val P64 = "CAST('18446744073709551616' AS HUGEINT)"
-    val P63 = "CAST('9223372036854775808' AS HUGEINT)"
-    val M = "14313749767032793493" // 0xc6a4a7935bd1e995 unsigned
-    def mul(x: String): String =
-      s"((($x) % 4294967296) * $M + (((($x) // 4294967296) * $M) % 4294967296) * 4294967296) % $P64"
-    def sg(x: String): String =
-      s"CAST(CASE WHEN ($x) >= $P63 THEN ($x) - $P64 ELSE ($x) END AS BIGINT)"
-    def un(x: String): String =
-      s"CAST(CASE WHEN ($x) < 0 THEN CAST($x AS HUGEINT) + $P64 ELSE CAST($x AS HUGEINT) END AS HUGEINT)"
-    def xor64(a: String, b: String): String = un(s"xor(${sg(a)}, ${sg(b)})")
-    def shr47(x: String): String = s"(($x) // 140737488355328)"
+    import U64._
     val load = (0 until 8).map(j => s"bts[8*i+${j + 1}] * ${1L << (8 * j)}").mkString(" + ")
     val tailv =
       "COALESCE(list_aggregate(list_transform(range(rem), j -> bts[nb*8 + j + 1] * power2[j+1]), 'sum'), CAST(0 AS HUGEINT))"

@@ -155,4 +155,55 @@ class FunctionsSpec extends EngineSuite {
     assert(r.getSeq[Row](3).map(p => (p.getLong(0), p.getLong(1))).toSet ==
       Set((4L, 9L), (2L, 4L)))
   }
+
+  test("every kernel binding: NULL in gives NULL, the declared result schema, no implicit casts") {
+    import org.apache.spark.sql.types._
+    graft.engine.GraftSession.attach(spark)
+    val longs = "array(1L, 2L)"
+    val vec = "array(1D, 0.5D)"
+    val block = "array(named_struct('id', 1L, 'v', array(1D, 0D)), " +
+      "named_struct('id', 2L, 'v', array(0.5D, 1D)))"
+    val keys = ArrayType(LongType, containsNull = false)
+    def pairsOf(fields: (String, DataType)*): DataType = ArrayType(StructType(fields.map {
+      case (n, t) => StructField(n, t, nullable = false) }), containsNull = false)
+    val idPairs = pairsOf("a" -> LongType, "b" -> LongType)
+    // name -> (well-typed non-NULL arguments, result type, arguments one
+    // implicit cast away from well-typed)
+    val cases: Seq[(String, Seq[String], DataType, Seq[String])] = Seq(
+      ("fnv_hash", Seq("'abc'"), LongType, Seq("array(1)")),
+      ("murmur_hash", Seq("CAST(7 AS TINYINT)"), LongType, Seq("map(1, 1)")),
+      ("simhash64", Seq(longs), LongType, Seq("array(1, 2)")),
+      ("minhash64", Seq(longs), keys, Seq("array(1, 2)")),
+      ("lshbands64", Seq("sequence(1L, 64L)"), keys, Seq("sequence(1, 64)")),
+      ("shingles64", Seq("'a b c d'"), keys, Seq("1")),
+      ("vec_cosine", Seq(vec, vec), DoubleType, Seq(vec, "array(1, 2)")),
+      ("hyperplanebands64", Seq(vec, "64", "2"), keys, Seq("array(1F, 2F)", "64", "2")),
+      ("cosine_pairs", Seq(block, block, "0.5D", "true"),
+        pairsOf("id_a" -> LongType, "id_b" -> LongType, "cos" -> DoubleType),
+        Seq(block, block, "0.5", "true")),
+      ("long_pairs", Seq(longs, longs, "true"), idPairs, Seq(longs, "array(1, 2)", "true")),
+      ("long_pairs_len", Seq(longs, longs, "false", "0L"), idPairs,
+        Seq(longs, longs, "false", "0")),
+      ("jaro_winkler", Seq("'martha'", "'marhta'"), DoubleType, Seq("'martha'", "1")),
+      ("levenshtein_bounded", Seq("'kitten'", "'sitting'", "2"), IntegerType,
+        Seq("'kitten'", "1", "2")))
+    assert(cases.map(_._1).toSet == functions.Kernel.table.keySet)
+    // planes and bits size the bands at analysis: they must be literals
+    val literalOnly = Set(("hyperplanebands64", 1), ("hyperplanebands64", 2))
+    cases.foreach { case (name, args, resultType, wrong) =>
+      val call = s"$name(${args.mkString(", ")})"
+      val df = spark.sql(s"SELECT $call")
+      val f = df.schema.head
+      assert(f.dataType == resultType && !f.nullable, s"$call: $f")
+      assert(!df.collect().head.isNullAt(0), call)
+      args.indices.filterNot(i => literalOnly((name, i))).foreach { i =>
+        val t = spark.sql(s"SELECT ${args(i)}").schema.head.dataType.sql
+        val nullCall = s"$name(${args.updated(i, s"CAST(NULL AS $t)").mkString(", ")})"
+        assert(spark.sql(s"SELECT $nullCall").collect().head.isNullAt(0), nullCall)
+      }
+      val bad = s"$name(${wrong.mkString(", ")})"
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $bad"))
+      assert(e.getMessage.contains(s"$name expects"), s"$bad: ${e.getMessage}")
+    }
+  }
 }

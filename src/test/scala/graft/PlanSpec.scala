@@ -9,6 +9,17 @@ class PlanSpec extends EngineSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** The optimized plan of every registry query the corpus sweep has not
+    * audited, by name, built one at a time. The side-effecting DML specs
+    * are left out; any other query that throws fails the sweep, named. */
+  private def sweep(audited: String => Boolean)
+      : Iterator[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
+    SparkEntry.specs.filterNot(s => audited(s.name) || SparkEntry.sideEffecting(s.name))
+      .sortBy(_.name).iterator.map { s =>
+        try s.name -> s.run(spark, sfDir).queryExecution.optimizedPlan
+        catch { case e: Exception => fail(s"${s.name} failed to plan in the corpus sweep", e) }
+      }
+
   test("q01: filter pushed to parquet scan; unused columns pruned") {
     val p = plan("q01_agg_tpch_q1")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -464,7 +475,7 @@ class PlanSpec extends EngineSuite {
     // kernel inside one Generate, and the one-block-per-pair salting
     // means no downstream distinct aggregation over the pair stream
     val p = plan("q84_dedup_embedding_cosine")
-    assert(p.contains("cosine_pairs"), p)
+    assert(p.contains("CosinePairsUtil.pairs"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"),
       "q84 pair space planned as a join: " + p)
   }
@@ -474,7 +485,7 @@ class PlanSpec extends EngineSuite {
     // so the final plan shows only the verify: it must be hash joins on
     // the (tiny) candidate pair set — never a cartesian/self-join
     val p = plan("q155_dedup_planted_lsh")
-    assert(p.contains("vec_cosine"), p)
+    assert(p.contains("VecCosineUtil.cosine"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "LSH fell back to all-pairs: " + p)
   }
@@ -488,7 +499,7 @@ class PlanSpec extends EngineSuite {
       """SELECT vec_id, hyperplanebands64(CAST(embedding AS ARRAY<DOUBLE>), 256, 16) b
         |FROM embeddings""".stripMargin).queryExecution.executedPlan.toString
     // the "*(n)" prefix marks a whole-stage-codegen'd operator
-    assert("""\*\(\d+\) Project .*hyperplanebands64""".r.findFirstIn(p).isDefined,
+    assert("""\*\(\d+\) Project .*HyperplaneBands64Util\.bands""".r.findFirstIn(p).isDefined,
       "banding fell out of codegen: " + p)
   }
 
@@ -775,20 +786,24 @@ class PlanSpec extends EngineSuite {
     QuerySpec.prepared(spark, sfDir)
     def opt(q: String): String =
       spark.sql(q).queryExecution.optimizedPlan.toString
+    // Spark's thresholded levenshtein(a, b, k) prints its bound as Some(k)
+    val withinBound = """levenshtein\([^()]*, Some\((\d+)\)\) >= 0""".r
+    val anyThreshold = """levenshtein\([^()]*, Some\(""".r
+    def bound(plan: String): Option[String] = withinBound.findFirstMatchIn(plan).map(_.group(1))
     // the plain 2-arg spelling a user ports gets the banded kernel...
     val rewritten = opt(
       "SELECT c_name FROM customer WHERE levenshtein(c_name, 'Customer#000000001') <= 1")
-    assert(rewritten.contains("levenshtein_bounded"),
+    assert(bound(rewritten).contains("1"),
       "lev <= k predicate did not strength-reduce: " + rewritten)
     val strict = opt(
       "SELECT c_name FROM customer WHERE levenshtein(c_name, 'Customer#000000001') < 2")
-    assert(strict.contains("levenshtein_bounded"),
+    assert(bound(strict).contains("1"),
       "lev < k predicate did not strength-reduce: " + strict)
     // ...but a non-predicate use and an over-cap bound stay untouched
     val projection = opt("SELECT levenshtein(c_name, 'x') FROM customer")
-    assert(!projection.contains("levenshtein_bounded"), projection)
+    assert(anyThreshold.findFirstIn(projection).isEmpty, projection)
     val wide = opt("SELECT c_name FROM customer WHERE levenshtein(c_name, 'x') <= 100")
-    assert(!wide.contains("levenshtein_bounded"), wide)
+    assert(anyThreshold.findFirstIn(wide).isEmpty, wide)
     // and the rewritten predicate returns the same rows as the plain one
     val a = spark.sql(
       "SELECT c_custkey FROM customer WHERE levenshtein(c_name, 'Customer#000000001') <= 1 ORDER BY 1")
@@ -1161,21 +1176,13 @@ class PlanSpec extends EngineSuite {
       collapsedOn(w.child, orderRefs.map(_.exprId).toSet) // (a)
     }
 
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (audited.contains(name)) None
-      else {
-        val plan =
-          try fn(spark, sfDir).queryExecution.optimizedPlan
-          catch { case _: Throwable => null } // side-effecting queries covered elsewhere
-        Option(plan).flatMap { p =>
-          val bad = p.collect {
-            case w: L.Window if w.partitionSpec.isEmpty && !admissible(w) => w
-          }
-          if (bad.isEmpty) None
-          else Some(name -> bad.map(_.orderSpec.mkString(",")).mkString("; "))
-        }
+    val offenders = sweep(audited.contains).flatMap { case (name, p) =>
+      val bad = p.collect {
+        case w: L.Window if w.partitionSpec.isEmpty && !admissible(w) => w
       }
-    }
+      if (bad.isEmpty) None
+      else Some(name -> bad.map(_.orderSpec.mkString(",")).mkString("; "))
+    }.toList
     assert(offenders.isEmpty,
       "unaudited global-order windows:\n" +
         offenders.map { case (n, o) => s"  $n: $o" }.mkString("\n"))
@@ -1874,20 +1881,12 @@ class PlanSpec extends EngineSuite {
       }
     }
 
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (audited.contains(name)) Nil
-      else {
-        val plan =
-          try fn(spark, sfDir).queryExecution.optimizedPlan
-          catch { case _: Throwable => null } // side-effecting queries covered elsewhere
-        Option(plan).toSeq.flatMap { p =>
-          val visited =
-            new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]
-          hintedSides(p, visited).filterNot(bounded)
-            .map(s => name -> s.treeString.linesIterator.take(3).mkString(" | "))
-        }
-      }
-    }
+    val offenders = sweep(audited.contains).flatMap { case (name, p) =>
+      val visited =
+        new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]
+      hintedSides(p, visited).filterNot(bounded)
+        .map(s => name -> s.treeString.linesIterator.take(3).mkString(" | "))
+    }.toList
     assert(offenders.isEmpty,
       "unaudited unbounded forced broadcasts:\n" +
         offenders.map { case (n, o) => s"  $n: $o" }.mkString("\n"))
