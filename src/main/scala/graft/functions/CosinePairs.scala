@@ -4,6 +4,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
+/** The kernel of `cosine_pairs(ls, rs, theta, same)` (bound by
+  * [[Kernel]]), ls/rs: array<struct<id bigint, v array<double>>> — the
+  * fused block scan for embedding near-dup (graft.llmops.Dedup q84):
+  * explode the result to get the qualifying (id_a, id_b, cos) pairs of
+  * one bounded block. */
 object CosinePairsUtil {
   /** All qualifying pairs of a bounded block in one compiled pass: for
     * (x, y) ∈ ls × rs computes exact cosine (element-in-order — see

@@ -3,6 +3,13 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
+/** The kernel of `hyperplanebands64(array<double>[, planes, bits])`
+  * (bound by [[Kernel]]; defaults 64 planes, 2-bit bands) —
+  * random-hyperplane LSH band keys for embedding near-dup blocking in the
+  * SELECTIVE regime (graft.llmops.Dedup q155; see the q84 doc for why no
+  * (planes, bits) is selective when the threshold sits near the
+  * random-pair cosine background). posexplode yields the (band, key)
+  * pairs. */
 object HyperplaneBands64Util {
   /** Hyperplane seeds stride 2^20 per hyperplane so component seeds never
     * alias across hyperplanes for any embedding dim ≤ 1,048,576 (seed

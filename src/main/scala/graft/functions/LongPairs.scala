@@ -4,6 +4,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
+/** The kernels of `long_pairs(array<bigint>, array<bigint>, boolean)`
+  * and `long_pairs_len(…, bigint)` (bound by [[Kernel]]): bounded-block
+  * id-pair expansion for the dedup candidate stages; explode the
+  * result. */
 object LongPairsUtil {
   /** Length-ORDERED pair expansion over PACKED ids (`(m << 40) | id`,
     * m = the record's token-set size < 2²³, id < 2⁴⁰): emits only pairs

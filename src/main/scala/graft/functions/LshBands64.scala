@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
+/** The kernel of `lshbands64(array<bigint>)` (bound by [[Kernel]]) —
+  * MinHash band keys for LSH bucketing (graft.llmops.Dedup); posexplode
+  * yields the (band, key) pairs. */
 object LshBands64Util {
   /** 16 band keys from a 64-element MinHash signature (bands of 4 rows):
     * band b's key is an FNV-style fold of signature rows [4b, 4b+4) with

@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
+/** The kernel of `minhash64(array<bigint>)` (bound by [[Kernel]]) —
+  * the 64-element MinHash signature of a feature-hash set, the hot path
+  * of MinHash+LSH dedup at corpus scale. */
 object MinHash64Util {
   /** 64 deterministic seeds from splitmix64(j) — no stored model. */
   private val seeds: Array[Long] = {

@@ -3,6 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The kernel of `shingles64(text)` (bound by [[Kernel]]) — distinct
+  * hashed word-3-gram shingles, the input to MinHash dedup
+  * (graft.llmops.Dedup). */
 object Shingles64Util {
   /** Distinct word-3-gram shingle hashes in one pass over the bytes:
     * scan for space-separated word boundaries, FNV-1a-hash each 3-word

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.ArrayData
 
+/** The kernel of `simhash64(array<bigint>)` (bound by [[Kernel]]) —
+  * the 64-bit SimHash signature of a feature-hash array (llmops dedup). */
 object SimHash64Util {
   /** Charikar SimHash over pre-hashed features: bit b of the signature is
     * set iff Σ over features of (±1 per feature's bit b) is positive.

@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.util.ArrayData
 
+/** The kernel of `vec_cosine(array<double>, array<double>)` (bound by
+  * [[Kernel]]) — fused cosine similarity for the llmops similarity and
+  * dedup operators (the ANN hot path). */
 object VecCosineUtil {
   /** Cosine similarity with strictly element-in-order double
     * accumulation — the exact evaluation order of the SQL

@@ -56,7 +56,7 @@ object Dedup {
   private[graft] val saltedExpansions = new java.util.concurrent.atomic.AtomicLong
 
   /** `lenFilterE6 = Some(t·1e6)` switches the block expansion to
-    * [[graft.functions.LongPairsLen]] over PACKED `(m << 40) | id`
+    * [[graft.functions.LongPairsUtil.pairsLen]] over PACKED `(m << 40) | id`
     * values: the Jaccard length filter runs INSIDE the compiled
     * expansion loop (sorted block + sliding window), so
     * length-incompatible pairs are never generated, never distinct-ed,
@@ -95,7 +95,7 @@ object Dedup {
             collect_list(when(col("g") === col("bj"), col("id"))).as("rs"))
           .select(col("ls"), col("rs"), (col("bi") === col("bj")).as("same"))
       }
-    // codegen'd block expansion (graft.functions.LongPairs[Len]) —
+    // codegen'd block expansion (graft.functions.LongPairsUtil) —
     // diagonal sub-blocks (same, ls = rs) emit each unordered pair once
     val pairExpr = lenFilterE6 match {
       case Some(t) => s"long_pairs_len(ls, rs, same, CAST($t AS BIGINT))"
@@ -177,7 +177,7 @@ object Dedup {
       |ORDER BY lang""".stripMargin)
 
   /** Spark-side word-3-gram shingle set (distinct, hashed to i64) — a
-    * single-pass custom expression (graft.functions.Shingles64). */
+    * single-pass kernel (graft.functions.Shingles64Util). */
   private val shingleSql = "shingles64(text)"
 
   /** Verified near-duplicate pairs at word-3-gram Jaccard ≥ 0.8 —
@@ -566,7 +566,7 @@ object Dedup {
     * ceil(k/cap), a pair meets in exactly the sub-block (min g, max g) —
     * 100% recall, per-task arrays ≤ 2·cap, one block per pair so no
     * downstream distinct), and each bounded block runs through the
-    * codegen'd kernel graft.functions.CosinePairs: exact cosine inside
+    * codegen'd kernel graft.functions.CosinePairsUtil: exact cosine inside
     * the expansion, only surviving pairs ever become rows. Two shuffles
     * total (block sizes + the block groupBy); the k² flops per label are
     * inherent to the θ-near-background semantics, but they are compiled,
@@ -1917,8 +1917,8 @@ object Dedup {
     * on (brand, first name token) — an equality key both engines
     * replay exactly — expanded through the capped salted
     * [[boundedPairs]] so one mega-block cannot serialize a task; the
-    * verify kernel is the codegen'd [[graft.functions.JaroWinkler]]
-    * expression (stays inside whole-stage codegen over the candidate
+    * verify kernel is [[graft.functions.JaroWinklerUtil]], bound as
+    * `jaro_winkler` (stays inside whole-stage codegen over the candidate
     * relation), semantics pinned to DuckDB's
     * `jaro_winkler_similarity` which the oracle calls directly. Both
     * engines threshold on the ROUNDED e6 value so the cut is
@@ -2175,7 +2175,7 @@ object Dedup {
   /** `(m << 40) | id` packing for the compiled length-filtered pair
     * expansion — enforcing the documented contract LOUDLY (id < 2⁴⁰,
     * set size m < 2²³, both non-negative): a violating id would bleed
-    * into the size bits and make [[graft.functions.LongPairsLen]]'s
+    * into the size bits and make [[graft.functions.LongPairsUtil.pairsLen]]'s
     * sliding window silently DROP true candidate pairs — a false
     * negative in an operator whose whole contract is exactness. */
   private def packSized(m: Column, id: Column): Column =
@@ -2191,7 +2191,7 @@ object Dedup {
     * inter ≥ t·un ≥ t·max(|x|, |y|), and inter ≤ min(|x|, |y|)) — runs
     * INSIDE the compiled pair expansion: each document's set size m is
     * packed into its id's high bits ((m << 40) | doc_id) and
-    * [[graft.functions.LongPairsLen]] sorts each block by m and slides
+    * [[graft.functions.LongPairsUtil.pairsLen]] sorts each block by m and slides
     * a window, so length-incompatible pairs are never generated, never
     * distinct-ed, never shuffled, and the verify stage ships token-set
     * arrays only for pairs that could possibly reach t. On the fresh

@@ -23,7 +23,7 @@ import graft.QuerySpec
   */
 object Similarity {
 
-  /** Element-ordered double cosine (graft.functions.VecCosine — fused
+  /** Element-ordered double cosine (graft.functions.VecCosineUtil — fused
     * single pass, same accumulation order as DuckDB's
     * list_cosine_similarity over DOUBLE[], so oracle values agree
     * bit-for-bit before rounding). */

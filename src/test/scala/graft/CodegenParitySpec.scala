@@ -2,14 +2,15 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Codegen/interpreted parity fuzz for every custom Catalyst Expression.
+/** Codegen/interpreted parity fuzz for every custom scalar kernel.
   *
-  * Each expression ships two implementations: `doGenCode` (the hot path,
-  * inlined into whole-stage codegen) and `eval`/`nullSafeEval` (the
-  * fallback Spark silently uses when codegen fails or is disabled). A
-  * divergence between them is invisible to the oracle gate — the same
-  * mode runs on both sides of every compare — so this suite drives the
-  * SAME randomized inputs through both execution modes
+  * Each kernel runs two ways: the code Spark generates for its
+  * `StaticInvoke` binding (the hot path, inlined into whole-stage
+  * codegen) and Spark's interpreted eval (the fallback Spark silently
+  * uses when codegen fails or is disabled). A divergence between them
+  * is invisible to the oracle gate — the same mode runs on both sides
+  * of every compare — so this suite drives the SAME randomized inputs
+  * through both execution modes
   * (`spark.sql.codegen.factoryMode` CODEGEN_ONLY vs NO_CODEGEN) and
   * requires bit-identical results. Inputs are scalacheck-generated with
   * a fixed seed: unicode strings (the corpus is ASCII, the functions
