@@ -21,15 +21,20 @@ object Verify {
           .config("spark.ui.enabled", "false")
       ).getOrCreate())
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (filter(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val selected = SparkEntry.queries.toSeq.filter(kv => filter(kv._1))
+    val failed = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
+    // one tail line that a log full of Spark WARNs cannot bury; the exit
+    // status stays 0 either way (the oracle compare judges the output)
+    System.err.println(
+      s"[verify] ${failed.size} of ${selected.size} selected queries failed: ${failed.mkString(", ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,7 +3,7 @@ package graft.llmops
 import graft.Dialect
 import graft.llmops.Checkpoints.Stageable
 import graft.QuerySpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -101,6 +101,14 @@ object Retrieval {
       .orderBy(col("doc_id"), col("score_e6").desc, col("word"))
   }
 
+  /** One (doc, term) row's BM25 weight over its `tf`, `df`, `dl` and the
+    * corpus stats `n`, `avgdl` (k1 = 1.2, b = 0.75, the Robertson idf
+    * with +1 smoothing), in the operation order of the oracle texts. */
+  private val bm25Weight: Column =
+    (log((col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+      * col("tf") * lit(2.2)
+      / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+
   /** BM25 document scoring for a fixed lexical query (k1 = 1.2,
     * b = 0.75, the Robertson idf with +1 smoothing) — the retrieval
     * baseline every hybrid-search pipeline keeps next to its ANN leg
@@ -141,10 +149,7 @@ object Retrieval {
     val stats = docs.agg(count(lit(1)).as("n"),
       avg(size(split(col("text"), " "))).as("avgdl"))
     val scored = t.join(broadcast(dfRel), "word").crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log((col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("contrib", col("idf") * col("tf") * lit(2.2) /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", bm25Weight)
     scored.groupBy("doc_id").agg(sum("contrib").as("score"))
       .select(col("doc_id"),
         round(col("score") * lit(1e6)).cast("bigint").as("score_e6"))
@@ -234,10 +239,7 @@ object Retrieval {
     val stats = docs.agg(count(lit(1)).as("n"),
       avg(size(col("ws"))).as("avgdl"))
     val lex = t.join(broadcast(dfRel), "word").crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        log((col("n").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * col("tf") * lit(2.2)
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", bm25Weight)
       .groupBy("doc_id").agg(sum("contrib").as("score"))
       .withColumn("lr", row_number().over(
         w.orderBy(col("score").desc, col("doc_id"))))

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * character.
   *
   * Scale shape: the only corpus-grain sorts are the seed pass
-  * ([[Prefix.globalRankTiesWithCounts]] over dictionary-encoded 16-id
+  * ([[Prefix.globalRankTiesWithCountsStaged]] over dictionary-encoded 16-id
   * prefixes, range-partitioned, never a single-task window) and the one
   * vocabulary rank behind the encoding. Every refinement round touches
   * the shrinking ACTIVE set: one equi-join against the rank map
@@ -150,7 +150,7 @@ object SuffixArray {
     * order the rank-0 sentinel induces, and id order = word order by
     * construction). Only (doc_id, pos, 16 BIGINTs) reaches the
     * corpus-wide range exchange — never a word payload. Tie-block sizes
-    * ride the SAME pass ([[Prefix.globalRankTiesWithCounts]] — the
+    * ride the SAME pass ([[Prefix.globalRankTiesWithCountsStaged]] — the
     * block is already colocated in its range partition, so the count is
     * free of new shuffles/skew), replacing the r15 groupBy(rank) +
     * join-back + second checkpoint. */

@@ -46,23 +46,14 @@ object Prefix {
     graft.llmops.Checkpoints.stage(
       df.repartitionByRange(sort: _*).withColumn("__pid", spark_partition_id()))
 
-  /** The shared range+offset core every public rank builder composes
+  /** The shared range+offset core both public rank builders compose
     * (one implementation, so a staging/boundary fix lands everywhere at
     * once): range-partition, compute `localFn` per partition, derive
-    * per-partition totals — row counts for row_number/rank (equal keys
-    * never span a range boundary, so tie blocks stay whole), or the max
-    * local value for dense_rank (the distinct-key count) — roll the
-    * totals into exclusive offsets with one tiny ≤`shuffle.partitions`-
-    * row window, and broadcast-join them back. */
-  private def offsetComposed(df: DataFrame, sort: Seq[Column], rankCol: String,
-                             localFn: => Column,
-                             offsetFromLocalMax: Boolean,
-                             cntCol: Option[String] = None): DataFrame =
-    offsetComposedStaged(df, sort, rankCol, localFn, offsetFromLocalMax,
-      cntCol)._1
-
-  /** [[offsetComposed]] plus the INTERNAL staged range partition it is
-    * lazily derived from: a caller that materializes the result into
+    * per-partition row counts (equal keys never span a range boundary,
+    * so tie blocks stay whole), roll them into exclusive offsets with
+    * one tiny ≤`shuffle.partitions`-row window, and broadcast-join them
+    * back. Also returns the INTERNAL staged range partition the result
+    * is lazily derived from: a caller that materializes the result into
     * its own checkpoint can (and should) release the internal staging
     * afterwards — it is the WIDEST relation of the whole pass (it still
     * carries the sort payload), and leaving one behind per call is the
@@ -73,7 +64,6 @@ object Prefix {
   private def offsetComposedStaged(df: DataFrame, sort: Seq[Column],
                                    rankCol: String,
                                    localFn: => Column,
-                                   offsetFromLocalMax: Boolean,
                                    cntCol: Option[String]):
       (DataFrame, DataFrame) = {
     val parts = ranged(df, sort)
@@ -89,10 +79,7 @@ object Prefix {
     val local = cntCol.fold(ranked)(c => ranked.withColumn(c,
       count(lit(1)).over(Window.partitionBy(col("__pid"), col("__lrk")))
         .cast("long")))
-    val perPid =
-      if (offsetFromLocalMax) local.groupBy("__pid").agg(max("__lrk").as("__pn"))
-      else parts.groupBy("__pid").agg(count(lit(1)).as("__pn"))
-    val offsets = perPid
+    val offsets = parts.groupBy("__pid").agg(count(lit(1)).as("__pn"))
       .withColumn("__off", coalesce(
         sum("__pn").over(Window.orderBy("__pid")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -105,49 +92,23 @@ object Prefix {
   /** Exact global `ROW_NUMBER() OVER (ORDER BY sort)` as `rankCol`
     * (BIGINT, 1-based) without a single-task window. */
   def globalRank(df: DataFrame, sort: Seq[Column], rankCol: String): DataFrame =
-    offsetComposed(df, sort, rankCol, row_number(), offsetFromLocalMax = false)
+    offsetComposedStaged(df, sort, rankCol, row_number(), None)._1
 
   /** Exact global `RANK() OVER (ORDER BY sort)` (competition rank:
     * count of strictly-smaller rows + 1, ties share) as `rankCol`
-    * (BIGINT, 1-based), range-partitioned like [[globalRank]] — the
-    * same row-count offsets compose, because equal sort keys never
-    * span a range boundary. The numbering iterative refiners want:
-    * when a tie block splits later, every OTHER rank value is
-    * unaffected (unlike dense ranks, which renumber globally). */
-  def globalRankTies(df: DataFrame, sort: Seq[Column], rankCol: String): DataFrame =
-    offsetComposed(df, sort, rankCol, rank(), offsetFromLocalMax = false)
-
-  /** [[globalRankTies]] plus each row's TIE-BLOCK SIZE as `cntCol` —
-    * fused into the same local pass (see the offsetComposed note on why
-    * the fused count adds no shuffle and no new skew class) instead of
-    * the groupBy(rank) + join-back a caller would otherwise run. */
-  def globalRankTiesWithCounts(df: DataFrame, sort: Seq[Column],
-                               rankCol: String, cntCol: String): DataFrame =
-    offsetComposed(df, sort, rankCol, rank(), offsetFromLocalMax = false,
-      cntCol = Some(cntCol))
-
-  /** [[globalRankTiesWithCounts]] plus the internal staged range
-    * partition (see [[offsetComposedStaged]]): the caller owns the
+    * (BIGINT, 1-based), plus each row's TIE-BLOCK SIZE as `cntCol` —
+    * fused into the same local pass (see the offsetComposedStaged note
+    * on why the fused count adds no shuffle and no new skew class) —
+    * and the internal staged range partition: the caller owns that
     * second handle and must release it once the ranked output is
-    * materialized. */
+    * materialized. The same row-count offsets as [[globalRank]]
+    * compose, because equal sort keys never span a range boundary.
+    * The numbering iterative refiners want: when a tie block splits
+    * later, every OTHER rank value is unaffected. */
   def globalRankTiesWithCountsStaged(df: DataFrame, sort: Seq[Column],
                                      rankCol: String, cntCol: String):
       (DataFrame, DataFrame) =
-    offsetComposedStaged(df, sort, rankCol, rank(),
-      offsetFromLocalMax = false, cntCol = Some(cntCol))
-
-  /** Exact global `DENSE_RANK() OVER (ORDER BY sort)` as `rankCol`
-    * (BIGINT, 1-based) without a single-task window and without
-    * collapsing to the distinct key relation first (no distinct
-    * shuffle, no join-back — the shape iterative rankers like the
-    * suffix-array doubling loop need every round). Correctness of the
-    * per-partition composition: repartitionByRange keys equal sort
-    * values into ONE partition, so no dense-rank tie block ever spans
-    * a partition boundary; the global rank is the local dense rank
-    * plus the running total of distinct-key counts (max local rank)
-    * of all prior partitions. */
-  def globalDenseRank(df: DataFrame, sort: Seq[Column], rankCol: String): DataFrame =
-    offsetComposed(df, sort, rankCol, dense_rank(), offsetFromLocalMax = true)
+    offsetComposedStaged(df, sort, rankCol, rank(), Some(cntCol))
 
   /** Consecutive-row pairs under a TOTAL order, without a global window
     * and without the globalRank → self-join-on-idx two-shuffle shape:

@@ -22,8 +22,8 @@ import scala.jdk.CollectionConverters._
   * working tree on every run — r14 ADVICE); without it, the run
   * compares against the committed state so registry-wide plan drift
   * fails visibly instead of silently rewriting the ledger. A query
-  * that fails to plan records `err:<Exception>` and FAILS the test
-  * either way.
+  * that fails to plan or run records `err:<Exception>` and FAILS the
+  * test either way. Both tests read the plans [[RegistryPass]] built.
   *
   * Both files fingerprint only each query's final execution: staged
   * rounds have already run and show as `ScanExistingRDD` leaves, so
@@ -37,14 +37,9 @@ class BenchPlanSpec extends EngineSuite {
 
   private val goldenPath = resourcesDir.resolve("bench_plan_fingerprints.txt")
 
-  private def currentFingerprints: Seq[(String, String)] =
-    SparkEntry.benchQueries.sorted.map { name =>
-      name -> graft.engine.PlanFingerprint.of(
-        SparkEntry.queries(name)(spark, sfDir))
-    }
-
   test("bench headline plans match their golden fingerprints") {
-    val current = currentFingerprints
+    val current = SparkEntry.benchQueries.sorted
+      .map(name => name -> RegistryPass(name).built.fingerprint.get)
     if (sys.env.contains("REGEN_FINGERPRINTS")) {
       Files.createDirectories(goldenPath.getParent)
       Files.write(goldenPath,
@@ -76,18 +71,8 @@ class BenchPlanSpec extends EngineSuite {
 
   test("registry-wide coarse fingerprints match the committed drift ledger") {
     val registryPath = resourcesDir.resolve("registry_plan_fingerprints.txt")
-    val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val fp =
-        try {
-          val df = fn(spark, sfDir)
-          // the Explain surface runs ResourceEstimates on every query —
-          // it must never throw on any registry plan shape (QueryExecution
-          // caches the physical plan, so this shares the fingerprint's)
-          graft.discard(graft.engine.ResourceEstimates.of(df))
-          graft.engine.PlanFingerprint.summary(df)
-        }
-        catch { case e: Throwable => s"err:${e.getClass.getSimpleName}" }
-      s"$name $fp"
+    val lines = RegistryPass.records.map { r =>
+      s"${r.name} ${r.outcome.fold(e => s"err:${e.getClass.getSimpleName}", _.summary)}"
     }
     val broken = lines.filter(_.contains(" err:"))
     assert(broken.isEmpty,

@@ -9,16 +9,14 @@ class PlanSpec extends EngineSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
-  /** The optimized plan of every registry query the corpus sweep has not
-    * audited, by name, built one at a time. The side-effecting DML specs
-    * are left out; any other query that throws fails the sweep, named. */
-  private def sweep(audited: String => Boolean)
-      : Iterator[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
-    SparkEntry.specs.filterNot(s => audited(s.name) || SparkEntry.sideEffecting(s.name))
-      .sortBy(_.name).iterator.map { s =>
-        try s.name -> s.run(spark, sfDir).queryExecution.optimizedPlan
-        catch { case e: Exception => fail(s"${s.name} failed to plan in the corpus sweep", e) }
-      }
+  /** The registry pass's build of every query the corpus sweep has not
+    * audited, by name. The side-effecting DML specs are left out; any
+    * other query that threw fails the sweep, named. */
+  private def swept(audited: Map[String, String]): Seq[(String, RegistryPass.Built)] =
+    RegistryPass.records
+      .filterNot(r => audited.contains(r.name) || SparkEntry.sideEffecting(r.name))
+      .map(r => r.name -> r.outcome.fold(
+        e => fail(s"${r.name} failed to plan in the corpus sweep", e), identity))
 
   test("q01: filter pushed to parquet scan; unused columns pruned") {
     val p = plan("q01_agg_tpch_q1")
@@ -1089,9 +1087,6 @@ class PlanSpec extends EngineSuite {
     // Anything else must carry an explicit audit entry here, with the
     // cardinality argument — so the next single-task window can't land
     // unreviewed.
-    import org.apache.spark.sql.catalyst.plans.{logical => L}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
-
     val audited: Map[String, String] = Map(
       "q26_sort_nulls" -> ("the global row_number IS the feature under test " +
         "(NULLS LAST observability), input filter-bounded to o_orderkey <= 2000"),
@@ -1110,79 +1105,10 @@ class PlanSpec extends EngineSuite {
         "ordered by the computed fractional part so the collapse tracer can't " +
         "see the grouping"))
 
-    def groupingOutputIds(a: L.Aggregate): Set[ExprId] =
-      a.aggregateExpressions.collect {
-        case al: Alias if a.groupingExpressions.exists(_.semanticEquals(al.child)) =>
-          al.exprId
-        case ar: AttributeReference
-            if a.groupingExpressions.exists(_.semanticEquals(ar)) => ar.exprId
-      }.toSet
-
-    /** Is every order-key attr (traced through aliases) a grouping
-      * output of the first aggregate below the window? */
-    def collapsedOn(plan: L.LogicalPlan, ids: Set[ExprId]): Boolean = plan match {
-      case a: L.Aggregate => ids.subsetOf(groupingOutputIds(a))
-      case p: L.Project =>
-        val remapped = ids.flatMap { id =>
-          p.projectList.find(_.exprId == id) match {
-            case Some(al: Alias) => al.child.references.map(_.exprId).toSet
-            case Some(ar: AttributeReference) => Set(ar.exprId)
-            case _ => Set(id)
-          }
-        }
-        collapsedOn(p.child, remapped)
-      case f: L.Filter => collapsedOn(f.child, ids)
-      case s: L.Sort => collapsedOn(s.child, ids)
-      case w: L.Window =>
-        // stacked windows over the same collapsed relation: pass through
-        // UNLESS the order key IS a lower window's output (rank-indexed
-        // ordering — not a collapse)
-        val produced = w.windowExpressions.map(_.exprId).toSet
-        if (ids.exists(produced.contains)) false
-        else collapsedOn(w.child, ids)
-      case u: L.Union =>
-        // a union keeps the collapsed class iff every branch has it
-        // (ids remap positionally through the union's output)
-        val positions = ids.map(id => u.output.indexWhere(_.exprId == id))
-        if (positions.contains(-1)) false
-        else u.children.forall { c =>
-          c.maxRows.exists(_ <= 128) ||
-            collapsedOn(c, positions.map(i => c.output(i).exprId))
-        }
-      case j: L.Join =>
-        // a collapsed relation cross-joined with a provably tiny side
-        // (scalar totals, literal grids) keeps its cardinality class
-        def tiny(p: L.LogicalPlan): Boolean = p.maxRows.exists(_ <= 128)
-        val leftIds = j.left.outputSet.toSeq.map(_.exprId).toSet
-        val rightIds = j.right.outputSet.toSeq.map(_.exprId).toSet
-        val fromLeft = ids.subsetOf(leftIds)
-        val fromRight = ids.subsetOf(rightIds)
-        if (fromLeft && tiny(j.right)) collapsedOn(j.left, ids)
-        else if (fromRight && tiny(j.left)) collapsedOn(j.right, ids)
-        else false
-      case _ => false
+    val offenders = swept(audited).flatMap { case (name, b) =>
+      if (b.windowOffenders.isEmpty) None
+      else Some(name -> b.windowOffenders.mkString("; "))
     }
-
-    def admissible(w: L.Window): Boolean = {
-      val orderRefs = w.orderSpec.flatMap(_.child.references.toSeq)
-      if (orderRefs.exists(_.name == "__pid")) return true // (c) Prefix offsets
-      if (w.child.collectFirst {
-            case g: L.WindowGroupLimit => g
-            case l: L.GlobalLimit => l
-            case l: L.LocalLimit => l
-          }.isDefined) return true // (b) bounded input
-      if (orderRefs.isEmpty) // unordered total (SUM OVER ()): any collapse below
-        return w.child.collectFirst { case a: L.Aggregate => a }.isDefined
-      collapsedOn(w.child, orderRefs.map(_.exprId).toSet) // (a)
-    }
-
-    val offenders = sweep(audited.contains).flatMap { case (name, p) =>
-      val bad = p.collect {
-        case w: L.Window if w.partitionSpec.isEmpty && !admissible(w) => w
-      }
-      if (bad.isEmpty) None
-      else Some(name -> bad.map(_.orderSpec.mkString(",")).mkString("; "))
-    }.toList
     assert(offenders.isEmpty,
       "unaudited global-order windows:\n" +
         offenders.map { case (n, o) => s"  $n: $o" }.mkString("\n"))
@@ -1559,10 +1485,6 @@ class PlanSpec extends EngineSuite {
   // map Checkpoints records.
 
   test("corpus sweep: every forced broadcast is provably bounded or audited") {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
-    import org.apache.spark.sql.catalyst.expressions._
-
     // Forced broadcasts the prover cannot bound structurally, each with
     // its explicit cardinality argument. Keep this list SHORT — a new
     // entry means a new corpus-size-dependent broadcast went in on
@@ -1617,6 +1539,210 @@ class PlanSpec extends EngineSuite {
         "document lengths, not the corpus vocab (the pass-1/pass-3 prunes " +
         "are proven structurally; see the dedicated q337 pin)"))
 
+    val offenders = swept(audited).flatMap { case (name, b) =>
+      b.broadcastOffenders.map(name -> _)
+    }
+    assert(offenders.isEmpty,
+      "unaudited unbounded forced broadcasts:\n" +
+        offenders.map { case (n, o) => s"  $n: $o" }.mkString("\n"))
+  }
+
+  test("q337: every broadcast of the DF relation is a pruned side, never the full vocab") {
+    // The three Rocchio scoring passes each join document frequencies; a
+    // bare broadcast(dfr) would ship the whole corpus vocabulary
+    // (10⁷–10⁸ words at web scale) to every executor. Pin: every
+    // BROADCAST-hinted side that carries the df column is a PRUNED
+    // relation — a literal seed filter or a semi-join against the
+    // pass's live term set — not the bare staged vocab leaf.
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.expressions.{In, AttributeReference}
+    val plan = SparkEntry.queries("q337_rocchio_prf")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    // passes 1/2 execute eagerly behind `.staged` boundaries — collect
+    // hinted sides through the Checkpoints provenance map, like the sweep
+    val dfSides = PlanSpec.hintedSides(plan,
+      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
+      .filter(_.output.exists(_.name == "df"))
+    assert(dfSides.size == 3,
+      s"expected the 3 pruned df-broadcast sides (seed filter, pass-2 " +
+        s"semi-prune, pass-3 semi-prune), got ${dfSides.size}")
+    dfSides.foreach { side =>
+      val pruned = side.collectFirst {
+        case j: Join if j.joinType == LeftSemi => j
+        case f: Filter if f.condition.exists {
+          case In(_: AttributeReference, vs) => vs.nonEmpty
+          case _ => false
+        } => f
+      }.isDefined
+      assert(pruned,
+        "df broadcast side is the unpruned vocab relation:\n" +
+          side.treeString.take(1000))
+    }
+  }
+
+  test("predicate propagation: a join-key filter reaches BOTH scans") {
+    // PlannerTest.testPredicatePropagation — the reference infers
+    // l_orderkey < k onto the other side of the equi-join; Catalyst's
+    // InferFiltersFromConstraints must land it in both PushedFilters
+    QuerySpec.prepared(spark, sfDir)
+    val p = spark.sql(
+      """SELECT o_orderstatus, COUNT(*) AS n
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_orderkey < 100
+        |GROUP BY o_orderstatus""".stripMargin)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("LessThan(l_orderkey,100)"), p)
+    assert(p.contains("LessThan(o_orderkey,100)"),
+      s"join-key predicate not propagated to the orders scan:\n$p")
+  }
+
+  test("constant folding: arithmetic folds before pushdown") {
+    // PlannerTest.testConstantFolding — 10 + 20 must reach the scan as
+    // the literal 30, never as a residual arithmetic expression
+    QuerySpec.prepared(spark, sfDir)
+    val p = spark.sql(
+      "SELECT l_orderkey FROM lineitem WHERE l_quantity < 10 + 20")
+      .queryExecution.executedPlan.toString
+    assert(p.contains("LessThan(l_quantity,30"), p)
+    val folded = spark.sql("SELECT 2 + 3 * 4 AS c FROM region LIMIT 1")
+      .queryExecution.optimizedPlan.toString
+    assert(folded.contains("14") && !folded.contains("3 * 4"), folded)
+  }
+
+  test("q368/q369: partition-key scans answer from metadata, zero FileScan") {
+    // The reference's optimize_partition_key_scans golden family
+    // (PlannerTest.java:178): DISTINCT/MIN/MAX/NDV over partition
+    // columns must not scan data files. The opt-in rule swaps the
+    // relation for a LocalRelation of partition values — pin that the
+    // physical plan has no scan at all, that the rows match the real
+    // scan with the rule off, and that the builder's conf scoping does
+    // NOT leak into queries planned afterwards on the shared session.
+    import org.apache.spark.sql.functions.{col, countDistinct, min => fmin, max => fmax}
+    val key = graft.plans.PartitionKeyScans.EnabledKey
+    spark.conf.unset(key)
+    val results = Seq("q368_partition_key_distinct", "q369_partition_key_minmax")
+      .map { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val p = df.queryExecution.executedPlan.toString
+        assert(!p.contains("FileScan") && !p.contains("Scan parquet"),
+          s"$name still scans data files with the rule enabled:\n$p")
+        assert(p.contains("LocalTableScan"),
+          s"$name did not plan the partition-listing local relation:\n$p")
+        name -> df.collect().toSeq
+      }.toMap
+    // the builder restores the conf after pinning its own plan
+    assert(spark.conf.getOption(key).isEmpty,
+      "the partition-key builders leaked their opt-in conf into the session")
+    // control runs: same queries built directly over the fixture with
+    // the rule at its default (off) — these MUST scan, and must agree
+    val src = spark.read.parquet(
+      graft.operators.Layout.partitionedDocsDir(sfDir))
+    val controls = Map(
+      "q368_partition_key_distinct" ->
+        src.select(col("lang")).distinct().orderBy("lang"),
+      "q369_partition_key_minmax" ->
+        src.filter(col("lang") =!= "de")
+          .agg(fmin(col("lang")).as("min_lang"), fmax(col("lang")).as("max_lang"),
+            countDistinct(col("lang")).as("n_langs")))
+    controls.foreach { case (name, bare) =>
+      assert(bare.queryExecution.executedPlan.toString.contains("Scan parquet"),
+        s"$name control run should scan (rule off)")
+      assert(results(name) == bare.collect().toSeq,
+        s"$name metadata answer diverges from the scan")
+    }
+  }
+
+}
+
+/** The two corpus-sweep predicates, run by [[RegistryPass]] on the
+  * optimized plan of every non-DML registry query. Each returns one line
+  * per offender; the corpus-sweep tests above fail on any offender of a
+  * query they have not audited. */
+object PlanSpec {
+  import org.apache.spark.sql.catalyst.plans.{logical => L}
+  import org.apache.spark.sql.catalyst.plans.logical._
+  import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
+  import org.apache.spark.sql.catalyst.expressions._
+
+  private def groupingOutputIds(a: Aggregate): Set[ExprId] =
+    a.aggregateExpressions.collect {
+      case al: Alias if a.groupingExpressions.exists(_.semanticEquals(al.child)) =>
+        al.exprId
+      case ar: AttributeReference
+          if a.groupingExpressions.exists(_.semanticEquals(ar)) => ar.exprId
+    }.toSet
+
+  /** The order specs of the global-order windows that are neither
+    * collapsed, rank-limited nor Prefix-ranged (see the window sweep). */
+  def globalWindowOffenders(plan: LogicalPlan): Seq[String] = {
+    /** Is every order-key attr (traced through aliases) a grouping
+      * output of the first aggregate below the window? */
+    def collapsedOn(plan: L.LogicalPlan, ids: Set[ExprId]): Boolean = plan match {
+      case a: L.Aggregate => ids.subsetOf(groupingOutputIds(a))
+      case p: L.Project =>
+        val remapped = ids.flatMap { id =>
+          p.projectList.find(_.exprId == id) match {
+            case Some(al: Alias) => al.child.references.map(_.exprId).toSet
+            case Some(ar: AttributeReference) => Set(ar.exprId)
+            case _ => Set(id)
+          }
+        }
+        collapsedOn(p.child, remapped)
+      case f: L.Filter => collapsedOn(f.child, ids)
+      case s: L.Sort => collapsedOn(s.child, ids)
+      case w: L.Window =>
+        // stacked windows over the same collapsed relation: pass through
+        // UNLESS the order key IS a lower window's output (rank-indexed
+        // ordering — not a collapse)
+        val produced = w.windowExpressions.map(_.exprId).toSet
+        if (ids.exists(produced.contains)) false
+        else collapsedOn(w.child, ids)
+      case u: L.Union =>
+        // a union keeps the collapsed class iff every branch has it
+        // (ids remap positionally through the union's output)
+        val positions = ids.map(id => u.output.indexWhere(_.exprId == id))
+        if (positions.contains(-1)) false
+        else u.children.forall { c =>
+          c.maxRows.exists(_ <= 128) ||
+            collapsedOn(c, positions.map(i => c.output(i).exprId))
+        }
+      case j: L.Join =>
+        // a collapsed relation cross-joined with a provably tiny side
+        // (scalar totals, literal grids) keeps its cardinality class
+        def tiny(p: L.LogicalPlan): Boolean = p.maxRows.exists(_ <= 128)
+        val leftIds = j.left.outputSet.toSeq.map(_.exprId).toSet
+        val rightIds = j.right.outputSet.toSeq.map(_.exprId).toSet
+        val fromLeft = ids.subsetOf(leftIds)
+        val fromRight = ids.subsetOf(rightIds)
+        if (fromLeft && tiny(j.right)) collapsedOn(j.left, ids)
+        else if (fromRight && tiny(j.left)) collapsedOn(j.right, ids)
+        else false
+      case _ => false
+    }
+
+    def admissible(w: L.Window): Boolean = {
+      val orderRefs = w.orderSpec.flatMap(_.child.references.toSeq)
+      if (orderRefs.exists(_.name == "__pid")) return true // (c) Prefix offsets
+      if (w.child.collectFirst {
+            case g: L.WindowGroupLimit => g
+            case l: L.GlobalLimit => l
+            case l: L.LocalLimit => l
+          }.isDefined) return true // (b) bounded input
+      if (orderRefs.isEmpty) // unordered total (SUM OVER ()): any collapse below
+        return w.child.collectFirst { case a: L.Aggregate => a }.isDefined
+      collapsedOn(w.child, orderRefs.map(_.exprId).toSet) // (a)
+    }
+
+    plan.collect {
+      case w: L.Window if w.partitionSpec.isEmpty && !admissible(w) =>
+        w.orderSpec.mkString(",")
+    }
+  }
+
+  /** The first three plan lines of every forced broadcast side the
+    * prover cannot bound (see the broadcast sweep). */
+  def broadcastOffenders(plan: LogicalPlan): Seq[String] = {
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -1631,14 +1757,6 @@ class PlanSpec extends EngineSuite {
       case n: Number => n.longValue <= 1024L
       case _ => false
     }
-
-    def groupingOutputIds(a: Aggregate): Set[ExprId] =
-      a.aggregateExpressions.collect {
-        case al: Alias if a.groupingExpressions.exists(_.semanticEquals(al.child)) =>
-          al.exprId
-        case ar: AttributeReference
-            if a.groupingExpressions.exists(_.semanticEquals(ar)) => ar.exprId
-      }.toSet
 
     /** Are the attrs in `ids` (traced through Project aliases and staged
       * checkpoint boundaries) grouping outputs of the first Aggregate
@@ -1861,157 +1979,28 @@ class PlanSpec extends EngineSuite {
       }
     }
 
-    /** All BROADCAST-hinted join sides, recursing into staged subtrees. */
-    def hintedSides(plan: LogicalPlan,
-        visited: java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
-        : Seq[LogicalPlan] = {
-      if (visited.containsKey(plan)) Nil
-      else {
-        visited.put(plan, java.lang.Boolean.TRUE)
-        val here = plan.collect { case j: Join =>
-          (if (j.hint.leftHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.left)
-           else Nil) ++
-            (if (j.hint.rightHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.right)
-             else Nil)
-        }.flatten
-        val nested = plan.collect { case l: LeafNode => l }
-          .flatMap(l => graft.llmops.Checkpoints.provenanceOf(l).toSeq)
-          .flatMap(p => hintedSides(p, visited))
-        here ++ nested
-      }
-    }
-
-    val offenders = sweep(audited.contains).flatMap { case (name, p) =>
-      val visited =
-        new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]
-      hintedSides(p, visited).filterNot(bounded)
-        .map(s => name -> s.treeString.linesIterator.take(3).mkString(" | "))
-    }.toList
-    assert(offenders.isEmpty,
-      "unaudited unbounded forced broadcasts:\n" +
-        offenders.map { case (n, o) => s"  $n: $o" }.mkString("\n"))
+    hintedSides(plan, new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
+      .filterNot(bounded)
+      .map(_.treeString.linesIterator.take(3).mkString(" | "))
   }
 
-  test("q337: every broadcast of the DF relation is a pruned side, never the full vocab") {
-    // The three Rocchio scoring passes each join document frequencies; a
-    // bare broadcast(dfr) would ship the whole corpus vocabulary
-    // (10⁷–10⁸ words at web scale) to every executor. Pin: every
-    // BROADCAST-hinted side that carries the df column is a PRUNED
-    // relation — a literal seed filter or a semi-join against the
-    // pass's live term set — not the bare staged vocab leaf.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.expressions.{In, AttributeReference}
-    val plan = SparkEntry.queries("q337_rocchio_prf")(spark, sfDir)
-      .queryExecution.optimizedPlan
-    // passes 1/2 execute eagerly behind `.staged` boundaries — collect
-    // hinted sides through the Checkpoints provenance map, like the sweep
-    def sides(p: LogicalPlan,
-        visited: java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
-        : Seq[LogicalPlan] =
-      if (visited.containsKey(p)) Nil
-      else {
-        visited.put(p, java.lang.Boolean.TRUE)
-        val here = p.collect { case j: Join =>
-          (if (j.hint.leftHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.left)
-           else Nil) ++
-            (if (j.hint.rightHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.right)
-             else Nil)
-        }.flatten
-        here ++ p.collect { case l: LeafNode => l }
-          .flatMap(l => graft.llmops.Checkpoints.provenanceOf(l).toSeq)
-          .flatMap(pp => sides(pp, visited))
-      }
-    val dfSides = sides(plan,
-      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
-      .filter(_.output.exists(_.name == "df"))
-    assert(dfSides.size == 3,
-      s"expected the 3 pruned df-broadcast sides (seed filter, pass-2 " +
-        s"semi-prune, pass-3 semi-prune), got ${dfSides.size}")
-    dfSides.foreach { side =>
-      val pruned = side.collectFirst {
-        case j: Join if j.joinType == LeftSemi => j
-        case f: Filter if f.condition.exists {
-          case In(_: AttributeReference, vs) => vs.nonEmpty
-          case _ => false
-        } => f
-      }.isDefined
-      assert(pruned,
-        "df broadcast side is the unpruned vocab relation:\n" +
-          side.treeString.take(1000))
+  /** All BROADCAST-hinted join sides, recursing into staged subtrees. */
+  def hintedSides(plan: LogicalPlan,
+      visited: java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean])
+      : Seq[LogicalPlan] = {
+    if (visited.containsKey(plan)) Nil
+    else {
+      visited.put(plan, java.lang.Boolean.TRUE)
+      val here = plan.collect { case j: Join =>
+        (if (j.hint.leftHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.left)
+         else Nil) ++
+          (if (j.hint.rightHint.flatMap(_.strategy).contains(BROADCAST)) Seq(j.right)
+           else Nil)
+      }.flatten
+      val nested = plan.collect { case l: LeafNode => l }
+        .flatMap(l => graft.llmops.Checkpoints.provenanceOf(l).toSeq)
+        .flatMap(p => hintedSides(p, visited))
+      here ++ nested
     }
   }
-
-  test("predicate propagation: a join-key filter reaches BOTH scans") {
-    // PlannerTest.testPredicatePropagation — the reference infers
-    // l_orderkey < k onto the other side of the equi-join; Catalyst's
-    // InferFiltersFromConstraints must land it in both PushedFilters
-    QuerySpec.prepared(spark, sfDir)
-    val p = spark.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_orderkey < 100
-        |GROUP BY o_orderstatus""".stripMargin)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("LessThan(l_orderkey,100)"), p)
-    assert(p.contains("LessThan(o_orderkey,100)"),
-      s"join-key predicate not propagated to the orders scan:\n$p")
-  }
-
-  test("constant folding: arithmetic folds before pushdown") {
-    // PlannerTest.testConstantFolding — 10 + 20 must reach the scan as
-    // the literal 30, never as a residual arithmetic expression
-    QuerySpec.prepared(spark, sfDir)
-    val p = spark.sql(
-      "SELECT l_orderkey FROM lineitem WHERE l_quantity < 10 + 20")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("LessThan(l_quantity,30"), p)
-    val folded = spark.sql("SELECT 2 + 3 * 4 AS c FROM region LIMIT 1")
-      .queryExecution.optimizedPlan.toString
-    assert(folded.contains("14") && !folded.contains("3 * 4"), folded)
-  }
-
-  test("q368/q369: partition-key scans answer from metadata, zero FileScan") {
-    // The reference's optimize_partition_key_scans golden family
-    // (PlannerTest.java:178): DISTINCT/MIN/MAX/NDV over partition
-    // columns must not scan data files. The opt-in rule swaps the
-    // relation for a LocalRelation of partition values — pin that the
-    // physical plan has no scan at all, that the rows match the real
-    // scan with the rule off, and that the builder's conf scoping does
-    // NOT leak into queries planned afterwards on the shared session.
-    import org.apache.spark.sql.functions.{col, countDistinct, min => fmin, max => fmax}
-    val key = graft.plans.PartitionKeyScans.EnabledKey
-    spark.conf.unset(key)
-    val results = Seq("q368_partition_key_distinct", "q369_partition_key_minmax")
-      .map { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val p = df.queryExecution.executedPlan.toString
-        assert(!p.contains("FileScan") && !p.contains("Scan parquet"),
-          s"$name still scans data files with the rule enabled:\n$p")
-        assert(p.contains("LocalTableScan"),
-          s"$name did not plan the partition-listing local relation:\n$p")
-        name -> df.collect().toSeq
-      }.toMap
-    // the builder restores the conf after pinning its own plan
-    assert(spark.conf.getOption(key).isEmpty,
-      "the partition-key builders leaked their opt-in conf into the session")
-    // control runs: same queries built directly over the fixture with
-    // the rule at its default (off) — these MUST scan, and must agree
-    val src = spark.read.parquet(
-      graft.operators.Layout.partitionedDocsDir(sfDir))
-    val controls = Map(
-      "q368_partition_key_distinct" ->
-        src.select(col("lang")).distinct().orderBy("lang"),
-      "q369_partition_key_minmax" ->
-        src.filter(col("lang") =!= "de")
-          .agg(fmin(col("lang")).as("min_lang"), fmax(col("lang")).as("max_lang"),
-            countDistinct(col("lang")).as("n_langs")))
-    controls.foreach { case (name, bare) =>
-      assert(bare.queryExecution.executedPlan.toString.contains("Scan parquet"),
-        s"$name control run should scan (rule off)")
-      assert(results(name) == bare.collect().toSeq,
-        s"$name metadata answer diverges from the scan")
-    }
-  }
-
 }

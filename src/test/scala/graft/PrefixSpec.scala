@@ -32,20 +32,10 @@ class PrefixSpec extends EngineSuite {
       .toSeq == Seq(1L, n, n))
   }
 
-  test("globalRankTies equals the single-window RANK, ties included") {
-    val df = fixture
-    val got = Prefix.globalRankTies(df, Seq(col("k")), "rk")
-      .select("k", "id", "rk")
-    val want = df.withColumn("rk",
-      rank().over(Window.orderBy(col("k"))).cast("long"))
-    assert(got.except(want).isEmpty && want.except(got).isEmpty,
-      "distributed competition ranks diverge from the reference window")
-  }
-
   test("globalRankTiesWithCounts equals the single-window RANK plus the " +
     "tie-block size, ties included") {
     val df = fixture
-    val got = Prefix.globalRankTiesWithCounts(df, Seq(col("k")), "rk", "gs")
+    val got = Prefix.globalRankTiesWithCountsStaged(df, Seq(col("k")), "rk", "gs")._1
       .select("k", "id", "rk", "gs")
     val want = df
       .withColumn("rk", rank().over(Window.orderBy(col("k"))).cast("long"))
@@ -73,19 +63,6 @@ class PrefixSpec extends EngineSuite {
     assert(got.count() == n - 1, "exactly n-1 consecutive pairs")
     assert(got.except(want).isEmpty && want.except(got).isEmpty,
       "distributed adjacency diverges from the reference LEAD pairing")
-  }
-
-  test("globalDenseRank equals the single-window DENSE_RANK, ties included") {
-    val df = fixture // key 7 carries 250 tied rows — the dense-rank case
-    val got = Prefix.globalDenseRank(df, Seq(col("k")), "dr")
-      .select("k", "id", "dr")
-    val want = df.withColumn("dr",
-      dense_rank().over(Window.orderBy(col("k"))).cast("long"))
-    assert(got.except(want).isEmpty && want.except(got).isEmpty,
-      "distributed dense ranks diverge from the reference window")
-    // dense: max rank == distinct key count
-    assert(got.agg(max("dr")).collect()(0).getLong(0) ==
-      df.select("k").distinct().count())
   }
 
   test("prefixSums equals the single-window running sums, exactly") {

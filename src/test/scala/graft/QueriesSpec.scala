@@ -1,8 +1,9 @@
 package graft
 
-/** Smoke-executes every registered query at sf0.001: schema resolves,
-  * plan runs, and (for all but the listed small-result queries) rows come
-  * back. Value-level correctness is the driver's DuckDB differential gate
+/** Smoke-executes every registered query at sf0.001 (through the one
+  * [[RegistryPass]] build): schema resolves, plan runs, and (for all but
+  * the listed small-result queries) rows come back. Value-level
+  * correctness is the driver's DuckDB differential gate
   * (scripts/oracle_check.py) — this spec catches broken plans early. */
 class QueriesSpec extends EngineSuite {
 
@@ -45,15 +46,13 @@ class QueriesSpec extends EngineSuite {
     * slip one in unpinned). */
   private val mayCartesian = Set("q17_join_cross")
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name executes at sf0.001") {
-      val df = fn(spark, sfDir)
-      assert(df.schema.nonEmpty)
+      val b = RegistryPass(name).built
+      assert(b.width > 0)
       if (!mayCartesian(name))
-        assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"),
-          s"$name plans a cartesian product")
-      val n = df.count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+        assert(!b.cartesian, s"$name plans a cartesian product")
+      if (!mayBeEmpty(name)) assert(b.rows > 0, s"$name returned 0 rows")
     }
   }
 }
