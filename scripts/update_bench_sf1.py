@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""UPDATE BENCH_SF1.json in place from drill runs, preserving the
-notes / outlier_diagnosis keys that merge_bench_sf1.py drops.
+"""UPDATE BENCH_SF1.json in place from drill runs, preserving its
+notes / outlier_diagnosis keys.
 
 Usage: python3 scripts/update_bench_sf1.py --sf01 a.json [b.json ...]
          --sf1 x.json [y.json ...] [--out BENCH_SF1.json]

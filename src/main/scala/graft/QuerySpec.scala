@@ -42,6 +42,17 @@ object QuerySpec {
     QuerySpec(name, Some(oracleText), (s, dir) => prepared(s, dir).sql(sparkText),
       sparkSql = Some(sparkText))
 
+  /** `sp.sql(text)` over `views`, each registered as a session temp view
+    * for the parse and analysis only: the views are dropped before this
+    * returns, because the returned DataFrame already holds its analyzed
+    * plan. A view left behind would keep the relation it names (often a
+    * staged checkpoint) reachable after the query is gone. */
+  def sqlOver(sp: SparkSession, views: (String, DataFrame)*)(text: String): DataFrame = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try sp.sql(text)
+    finally views.foreach { case (name, _) => discard(sp.catalog.dropTempView(name)) }
+  }
+
   /** Prepare a session for a query run: ensure the engine's function
     * surface is registered and the sf-dir tables are visible as views. */
   def prepared(spark: SparkSession, dir: String): SparkSession = {

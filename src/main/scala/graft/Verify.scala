@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,14 +11,10 @@ object Verify {
     // A prefix that matches no query fails here, before any work.
     val only = if (args.length > 2) SparkEntry.selected(args(2)).map(_.toSet) else None
     val filter: String => Boolean = n => only.forall(_(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.engine.GraftSession.attach(
-      graft.engine.GraftSession.configure(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-      ).getOrCreate())
+    // the one engine session factory, as Bench uses: its warehouse dir
+    // keeps the registry's managed DML tables out of the working tree
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.engine.GraftSession.local(cores = cpus, shufflePartitions = cpus)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.toSeq.filter(kv => filter(kv._1))
     val failed = selected.flatMap { case (name, fn) =>

@@ -405,36 +405,20 @@ object BpeTokenizer {
        |mt AS (SELECT l || ' ' || r AS pair, rank FROM (${(0 until Merges)
         .map(k => s"SELECT l, r, ${k + 1} AS rank FROM win$k")
         .mkString(" UNION ALL ")}) u),
-       |ws AS (SELECT word, source, CAST(COUNT(*) AS BIGINT) AS n
-       |       FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-       |             FROM documents) x
-       |       WHERE word != '' GROUP BY word, source),
+       |${TextAnalysis.wordCountsBySql("ws", "source")},
        |ev AS (SELECT word, CAST(SUM(n) AS BIGINT) AS n FROM ws GROUP BY word),
-       |${TextAnalysis.bpeEncodeUnrollCtes("mt", "ev", Merges)},
-       |tk AS (SELECT word,
-       |         CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS n_tokens,
-       |         CAST(len(word) AS BIGINT) AS n_chars
-       |       FROM s$Merges)
-       |SELECT ws.source,
-       |  CAST(SUM(ws.n) AS BIGINT) AS n_words,
-       |  CAST(SUM(ws.n * tk.n_chars) AS BIGINT) AS tokens_before,
-       |  CAST(SUM(ws.n * tk.n_tokens) AS BIGINT) AS tokens_after,
-       |  CAST(ROUND(SUM(ws.n * tk.n_tokens) * 1e6 / SUM(ws.n * tk.n_chars))
-       |    AS BIGINT) AS compression_e6
-       |FROM ws JOIN tk USING (word)
-       |GROUP BY ws.source ORDER BY ws.source""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val (mergeTable, finalSyms) = trainMerges(sp)
-    Checkpoints.unpersist(finalSyms)
-    val learned = mergeRules(mergeTable, col("round"))
-    val ws = TextAnalysis.perSourceWordCounts(sp)
-      .staged // the encode vocab AND the per-source report both read it
-    val tk = ws.select(col("word")).distinct()
-      .select(col("word"),
-        size(split(trim(TextAnalysis.bpeEncodeRules(col("word"), learned)
-          .getField("seq")), "  ")).cast("long").as("n_tokens"),
-        length(col("word")).cast("long").as("n_chars"))
-    TextAnalysis.perSourceCompression(ws, tk)
+       |${TextAnalysis.bpeEncodeUnrollCtes("mt", "ev", Merges)}
+       |${TextAnalysis.perSourceCompressionSql(s"s$Merges", TextAnalysis.SeqTokensSql)}""".stripMargin) {
+    (s, dir) =>
+      val sp = QuerySpec.prepared(s, dir)
+      val (mergeTable, finalSyms) = trainMerges(sp)
+      Checkpoints.unpersist(finalSyms)
+      val learned = mergeRules(mergeTable, col("round"))
+      val ws = TextAnalysis.wordCountsBy(sp, "source")
+        .staged // the encode vocab AND the per-source report both read it
+      TextAnalysis.perSourceCompression(ws, TextAnalysis.tokenCounts(
+        ws.select(col("word")).distinct(),
+        TextAnalysis.bpeTokenCount(col("word"), learned)))
   }
 
   /** One batched round, unrolled for DuckDB — the same candidate pool,

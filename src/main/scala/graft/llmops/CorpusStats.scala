@@ -372,11 +372,9 @@ object CorpusStats {
       val counts = sp.table("documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("c"))
-      graft.operators.Prefix
+      QuerySpec.sqlOver(sp, "q235_ranked" -> graft.operators.Prefix
         .globalRank(counts, Seq(col("c").desc, col("word")), "rk")
-        .select("rk", "c")
-        .createOrReplaceTempView("q235_ranked")
-      sp.sql(moments)
+        .select("rk", "c"))(moments)
     }
   }
 
@@ -439,11 +437,10 @@ object CorpusStats {
       val base = tok.join(nw, Seq("doc_id"), "left")
         .select(col("doc_id"), col("toks"),
           coalesce(col("new_words"), lit(0L)).as("new_words"))
-      graft.operators.Prefix.prefixSums(base, Seq(col("doc_id")),
+      QuerySpec.sqlOver(sp, "q243_growth" -> graft.operators.Prefix
+        .prefixSums(base, Seq(col("doc_id")),
           Seq(col("toks") -> "cum_toks", col("new_words") -> "cum_vocab"))
-        .select("cum_toks", "cum_vocab")
-        .createOrReplaceTempView("q243_growth")
-      sp.sql(moments)
+        .select("cum_toks", "cum_vocab"))(moments)
     }
   }
 
@@ -772,8 +769,7 @@ object CorpusStats {
         tail.stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(dSql).staged.createOrReplaceTempView("q339_d")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp, "q339_d" -> sp.sql(dSql).staged)(tail)
     }
   }
 

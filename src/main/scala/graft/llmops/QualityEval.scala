@@ -246,15 +246,13 @@ object QualityEval {
       // the vocab rollup feeds the totals, the z relation, AND two ranked
       // picks — stage it once so Spark's CTE inlining can't re-explode
       // the corpus per consumer
-      sp.table("documents")
+      QuerySpec.sqlOver(sp, "q287_c" -> sp.table("documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"), explode(split(col("text"), " ")).as("word"))
         .groupBy("word")
         .agg(sum(when(col("source") === "src0", 1L).otherwise(0L)).cast("long").as("y1"),
           sum(when(col("source") === "src1", 1L).otherwise(0L)).cast("long").as("y2"))
-        .staged
-        .createOrReplaceTempView("q287_c")
-      sp.sql(tail)
+        .staged)(tail)
     }
   }
 
@@ -383,12 +381,10 @@ object QualityEval {
       val sp = QuerySpec.prepared(s, dir)
       import graft.llmops.Checkpoints.Stageable
       // both rankings consume the doc relation: stage it once
-      sp.table("documents")
+      QuerySpec.sqlOver(sp, "q290_d" -> sp.table("documents")
         .select(col("doc_id"), col("n_chars").as("xa"),
           size(array_distinct(split(col("text"), " "))).as("xb"))
-        .staged
-        .createOrReplaceTempView("q290_d")
-      sp.sql(tail(spark = true))
+        .staged)(tail(spark = true))
     }
   }
 
@@ -513,8 +509,8 @@ object QualityEval {
         text(spark = false).stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(vSql(spark = true)).staged.createOrReplaceTempView("q344_v")
-      sp.sql(text(spark = true))
+      QuerySpec.sqlOver(sp, "q344_v" -> sp.sql(vSql(spark = true)).staged)(
+        text(spark = true))
     }
   }
 
@@ -630,8 +626,8 @@ object QualityEval {
         text(spark = false).stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(dSql(spark = true)).staged.createOrReplaceTempView("q346_d")
-      sp.sql(text(spark = true))
+      QuerySpec.sqlOver(sp, "q346_d" -> sp.sql(dSql(spark = true)).staged)(
+        text(spark = true))
     }
   }
 

@@ -3,7 +3,8 @@ package graft.llmops
 import graft.Dialect
 import graft.llmops.Checkpoints.Stageable
 import graft.QuerySpec
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data curation — language ID,
@@ -714,14 +715,12 @@ object TextAnalysis {
       // corpus-sized word explode per round (the q116 double-scan trap —
       // see the verify notes); the checkpointed vocab is vocabulary-sized
       // and every round reads it, never documents
-      sp.sql(
+      QuerySpec.sqlOver(sp, "g_bpe_vocab" -> sp.sql(
         """SELECT word, COUNT(*) AS n
           |FROM (SELECT explode(split(text, ' ')) AS word FROM documents) x
           |WHERE word != ''
           |GROUP BY word""".stripMargin)
-        .staged
-        .createOrReplaceTempView("g_bpe_vocab")
-      sp.sql(text(spark = true))
+        .staged)(text(spark = true))
     }
   }
 
@@ -763,24 +762,124 @@ object TextAnalysis {
   // merge-table-sized, never corpus-sized).
   private[graft] val BpeRounds = BpeMerges.size
 
-  /** The corpus (word, source) rollup feeding a train → encode
-    * composition's per-source report — ONE definition for both
-    * tokenizer families (q406 BPE, q412 unigram) so their reports stay
-    * guaranteed-comparable, not convention-comparable. */
-  private[graft] def perSourceWordCounts(sp: org.apache.spark.sql.SparkSession):
-      org.apache.spark.sql.DataFrame =
-    sp.table("documents")
-      .select(col("source"), explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word"), col("source")).agg(count(lit(1)).as("n"))
+  // ---------------------------------------------------------------------
+  // The tokenizer report layer: one Spark and one DuckDB spelling of each
+  // report the BPE and unigram queries emit (the top-30 token table, the
+  // per-language fertility table, the per-source compression table) and
+  // of the rollups they read, so two queries that report the same grain
+  // are comparable by construction, not by convention.
+  // ---------------------------------------------------------------------
 
-  /** Per-source compression report over a `(word, n_tokens, n_chars)`
-    * relation joined to [[perSourceWordCounts]]'s rollup: word count,
-    * exact char/token totals, e6 compression ratio — the shared output
-    * grain of the q406/q412 train → encode compositions. */
-  private[graft] def perSourceCompression(
-      ws: org.apache.spark.sql.DataFrame,
-      tk: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  /** The corpus `(word, key, n)` rollup: occurrences of each word per
+    * `key` value, empty tokens dropped. It feeds the per-source
+    * compression report (`key` = source) and the per-language fertility
+    * report (`key` = lang) of both tokenizer families. */
+  private[graft] def wordCountsBy(sp: SparkSession, key: String): DataFrame =
+    sp.table("documents")
+      .select(col(key), explode(split(col("text"), " ")).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word"), col(key)).agg(count(lit(1)).as("n"))
+
+  /** The DuckDB CTE `name AS MATERIALIZED (…)` of [[wordCountsBy]]. */
+  private[graft] def wordCountsBySql(name: String, key: String): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT word, $key, CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM (SELECT $key, unnest(string_split(text, ' ')) AS word FROM documents) x
+       |  WHERE word != '' GROUP BY word, $key)""".stripMargin
+
+  /** Per-word token counts `(word, n_tokens, n_chars)` of a word
+    * relation; `nTokens` is the word's token count under the encoder. */
+  private[graft] def tokenCounts(words: DataFrame, nTokens: Column): DataFrame =
+    words.select(col("word"), nTokens.cast("long").as("n_tokens"),
+      length(col("word")).cast("long").as("n_chars"))
+
+  /** The DuckDB text of [[tokenCounts]] over a segmentation relation
+    * `seg` whose token array is `tokens` ([[SeqTokensSql]] for a BPE
+    * state, `UnigramTokenizer.PathTokensSql` for a Viterbi path). */
+  private[graft] def tokenCountsSql(seg: String, tokens: String): String =
+    s"SELECT word, CAST(len($tokens) AS BIGINT) AS n_tokens, " +
+      s"CAST(len(word) AS BIGINT) AS n_chars FROM $seg"
+
+  /** The token array of a BPE state's `seq` (symbols joined by double
+    * spaces, one space at each end), in DuckDB text. */
+  private[graft] val SeqTokensSql = "string_split(trim(seq), '  ')"
+
+  /** The token count of one word under the greedy [[bpeEncodeRules]]. */
+  private[graft] def bpeTokenCount(word: Column, rules: Seq[(String, Int)]): Column =
+    size(split(trim(bpeEncodeRules(word, rules).getField("seq")), "  "))
+
+  /** The top-30 token table `(rnk, token, cnt, extra…)` of a `(token,
+    * cnt, …)` rollup, ranked by (cnt DESC, token): a rank-limited
+    * global window over a vocabulary-sized relation. Fewer than 30
+    * tokens give fewer rows, and a count tie across rank 30 goes to the
+    * lexicographically smaller token. */
+  private[graft] def topTokenTable(counts: DataFrame, extra: Column*): DataFrame =
+    counts
+      .withColumn("rnk", row_number()
+        .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
+      .filter(col("rnk") <= 30)
+      .select(Seq(col("rnk"), col("token"), col("cnt")) ++ extra: _*)
+      .orderBy(col("rnk"))
+
+  /** The top-30 token table of a segmentation relation: each row's
+    * `tokens` array exploded, weighted by its `weight` column (word
+    * frequency, or occurrences at the (doc, word) grain) and summed. */
+  private[graft] def topTokens(seg: DataFrame, tokens: Column, weight: String): DataFrame =
+    topTokenTable(seg.select(explode(tokens).as("token"), col(weight))
+      .groupBy(col("token")).agg(sum(col(weight)).as("cnt")))
+
+  /** The DuckDB text of [[topTokenTable]] over a `(token, cnt, …)`
+    * relation (a name, or an aliased subquery); `extra` holds the
+    * trailing output columns, each with a leading comma. */
+  private[graft] def topTokenTableSql(counts: String, extra: String = ""): String =
+    s"""SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt$extra FROM (
+       |  SELECT *, ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS rnk
+       |  FROM $counts) z
+       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin
+
+  /** The DuckDB text of [[topTokens]] over a segmentation relation. */
+  private[graft] def topTokensSql(seg: String, tokens: String, weight: String): String =
+    topTokenTableSql(
+      s"""(SELECT token, SUM($weight) AS cnt
+         |   FROM (SELECT unnest($tokens) AS token, $weight FROM $seg) t
+         |   GROUP BY token) c""".stripMargin)
+
+  /** Per-language fertility report `(lang, n_words, n_tokens,
+    * fertility, chars_per_token)` over a `(word, lang, n)` rollup
+    * ([[wordCountsBy]]) joined to [[tokenCounts]]: word and token totals
+    * weighted by word frequency, tokens per word and chars per token
+    * rounded to 6 places. Unordered; the caller keys and orders it. */
+  private[graft] def fertilityByLang(wl: DataFrame, tk: DataFrame): DataFrame =
+    wl.join(tk, "word")
+      .groupBy(col("lang"))
+      .agg(sum(col("n")).as("n_words"),
+        sum(col("n") * col("n_tokens")).as("n_tokens"),
+        round(sum(col("n") * col("n_tokens")).cast("double") /
+          sum(col("n")).cast("double"), 6).as("fertility"),
+        round(sum(col("n") * col("n_chars")).cast("double") /
+          sum(col("n") * col("n_tokens")).cast("double"), 6)
+          .as("chars_per_token"))
+
+  /** The DuckDB text of [[fertilityByLang]] over the `wl` CTE
+    * (`wordCountsBySql("wl", "lang")`) and the token counts of `seg`;
+    * `keys` (e.g. `'bpe' AS family, `) leads the output columns. */
+  private[graft] def fertilityByLangSql(seg: String, tokens: String,
+                                        keys: String = ""): String =
+    s"""SELECT ${keys}wl.lang,
+       |  CAST(SUM(wl.n) AS BIGINT) AS n_words,
+       |  CAST(SUM(wl.n * tk.n_tokens) AS BIGINT) AS n_tokens,
+       |  ROUND(CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE)
+       |        / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
+       |  ROUND(CAST(SUM(wl.n * tk.n_chars) AS DOUBLE)
+       |        / CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE), 6) AS chars_per_token
+       |FROM wl JOIN (${tokenCountsSql(seg, tokens)}) tk USING (word)
+       |GROUP BY wl.lang""".stripMargin
+
+  /** Per-source compression report over a `(word, source, n)` rollup
+    * ([[wordCountsBy]]) joined to [[tokenCounts]]: word count, exact
+    * char/token totals, e6 compression ratio — the shared output grain
+    * of the q406/q412/q417 train → encode compositions. */
+  private[graft] def perSourceCompression(ws: DataFrame, tk: DataFrame): DataFrame =
     ws.join(tk, "word")
       .groupBy(col("source"))
       .agg(sum(col("n")).as("n_words"),
@@ -791,26 +890,18 @@ object TextAnalysis {
           .cast("long").as("compression_e6"))
       .orderBy(col("source"))
 
-  /** The DuckDB tail of the per-source compression report — the `ws`
-    * rollup plus the final SELECT, parameterized over the caller's
-    * `tk(word, n_tokens, n_chars)` CTE text. Consumed by q412; q406's
-    * replay inlines its own byte-identical copy because its `ws` CTE
-    * ALSO feeds the encode vocabulary (`ev`) and so must precede the
-    * encode unroll — keep the two texts in sync (the SPARK side of
-    * both families does share [[perSourceCompression]]). */
-  private[graft] def perSourceCompressionSqlTail(tkCte: String): String =
-    s"""ws AS (SELECT word, source, CAST(COUNT(*) AS BIGINT) AS n
-       |       FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-       |             FROM documents) x
-       |       WHERE word != '' GROUP BY word, source),
-       |$tkCte
-       |SELECT ws.source,
+  /** The DuckDB text of [[perSourceCompression]]: the final SELECT over
+    * the `ws` CTE (`wordCountsBySql("ws", "source")`, a separate piece
+    * because q406's encode vocabulary reads it too) and the token
+    * counts of `seg`. */
+  private[graft] def perSourceCompressionSql(seg: String, tokens: String): String =
+    s"""SELECT ws.source,
        |  CAST(SUM(ws.n) AS BIGINT) AS n_words,
        |  CAST(SUM(ws.n * tk.n_chars) AS BIGINT) AS tokens_before,
        |  CAST(SUM(ws.n * tk.n_tokens) AS BIGINT) AS tokens_after,
        |  CAST(ROUND(SUM(ws.n * tk.n_tokens) * 1e6 / SUM(ws.n * tk.n_chars))
        |    AS BIGINT) AS compression_e6
-       |FROM ws JOIN tk USING (word)
+       |FROM ws JOIN (${tokenCountsSql(seg, tokens)}) tk USING (word)
        |GROUP BY ws.source ORDER BY ws.source""".stripMargin
 
   /** DuckDB CTE text (no leading WITH) for a `rounds`-unrolled greedy
@@ -1034,15 +1125,8 @@ object TextAnalysis {
          |          (${graft.llmops.UnigramTokenizer.WordPolySqlDuck}) AS wp
          |        FROM dw),
          |${bpeDropoutUnrollCtes(BpeRounds, BpeDropPE6)}
-         |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-         |  SELECT token, SUM(nocc) AS cnt,
-         |         ROW_NUMBER() OVER (ORDER BY SUM(nocc) DESC, token) AS rnk
-         |  FROM (SELECT unnest(string_split(trim(seq), '  ')) AS token, nocc
-         |        FROM s$BpeRounds) t
-         |  GROUP BY token) z
-         |WHERE rnk <= 30 ORDER BY rnk""".stripMargin
+         |${topTokensSql(s"s$BpeRounds", SeqTokensSql, "nocc")}""".stripMargin
     QuerySpec("q433_bpe_dropout_encode", oracleText) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val sp = QuerySpec.prepared(s, dir)
       val dw = sp.table("documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
@@ -1072,22 +1156,15 @@ object TextAnalysis {
         .withColumn("g", bpeEncodeRules(col("word"), BpeMerges))
         .select(col("word"), col("g.seq").as("gseq"),
           col("g.applied").as("gapplied"))
-      dw.join(wg, Seq("word"))
+      topTokens(dw.join(wg, Seq("word"))
         .withColumn("seq",
           when(exists(col("gapplied"), rk =>
             dropCoordinate(col("doc_id"), col("wp"), rk) < lit(BpeDropPE6)),
             bpeEncodeRules(col("word"), BpeMerges, rk =>
               dropCoordinate(col("doc_id"), col("wp"), rk) >= lit(BpeDropPE6))
               .getField("seq"))
-            .otherwise(col("gseq")))
-        .select(explode(split(trim(col("seq")), "  ")).as("token"),
-          col("nocc"))
-        .groupBy(col("token")).agg(sum(col("nocc")).as("cnt"))
-        .withColumn("rnk", row_number()
-          .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-        .filter(col("rnk") <= 30)
-        .select(col("rnk"), col("token"), col("cnt"))
-        .orderBy(col("rnk"))
+            .otherwise(col("gseq"))),
+        split(trim(col("seq")), "  "), "nocc")
     }
   }
 
@@ -1104,36 +1181,24 @@ object TextAnalysis {
     * token counts) — shared by the vocab-grain encode (q167) and the
     * document-level token-array path (q405): both must reproduce it
     * exactly. */
-  private def bpeEncodeOracleText: String = bpeOracleUnroll +
-    s"""
-       |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-       |  SELECT token, SUM(n) AS cnt,
-       |         ROW_NUMBER() OVER (ORDER BY SUM(n) DESC, token) AS rnk
-       |  FROM (SELECT unnest(string_split(trim(seq), '  ')) AS token, n FROM s$BpeRounds) t
-       |  GROUP BY token) z
-       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin
+  private def bpeEncodeOracleText: String = bpeOracleUnroll + "\n" +
+    topTokensSql(s"s$BpeRounds", SeqTokensSql, "n")
 
-  val q167BpeEncode: QuerySpec = {
-    val oracleText: String = bpeEncodeOracleText
-    QuerySpec("q167_text_bpe_encode", oracleText) { (s, dir) =>
-      val sp = QuerySpec.prepared(s, dir)
-      // the ONLY corpus scan (vocab build); the encoded vocabulary is
-      // left behind as g_bpe_encoded(word, n, seq)
-      sp.sql(
-        """SELECT word, COUNT(*) AS n
-          |FROM (SELECT explode(split(text, ' ')) AS word FROM documents) x
-          |WHERE word != '' GROUP BY word""".stripMargin)
-        .withColumn("seq", bpeEncodeRules(col("word"), BpeMerges).getField("seq"))
-        .createOrReplaceTempView("g_bpe_encoded")
-      sp.sql(
-        """SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-          |  SELECT token, SUM(n) AS cnt,
-          |         ROW_NUMBER() OVER (ORDER BY SUM(n) DESC, token) AS rnk
-          |  FROM (SELECT explode(split(trim(seq), '  ')) AS token, n FROM g_bpe_encoded) t
-          |  GROUP BY token) z
-          |WHERE rnk <= 30 ORDER BY rnk""".stripMargin)
+  /** The encoded vocabulary `(word, n, seq)`: the corpus word rollup
+    * (the only corpus scan) with each word's greedy [[bpeEncodeRules]]
+    * state under the static [[BpeMerges]]. */
+  private[graft] def bpeEncodedVocab(sp: SparkSession): DataFrame =
+    sp.sql(
+      """SELECT word, COUNT(*) AS n
+        |FROM (SELECT explode(split(text, ' ')) AS word FROM documents) x
+        |WHERE word != '' GROUP BY word""".stripMargin)
+      .withColumn("seq", bpeEncodeRules(col("word"), BpeMerges).getField("seq"))
+
+  val q167BpeEncode: QuerySpec =
+    QuerySpec("q167_text_bpe_encode", bpeEncodeOracleText) { (s, dir) =>
+      topTokens(bpeEncodedVocab(QuerySpec.prepared(s, dir)),
+        split(trim(col("seq")), "  "), "n")
     }
-  }
 
   /** The document-level token-array path under the oracle gate: q167
     * pins [[bpeEncodeRules]] at vocab grain; this query pins
@@ -1146,19 +1211,12 @@ object TextAnalysis {
     * window is rank-limited. */
   val q405BpeEncodeExprQ: QuerySpec =
     QuerySpec("q405_bpe_encode_expr", bpeEncodeOracleText) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val sp = QuerySpec.prepared(s, dir)
-      sp.table("documents")
+      topTokens(sp.table("documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .select(explode(bpeTokensExpr(col("word"))).as("token"), col("n"))
-        .groupBy(col("token")).agg(sum(col("n")).as("cnt"))
-        .withColumn("rnk", row_number()
-          .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-        .filter(col("rnk") <= 30)
-        .select(col("rnk"), col("token"), col("cnt"))
-        .orderBy(col("rnk"))
+        .groupBy(col("word")).agg(count(lit(1)).as("n")),
+        bpeTokensExpr(col("word")), "n")
     }
 
   /** Tokenizer fertility report — tokens-per-word and chars-per-token by
@@ -1174,51 +1232,18 @@ object TextAnalysis {
     * vocabulary-sized encode result back to the rollup — the fact table
     * is never rejoined, same envelope as q167 plus one tiny grouped
     * join. */
-  val q176TokenizerFertility: QuerySpec = {
-    val oracleText: String = bpeOracleUnroll +
-      s""",
-         |wl AS (SELECT word, lang, COUNT(*) AS n
-         |       FROM (SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents) x
-         |       WHERE word != '' GROUP BY word, lang),
-         |tk AS (SELECT word, len(string_split(trim(seq), '  ')) AS n_tokens,
-         |              length(word) AS n_chars
-         |       FROM s$BpeRounds)
-         |SELECT lang,
-         |       CAST(SUM(wl.n) AS BIGINT) AS n_words,
-         |       CAST(SUM(wl.n * tk.n_tokens) AS BIGINT) AS n_tokens,
-         |       ROUND(CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE)
-         |             / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
-         |       ROUND(CAST(SUM(wl.n * tk.n_chars) AS DOUBLE)
-         |             / CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE), 6) AS chars_per_token
-         |FROM wl JOIN tk USING (word)
-         |GROUP BY lang ORDER BY lang""".stripMargin
-    QuerySpec("q176_tokenizer_fertility", oracleText) { (s, dir) =>
-      val sp = QuerySpec.prepared(s, dir)
-      // the ONLY corpus scan: per-(word, lang) rollup, checkpointed
-      // because it feeds BOTH the encode vocab and the final report join
-      val wl = sp.sql(
-        """SELECT word, lang, COUNT(*) AS n
-          |FROM (SELECT lang, explode(split(text, ' ')) AS word FROM documents) x
-          |WHERE word != '' GROUP BY word, lang""".stripMargin)
-        .staged
-      val tk = wl.select(col("word")).distinct()
-        .select(col("word"),
-          size(split(trim(bpeEncodeRules(col("word"), BpeMerges).getField("seq")),
-            "  ")).as("n_tokens"),
-          length(col("word")).as("n_chars"))
-      wl.join(tk, "word")
-        .createOrReplaceTempView("g_bpe_fertility")
-      sp.sql(
-        """SELECT lang,
-          |       CAST(SUM(n) AS BIGINT) AS n_words,
-          |       CAST(SUM(n * n_tokens) AS BIGINT) AS n_tokens,
-          |       ROUND(CAST(SUM(n * n_tokens) AS DOUBLE)
-          |             / CAST(SUM(n) AS DOUBLE), 6) AS fertility,
-          |       ROUND(CAST(SUM(n * n_chars) AS DOUBLE)
-          |             / CAST(SUM(n * n_tokens) AS DOUBLE), 6) AS chars_per_token
-          |FROM g_bpe_fertility
-          |GROUP BY lang ORDER BY lang""".stripMargin)
-    }
+  val q176TokenizerFertility: QuerySpec = QuerySpec(
+    "q176_tokenizer_fertility",
+    s"""$bpeOracleUnroll,
+       |${wordCountsBySql("wl", "lang")}
+       |${fertilityByLangSql(s"s$BpeRounds", SeqTokensSql)}
+       |ORDER BY lang""".stripMargin) { (s, dir) =>
+    // the ONLY corpus scan: per-(word, lang) rollup, staged because it
+    // feeds BOTH the encode vocab and the final report join
+    val wl = wordCountsBy(QuerySpec.prepared(s, dir), "lang").staged
+    fertilityByLang(wl, tokenCounts(wl.select(col("word")).distinct(),
+      bpeTokenCount(col("word"), BpeMerges)))
+      .orderBy(col("lang"))
   }
 
   /** Model-based quality filtering — the classifier-inference stage of a
@@ -1563,16 +1588,14 @@ object TextAnalysis {
       val w = org.apache.spark.sql.expressions.Window
       // one corpus scan → the bigram count relation, staged (it feeds
       // the ranked pick and three stat aggregates)
-      sp.table("documents")
+      QuerySpec.sqlOver(sp, "q218_bi" -> sp.table("documents")
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
         .withColumn("prev",
           lag("word", 1).over(w.partitionBy("doc_id").orderBy("pos")))
         .filter(col("prev").isNotNull)
         .groupBy("prev", "word").agg(count(lit(1)).as("c2"))
-        .staged
-        .createOrReplaceTempView("q218_bi")
-      sp.sql(tail)
+        .staged)(tail)
     }
   }
 

@@ -81,10 +81,8 @@ object TokenizerCompare {
     // Unigram arm — the q411 EM round's final segmentation
     val ed = UnigramTokenizer.edges(UnigramTokenizer.wordFreqs(sp))
       .staged // seed counts + both lattices
-    val seg0 = UnigramTokenizer.viterbi(ed, UnigramTokenizer.seedVocab(ed))
-    val vc1 = UnigramTokenizer.withLogProbs(
-      seg0.select(explode(col("toks")).as("sub"), col("freq"))
-        .groupBy(col("sub")).agg(sum(col("freq")).as("cnt")))
+    val vc1 = UnigramTokenizer.withLogProbs(UnigramTokenizer.usageCounts(
+      UnigramTokenizer.viterbi(ed, UnigramTokenizer.seedVocab(ed))))
     val seg1 = UnigramTokenizer.viterbi(ed, vc1)
       .staged // the usage-vocab count and the totals both read it
     val uniVocab = seg1.select(explode(col("toks")).as("token"))
@@ -117,80 +115,30 @@ object TokenizerCompare {
   val q428FertilityCompare: QuerySpec = QuerySpec(
     "q428_tokenizer_fertility_compare",
     s"""${TextAnalysis.bpeOracleUnroll},
-       |wl AS (SELECT word, lang, CAST(COUNT(*) AS BIGINT) AS n
-       |       FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
-       |             FROM documents) x
-       |       WHERE word != '' GROUP BY word, lang),
-       |btk AS (SELECT word,
-       |          CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS n_tokens,
-       |          CAST(len(word) AS BIGINT) AS n_chars
-       |        FROM s${TextAnalysis.BpeRounds}),
+       |${TextAnalysis.wordCountsBySql("wl", "lang")},
        |${UnigramTokenizer.oracleSeed},
        |${UnigramTokenizer.dpChain("a", "lat0")},
        |${UnigramTokenizer.emRetrainCtes},
        |${UnigramTokenizer.prunedModelCtes},
        |${UnigramTokenizer.dpChain("c", "lat2")},
-       |utk AS (SELECT word,
-       |          CAST(len(string_split(path, ' ')) AS BIGINT) AS n_tokens,
-       |          CAST(len(word) AS BIGINT) AS n_chars
-       |        FROM segc),
-       |brep AS (SELECT 'bpe' AS family, lang,
-       |           CAST(SUM(wl.n) AS BIGINT) AS n_words,
-       |           CAST(SUM(wl.n * btk.n_tokens) AS BIGINT) AS n_tokens,
-       |           ROUND(CAST(SUM(wl.n * btk.n_tokens) AS DOUBLE)
-       |                 / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
-       |           ROUND(CAST(SUM(wl.n * btk.n_chars) AS DOUBLE)
-       |                 / CAST(SUM(wl.n * btk.n_tokens) AS DOUBLE), 6)
-       |             AS chars_per_token
-       |         FROM wl JOIN btk USING (word) GROUP BY lang),
-       |urep AS (SELECT 'unigram' AS family, lang,
-       |           CAST(SUM(wl.n) AS BIGINT) AS n_words,
-       |           CAST(SUM(wl.n * utk.n_tokens) AS BIGINT) AS n_tokens,
-       |           ROUND(CAST(SUM(wl.n * utk.n_tokens) AS DOUBLE)
-       |                 / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
-       |           ROUND(CAST(SUM(wl.n * utk.n_chars) AS DOUBLE)
-       |                 / CAST(SUM(wl.n * utk.n_tokens) AS DOUBLE), 6)
-       |             AS chars_per_token
-       |         FROM wl JOIN utk USING (word) GROUP BY lang)
+       |brep AS (${TextAnalysis.fertilityByLangSql(s"s${TextAnalysis.BpeRounds}",
+          TextAnalysis.SeqTokensSql, "'bpe' AS family, ")}),
+       |urep AS (${TextAnalysis.fertilityByLangSql("segc",
+          UnigramTokenizer.PathTokensSql, "'unigram' AS family, ")})
        |SELECT * FROM brep UNION ALL SELECT * FROM urep
        |ORDER BY family, lang""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
-    val (ed, vc2) = UnigramTokenizer.prunedModelParts(sp)
-    val artifact = vc2.select(col("sub"), col("lp"))
-      .collect() // ≤ target-size rows by construction (the q417 probe)
-      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-    Checkpoints.unpersist(ed)
-    Checkpoints.unpersist(vc2)
-    val wl = sp.table("documents")
-      .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word"), col("lang")).agg(count(lit(1)).as("n"))
+    val artifact = UnigramTokenizer.shippedModel(sp)
+    val wl = TextAnalysis.wordCountsBy(sp, "lang")
       .staged // both encode vocabs AND both report joins read it
     val vocab = wl.groupBy("word").agg(sum(col("n")).as("n"))
-    val btk = vocab
-      .select(col("word"),
-        size(split(trim(TextAnalysis.bpeEncodeRules(col("word"),
-          TextAnalysis.BpeMerges).getField("seq")), "  "))
-          .cast("long").as("n_tokens"),
-        length(col("word")).cast("long").as("n_chars"))
-    val utk = vocab
-      .select(col("word"),
-        size(UnigramTokenizer.unigramTokensExprWith(col("word"), artifact))
-          .cast("long").as("n_tokens"),
-        length(col("word")).cast("long").as("n_chars"))
-    def rep(family: String, tk: org.apache.spark.sql.DataFrame) =
-      wl.join(tk, "word")
-        .groupBy(col("lang"))
-        .agg(sum(col("n")).as("n_words"),
-          sum(col("n") * col("n_tokens")).as("n_tokens"),
-          round(sum(col("n") * col("n_tokens")).cast("double") /
-            sum(col("n")).cast("double"), 6).as("fertility"),
-          round(sum(col("n") * col("n_chars")).cast("double") /
-            sum(col("n") * col("n_tokens")).cast("double"), 6)
-            .as("chars_per_token"))
+    def rep(family: String, nTokens: org.apache.spark.sql.Column) =
+      TextAnalysis.fertilityByLang(wl, TextAnalysis.tokenCounts(vocab, nTokens))
         .select(lit(family).as("family"), col("lang"), col("n_words"),
           col("n_tokens"), col("fertility"), col("chars_per_token"))
-    rep("bpe", btk).unionByName(rep("unigram", utk))
+    rep("bpe", TextAnalysis.bpeTokenCount(col("word"), TextAnalysis.BpeMerges))
+      .unionByName(rep("unigram",
+        size(UnigramTokenizer.unigramTokensExprWith(col("word"), artifact))))
       .orderBy(col("family"), col("lang"))
   }
 

@@ -72,6 +72,10 @@ object UnigramTokenizer {
     * truncating the oracle's DP). */
   private[graft] val MaxWordLen = 16
 
+  /** The token array of a Viterbi `path` (tokens joined by single
+    * spaces), in DuckDB text. */
+  private[graft] val PathTokensSql = "string_split(path, ' ')"
+
   /** Corpus words with total occurrence counts — the ONLY corpus-grain
     * pass (empty tokens guarded: Spark's sequence(1, 0) throws where
     * DuckDB's range is just empty). */
@@ -373,24 +377,11 @@ object UnigramTokenizer {
     "q410_unigram_viterbi",
     s"""WITH $oracleSeed,
        |${dpChain("a", "lat0")}
-       |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-       |  SELECT token, SUM(freq) AS cnt,
-       |         ROW_NUMBER() OVER (ORDER BY SUM(freq) DESC, token) AS rnk
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, freq FROM sega) t
-       |  GROUP BY token) z
-       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val ed = edges(wordFreqs(sp)).staged // vocab counts + lattice read it
-    viterbi(ed, seedVocab(ed))
-      .select(explode(col("toks")).as("token"), col("freq"))
-      .groupBy(col("token")).agg(sum(col("freq")).as("cnt"))
-      // rank-limited global window over the BOUNDED subword vocab (the
-      // q405 precedent)
-      .withColumn("rnk", row_number()
-        .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-      .filter(col("rnk") <= 30)
-      .select(col("rnk"), col("token"), col("cnt"))
-      .orderBy(col("rnk"))
+       |${TextAnalysis.topTokensSql("sega", PathTokensSql, "freq")}""".stripMargin) {
+    (s, dir) =>
+      val sp = QuerySpec.prepared(s, dir)
+      val ed = edges(wordFreqs(sp)).staged // vocab counts + lattice read it
+      TextAnalysis.topTokens(viterbi(ed, seedVocab(ed)), col("toks"), "freq")
   }
 
   /** One Viterbi-EM training round — the learning half: M-step counts
@@ -426,18 +417,17 @@ object UnigramTokenizer {
       val ed = edges(wordFreqs(sp)).staged // vc0 counts + both lattices
       val vc0 = seedVocab(ed).staged // round-0 lattice + vocab_size
       val seg0 = viterbi(ed, vc0).staged // usage counts + the r0 report
-      val vc1 = withLogProbs(
-        seg0.select(explode(col("toks")).as("sub"), col("freq"))
-          .groupBy(col("sub")).agg(sum(col("freq")).as("cnt")))
+      val vc1 = withLogProbs(usageCounts(seg0))
         .staged // round-1 lattice + vocab_size
       val seg1 = viterbi(ed, vc1)
       emReport(seg0, vc0, 0).unionByName(emReport(seg1, vc1, 1))
         .orderBy(col("round"))
   }
 
-  /** Corpus-weighted subword usage counts of a segmentation relation —
-    * EM's M-step rollup, shared by q411/q412/q414/q421. */
-  private def usageCounts(seg: DataFrame): DataFrame =
+  /** Corpus-weighted subword usage counts `(sub, cnt)` of a segmentation
+    * relation — EM's M-step rollup, the one spelling for every unigram
+    * query and q415's unigram arm. */
+  private[llmops] def usageCounts(seg: DataFrame): DataFrame =
     seg.select(explode(col("toks")).as("sub"), col("freq"))
       .groupBy(col("sub")).agg(sum(col("freq")).as("cnt"))
 
@@ -473,22 +463,14 @@ object UnigramTokenizer {
        |${dpChain("a", "lat0")},
        |$emRetrainCtes,
        |${dpChain("b", "lat1")},
-       |${TextAnalysis.perSourceCompressionSqlTail(
-          s"""tk AS (SELECT word,
-             |         CAST(len(string_split(path, ' ')) AS BIGINT) AS n_tokens,
-             |         CAST(len(word) AS BIGINT) AS n_chars
-             |       FROM segb)""".stripMargin)}""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val ed = edges(wordFreqs(sp)).staged // seed counts + both lattices
-    val seg0 = viterbi(ed, seedVocab(ed))
-    val vc1 = withLogProbs(
-      seg0.select(explode(col("toks")).as("sub"), col("freq"))
-        .groupBy(col("sub")).agg(sum(col("freq")).as("cnt")))
-    val tk = viterbi(ed, vc1).select(col("word"),
-      size(col("toks")).cast("long").as("n_tokens"),
-      length(col("word")).cast("long").as("n_chars"))
-    TextAnalysis.perSourceCompression(
-      TextAnalysis.perSourceWordCounts(sp), tk)
+       |${TextAnalysis.wordCountsBySql("ws", "source")}
+       |${TextAnalysis.perSourceCompressionSql("segb", PathTokensSql)}""".stripMargin) {
+    (s, dir) =>
+      val sp = QuerySpec.prepared(s, dir)
+      val ed = edges(wordFreqs(sp)).staged // seed counts + both lattices
+      val vc1 = withLogProbs(usageCounts(viterbi(ed, seedVocab(ed))))
+      TextAnalysis.perSourceCompression(TextAnalysis.wordCountsBy(sp, "source"),
+        TextAnalysis.tokenCounts(viterbi(ed, vc1), size(col("toks"))))
   }
 
   // ---------------------------------------------------------------------
@@ -562,9 +544,7 @@ object UnigramTokenizer {
 
   private[graft] def prunedModelParts(sp: SparkSession): (DataFrame, DataFrame) = {
     val ed = edges(wordFreqs(sp)).staged // seed counts + all lattices
-    val seg0 = viterbi(ed, seedVocab(ed))
-    val uc = seg0.select(explode(col("toks")).as("sub"), col("freq"))
-      .groupBy(col("sub")).agg(sum(col("freq")).as("cnt"))
+    val uc = usageCounts(viterbi(ed, seedVocab(ed)))
       .staged // singles arm, multi rank arm, and the floor anti-join
     val topMulti = uc.filter(length(col("sub")) > 1)
       .withColumn("rk", row_number().over(
@@ -575,6 +555,21 @@ object UnigramTokenizer {
       .staged // the lattice join + the final lp attach both read it
     Checkpoints.unpersist(uc) // folded into the eager vc2
     (ed, vc2)
+  }
+
+  /** The SHIPPED pruned model: [[prunedModelParts]]'s `(sub, lp)`
+    * vocabulary collected and sorted (≤ target-size rows by
+    * construction — the vocab_size knob IS the bound), with both staged
+    * parts released. The artifact q417, q424 and q428 feed to
+    * [[unigramTokensExprWith]]; the encode over it is vocab-literal, so
+    * no staged relation outlives the collect. */
+  private[graft] def shippedModel(sp: SparkSession): Seq[(String, Long)] = {
+    val (ed, vc2) = prunedModelParts(sp)
+    val artifact = vc2.select(col("sub"), col("lp")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
+    Checkpoints.unpersist(ed)
+    Checkpoints.unpersist(vc2)
+    artifact
   }
 
   /** Prune the EM-trained model to a TARGET vocabulary and re-segment —
@@ -600,31 +595,22 @@ object UnigramTokenizer {
        |        FROM (SELECT unnest(string_split(path, ' ')) AS token, freq
        |              FROM segc) t
        |        GROUP BY token)
-       |SELECT CAST(rnk AS INT) AS rnk, sub AS token, cnt, lp AS lp_e6 FROM (
-       |  SELECT u.sub, u.cnt, v.lp,
-       |         ROW_NUMBER() OVER (ORDER BY u.cnt DESC, u.sub) AS rnk
-       |  FROM uc2 u JOIN vc2 v USING (sub)) z
-       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin) { (s, dir) =>
+       |${TextAnalysis.topTokenTableSql(
+          "(SELECT u.sub AS token, u.cnt, v.lp FROM uc2 u JOIN vc2 v USING (sub)) c",
+          ", lp AS lp_e6")}""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val (ed, vc2) = prunedModelParts(sp)
-    val uc2 = viterbi(ed, vc2)
-      .select(explode(col("toks")).as("sub"), col("freq"))
-      .groupBy(col("sub")).agg(sum(col("freq")).as("cnt"))
     // LEFT join + loud guard, not an inner join: an inner join would
     // silently DROP a token outside the pruned vocab (<unk>, or a bug
     // in the keep arms) — the one failure mode a coverage pin must
     // surface, not mask
-    uc2.join(vc2.select(col("sub"), col("lp")), Seq("sub"), "left")
+    TextAnalysis.topTokenTable(usageCounts(viterbi(ed, vc2))
+      .join(vc2.select(col("sub"), col("lp")), Seq("sub"), "left")
       .withColumn("lp", when(col("lp").isNull,
         expr("raise_error('q414 coverage violated: a token outside the " +
           "pruned vocab reached the final segmentation')").cast("long"))
         .otherwise(col("lp")))
-      .withColumn("rnk", row_number()
-        .over(Window.orderBy(col("cnt").desc, col("sub"))).cast("int"))
-      .filter(col("rnk") <= 30)
-      .select(col("rnk"), col("sub").as("token"), col("cnt"),
-        col("lp").as("lp_e6"))
-      .orderBy(col("rnk"))
+      .withColumnRenamed("sub", "token"), col("lp").as("lp_e6"))
   }
 
   // ---------------------------------------------------------------------
@@ -1001,21 +987,8 @@ object UnigramTokenizer {
          |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
          |  FROM ed e JOIN vc_$k v USING (sub)),
          |${dpChain(s"m$k", s"lat_$k")},
-         |rep_$k AS (
-         |  SELECT $k AS vocab_multi, wl.lang,
-         |         CAST(SUM(wl.n) AS BIGINT) AS n_words,
-         |         CAST(SUM(wl.n * tk.n_tokens) AS BIGINT) AS n_tokens,
-         |         ROUND(CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE)
-         |               / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
-         |         ROUND(CAST(SUM(wl.n * tk.n_chars) AS DOUBLE)
-         |               / CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE), 6)
-         |           AS chars_per_token
-         |  FROM wl JOIN (SELECT word,
-         |                  CAST(len(string_split(path, ' ')) AS BIGINT)
-         |                    AS n_tokens,
-         |                  CAST(len(word) AS BIGINT) AS n_chars
-         |                FROM segm$k) tk USING (word)
-         |  GROUP BY wl.lang)""".stripMargin
+         |rep_$k AS (${TextAnalysis.fertilityByLangSql(s"segm$k", PathTokensSql,
+            s"$k AS vocab_multi, ")})""".stripMargin
     }.mkString(",\n")
     val unionAll = SweepMultis
       .map(k => s"SELECT * FROM rep_$k").mkString(" UNION ALL ")
@@ -1055,11 +1028,7 @@ object UnigramTokenizer {
          |chfloor AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
          |            FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
          |            WHERE sub NOT IN (SELECT sub FROM uc)),
-         |wl AS MATERIALIZED (
-         |  SELECT word, lang, CAST(COUNT(*) AS BIGINT) AS n
-         |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
-         |        FROM documents) x
-         |  WHERE word != '' GROUP BY word, lang),
+         |${TextAnalysis.wordCountsBySql("wl", "lang")},
          |$perSizeCtes
          |SELECT CAST(vocab_multi AS INT) AS vocab_multi, lang, n_words,
          |       n_tokens, fertility, chars_per_token
@@ -1078,26 +1047,13 @@ object UnigramTokenizer {
       val ranked = llLossRanked(uc, lat, segb)
         .staged // every budget cuts a prefix of it
       // the ONE shared corpus rollup (q424's grain)
-      val wl = sp.table("documents")
-        .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word"), col("lang")).agg(count(lit(1)).as("n"))
+      val wl = TextAnalysis.wordCountsBy(sp, "lang")
         .staged // every budget's report joins it
       SweepMultis.map { k =>
         val vcK = prunedVocab(ed, uc, ranked.filter(col("rnk") <= k)
           .select(col("ex").as("sub"), col("cnt")))
-        val tk = viterbi(ed, vcK)
-          .select(col("word"), size(col("toks")).cast("long").as("n_tokens"),
-            length(col("word")).cast("long").as("n_chars"))
-        wl.join(tk, "word")
-          .groupBy(col("lang"))
-          .agg(sum(col("n")).as("n_words"),
-            sum(col("n") * col("n_tokens")).as("n_tokens"),
-            round(sum(col("n") * col("n_tokens")).cast("double") /
-              sum(col("n")).cast("double"), 6).as("fertility"),
-            round(sum(col("n") * col("n_chars")).cast("double") /
-              sum(col("n") * col("n_tokens")).cast("double"), 6)
-              .as("chars_per_token"))
+        TextAnalysis.fertilityByLang(wl,
+          TextAnalysis.tokenCounts(viterbi(ed, vcK), size(col("toks"))))
           .withColumn("vocab_multi", lit(k).cast("int"))
       }.reduce(_.unionByName(_))
         .select(col("vocab_multi"), col("lang"), col("n_words"),
@@ -1203,25 +1159,14 @@ object UnigramTokenizer {
          |${dpChain("s", "lats")},
          |enc AS (SELECT w.word, w.freq, COALESCE(s.path, '$Unk') AS path
          |        FROM wf w LEFT JOIN segs s USING (word))
-         |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-         |  SELECT token, SUM(freq) AS cnt,
-         |         ROW_NUMBER() OVER (ORDER BY SUM(freq) DESC, token) AS rnk
-         |  FROM (SELECT unnest(string_split(path, ' ')) AS token, freq FROM enc) t
-         |  GROUP BY token) z
-         |WHERE rnk <= 30 ORDER BY rnk""".stripMargin) { (s, dir) =>
-      val sp = QuerySpec.prepared(s, dir)
-      sp.table("documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-        .select(explode(unigramTokensExpr(col("word"))).as("token"),
-          col("freq"))
-        .groupBy(col("token")).agg(sum(col("freq")).as("cnt"))
-        .withColumn("rnk", row_number()
-          .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-        .filter(col("rnk") <= 30)
-        .select(col("rnk"), col("token"), col("cnt"))
-        .orderBy(col("rnk"))
+         |${TextAnalysis.topTokensSql("enc", PathTokensSql, "freq")}""".stripMargin) {
+      (s, dir) =>
+        val sp = QuerySpec.prepared(s, dir)
+        TextAnalysis.topTokens(sp.table("documents")
+          .select(explode(split(col("text"), " ")).as("word"))
+          .filter(col("word") =!= "")
+          .groupBy(col("word")).agg(count(lit(1)).as("freq")),
+          unigramTokensExpr(col("word")), "freq")
     }
   }
 
@@ -1414,26 +1359,16 @@ object UnigramTokenizer {
        |$emRetrainCtes,
        |$prunedModelCtes,
        |${dpChain("c", "lat2")},
-       |${TextAnalysis.perSourceCompressionSqlTail(
-          s"""tk AS (SELECT word,
-             |         CAST(len(string_split(path, ' ')) AS BIGINT) AS n_tokens,
-             |         CAST(len(word) AS BIGINT) AS n_chars
-             |       FROM segc)""".stripMargin)}""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val (ed, vc2) = prunedModelParts(sp)
-    val artifact = vc2.select(col("sub"), col("lp"))
-      .collect() // the shipped model: ≤ target-size rows by construction
-      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-    Checkpoints.unpersist(ed) // the encode below is vocab-literal —
-    Checkpoints.unpersist(vc2) // neither staged relation feeds it
-    val ws = TextAnalysis.perSourceWordCounts(sp)
-      .staged // the encode vocab AND the per-source report both read it
-    val tk = ws.groupBy("word").agg(sum(col("n")).as("n"))
-      .select(col("word"),
-        size(unigramTokensExprWith(col("word"), artifact))
-          .cast("long").as("n_tokens"),
-        length(col("word")).cast("long").as("n_chars"))
-    TextAnalysis.perSourceCompression(ws, tk)
+       |${TextAnalysis.wordCountsBySql("ws", "source")}
+       |${TextAnalysis.perSourceCompressionSql("segc", PathTokensSql)}""".stripMargin) {
+    (s, dir) =>
+      val sp = QuerySpec.prepared(s, dir)
+      val artifact = shippedModel(sp)
+      val ws = TextAnalysis.wordCountsBy(sp, "source")
+        .staged // the encode vocab AND the per-source report both read it
+      TextAnalysis.perSourceCompression(ws, TextAnalysis.tokenCounts(
+        ws.groupBy("word").agg(sum(col("n")).as("n")),
+        size(unigramTokensExprWith(col("word"), artifact))))
   }
 
   // ---------------------------------------------------------------------
@@ -1463,50 +1398,16 @@ object UnigramTokenizer {
        |$emRetrainCtes,
        |$prunedModelCtes,
        |${dpChain("c", "lat2")},
-       |wl AS (SELECT word, lang, CAST(COUNT(*) AS BIGINT) AS n
-       |       FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
-       |             FROM documents) x
-       |       WHERE word != '' GROUP BY word, lang),
-       |tk AS (SELECT word,
-       |         CAST(len(string_split(path, ' ')) AS BIGINT) AS n_tokens,
-       |         CAST(len(word) AS BIGINT) AS n_chars
-       |       FROM segc)
-       |SELECT lang,
-       |       CAST(SUM(wl.n) AS BIGINT) AS n_words,
-       |       CAST(SUM(wl.n * tk.n_tokens) AS BIGINT) AS n_tokens,
-       |       ROUND(CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE)
-       |             / CAST(SUM(wl.n) AS DOUBLE), 6) AS fertility,
-       |       ROUND(CAST(SUM(wl.n * tk.n_chars) AS DOUBLE)
-       |             / CAST(SUM(wl.n * tk.n_tokens) AS DOUBLE), 6)
-       |         AS chars_per_token
-       |FROM wl JOIN tk USING (word)
-       |GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
+       |${TextAnalysis.wordCountsBySql("wl", "lang")}
+       |${TextAnalysis.fertilityByLangSql("segc", PathTokensSql)}
+       |ORDER BY lang""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
-    val (ed, vc2) = prunedModelParts(sp)
-    val artifact = vc2.select(col("sub"), col("lp"))
-      .collect() // the shipped model: ≤ target-size rows by construction
-      .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-    Checkpoints.unpersist(ed) // the encode below is vocab-literal
-    Checkpoints.unpersist(vc2)
-    val wl = sp.table("documents")
-      .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word"), col("lang")).agg(count(lit(1)).as("n"))
+    val artifact = shippedModel(sp)
+    val wl = TextAnalysis.wordCountsBy(sp, "lang")
       .staged // the encode word relation AND the report join read it
-    val tk = wl.groupBy("word").agg(sum(col("n")).as("n"))
-      .select(col("word"),
-        size(unigramTokensExprWith(col("word"), artifact))
-          .cast("long").as("n_tokens"),
-        length(col("word")).cast("long").as("n_chars"))
-    wl.join(tk, "word")
-      .groupBy(col("lang"))
-      .agg(sum(col("n")).as("n_words"),
-        sum(col("n") * col("n_tokens")).as("n_tokens"),
-        round(sum(col("n") * col("n_tokens")).cast("double") /
-          sum(col("n")).cast("double"), 6).as("fertility"),
-        round(sum(col("n") * col("n_chars")).cast("double") /
-          sum(col("n") * col("n_tokens")).cast("double"), 6)
-          .as("chars_per_token"))
+    TextAnalysis.fertilityByLang(wl, TextAnalysis.tokenCounts(
+      wl.groupBy("word").agg(sum(col("n")).as("n")),
+      size(unigramTokensExprWith(col("word"), artifact))))
       .orderBy(col("lang"))
   }
 
@@ -1665,28 +1566,11 @@ object UnigramTokenizer {
        |           CASE WHEN s2 IS NULL OR u_e6 < p1_e6 THEN p1 ELSE p2 END
        |             AS path
        |         FROM ch)
-       |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-       |  SELECT token, SUM(nocc) AS cnt,
-       |         ROW_NUMBER() OVER (ORDER BY SUM(nocc) DESC, token) AS rnk
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, nocc
-       |        FROM pick) t
-       |  GROUP BY token) z
-       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    sampledTop30(sampledSegments(sp, SampleAlpha))
+       |${TextAnalysis.topTokensSql("pick", PathTokensSql, "nocc")}""".stripMargin) {
+    (s, dir) =>
+      TextAnalysis.topTokens(sampledSegments(QuerySpec.prepared(s, dir), SampleAlpha),
+        split(col("path"), " "), "nocc")
   }
-
-  /** The sampled-encode report rollup shared by q425/q429: top-30
-    * tokens of the sampled segmentations, occurrence-weighted. */
-  private def sampledTop30(segments: DataFrame): DataFrame =
-    segments
-      .select(explode(split(col("path"), " ")).as("token"), col("nocc"))
-      .groupBy(col("token")).agg(sum(col("nocc")).as("cnt"))
-      .withColumn("rnk", row_number()
-        .over(Window.orderBy(col("cnt").desc, col("token"))).cast("int"))
-      .filter(col("rnk") <= 30)
-      .select(col("rnk"), col("token"), col("cnt"))
-      .orderBy(col("rnk"))
 
   /** The sampler under the SHIPPED model — the production
     * subword-regularization path end-to-end: train → prune (q414) →
@@ -1721,16 +1605,12 @@ object UnigramTokenizer {
        |           CASE WHEN s2 IS NULL OR u_e6 < p1_e6 THEN p1 ELSE p2 END
        |             AS path
        |         FROM ch)
-       |SELECT CAST(rnk AS INT) AS rnk, token, CAST(cnt AS BIGINT) AS cnt FROM (
-       |  SELECT token, SUM(nocc) AS cnt,
-       |         ROW_NUMBER() OVER (ORDER BY SUM(nocc) DESC, token) AS rnk
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, nocc
-       |        FROM pick) t
-       |  GROUP BY token) z
-       |WHERE rnk <= 30 ORDER BY rnk""".stripMargin) { (s, dir) =>
-    val sp = QuerySpec.prepared(s, dir)
-    val (ed, vc2) = prunedModelParts(sp)
-    sampledTop30(sampledSegmentsUnder(sp, ed, vc2, SampleAlpha))
+       |${TextAnalysis.topTokensSql("pick", PathTokensSql, "nocc")}""".stripMargin) {
+    (s, dir) =>
+      val sp = QuerySpec.prepared(s, dir)
+      val (ed, vc2) = prunedModelParts(sp)
+      TextAnalysis.topTokens(sampledSegmentsUnder(sp, ed, vc2, SampleAlpha),
+        split(col("path"), " "), "nocc")
   }
 
   // q411 joins the bench headline set: it is the per-row-DP family's

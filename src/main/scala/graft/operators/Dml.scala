@@ -127,7 +127,10 @@ object Dml {
              |GROUP BY n_name""".stripMargin))
     graft.discard(sp.sql("""CREATE OR REPLACE TEMPORARY VIEW v_rich_top AS
              |SELECT * FROM v_rich WHERE n_rich >= 10""".stripMargin))
-    sp.sql("SELECT nation, n_rich FROM v_rich_top ORDER BY nation")
+    // the result holds its analyzed plan, so the views go before it
+    // runs: no session-global name outlives the query
+    try sp.sql("SELECT nation, n_rich FROM v_rich_top ORDER BY nation")
+    finally Seq("v_rich_top", "v_rich").foreach(v => graft.discard(sp.catalog.dropTempView(v)))
   }
 
   /** Catalog/metadata surface (SHOW TABLES / DESCRIBE —

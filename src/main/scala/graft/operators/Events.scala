@@ -1601,8 +1601,7 @@ object Events {
         tail.stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(vSql).staged.createOrReplaceTempView("q318_v")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp, "q318_v" -> sp.sql(vSql).staged)(tail)
     }
   }
 
@@ -1709,8 +1708,7 @@ object Events {
         tail.stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(dSql).staged.createOrReplaceTempView("q322_d")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp, "q322_d" -> sp.sql(dSql).staged)(tail)
     }
   }
 
@@ -2334,8 +2332,7 @@ object Events {
         tail.stripPrefix("WITH ")) { (sp0, dir) =>
       val sp = QuerySpec.prepared(sp0, dir)
       import graft.llmops.Checkpoints.Stageable
-      sp.sql(dSql).staged.createOrReplaceTempView("q347_d")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp, "q347_d" -> sp.sql(dSql).staged)(tail)
     }
   }
 

@@ -636,9 +636,8 @@ object Relational {
               Seq(col("rec_days"), col("o_custkey")), "rk_r"),
             Seq(col("freq").desc, col("o_custkey")), "rk_f"),
           Seq(col("monetary").desc, col("o_custkey")), "rk_m")
-      ranked.createOrReplaceTempView("q242_ranked")
-      c.agg(count(lit(1)).as("n")).createOrReplaceTempView("q242_n")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp, "q242_ranked" -> ranked,
+        "q242_n" -> c.agg(count(lit(1)).as("n")))(tail)
     }
   }
 
@@ -758,14 +757,12 @@ object Relational {
         .groupBy("o_custkey")
         .agg(sum(col("o_totalprice").cast("decimal(14,2)")).as("spend"))
         .staged // feeds the prefix pass AND the totals
-      Prefix.prefixSums(c, Seq(col("spend").desc, col("o_custkey")),
-          Seq(col("spend") -> "cum_spend_raw", lit(1L) -> "rnk"))
-        .select("rnk", "cum_spend_raw")
-        .createOrReplaceTempView("q251_pre")
-      c.agg(count(lit(1)).as("n"),
-          sum("spend").cast("decimal(18,2)").as("total"))
-        .createOrReplaceTempView("q251_t")
-      sp.sql(tail)
+      QuerySpec.sqlOver(sp,
+        "q251_pre" -> Prefix.prefixSums(c, Seq(col("spend").desc, col("o_custkey")),
+            Seq(col("spend") -> "cum_spend_raw", lit(1L) -> "rnk"))
+          .select("rnk", "cum_spend_raw"),
+        "q251_t" -> c.agg(count(lit(1)).as("n"),
+          sum("spend").cast("decimal(18,2)").as("total")))(tail)
     }
   }
 

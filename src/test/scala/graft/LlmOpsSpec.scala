@@ -500,26 +500,26 @@ class LlmOpsSpec extends EngineSuite {
     assert(out.length == 30 && out.map(_._1).toSeq == (1 to 30))
     // counts non-increasing in rank
     assert(out.sliding(2).forall(p => p.head._3 >= p.last._3))
-    // the run leaves the encoded vocabulary behind as g_bpe_encoded:
+    // the encoded vocabulary q167 ranks, (word, n, seq):
+    val enc = llmops.TextAnalysis.bpeEncodedVocab(QuerySpec.prepared(spark, sfDir))
     // 1) FIXPOINT — no merge-table pair survives in any final sequence,
     //    so the bounded unrolling IS the full greedy encode
-    val leftover = spark.sql(
-      """SELECT pair FROM (
-        |  SELECT explode(CASE WHEN size(ss) >= 2
-        |           THEN transform(sequence(0, size(ss) - 2),
-        |                  i -> concat(ss[i], ' ', ss[i + 1]))
-        |           ELSE array() END) AS pair
-        |  FROM (SELECT split(trim(seq), '  ') AS ss FROM g_bpe_encoded) q) p
-        |WHERE pair IN ('e r','t a','ta b','tab l','tabl e','s c','a n','sc an','s t','o w')
-        |""".stripMargin).count()
+    val leftover = enc.selectExpr("split(trim(seq), '  ') AS ss")
+      .selectExpr(
+        """explode(CASE WHEN size(ss) >= 2
+          |  THEN transform(sequence(0, size(ss) - 2),
+          |         i -> concat(ss[i], ' ', ss[i + 1]))
+          |  ELSE array() END) AS pair""".stripMargin)
+      .filter("pair IN ('e r','t a','ta b','tab l','tabl e','s c','a n','sc an','s t','o w')")
+      .count()
     assert(leftover == 0, s"$leftover applicable pairs survive the unrolled rounds")
     // 2) the 4-deep chain re-fuses 'table' into one token
-    val table = spark.sql("SELECT trim(seq) FROM g_bpe_encoded WHERE word = 'table'")
+    val table = enc.filter(col("word") === "table").selectExpr("trim(seq)")
       .collect().head.getString(0)
     assert(table == "table", s"chain did not fully fuse: '$table'")
     // 3) priority: in 'customer', rank-1 'e r' and rank-9 's t' both
     //    apply and nothing else does — final symbols c|u|st|o|m|er
-    val cust = spark.sql("SELECT split(trim(seq), '  ') FROM g_bpe_encoded WHERE word = 'customer'")
+    val cust = enc.filter(col("word") === "customer").selectExpr("split(trim(seq), '  ')")
       .collect().head.getSeq[String](0)
     assert(cust == Seq("c", "u", "st", "o", "m", "er"), cust.mkString("|"))
     // and the fused tokens surface in the frequency table

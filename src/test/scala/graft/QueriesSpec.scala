@@ -50,6 +50,10 @@ class QueriesSpec extends EngineSuite {
     test(s"$name executes at sf0.001") {
       val b = RegistryPass(name).built
       assert(b.width > 0)
+      // a view left in the session keeps the relation it names (often
+      // a staged checkpoint) reachable after the query is gone
+      assert(b.leftViews.isEmpty,
+        s"$name leaves session temp views behind: ${b.leftViews.mkString(", ")}")
       if (!mayCartesian(name))
         assert(!b.cartesian, s"$name plans a cartesian product")
       if (!mayBeEmpty(name)) assert(b.rows > 0, s"$name returned 0 rows")

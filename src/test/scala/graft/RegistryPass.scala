@@ -23,10 +23,12 @@ object RegistryPass {
     * ledger entry and (bench queries only) [[graft.engine.PlanFingerprint.of]],
     * whether the physical plan holds a CartesianProduct, the offenders of
     * [[PlanSpec]]'s two corpus predicates (empty for a DML spec), the row
-    * count and, for SQL specs, the [[digest]] of the sorted rows. */
+    * count, for SQL specs the [[digest]] of the sorted rows, and the
+    * temp views the build added to the session beyond the fixture
+    * tables (a query builder must leave none behind). */
   final case class Built(width: Int, summary: String, fingerprint: Option[String],
       cartesian: Boolean, windowOffenders: Seq[String], broadcastOffenders: Seq[String],
-      rows: Long, rowsDigest: Option[String])
+      rows: Long, rowsDigest: Option[String], leftViews: Seq[String])
 
   /** One spec's build, or the one failure that stopped it. */
   final case class Record(name: String, outcome: Try[Built]) {
@@ -54,7 +56,11 @@ object RegistryPass {
     md.digest().map(b => f"$b%02x").mkString
   }
 
+  private def tempViews(): Set[String] =
+    EngineSuite.spark.sessionState.catalog.getTempViewNames().toSet
+
   private def build(s: QuerySpec): Try[Built] = Try {
+    val viewsBefore = tempViews()
     val df = s.run(EngineSuite.spark, EngineSuite.sfDir)
     // the Explain surface runs ResourceEstimates on every query — it
     // must never throw on any registry plan shape (QueryExecution
@@ -74,6 +80,8 @@ object RegistryPass {
         val sorted = df.collect().map(_.toString).sorted.toSeq
         (sorted.size.toLong, Some(digest(sorted)))
       } else (df.count(), None)
-    Built(df.schema.size, summary, fingerprint, cartesian, windows, broadcasts, rows, rowsDigest)
+    val leftViews = (tempViews() -- viewsBefore -- sources.TestTables.names).toSeq.sorted
+    Built(df.schema.size, summary, fingerprint, cartesian, windows, broadcasts, rows, rowsDigest,
+      leftViews)
   }
 }

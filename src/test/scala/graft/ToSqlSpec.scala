@@ -24,23 +24,26 @@ class ToSqlSpec extends EngineSuite {
     var structural = 0
     val fallbacks = Seq.newBuilder[String]
     val broken = Seq.newBuilder[String]
-    for (s <- SparkEntry.specs; text <- s.sparkSql) {
-      try {
-        val regenerated = positions.SqlRender.toSql(spark, text)
-        val a = RegistryPass(s.name).built
-        val b =
-          try spark.sql(regenerated).collect().map(_.toString).sorted.toSeq
-          catch {
-            case e: Exception =>
-              broken += s"${s.name}: regenerated SQL failed: ${e.getMessage.take(120)}"
-              Nil
-          }
-        if (a.rows == b.size && a.rowsDigest.contains(RegistryPass.digest(b))) structural += 1
-        else if (b.nonEmpty)
-          broken += s"${s.name}: ${a.rows} original rows vs ${b.size} regenerated"
-      } catch {
-        case u: positions.SqlRender.Unsupported => fallbacks += s"${s.name}: ${u.getMessage}"
-      }
+    // a spec whose build failed is reported by name and the sweep goes
+    // on, so one broken spec cannot hide the result of the specs after it
+    for (s <- SparkEntry.specs; text <- s.sparkSql) RegistryPass(s.name).outcome match {
+      case scala.util.Failure(e) => broken += s"${s.name}: build failed: $e"
+      case scala.util.Success(a) =>
+        try {
+          val regenerated = positions.SqlRender.toSql(spark, text)
+          val b =
+            try spark.sql(regenerated).collect().map(_.toString).sorted.toSeq
+            catch {
+              case e: Exception =>
+                broken += s"${s.name}: regenerated SQL failed: ${e.getMessage.take(120)}"
+                Nil
+            }
+          if (a.rows == b.size && a.rowsDigest.contains(RegistryPass.digest(b))) structural += 1
+          else if (b.nonEmpty)
+            broken += s"${s.name}: ${a.rows} original rows vs ${b.size} regenerated"
+        } catch {
+          case u: positions.SqlRender.Unsupported => fallbacks += s"${s.name}: ${u.getMessage}"
+        }
     }
     val fb = fallbacks.result()
     val br = broken.result()

@@ -690,4 +690,54 @@ class UnigramSpec extends EngineSuite {
     llmops.Checkpoints.unpersist(ed)
     llmops.Checkpoints.unpersist(vc2)
   }
+
+  // The tokenizer report layer (llmops.TextAnalysis) on degenerate
+  // inputs the fixture never produces.
+
+  /** A `(path, nocc)` segmentation relation, one row per entry. */
+  private def segs(rows: (String, Long)*) = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("path", "nocc")
+  }
+
+  private def top(seg: org.apache.spark.sql.DataFrame): Seq[(Int, String, Long)] =
+    llmops.TextAnalysis.topTokens(seg, split(col("path"), " "), "nocc")
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+
+  test("report helpers: fewer than 30 distinct tokens give one row per " +
+    "token, ranked by weighted count then token") {
+    assert(top(segs("b a" -> 2L, "c" -> 3L, "a" -> 1L)) ==
+      Seq((1, "a", 3L), (2, "c", 3L), (3, "b", 2L)))
+  }
+
+  test("report helpers: a count tie across rank 30 goes to the " +
+    "lexicographically smaller token") {
+    val above = (0 until 29).map(i => f"t$i%02d" -> (100L + i))
+    val out = top(segs(above ++ Seq("zb" -> 7L, "za" -> 7L, "zc" -> 7L): _*))
+    assert(out.map(_._1) == (1 to 30))
+    assert(out.take(29).map(_._2) == above.reverse.map(_._1))
+    assert(out.last == ((30, "za", 7L)), out.last)
+  }
+
+  test("report helpers: an empty corpus gives empty reports and no " +
+    "divide, even under ANSI arithmetic") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.ansi.enabled", "true")
+    s2.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "doc_id BIGINT, source STRING, lang STRING, text STRING"))
+      .createOrReplaceTempView("documents")
+    val ta = llmops.TextAnalysis
+    def bpeCounts(w: org.apache.spark.sql.DataFrame) =
+      ta.tokenCounts(w.select(col("word")).distinct(),
+        ta.bpeTokenCount(col("word"), ta.BpeMerges))
+    val wl = ta.wordCountsBy(s2, "lang")
+    val ws = ta.wordCountsBy(s2, "source")
+    assert(ta.fertilityByLang(wl, bpeCounts(wl)).collect().isEmpty)
+    assert(ta.perSourceCompression(ws, bpeCounts(ws)).collect().isEmpty)
+    assert(ta.topTokens(ta.bpeEncodedVocab(s2), split(trim(col("seq")), "  "), "n")
+      .collect().isEmpty)
+    assert(top(segs()).isEmpty)
+  }
 }
