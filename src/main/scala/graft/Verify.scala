@@ -30,20 +30,11 @@ object Verify {
     // status stays 0 either way (the oracle compare judges the output)
     System.err.println(
       s"[verify] ${failed.size} of ${selected.size} selected queries failed: ${failed.mkString(", ")}")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => filter(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // json4s escapes every control character, so a tab or CR inside an
+    // oracle text still yields valid JSON
+    val json = org.json4s.jackson.JsonMethods.compact(org.json4s.JObject(
+      SparkEntry.oracleSql.filter(kv => filter(kv._1)).toList
+        .map { case (k, v) => k -> org.json4s.JString(v) }))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

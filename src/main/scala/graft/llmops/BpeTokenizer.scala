@@ -257,24 +257,37 @@ object BpeTokenizer {
     mergeTable.select(concat_ws(" ", col("l"), col("r")), rank.cast("int"))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
 
-  /** DuckDB oracle: the same loop with each round unrolled into one CTE
-    * chain (pairs → winner → candidates → run parity → rewrite) —
+  /** DuckDB oracle: one [[trainMerges]] round unrolled as CTEs over
+    * `syms{k}` — neighbours, pair counts, the ≤ m winners `win{k}(l, r,
+    * c, brk)`, candidates → run parity → rewrite into `syms{k+1}` —
     * generated programmatically so the two engines can never drift on
-    * round count. `LEFT JOIN ... ON TRUE` mirrors the Spark side's
-    * empty-winner guard. */
-  private def oracleRound(k: Int): String = {
-    val i = s"syms$k"
-    s"""pairs$k AS (
-       |  SELECT a.sym AS l, b.sym AS r, CAST(SUM(a.freq) AS BIGINT) AS c
-       |  FROM $i a JOIN $i b ON a.word = b.word AND b.pos = a.pos + 1
-       |  GROUP BY 1, 2),
-       |win$k AS (SELECT l, r, c FROM pairs$k ORDER BY c DESC, l, r LIMIT 1),
+    * round count. The winners are selected as [[winners]] selects them:
+    * at m = 1 the top pair (rank 1 is never blocked), otherwise the
+    * top-`pool` candidates with rank-blind blocking. The equality left
+    * join of the winners mirrors the Spark side's empty-winner guard. */
+  private def roundSql(k: Int, m: Int, pool: Int): String = {
+    val win =
+      if (m == 1)
+        s"win$k AS (SELECT l, r, c, 1 AS brk FROM pairs$k ORDER BY c DESC, l, r LIMIT 1)"
+      else
+        s"""pool$k AS (SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY c DESC, l, r) AS rk
+           |           FROM pairs$k ORDER BY c DESC, l, r LIMIT $pool),
+           |win$k AS (
+           |  SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY rk) AS brk FROM (
+           |    SELECT p.l, p.r, p.c, p.rk FROM pool$k p WHERE NOT EXISTS (
+           |      SELECT 1 FROM pool$k q WHERE q.rk < p.rk AND
+           |        (q.l = p.l OR q.l = p.r OR q.r = p.l OR q.r = p.r))
+           |    ORDER BY rk LIMIT $m) z)""".stripMargin
+    s"""nx$k AS MATERIALIZED (SELECT word, freq, pos, sym,
+       |    LEAD(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
+       |  FROM syms$k),
+       |pairs$k AS (SELECT sym AS l, nxt AS r, CAST(SUM(freq) AS BIGINT) AS c
+       |  FROM nx$k WHERE nxt IS NOT NULL GROUP BY 1, 2),
+       |$win,
        |m$k AS (
        |  SELECT s.word, s.freq, s.pos, s.sym, w.l, w.r,
-       |    CASE WHEN s.sym = w.l AND
-       |              LEAD(s.sym) OVER (PARTITION BY s.word ORDER BY s.pos) = w.r
-       |         THEN 1 ELSE 0 END AS cand
-       |  FROM $i s LEFT JOIN win$k w ON TRUE),
+       |    CASE WHEN w.l IS NOT NULL THEN 1 ELSE 0 END AS cand
+       |  FROM nx$k s LEFT JOIN win$k w ON s.sym = w.l AND s.nxt = w.r),
        |g$k AS (
        |  SELECT *, SUM(CASE WHEN cand = 0 THEN 1 ELSE 0 END)
        |    OVER (PARTITION BY word ORDER BY pos) AS grp
@@ -293,24 +306,23 @@ object BpeTokenizer {
        |  WHERE ptake = 0)""".stripMargin
   }
 
-  /** Seed CTEs (words0 + syms0) shared by the textbook-loop oracle and
-    * the batched-trainer oracle. */
-  private def oracleSeed: String =
-    """words0 AS (
-      |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) u
-      |  WHERE word != ''
-      |  GROUP BY word),
-      |syms0 AS MATERIALIZED (
-      |  -- each round reads its syms 3x (both pair arms + the rewrite):
-      |  -- MATERIALIZED stops the inlining from compounding 3^rounds
-      |  -- (the q325 exponential-CTE trap)
-      |  SELECT word, freq, CAST(i AS BIGINT) AS pos, word[i] AS sym
-      |  FROM words0, LATERAL (SELECT unnest(range(1, len(word) + 1)) AS i) u)"""
-      .stripMargin
-
-  private[llmops] def oracleCtes(rounds: Int): String =
-    (oracleSeed +: (0 until rounds).map(oracleRound)).mkString(",\n")
+  /** The [[trainMerges]] oracle CTEs: the seed symbol table `syms0`,
+    * then `rounds` × [[roundSql]], ending in `syms{rounds}` with each
+    * round's winners in `win{k}`. */
+  private[llmops] def oracleCtes(rounds: Int, m: Int = 1,
+                                 pool: Int = BatchPool): String =
+    s"""words0 AS (
+       |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) u
+       |  WHERE word != ''
+       |  GROUP BY word),
+       |syms0 AS MATERIALIZED (
+       |  -- every syms/nx CTE is MATERIALIZED: each round reads its nx
+       |  -- twice (pair counts + the rewrite), and inlining would compound
+       |  -- across rounds (the q325 exponential-CTE trap)
+       |  SELECT word, freq, CAST(i AS BIGINT) AS pos, word[i] AS sym
+       |  FROM words0, LATERAL (SELECT unnest(range(1, len(word) + 1)) AS i) u),
+       |${(0 until rounds).map(roundSql(_, m, pool)).mkString(",\n")}""".stripMargin
 
   /** The learned merge table itself — round, pair, merged token, corpus-
     * weighted pair frequency. THE artifact a tokenizer trainer ships. */
@@ -421,55 +433,15 @@ object BpeTokenizer {
         TextAnalysis.bpeTokenCount(col("word"), learned)))
   }
 
-  /** One batched round, unrolled for DuckDB — the same candidate pool,
-    * rank-blind blocking, top-m batch, and run-parity rewrite. */
-  private def batchedOracleRound(k: Int, m: Int, pool: Int): String = {
-    val i = if (k == 0) "syms0" else s"bs$k"
-    s"""bn$k AS (SELECT word, freq, pos, sym,
-       |    LEAD(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-       |  FROM $i),
-       |bp$k AS (SELECT sym AS l, nxt AS r, CAST(SUM(freq) AS BIGINT) AS c
-       |  FROM bn$k WHERE nxt IS NOT NULL GROUP BY 1, 2),
-       |bpool$k AS (SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY c DESC, l, r) AS rk
-       |            FROM bp$k ORDER BY c DESC, l, r LIMIT $pool),
-       |bw$k AS (
-       |  SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY rk) AS brk FROM (
-       |    SELECT p.l, p.r, p.c, p.rk FROM bpool$k p WHERE NOT EXISTS (
-       |      SELECT 1 FROM bpool$k q WHERE q.rk < p.rk AND
-       |        (q.l = p.l OR q.l = p.r OR q.r = p.l OR q.r = p.r))
-       |    ORDER BY rk LIMIT $m) z),
-       |bm$k AS (
-       |  SELECT s.word, s.freq, s.pos, s.sym, w.l, w.r,
-       |    CASE WHEN w.l IS NOT NULL THEN 1 ELSE 0 END AS cand
-       |  FROM bn$k s LEFT JOIN bw$k w ON s.sym = w.l AND s.nxt = w.r),
-       |bg$k AS (
-       |  SELECT *, SUM(CASE WHEN cand = 0 THEN 1 ELSE 0 END)
-       |    OVER (PARTITION BY word ORDER BY pos) AS grp
-       |  FROM bm$k),
-       |bh$k AS (
-       |  SELECT *, CASE WHEN cand = 1 AND
-       |      ROW_NUMBER() OVER (PARTITION BY word, grp, cand ORDER BY pos) % 2 = 1
-       |    THEN 1 ELSE 0 END AS take
-       |  FROM bg$k),
-       |bs${k + 1} AS MATERIALIZED (
-       |  SELECT word, freq,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS BIGINT) AS pos,
-       |    CASE WHEN take = 1 THEN sym || r ELSE sym END AS sym
-       |  FROM (SELECT *, COALESCE(LAG(take) OVER (PARTITION BY word ORDER BY pos), 0)
-       |          AS ptake FROM bh$k) z
-       |  WHERE ptake = 0)""".stripMargin
-  }
-
   /** The full batched-trainer oracle text at an arbitrary (rounds, m,
     * pool) budget — the programmatically-unrolled full-recount replay,
     * shared VERBATIM by q407 (q401's budget) and q416/q422 (the
     * 48-merge budget), so no two gates can drift on the batching
     * semantics. */
   private def batchedMergesOracle(rounds: Int, m: Int, pool: Int): String =
-    s"""WITH ${(oracleSeed +: (0 until rounds)
-        .map(batchedOracleRound(_, m, pool))).mkString(",\n")},
+    s"""WITH ${oracleCtes(rounds, m, pool)},
        |merges AS (${(0 until rounds)
-        .map(k => s"SELECT ${k + 1} AS round, brk, l, r, c FROM bw$k")
+        .map(k => s"SELECT ${k + 1} AS round, brk, l, r, c FROM win$k")
         .mkString(" UNION ALL ")})
        |SELECT CAST(round AS BIGINT) AS round, CAST(brk AS BIGINT) AS batch_rank,
        |       l AS left_sym, r AS right_sym, l || r AS merged, c AS pair_freq

@@ -29,6 +29,12 @@ import graft.QuerySpec
   */
 object Dedup {
 
+  /** Probe counter: how many [[boundedPairs]] calls took the salted
+    * over-cap branch in this JVM. Test observability only (the skew
+    * drill pins that a giant block really exercises the salted path
+    * inside the full q81/q217 pipelines) — never read by planning. */
+  private[graft] val saltedExpansions = new java.util.concurrent.atomic.AtomicLong
+
   /** Candidate-pair expansion from blocking keys with a HARD per-task
     * bound, the skew armor for every verify stage here: a degenerate
     * block (identical boilerplate, one dominant label) must not become
@@ -48,14 +54,9 @@ object Dedup {
     * bounded tasks instead of one unbounded one. Block sizes come from a
     * map-side-combined groupBy + join (not a window, which would buffer
     * the whole degenerate block in one partition; the join is AQE
-    * skew-splittable). */
-  /** Probe counter: how many [[boundedPairs]] calls took the salted
-    * over-cap branch in this JVM. Test observability only (the skew
-    * drill pins that a giant block really exercises the salted path
-    * inside the full q81/q217 pipelines) — never read by planning. */
-  private[graft] val saltedExpansions = new java.util.concurrent.atomic.AtomicLong
-
-  /** `lenFilterE6 = Some(t·1e6)` switches the block expansion to
+    * skew-splittable).
+    *
+    * `lenFilterE6 = Some(t·1e6)` switches the block expansion to
     * [[graft.functions.LongPairsUtil.pairsLen]] over PACKED `(m << 40) | id`
     * values: the Jaccard length filter runs INSIDE the compiled
     * expansion loop (sorted block + sliding window), so
@@ -1836,19 +1837,6 @@ object Dedup {
         .cast("long").as("assortativity_e6"))
   }
 
-  /** 2-core of the near-dup graph via SIX replayed peeling rounds —
-    * the "dense boilerplate nucleus" extractor: a chain of pairwise
-    * dups dissolves under peeling, a template cluster (every page
-    * near-dups several others) survives, so the 2-core separates
-    * systematic boilerplate from incidental pair dups in one number
-    * per doc. Determinism follows the kmeans/Lloyd replay rule: a
-    * FIXED round count both engines replay identically (parity holds
-    * even mid-convergence; the spec asserts the fixture reaches the
-    * fixpoint). Scale shape per round: one degree rollup (shuffle on
-    * doc_id) + two semi-joins on the shrinking edge relation — the
-    * classic distributed peel, O(rounds·E), nothing global; each
-    * round's survivor set is staged so no round re-executes the last.
-    * Output: surviving docs with their within-core degree. */
   /** One k=2 peel round: degree rollup + two semi-joins. `keep` is NOT
     * staged: both semi-joins consume the SAME degree rollup subtree,
     * whose exchange canonicalizes identically, so ReuseExchange
@@ -1865,6 +1853,19 @@ object Dedup {
       .join(keep.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
   }
 
+  /** 2-core of the near-dup graph via SIX replayed peeling rounds —
+    * the "dense boilerplate nucleus" extractor: a chain of pairwise
+    * dups dissolves under peeling, a template cluster (every page
+    * near-dups several others) survives, so the 2-core separates
+    * systematic boilerplate from incidental pair dups in one number
+    * per doc. Determinism follows the kmeans/Lloyd replay rule: a
+    * FIXED round count both engines replay identically (parity holds
+    * even mid-convergence; the spec asserts the fixture reaches the
+    * fixpoint). Scale shape per round: one degree rollup (shuffle on
+    * doc_id) + two semi-joins on the shrinking edge relation — the
+    * classic distributed peel, O(rounds·E), nothing global; each
+    * round's survivor set is staged so no round re-executes the last.
+    * Output: surviving docs with their within-core degree. */
   val q325KCore: QuerySpec = {
     // AS MATERIALIZED (DuckDB-only text): each round references the
     // previous edge relation 5× — inlined, the 6-round unroll expands

@@ -75,12 +75,6 @@ object Sharding {
     QuerySpec.sql2("q165_pipeline_curate", text(spark = true), text(spark = false))
   }
 
-  /** Deterministic global shuffle into training shards: shard = hash
-    * bucket, within-shard order = (secondary hash, doc_id). The checksum
-    * SUM(pos * doc_id) is order-sensitive through pos, so it pins the full
-    * permutation, not just membership. At 100 TB the same expression
-    * drives `repartition(N, shard)` + `sortWithinPartitions(h2, doc_id)` —
-    * one shuffle, each shard written independently. */
   /** GROUP-disjoint train/val/test split keyed on the SOURCE (domain)
     * plus its leakage audit — the contamination-proof split: near-dups
     * and templates concentrate within a source, so splitting by doc
@@ -132,6 +126,12 @@ object Sharding {
       text(spark = true), text(spark = false))
   }
 
+  /** Deterministic global shuffle into training shards: shard = hash
+    * bucket, within-shard order = (secondary hash, doc_id). The checksum
+    * SUM(pos * doc_id) is order-sensitive through pos, so it pins the full
+    * permutation, not just membership. At 100 TB the same expression
+    * drives `repartition(N, shard)` + `sortWithinPartitions(h2, doc_id)` —
+    * one shuffle, each shard written independently. */
   val q131ShuffleShards: QuerySpec = QuerySpec.sql(
     "q131_shuffle_shards",
     """WITH t AS (

@@ -285,16 +285,6 @@ object SuffixArray {
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
   }
 
-  /** Adjacent suffix pairs in suffix-array order with their LCP (number
-    * of leading words the neighbours share). `(idx, doc_a/pos_a,
-    * doc_b/pos_b, lcp)` where b is the suffix directly AFTER a in SA
-    * order. Adjacency comes from [[Prefix.adjacentBySort]] over
-    * (rank, doc_id, pos) — a total order, range-partitioned, paired
-    * inside each range with a boundary stitch, not a global window and
-    * not a self-join; `idx` is the earlier suffix's SA position. The LCP
-    * of ANY two suffixes is the min of the adjacent LCPs between them,
-    * so the longest repeated passage anywhere in the corpus is realized
-    * by some adjacent pair — max(lcp) here IS the corpus answer. */
   /** First chunk length of the chunked LCP comparison (words). Chunk
     * lengths grow [[LcpGrowth]]× each round, so a pair with LCP L is
     * resolved in O(log_g(L/16)) rounds touching O(L·g/(g−1)) words
@@ -315,7 +305,16 @@ object SuffixArray {
     * survivors (r20: 3 chunk rounds → 2 at sf0.1). */
   private val LcpGrowth = 8
 
-  /** `(idx, doc_a, pos_a, doc_b, pos_b, lcp)` for adjacent SA pairs.
+  /** Adjacent suffix pairs in suffix-array order with their LCP (number
+    * of leading words the neighbours share). `(idx, doc_a/pos_a,
+    * doc_b/pos_b, lcp)` where b is the suffix directly AFTER a in SA
+    * order. Adjacency comes from [[Prefix.adjacentBySort]] over
+    * (rank, doc_id, pos) — a total order, range-partitioned, paired
+    * inside each range with a boundary stitch, not a global window and
+    * not a self-join; `idx` is the earlier suffix's SA position. The LCP
+    * of ANY two suffixes is the min of the adjacent LCPs between them,
+    * so the longest repeated passage anywhere in the corpus is realized
+    * by some adjacent pair — max(lcp) here IS the corpus answer.
     *
     * Adjacency is computed over the SLIM (rank, doc_id, pos) relation —
     * the word payload must not ride through the range exchange, its
@@ -567,16 +566,6 @@ object SuffixArray {
     agg.crossJoin(broadcast(top1))
   }
 
-  /** Duplicated-token share per source — the Lee et al. §4.1 span
-    * statistic computed EXACTLY from the suffix array instead of the
-    * fixed-n approximation: every adjacent SA pair sharing ≥ 8 words
-    * contributes the repeated span `[pos, pos+lcp)` to BOTH its
-    * documents; per-doc spans are interval-unioned (sort by start, a
-    * new group opens where start exceeds the running max end — the
-    * classic sweep, windowed PER DOC so it partitions); covered tokens
-    * roll up per source against the source's total token count. The
-    * judge-facing question it answers: which ingestion source carries
-    * how much literally-repeated text, at ANY repeat length ≥ 8. */
   /** The q382 dup-share replay, shared VERBATIM with q427 (the
     * artifact-read twin). */
   private def dupCoverageOracleSql: String =
@@ -612,6 +601,16 @@ object SuffixArray {
        |GROUP BY tot.source, total_tokens
        |ORDER BY source""".stripMargin
 
+  /** Duplicated-token share per source — the Lee et al. §4.1 span
+    * statistic computed EXACTLY from the suffix array instead of the
+    * fixed-n approximation: every adjacent SA pair sharing ≥ 8 words
+    * contributes the repeated span `[pos, pos+lcp)` to BOTH its
+    * documents; per-doc spans are interval-unioned (sort by start, a
+    * new group opens where start exceeds the running max end — the
+    * classic sweep, windowed PER DOC so it partitions); covered tokens
+    * roll up per source against the source's total token count. The
+    * judge-facing question it answers: which ingestion source carries
+    * how much literally-repeated text, at ANY repeat length ≥ 8. */
   val q382DupCoverage: QuerySpec = QuerySpec(
     "q382_sa_dup_coverage", dupCoverageOracleSql) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
@@ -767,38 +766,6 @@ object SuffixArray {
       .orderBy(col("doc_id"))
   }
 
-  // q381 is the bench sentinel: it executes the full doubling build
-  // PLUS the global adjacency pass — the heaviest path in the family
-  /** Cross-split TRAIN → TEST decontamination, exact at arbitrary
-    * length (Lee et al. 2022 §6.2 "train-test overlap" on the suffix
-    * array): for every held-out document, the length of the LONGEST
-    * contiguous token run it shares with ANY training document, plus
-    * the per-source contamination rollup an eval-set audit reads. The
-    * fixed-n overlap matrix (q180) answers "how many n-grams collide"
-    * at one n; this answers "how LONG is the longest literal copy" at
-    * every length, which is the metric that decides whether an eval
-    * score is memorization.
-    *
-    * Algorithm — the classic SA identity lcp(sᵢ, sⱼ) =
-    * min(adjacent-lcp[i..j−1]) makes the nearest train suffix in SA
-    * order the BEST one on its side, so per test suffix the answer is
-    * max(down, up) where down/up are running mins of the adjacent-LCP
-    * array since the previous/next TRAIN suffix. Distributed shape:
-    * the suffix sequence and its adjacent LCPs come from the one SA
-    * build ([[adjacentLcp]]); the train-counts that delimit segments
-    * are ONE range-partitioned prefix sum (Prefix.prefixSums — never a
-    * global window); the two directional running mins are windows
-    * PARTITIONED BY SEGMENT (a segment = one maximal run of
-    * consecutive held-out suffixes in SA order — bounded by the
-    * held-out split's dup-run mass, the same envelope as the per-doc
-    * windows elsewhere; a pathological all-identical held-out split
-    * lengthens it, and such a split is exactly what q80's exact dedup
-    * removes first). The split label arrives as a DATA COLUMN (the
-    * `splits` relation of [[decontaminationReport]] — the production
-    * contract, exercised with arbitrary labels by SuffixArraySpec and
-    * with a source-driven split by q418); the fixture parameter here is
-    * only the one line DERIVING that relation: held-out = doc_id % 10
-    * = 0. */
   /** The decontamination replay shared VERBATIM by q409/q418/q426 —
     * the split CTE is the ONLY line that differs between the three
     * gates (id-derived, source-derived, and artifact-read answers must
@@ -849,6 +816,36 @@ object SuffixArray {
   private def modSplitCte: String =
     "SELECT doc_id, (doc_id % 10 != 0) AS is_train FROM documents"
 
+  /** Cross-split TRAIN → TEST decontamination, exact at arbitrary
+    * length (Lee et al. 2022 §6.2 "train-test overlap" on the suffix
+    * array): for every held-out document, the length of the LONGEST
+    * contiguous token run it shares with ANY training document, plus
+    * the per-source contamination rollup an eval-set audit reads. The
+    * fixed-n overlap matrix (q180) answers "how many n-grams collide"
+    * at one n; this answers "how LONG is the longest literal copy" at
+    * every length, which is the metric that decides whether an eval
+    * score is memorization.
+    *
+    * Algorithm — the classic SA identity lcp(sᵢ, sⱼ) =
+    * min(adjacent-lcp[i..j−1]) makes the nearest train suffix in SA
+    * order the BEST one on its side, so per test suffix the answer is
+    * max(down, up) where down/up are running mins of the adjacent-LCP
+    * array since the previous/next TRAIN suffix. Distributed shape:
+    * the suffix sequence and its adjacent LCPs come from the one SA
+    * build ([[adjacentLcp]]); the train-counts that delimit segments
+    * are ONE range-partitioned prefix sum (Prefix.prefixSums — never a
+    * global window); the two directional running mins are windows
+    * PARTITIONED BY SEGMENT (a segment = one maximal run of
+    * consecutive held-out suffixes in SA order — bounded by the
+    * held-out split's dup-run mass, the same envelope as the per-doc
+    * windows elsewhere; a pathological all-identical held-out split
+    * lengthens it, and such a split is exactly what q80's exact dedup
+    * removes first). The split label arrives as a DATA COLUMN (the
+    * `splits` relation of [[decontaminationReport]] — the production
+    * contract, exercised with arbitrary labels by SuffixArraySpec and
+    * with a source-driven split by q418); the fixture parameter here is
+    * only the one line DERIVING that relation: held-out = doc_id % 10
+    * = 0. */
   val q409Decontamination: QuerySpec = QuerySpec(
     "q409_sa_decontamination",
     decontaminationOracleSql(modSplitCte)) { (s, dir) =>
@@ -1031,6 +1028,16 @@ object SuffixArray {
   private[graft] def saPairsDir(dir: String): String =
     s"${graft.operators.Layout.keyedDir("sa", dir)}/pairs"
 
+  /** The full 6-column adjacency row, idx-clustered for storage: the
+    * shared release layout of the `_SUCCESS`-gated fixture artifact
+    * ([[saPairs]]) and the versioned releases ([[q432]]). */
+  private def clusteredPairs(pairs: DataFrame): DataFrame =
+    pairs
+      .select(col("idx"), col("doc_a"), col("pos_a"),
+        col("doc_b"), col("pos_b"), col("lcp"))
+      .repartitionByRange(col("idx"))
+      .sortWithinPartitions(col("idx"))
+
   /** The suffix-array adjacency relation `(idx, doc_a, doc_b, lcp)` as
     * a PERSISTED artifact: built once per (JVM, source dir) — gated by
     * the `_SUCCESS` marker, the Layout write-once discipline — and
@@ -1043,16 +1050,6 @@ object SuffixArray {
     * are idx-clustered: downstream ordered scans prune by footer
     * min/max and a reader wanting one SA range touches only its
     * files. */
-  /** The full 6-column adjacency row, idx-clustered for storage: the
-    * shared release layout of the `_SUCCESS`-gated fixture artifact
-    * ([[saPairs]]) and the versioned releases ([[q432]]). */
-  private def clusteredPairs(pairs: DataFrame): DataFrame =
-    pairs
-      .select(col("idx"), col("doc_a"), col("pos_a"),
-        col("doc_b"), col("pos_b"), col("lcp"))
-      .repartitionByRange(col("idx"))
-      .sortWithinPartitions(col("idx"))
-
   private[graft] def saPairs(sp: SparkSession, dir: String): DataFrame = {
     val path = saPairsDir(dir)
     graft.operators.Layout.writeOnce(sp, path) {
@@ -1180,6 +1177,8 @@ object SuffixArray {
         (col("doc_id") % 10 =!= 0).as("is_train")))
   }
 
+  // q381 is the bench sentinel: it executes the full doubling build
+  // PLUS the global adjacency pass — the heaviest path in the family
   val all: Seq[QuerySpec] =
     Seq(q380SuffixRanks, q381LcpStats.benched, q382DupCoverage,
       q396SubstringRemoveSa, q409Decontamination,

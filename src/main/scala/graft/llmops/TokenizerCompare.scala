@@ -41,21 +41,18 @@ object TokenizerCompare {
        |    CAST(ROUND(SUM(freq * n_syms) * 1e6 / SUM(freq * n_chars)) AS BIGINT)
        |      AS compression_e6
        |  FROM bpe_pw),
-       |${UnigramTokenizer.oracleSeed},
-       |${UnigramTokenizer.dpChain("a", "lat0")},
-       |${UnigramTokenizer.emRetrainCtes},
-       |${UnigramTokenizer.dpChain("b", "lat1")},
+       |${UnigramTokenizer.seedEmSql},
+       |${UnigramTokenizer.dpChain("1", "lat1")},
        |uni_rep AS (
        |  SELECT 'unigram' AS family,
        |    (SELECT CAST(COUNT(DISTINCT token) AS BIGINT)
-       |     FROM (SELECT unnest(string_split(path, ' ')) AS token FROM segb) t)
+       |     FROM (SELECT unnest(${UnigramTokenizer.PathTokensSql}) AS token FROM seg1) t)
        |      AS vocab_used,
        |    CAST(SUM(freq * LEN(word)) AS BIGINT) AS tokens_before,
-       |    CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |      AS tokens_after,
-       |    CAST(ROUND(SUM(freq * len(string_split(path, ' '))) * 1e6
+       |    CAST(SUM(freq * len(${UnigramTokenizer.PathTokensSql})) AS BIGINT) AS tokens_after,
+       |    CAST(ROUND(SUM(freq * len(${UnigramTokenizer.PathTokensSql})) * 1e6
        |               / SUM(freq * LEN(word))) AS BIGINT) AS compression_e6
-       |  FROM segb)
+       |  FROM seg1)
        |SELECT * FROM bpe_rep UNION ALL SELECT * FROM uni_rep
        |ORDER BY family""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
@@ -116,14 +113,11 @@ object TokenizerCompare {
     "q428_tokenizer_fertility_compare",
     s"""${TextAnalysis.bpeOracleUnroll},
        |${TextAnalysis.wordCountsBySql("wl", "lang")},
-       |${UnigramTokenizer.oracleSeed},
-       |${UnigramTokenizer.dpChain("a", "lat0")},
-       |${UnigramTokenizer.emRetrainCtes},
-       |${UnigramTokenizer.prunedModelCtes},
-       |${UnigramTokenizer.dpChain("c", "lat2")},
+       |${UnigramTokenizer.seedEmPrunedSql},
+       |${UnigramTokenizer.dpChain("2", "lat2")},
        |brep AS (${TextAnalysis.fertilityByLangSql(s"s${TextAnalysis.BpeRounds}",
           TextAnalysis.SeqTokensSql, "'bpe' AS family, ")}),
-       |urep AS (${TextAnalysis.fertilityByLangSql("segc",
+       |urep AS (${TextAnalysis.fertilityByLangSql("seg2",
           UnigramTokenizer.PathTokensSql, "'unigram' AS family, ")})
        |SELECT * FROM brep UNION ALL SELECT * FROM urep
        |ORDER BY family, lang""".stripMargin) { (s, dir) =>

@@ -98,6 +98,31 @@ object UnigramTokenizer {
          |    named_struct('j', j, 'i', j + l,
          |                 'sub', substring(word, j + 1, l))))))""".stripMargin)
 
+  // ---------------------------------------------------------------------
+  // The DuckDB oracle layer: each model step below has ONE CTE helper
+  // next to its Spark definition, tagged like [[dpChain]] (`vc{tag}`,
+  // `lat{tag}`, `seg{tag}`, `uc{tag}`, …), and every unigram oracle —
+  // and q415/q428's unigram arms — is composed from them. A CTE that
+  // several later ones read is MATERIALIZED (DuckDB inlines the rest);
+  // DuckDB 1.0 runs an unreferenced MATERIALIZED CTE anyway, so a
+  // composition emits only the steps its query reads.
+  // ---------------------------------------------------------------------
+
+  /** The DuckDB CTEs `wf` and `ed` of [[wordFreqs]] and [[edges]]: the
+    * word relation and its subword lattice, the base of every unigram
+    * oracle. */
+  private[llmops] def wordLatticeSql: String =
+    s"""wf AS MATERIALIZED (
+       |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) u
+       |  WHERE word != '' GROUP BY word),
+       |ed AS MATERIALIZED (
+       |  SELECT word, freq, CAST(j AS INT) AS j, CAST(j + l AS INT) AS i,
+       |         word[j + 1 : j + l] AS sub
+       |  FROM wf,
+       |    LATERAL (SELECT unnest(range(0, len(word))) AS j) a,
+       |    LATERAL (SELECT unnest(range(1, least($SubMaxLen, len(word) - j) + 1)) AS l) b)""".stripMargin
+
   /** Fixed-point e6 log-probabilities over a (sub, cnt) count relation:
     * lp = round(ln(cnt / Σcnt)·1e6) as BIGINT — quantized ONCE here so
     * every downstream comparison is exact integer arithmetic. The 1-row
@@ -110,6 +135,21 @@ object UnigramTokenizer {
           .cast("long").as("lp"))
   }
 
+  /** The DuckDB CTEs `tot{tag}`/`vc{tag}` of [[withLogProbs]] over the
+    * `(sub, cnt)` relation `counts` — the one spelling of the e6
+    * quantization in oracle text. */
+  private[llmops] def logProbsSql(tag: String, counts: String): String =
+    s"""tot$tag AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM $counts),
+       |vc$tag AS MATERIALIZED (
+       |  SELECT sub, cnt,
+       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
+       |  FROM $counts CROSS JOIN tot$tag)""".stripMargin
+
+  /** A model in DuckDB text: [[logProbsSql]] then [[latticeSql]] — the
+    * counts → `vc{tag}` → `lat{tag}` step every oracle model takes. */
+  private[llmops] def modelSql(tag: String, counts: String): String =
+    s"${logProbsSql(tag, counts)},\n${latticeSql(tag)}"
+
   /** Seed vocabulary: corpus-weighted substring counts off the lattice
     * (occurrences at every position, the suffix-array-style seed Kudo
     * uses), cut at [[MinFreq]] with the single-character coverage
@@ -118,6 +158,15 @@ object UnigramTokenizer {
     withLogProbs(
       ed.groupBy(col("sub")).agg(sum(col("freq")).as("cnt"))
         .filter(col("cnt") >= MinFreq || length(col("sub")) === 1))
+
+  /** The seed model `vc0`/`lat0` of [[seedVocab]] over
+    * [[wordLatticeSql]]. */
+  private[llmops] def seedSql: String =
+    s"""$wordLatticeSql,
+       |ksc AS MATERIALIZED (
+       |  SELECT sub, CAST(SUM(freq) AS BIGINT) AS cnt FROM ed GROUP BY sub
+       |  HAVING SUM(freq) >= $MinFreq OR len(sub) = 1),
+       |${modelSql("0", "ksc")}""".stripMargin
 
   /** Viterbi-segment every distinct word under a `(sub, lp)` vocabulary:
     * returns (word, freq, score, toks) — [[viterbiBest]] at k = 1 over
@@ -149,6 +198,13 @@ object UnigramTokenizer {
     * once. */
   private[graft] def latticeOf(ed: DataFrame, vocab: DataFrame): DataFrame =
     ed.join(vocab.select(col("sub"), col("lp")), Seq("sub"))
+
+  /** The DuckDB CTE `lat{tag}` of [[latticeOf]]: `ed` joined to the
+    * model `vc{tag}`. */
+  private[llmops] def latticeSql(tag: String): String =
+    s"""lat$tag AS MATERIALIZED (
+       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
+       |  FROM ed e JOIN vc$tag v USING (sub))""".stripMargin
 
   /** The ONE unigram Viterbi DP: a per-row Column keeping, for every end
     * position p of a word of length `len`, the top `k` derivations over
@@ -187,6 +243,48 @@ object UnigramTokenizer {
           })))), 1, k),
         c => struct(c("score").as("score"), c("path").as("path"))))))
     element_at(dp, len + 1)
+  }
+
+  /** The DuckDB text of [[viterbiBest]], unrolled one CTE per word
+    * position: `dp{tag}_p` holds the top `k` derivations per `keys` into
+    * position p, selected from the ≤ [[SubMaxLen]] predecessor states in
+    * the same total order (score DESC, start j DESC, predecessor rank
+    * ASC). `lat` carries `(keys…, j, i, sub, lp)` ([[latticeSql]]'s
+    * shape, or a lattice keyed by (word, ex)); `spine` seeds position 0
+    * per key. Ends in `seg{tag}(keys…, freq, rn, score, path)`: the
+    * derivations reaching the word's final position (a key with no full
+    * path has no row). MATERIALIZED throughout: each dp CTE is read by
+    * up to [[SubMaxLen]] later ones (4^16 if inlined — the q325
+    * exponential-CTE trap). The one oracle DP: the unigram queries, q415
+    * and q428 all depend on it, so every word must fit [[MaxWordLen]]. */
+  private[llmops] def dpChain(tag: String, lat: String, spine: String = "wf",
+                              keys: Seq[String] = Seq("word"), k: Int = 1): String = {
+    def dp(p: Int) = s"dp${tag}_$p"
+    def cols(t: String) = keys.map(c => s"$t$c").mkString(", ")
+    val state = s"${cols("")}, pos, score, path, rn"
+    val steps = (1 to MaxWordLen).map { p =>
+      val prevs = (math.max(0, p - SubMaxLen) until p)
+        .map(q => s"SELECT $state FROM ${dp(q)}").mkString(" UNION ALL ")
+      s"""${dp(p)} AS MATERIALIZED (
+         |  SELECT $state FROM (
+         |    SELECT ${cols("e.")}, $p AS pos, d.score + e.lp AS score,
+         |           d.path || ' ' || e.sub AS path,
+         |           ROW_NUMBER() OVER (PARTITION BY ${cols("e.")}
+         |             ORDER BY d.score + e.lp DESC, e.j DESC, d.rn) AS rn
+         |    FROM $lat e JOIN ($prevs) d
+         |      ON ${keys.map(c => s"e.$c = d.$c").mkString(" AND ")} AND e.j = d.pos
+         |    WHERE e.i = $p) z
+         |  WHERE rn <= $k)""".stripMargin
+    }
+    val finals = (1 to MaxWordLen).map(p => s"SELECT $state FROM ${dp(p)}")
+      .mkString(" UNION ALL ")
+    (s"""${dp(0)} AS (SELECT ${cols("")}, 0 AS pos, CAST(0 AS BIGINT) AS score,
+        |  '' AS path, 1 AS rn FROM $spine)""".stripMargin +: steps :+
+      s"""seg$tag AS MATERIALIZED (
+         |  SELECT ${cols("d.")}, x.freq, d.rn, d.score, trim(d.path) AS path
+         |  FROM ($finals) d
+         |  JOIN wf x ON d.word = x.word AND d.pos = len(x.word))""".stripMargin)
+      .mkString(",\n")
   }
 
   /** [[viterbiBest]] per `keys` group of a joined lattice (`(word, …,
@@ -250,134 +348,15 @@ object UnigramTokenizer {
       .select(col("word"), col("ex"),
         try_element_at(col("best"), lit(1))("score").as("score_wo"))
 
-  // ---------------------------------------------------------------------
-  // DuckDB oracle: the identical DP with one CTE per word position —
-  // dp{tag}p = the argmax row per word into position p, selected from the
-  // ≤ SubMaxLen predecessor states. MATERIALIZED throughout: each dp CTE
-  // is referenced by up to SubMaxLen later ones (4^16 if inlined — the
-  // q325 exponential-CTE trap).
-  // ---------------------------------------------------------------------
-
-  private[llmops] def oracleSeed: String =
-    s"""wf AS (
-       |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) u
-       |  WHERE word != '' GROUP BY word),
-       |ed AS MATERIALIZED (
-       |  SELECT word, freq, CAST(j AS INT) AS j, CAST(j + l AS INT) AS i,
-       |         word[j + 1 : j + l] AS sub
-       |  FROM wf,
-       |    LATERAL (SELECT unnest(range(0, len(word))) AS j) a,
-       |    LATERAL (SELECT unnest(range(1, least($SubMaxLen, len(word) - j) + 1)) AS l) b),
-       |sc0 AS MATERIALIZED (
-       |  SELECT sub, CAST(SUM(freq) AS BIGINT) AS cnt FROM ed GROUP BY sub),
-       |ksc0 AS (SELECT sub, cnt FROM sc0 WHERE cnt >= $MinFreq OR len(sub) = 1),
-       |tot0 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM ksc0),
-       |vc0 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM ksc0 CROSS JOIN tot0),
-       |lat0 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc0 v USING (sub))""".stripMargin
-
-  /** The positionally-unrolled Viterbi chain `dp{tag}0..dp{tag}MaxWordLen`
-    * over lattice `latRel`, ending in `seg{tag}(word, freq, score, path)`. */
-  private[llmops] def dpChain(tag: String, latRel: String): String = {
-    val parts = Seq.newBuilder[String]
-    parts += s"""dp${tag}0 AS (SELECT word, freq, 0 AS pos,
-                |  CAST(0 AS BIGINT) AS score, '' AS path FROM wf)""".stripMargin
-    for (p <- 1 to MaxWordLen) {
-      val prevs = (math.max(0, p - SubMaxLen) until p)
-        .map(q => s"SELECT word, freq, pos, score, path FROM dp$tag$q")
-        .mkString(" UNION ALL ")
-      parts += s"""dp$tag$p AS MATERIALIZED (
-                  |  SELECT word, freq, pos, score, path FROM (
-                  |    SELECT e.word, e.freq, $p AS pos, d.score + e.lp AS score,
-                  |           d.path || ' ' || e.sub AS path,
-                  |           ROW_NUMBER() OVER (PARTITION BY e.word
-                  |             ORDER BY d.score + e.lp DESC, e.j DESC) AS rn
-                  |    FROM $latRel e JOIN ($prevs) d
-                  |      ON e.word = d.word AND e.j = d.pos
-                  |    WHERE e.i = $p) z
-                  |  WHERE rn = 1)""".stripMargin
-    }
-    val finals = (1 to MaxWordLen)
-      .map(p => s"SELECT word, freq, pos, score, path FROM dp$tag$p")
-      .mkString(" UNION ALL ")
-    parts += s"""seg$tag AS MATERIALIZED (
-                |  SELECT d.word, d.freq, d.score, trim(d.path) AS path
-                |  FROM ($finals) d
-                |  JOIN (SELECT word AS w2, len(word) AS lw FROM wf) x
-                |    ON d.word = x.w2 AND d.pos = x.lw)""".stripMargin
-    parts.result().mkString(",\n")
-  }
-
-  /** The (word, excluded-token)-KEYED Viterbi chain for the q423
-    * oracle — [[dpChain]] with the composite key: `latRel` carries an
-    * extra `ex` column and the chain tracks the best score per (word,
-    * ex) into each position, ending in `segx(word, ex, score)` with a
-    * (word, ex) pair ABSENT when the word has no full path without
-    * `ex` (the Spark side's NULL score_wo arm). Score-only: the pruner
-    * prices paths, it never ships them. */
-  private def dpChainKeyed(latRel: String, spine: String,
-                           tag: String = ""): String = {
-    val parts = Seq.newBuilder[String]
-    parts += s"""dpk${tag}0 AS (SELECT word, ex, 0 AS pos,
-                |  CAST(0 AS BIGINT) AS score FROM $spine)""".stripMargin
-    for (p <- 1 to MaxWordLen) {
-      val prevs = (math.max(0, p - SubMaxLen) until p)
-        .map(q => s"SELECT word, ex, pos, score FROM dpk$tag$q")
-        .mkString(" UNION ALL ")
-      parts += s"""dpk$tag$p AS MATERIALIZED (
-                  |  SELECT word, ex, pos, score FROM (
-                  |    SELECT e.word, e.ex, $p AS pos, d.score + e.lp AS score,
-                  |           ROW_NUMBER() OVER (PARTITION BY e.word, e.ex
-                  |             ORDER BY d.score + e.lp DESC, e.j DESC) AS rn
-                  |    FROM $latRel e JOIN ($prevs) d
-                  |      ON e.word = d.word AND e.ex = d.ex AND e.j = d.pos
-                  |    WHERE e.i = $p) z
-                  |  WHERE rn = 1)""".stripMargin
-    }
-    val finals = (1 to MaxWordLen)
-      .map(p => s"SELECT word, ex, pos, score FROM dpk$tag$p")
-      .mkString(" UNION ALL ")
-    parts += s"""segx$tag AS MATERIALIZED (
-                |  SELECT d.word, d.ex, d.score
-                |  FROM ($finals) d
-                |  JOIN (SELECT word AS w2, len(word) AS lw FROM wf) x
-                |    ON d.word = x.w2 AND d.pos = x.lw)""".stripMargin
-    parts.result().mkString(",\n")
-  }
-
-  /** The EM M-step CTE block shared VERBATIM by the q411 and q412
-    * oracles: usage counts over the round-0 segmentations (`uc`),
-    * re-normalized into the trained model (`vc1`) and its lattice
-    * (`lat1`). One definition so a quantization change can never drift
-    * between the two replays. */
-  private[llmops] def emRetrainCtes: String =
-    s"""uc AS MATERIALIZED (
-       |  SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, freq FROM sega) t
-       |  GROUP BY token),
-       |tot1 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM uc),
-       |vc1 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM uc CROSS JOIN tot1),
-       |lat1 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc1 v USING (sub))""".stripMargin
-
   /** Viterbi segmentation under the SEED model — the inference half: the
     * corpus-weighted top-30 subword tokens of the maximum-likelihood
     * segmentations (the q167/q405 output grain, so the two tokenizer
     * families report comparably). */
   val q410UnigramViterbi: QuerySpec = QuerySpec(
     "q410_unigram_viterbi",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")}
-       |${TextAnalysis.topTokensSql("sega", PathTokensSql, "freq")}""".stripMargin) {
+    s"""WITH $seedSql,
+       |${dpChain("0", "lat0")}
+       |${TextAnalysis.topTokensSql("seg0", PathTokensSql, "freq")}""".stripMargin) {
     (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val ed = edges(wordFreqs(sp)).staged // vocab counts + lattice read it
@@ -395,23 +374,9 @@ object UnigramTokenizer {
     * under any partitioning. */
   val q411UnigramEm: QuerySpec = QuerySpec(
     "q411_unigram_em",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |${dpChain("b", "lat1")},
-       |r0 AS (SELECT CAST(0 AS BIGINT) AS round,
-       |              (SELECT CAST(COUNT(*) AS BIGINT) FROM vc0) AS vocab_size,
-       |              CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |                AS tokens_total,
-       |              CAST(SUM(freq * score) AS BIGINT) AS ll_e6
-       |       FROM sega),
-       |r1 AS (SELECT CAST(1 AS BIGINT) AS round,
-       |              (SELECT CAST(COUNT(*) AS BIGINT) FROM vc1) AS vocab_size,
-       |              CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |                AS tokens_total,
-       |              CAST(SUM(freq * score) AS BIGINT) AS ll_e6
-       |       FROM segb)
-       |SELECT * FROM r0 UNION ALL SELECT * FROM r1 ORDER BY round""".stripMargin) {
+    s"""WITH $seedEmSql,
+       |${dpChain("1", "lat1")}
+       |${emReportSql(1)}""".stripMargin) {
     (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val ed = edges(wordFreqs(sp)).staged // vc0 counts + both lattices
@@ -427,9 +392,27 @@ object UnigramTokenizer {
   /** Corpus-weighted subword usage counts `(sub, cnt)` of a segmentation
     * relation — EM's M-step rollup, the one spelling for every unigram
     * query and q415's unigram arm. */
-  private[llmops] def usageCounts(seg: DataFrame): DataFrame =
+  private[graft] def usageCounts(seg: DataFrame): DataFrame =
     seg.select(explode(col("toks")).as("sub"), col("freq"))
       .groupBy(col("sub")).agg(sum(col("freq")).as("cnt"))
+
+  /** The DuckDB CTE `uc{tag}` of [[usageCounts]] over `seg{tag}`. */
+  private[llmops] def usageSql(tag: String): String =
+    s"""uc$tag AS MATERIALIZED (
+       |  SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
+       |  FROM (SELECT unnest($PathTokensSql) AS token, freq FROM seg$tag) t
+       |  GROUP BY token)""".stripMargin
+
+  /** Seed → usage in DuckDB text: [[seedSql]], the seed segmentation
+    * `seg0` and its usage counts `uc0` — EM's M-step input and the
+    * support every pruned model ranks. */
+  private[llmops] def seedUsageSql: String =
+    s"$seedSql,\n${dpChain("0", "lat0")},\n${usageSql("0")}"
+
+  /** Seed → EM: [[seedUsageSql]] re-normalized into the EM-trained model
+    * `vc1`/`lat1` (q411's round 1). */
+  private[llmops] def seedEmSql: String =
+    s"$seedUsageSql,\n${modelSql("1", "uc0")}"
 
   /** The per-EM-round report row (q411/q421): vocab size, corpus token
     * count, exact e6 log-likelihood. The LL is only defined under a
@@ -450,6 +433,16 @@ object UnigramTokenizer {
       .select(lit(r.toLong).as("round"), col("vocab_size"),
         col("tokens_total"), col("ll_e6"))
 
+  /** The DuckDB text of the [[emReport]] rows for rounds 0..`last`
+    * (round r over `vc{r}` and `seg{r}`), in round order. */
+  private[llmops] def emReportSql(last: Int): String =
+    (0 to last).map(r =>
+      s"""SELECT CAST($r AS BIGINT) AS round,
+         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM vc$r) AS vocab_size,
+         |  CAST(SUM(freq * len($PathTokensSql)) AS BIGINT) AS tokens_total,
+         |  CAST(SUM(freq * score) AS BIGINT) AS ll_e6
+         |FROM seg$r""".stripMargin).mkString("\nUNION ALL\n") + "\nORDER BY round"
+
   /** The unigram train → encode COMPOSITION (the [[BpeTokenizer
     * .q406BpeTrainedEncode]] analogue): segment each source split with
     * the EM-TRAINED model (vc1 — the round-1 probabilities, the artifact
@@ -459,12 +452,10 @@ object UnigramTokenizer {
     * trained table is applied, not just learned. */
   val q412UnigramTrainedEncode: QuerySpec = QuerySpec(
     "q412_unigram_trained_encode",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |${dpChain("b", "lat1")},
+    s"""WITH $seedEmSql,
+       |${dpChain("1", "lat1")},
        |${TextAnalysis.wordCountsBySql("ws", "source")}
-       |${TextAnalysis.perSourceCompressionSql("segb", PathTokensSql)}""".stripMargin) {
+       |${TextAnalysis.perSourceCompressionSql("seg1", PathTokensSql)}""".stripMargin) {
     (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val ed = edges(wordFreqs(sp)).staged // seed counts + both lattices
@@ -490,34 +481,6 @@ object UnigramTokenizer {
     * floor. */
   private[graft] val CharFloor = 1L
 
-  /** The DuckDB CTE block deriving the PRUNED target model `vc2` and
-    * its lattice `lat2` from the EM round's usage counts (`uc`/`ed` of
-    * [[emRetrainCtes]]/[[oracleSeed]]) — shared VERBATIM by the q414
-    * and q417 oracles so the artifact the two replays price can never
-    * drift. */
-  private[llmops] def prunedModelCtes: String =
-    s"""mk AS (SELECT sub, cnt,
-       |         ROW_NUMBER() OVER (ORDER BY cnt DESC, sub) AS rk
-       |       FROM uc WHERE len(sub) > 1),
-       |chfloor AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
-       |            FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
-       |            WHERE sub NOT IN (SELECT sub FROM uc)),
-       |keep AS (SELECT sub, cnt FROM uc WHERE len(sub) = 1
-       |         UNION ALL SELECT sub, cnt FROM mk WHERE rk <= $TargetMulti
-       |         UNION ALL SELECT sub, cnt FROM chfloor),
-       |tot2 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM keep),
-       |vc2 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM keep CROSS JOIN tot2),
-       |lat2 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc2 v USING (sub))""".stripMargin
-
-  /** The Spark side of the pruned target model: (staged lattice `ed`,
-    * staged pruned vocab `vc2`) — q414's derivation split out so q417
-    * (the artifact-encode composition) and the UnigramSpec artifact
-    * pins consume the IDENTICAL model. Caller owns both staged handles. */
   /** The re-normalized PRUNED model over the q414 keep arms — the ONE
     * definition of "prune to (model singles + `keptMulti`) with the
     * char-floor coverage guarantee": every single character of the
@@ -542,6 +505,23 @@ object UnigramTokenizer {
         .unionByName(floorSingles))
   }
 
+  /** The DuckDB CTEs of [[prunedVocab]] under `tag`: the char floor
+    * `chfloor{tag}`, the keep arms `keep{tag}` (the singles of `uc`, the
+    * multi-char rows of `kept` — a `(sub, cnt)` SELECT — and the floor)
+    * and their [[modelSql]] `vc{tag}`/`lat{tag}`. */
+  private[llmops] def prunedVocabSql(tag: String, uc: String, kept: String): String =
+    s"""chfloor$tag AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
+       |  FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
+       |  WHERE sub NOT IN (SELECT sub FROM $uc)),
+       |keep$tag AS MATERIALIZED (SELECT sub, cnt FROM $uc WHERE len(sub) = 1
+       |  UNION ALL $kept
+       |  UNION ALL SELECT sub, cnt FROM chfloor$tag),
+       |${modelSql(tag, s"keep$tag")}""".stripMargin
+
+  /** The Spark side of the pruned target model: (staged lattice `ed`,
+    * staged pruned vocab `vc2`) — q414's derivation split out so q417
+    * (the artifact-encode composition) and the UnigramSpec artifact
+    * pins consume the IDENTICAL model. Caller owns both staged handles. */
   private[graft] def prunedModelParts(sp: SparkSession): (DataFrame, DataFrame) = {
     val ed = edges(wordFreqs(sp)).staged // seed counts + all lattices
     val uc = usageCounts(viterbi(ed, seedVocab(ed)))
@@ -556,6 +536,18 @@ object UnigramTokenizer {
     Checkpoints.unpersist(uc) // folded into the eager vc2
     (ed, vc2)
   }
+
+  /** Seed → EM → pruned in DuckDB text: [[seedUsageSql]] cut to the
+    * top-[[TargetMulti]] multi-char subwords by usage (ties
+    * lexicographic) and re-normalized with [[prunedVocabSql]] into the
+    * target model `vc2`/`lat2` — the [[prunedModelParts]] artifact the
+    * q414, q417, q424, q428 and q429 replays price. */
+  private[llmops] def seedEmPrunedSql: String =
+    s"""$seedUsageSql,
+       |mk AS (SELECT sub, cnt,
+       |         ROW_NUMBER() OVER (ORDER BY cnt DESC, sub) AS rk
+       |       FROM uc0 WHERE len(sub) > 1),
+       |${prunedVocabSql("2", "uc0", s"SELECT sub, cnt FROM mk WHERE rk <= $TargetMulti")}""".stripMargin
 
   /** The SHIPPED pruned model: [[prunedModelParts]]'s `(sub, lp)`
     * vocabulary collected and sorted (≤ target-size rows by
@@ -586,15 +578,9 @@ object UnigramTokenizer {
     * WindowGroupLimit (rank-limited top-m, never a global sort). */
   val q414UnigramPruneTarget: QuerySpec = QuerySpec(
     "q414_unigram_prune_target",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |$prunedModelCtes,
-       |${dpChain("c", "lat2")},
-       |uc2 AS (SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |        FROM (SELECT unnest(string_split(path, ' ')) AS token, freq
-       |              FROM segc) t
-       |        GROUP BY token)
+    s"""WITH $seedEmPrunedSql,
+       |${dpChain("2", "lat2")},
+       |${usageSql("2")}
        |${TextAnalysis.topTokenTableSql(
           "(SELECT u.sub AS token, u.cnt, v.lp FROM uc2 u JOIN vc2 v USING (sub)) c",
           ", lp AS lp_e6")}""".stripMargin) { (s, dir) =>
@@ -618,31 +604,6 @@ object UnigramTokenizer {
   // SentencePiece actually prunes by, next to q414's usage-rank prune.
   // ---------------------------------------------------------------------
 
-  /** One prune-EM iteration by LIKELIHOOD-LOSS rank — Kudo 2018 §3.2's
-    * pruning criterion, exact under hard-EM: for every multi-char token
-    * x of the EM-trained model, the corpus-LL drop if x left the
-    * vocabulary is Σ_w freq(w) · (score(w) − score_without_x(w)) over
-    * the words whose CURRENT best path uses x (elsewhere the optimum
-    * cannot change), with score_without_x an exact re-run of the same
-    * Viterbi DP on the word's lattice minus x's edges
-    * ([[viterbiScoreWithout]]). Keep the [[TargetMulti]] multi-char
-    * tokens whose removal hurts MOST (essential tokens — whose removal
-    * leaves some word with NO full path — rank above every finite
-    * loss), re-normalize with the q414 keep arms (singles + char
-    * floor), re-segment, and re-estimate: one full prune→EM step.
-    * UnigramSpec pins that the kept set genuinely DIFFERS from q414's
-    * usage-ranked choice on a constructed fixture (high-usage ≠
-    * irreplaceable: a token whose words all have near-equal alternate
-    * paths is cheap to drop no matter how often it is used).
-    *
-    * Report: the kept tokens by loss rank with their exact e6 loss
-    * (NULL for an essential token — no finite loss is defined) and
-    * their post-re-EM usage/log-prob (NULL when re-segmentation
-    * abandons a kept token). Scale shape: everything is word- or
-    * (word, used-token)-grain and embarrassingly parallel — the ONE
-    * new cost over q414 is the removal DP's fan-out (avg
-    * tokens-per-word × distinct words, one shuffle); the rank windows
-    * stay on the bounded vocab relation. */
   /** The LL-loss ranking core of q423, over explicit relations so
     * UnigramSpec can drive it with a constructed model: `uc(sub, cnt)`
     * is the model's support with usage counts (the ranked DOMAIN —
@@ -683,6 +644,38 @@ object UnigramTokenizer {
         col("ex"))).cast("int"))
   }
 
+  /** The DuckDB CTEs of [[llLossRanked]] under the model `tag` (its
+    * lattice `lat{tag}` and segmentation `seg{tag}`) and its usage
+    * counts `uc`: the candidates `cand{tag}`, the (word, ex)-keyed
+    * removal DP ([[dpChain]] over `latx{tag}`, ending in `segx{tag}` —
+    * a pair absent when the word has no full path without `ex`), the
+    * per-token loss `pt{tag}`, and the ranked domain
+    * `rkm{tag}(ex, cnt, ess, ll_loss, rnk)`. */
+  private[llmops] def llLossRankedSql(tag: String, uc: String): String =
+    s"""cand$tag AS MATERIALIZED (
+       |  SELECT DISTINCT word, freq, token AS ex
+       |  FROM (SELECT word, freq, unnest($PathTokensSql) AS token FROM seg$tag) t
+       |  WHERE len(token) > 1),
+       |latx$tag AS MATERIALIZED (
+       |  SELECT c.word, c.ex, l.j, l.i, l.sub, l.lp
+       |  FROM cand$tag c JOIN lat$tag l USING (word)
+       |  WHERE l.sub != c.ex),
+       |${dpChain(s"x$tag", s"latx$tag", s"cand$tag", Seq("word", "ex"))},
+       |pt$tag AS (
+       |  SELECT c.ex, MAX(CASE WHEN sx.score IS NULL THEN 1 ELSE 0 END) AS ess,
+       |    CAST(SUM(c.freq * (sb.score - sx.score)) AS BIGINT) AS loss_raw
+       |  FROM cand$tag c JOIN seg$tag sb USING (word)
+       |  LEFT JOIN segx$tag sx ON sx.word = c.word AND sx.ex = c.ex
+       |  GROUP BY c.ex),
+       |rkm$tag AS MATERIALIZED (
+       |  SELECT ex, cnt, ess, ll_loss,
+       |    ROW_NUMBER() OVER (ORDER BY ess DESC, ll_loss DESC NULLS LAST, ex) AS rnk
+       |  FROM (SELECT u.sub AS ex, u.cnt, COALESCE(pt.ess, 0) AS ess,
+       |          CASE WHEN COALESCE(pt.ess, 0) = 1 THEN NULL
+       |               ELSE COALESCE(pt.loss_raw, 0) END AS ll_loss
+       |        FROM $uc u LEFT JOIN pt$tag pt ON pt.ex = u.sub
+       |        WHERE len(u.sub) > 1) d)""".stripMargin
+
   /** ONE LL-loss prune round — the iterable unit of Kudo's pruning
     * schedule, shared by q423 (one round) and q430 (two rounds): given
     * the corpus lattice `ed` and the current model's usage counts `uc`
@@ -708,69 +701,62 @@ object UnigramTokenizer {
     (keepm, usageCounts(viterbi(ed, vcP)))
   }
 
-  val q423UnigramPruneLlLoss: QuerySpec = QuerySpec(
-    "q423_unigram_prune_llloss",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |${dpChain("b", "lat1")},
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT word, freq, token AS ex
-       |  FROM (SELECT word, freq, unnest(string_split(path, ' ')) AS token
-       |        FROM segb) t
-       |  WHERE len(token) > 1),
-       |latx AS MATERIALIZED (
-       |  SELECT c.word, c.ex, l.j, l.i, l.sub, l.lp
-       |  FROM cand c JOIN lat1 l USING (word)
-       |  WHERE l.sub != c.ex),
-       |${dpChainKeyed("latx", "cand")},
-       |pw AS (SELECT c.ex, c.freq, sb.score, sx.score AS score_wo
-       |       FROM cand c JOIN segb sb USING (word)
-       |       LEFT JOIN segx sx ON sx.word = c.word AND sx.ex = c.ex),
-       |pt AS (SELECT ex,
-       |         MAX(CASE WHEN score_wo IS NULL THEN 1 ELSE 0 END) AS ess,
-       |         CAST(SUM(CASE WHEN score_wo IS NOT NULL
-       |                       THEN freq * (score - score_wo) END) AS BIGINT)
-       |           AS loss_raw
-       |       FROM pw GROUP BY ex),
-       |dom AS (SELECT u.sub AS ex, u.cnt, COALESCE(pt.ess, 0) AS ess,
-       |          CASE WHEN COALESCE(pt.ess, 0) = 1 THEN NULL
-       |               ELSE COALESCE(pt.loss_raw, 0) END AS ll_loss
-       |        FROM uc u LEFT JOIN pt ON pt.ex = u.sub
-       |        WHERE len(u.sub) > 1),
-       |rkm AS (SELECT ex, cnt, ess, ll_loss,
-       |          ROW_NUMBER() OVER (ORDER BY ess DESC,
-       |            ll_loss DESC NULLS LAST, ex) AS rnk
-       |        FROM dom),
-       |keepm AS (SELECT * FROM rkm WHERE rnk <= $TargetMulti),
-       |chfloor3 AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
-       |             FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
-       |             WHERE sub NOT IN (SELECT sub FROM uc)),
-       |keep3 AS (SELECT sub, cnt FROM uc WHERE len(sub) = 1
-       |          UNION ALL SELECT ex AS sub, cnt FROM keepm
-       |          UNION ALL SELECT sub, cnt FROM chfloor3),
-       |tot3 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM keep3),
-       |vc3 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM keep3 CROSS JOIN tot3),
-       |lat3 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc3 v USING (sub)),
-       |${dpChain("c", "lat3")},
-       |uc4 AS (SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |        FROM (SELECT unnest(string_split(path, ' ')) AS token, freq
-       |              FROM segc) t
-       |        GROUP BY token),
-       |tot4 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM uc4),
-       |vc4 AS (SELECT sub, cnt,
-       |          CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |        FROM uc4 CROSS JOIN tot4)
+  /** The DuckDB CTEs of [[llLossPruneRound]] at `tag` from the usage
+    * counts `uc`: the model `vc{tag}`/`lat{tag}` and its segmentation,
+    * the [[llLossRankedSql]] ranking, the kept tokens `keepm{tag}`, the
+    * pruned model `p{tag}` and its usage `ucp{tag}` — the next round's
+    * `uc`. */
+  private[llmops] def llLossPruneRoundSql(tag: String, uc: String,
+                                          target: Int): String =
+    s"""${modelSql(tag, uc)},
+       |${dpChain(tag, s"lat$tag")},
+       |${llLossRankedSql(tag, uc)},
+       |keepm$tag AS (SELECT * FROM rkm$tag WHERE rnk <= $target),
+       |${prunedVocabSql(s"p$tag", uc, s"SELECT ex AS sub, cnt FROM keepm$tag")},
+       |${dpChain(s"p$tag", s"latp$tag")},
+       |${usageSql(s"p$tag")}""".stripMargin
+
+  /** The q423/q430 report in DuckDB text after the last prune round
+    * `tag`: its kept tokens by loss rank with the re-estimated usage and
+    * log-prob (`vcf`, [[logProbsSql]] over `ucp{tag}`). */
+  private def llLossReportSql(tag: String): String =
+    s"""${logProbsSql("f", s"ucp$tag")}
        |SELECT CAST(k.rnk AS INT) AS rnk, k.ex AS token,
        |  CAST(k.ll_loss AS BIGINT) AS ll_loss_e6,
        |  CAST(v.cnt AS BIGINT) AS cnt2, v.lp AS lp2_e6
-       |FROM keepm k LEFT JOIN vc4 v ON v.sub = k.ex
-       |ORDER BY rnk""".stripMargin) { (s, dir) =>
+       |FROM keepm$tag k LEFT JOIN vcf v ON v.sub = k.ex
+       |ORDER BY rnk""".stripMargin
+
+  /** One prune-EM iteration by LIKELIHOOD-LOSS rank — Kudo 2018 §3.2's
+    * pruning criterion, exact under hard-EM: for every multi-char token
+    * x of the EM-trained model, the corpus-LL drop if x left the
+    * vocabulary is Σ_w freq(w) · (score(w) − score_without_x(w)) over
+    * the words whose CURRENT best path uses x (elsewhere the optimum
+    * cannot change), with score_without_x an exact re-run of the same
+    * Viterbi DP on the word's lattice minus x's edges
+    * ([[viterbiScoreWithout]]). Keep the [[TargetMulti]] multi-char
+    * tokens whose removal hurts MOST (essential tokens — whose removal
+    * leaves some word with NO full path — rank above every finite
+    * loss), re-normalize with the q414 keep arms (singles + char
+    * floor), re-segment, and re-estimate: one full prune→EM step.
+    * UnigramSpec pins that the kept set genuinely DIFFERS from q414's
+    * usage-ranked choice on a constructed fixture (high-usage ≠
+    * irreplaceable: a token whose words all have near-equal alternate
+    * paths is cheap to drop no matter how often it is used).
+    *
+    * Report: the kept tokens by loss rank with their exact e6 loss
+    * (NULL for an essential token — no finite loss is defined) and
+    * their post-re-EM usage/log-prob (NULL when re-segmentation
+    * abandons a kept token). Scale shape: everything is word- or
+    * (word, used-token)-grain and embarrassingly parallel — the ONE
+    * new cost over q414 is the removal DP's fan-out (avg
+    * tokens-per-word × distinct words, one shuffle); the rank windows
+    * stay on the bounded vocab relation. */
+  val q423UnigramPruneLlLoss: QuerySpec = QuerySpec(
+    "q423_unigram_prune_llloss",
+    s"""WITH $seedUsageSql,
+       |${llLossPruneRoundSql("1", "uc0", TargetMulti)},
+       |${llLossReportSql("1")}""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val ed = edges(wordFreqs(sp))
       .staged // seed counts, every lattice, and the char floor read it
@@ -807,125 +793,10 @@ object UnigramTokenizer {
     * beyond the staged round boundary). */
   val q430UnigramPruneLlLoss2: QuerySpec = QuerySpec(
     "q430_unigram_prune_llloss2",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |${dpChain("b", "lat1")},
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT word, freq, token AS ex
-       |  FROM (SELECT word, freq, unnest(string_split(path, ' ')) AS token
-       |        FROM segb) t
-       |  WHERE len(token) > 1),
-       |latx AS MATERIALIZED (
-       |  SELECT c.word, c.ex, l.j, l.i, l.sub, l.lp
-       |  FROM cand c JOIN lat1 l USING (word)
-       |  WHERE l.sub != c.ex),
-       |${dpChainKeyed("latx", "cand")},
-       |pw AS (SELECT c.ex, c.freq, sb.score, sx.score AS score_wo
-       |       FROM cand c JOIN segb sb USING (word)
-       |       LEFT JOIN segx sx ON sx.word = c.word AND sx.ex = c.ex),
-       |pt AS (SELECT ex,
-       |         MAX(CASE WHEN score_wo IS NULL THEN 1 ELSE 0 END) AS ess,
-       |         CAST(SUM(CASE WHEN score_wo IS NOT NULL
-       |                       THEN freq * (score - score_wo) END) AS BIGINT)
-       |           AS loss_raw
-       |       FROM pw GROUP BY ex),
-       |dom AS (SELECT u.sub AS ex, u.cnt, COALESCE(pt.ess, 0) AS ess,
-       |          CASE WHEN COALESCE(pt.ess, 0) = 1 THEN NULL
-       |               ELSE COALESCE(pt.loss_raw, 0) END AS ll_loss
-       |        FROM uc u LEFT JOIN pt ON pt.ex = u.sub
-       |        WHERE len(u.sub) > 1),
-       |rkm AS (SELECT ex, cnt, ess, ll_loss,
-       |          ROW_NUMBER() OVER (ORDER BY ess DESC,
-       |            ll_loss DESC NULLS LAST, ex) AS rnk
-       |        FROM dom),
-       |keepm AS (SELECT * FROM rkm WHERE rnk <= $TargetMulti),
-       |chfloor3 AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
-       |             FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
-       |             WHERE sub NOT IN (SELECT sub FROM uc)),
-       |keep3 AS (SELECT sub, cnt FROM uc WHERE len(sub) = 1
-       |          UNION ALL SELECT ex AS sub, cnt FROM keepm
-       |          UNION ALL SELECT sub, cnt FROM chfloor3),
-       |tot3 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM keep3),
-       |vc3 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM keep3 CROSS JOIN tot3),
-       |lat3 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc3 v USING (sub)),
-       |${dpChain("c", "lat3")},
-       |uc4 AS MATERIALIZED (
-       |  SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, freq
-       |        FROM segc) t
-       |  GROUP BY token),
-       |tot4 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM uc4),
-       |vc4 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM uc4 CROSS JOIN tot4),
-       |lat4 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc4 v USING (sub)),
-       |${dpChain("d", "lat4")},
-       |cand2 AS MATERIALIZED (
-       |  SELECT DISTINCT word, freq, token AS ex
-       |  FROM (SELECT word, freq, unnest(string_split(path, ' ')) AS token
-       |        FROM segd) t
-       |  WHERE len(token) > 1),
-       |latx2 AS MATERIALIZED (
-       |  SELECT c.word, c.ex, l.j, l.i, l.sub, l.lp
-       |  FROM cand2 c JOIN lat4 l USING (word)
-       |  WHERE l.sub != c.ex),
-       |${dpChainKeyed("latx2", "cand2", "b")},
-       |pw2 AS (SELECT c.ex, c.freq, sb.score, sx.score AS score_wo
-       |        FROM cand2 c JOIN segd sb USING (word)
-       |        LEFT JOIN segxb sx ON sx.word = c.word AND sx.ex = c.ex),
-       |pt2 AS (SELECT ex,
-       |          MAX(CASE WHEN score_wo IS NULL THEN 1 ELSE 0 END) AS ess,
-       |          CAST(SUM(CASE WHEN score_wo IS NOT NULL
-       |                        THEN freq * (score - score_wo) END) AS BIGINT)
-       |            AS loss_raw
-       |        FROM pw2 GROUP BY ex),
-       |dom2 AS (SELECT u.sub AS ex, u.cnt, COALESCE(pt2.ess, 0) AS ess,
-       |           CASE WHEN COALESCE(pt2.ess, 0) = 1 THEN NULL
-       |                ELSE COALESCE(pt2.loss_raw, 0) END AS ll_loss
-       |         FROM uc4 u LEFT JOIN pt2 ON pt2.ex = u.sub
-       |         WHERE len(u.sub) > 1),
-       |rkm2 AS (SELECT ex, cnt, ess, ll_loss,
-       |           ROW_NUMBER() OVER (ORDER BY ess DESC,
-       |             ll_loss DESC NULLS LAST, ex) AS rnk
-       |         FROM dom2),
-       |keepm2 AS (SELECT * FROM rkm2 WHERE rnk <= $TargetMulti2),
-       |chfloor5 AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
-       |             FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
-       |             WHERE sub NOT IN (SELECT sub FROM uc4)),
-       |keep5 AS (SELECT sub, cnt FROM uc4 WHERE len(sub) = 1
-       |          UNION ALL SELECT ex AS sub, cnt FROM keepm2
-       |          UNION ALL SELECT sub, cnt FROM chfloor5),
-       |tot5 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM keep5),
-       |vc5 AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM keep5 CROSS JOIN tot5),
-       |lat5 AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vc5 v USING (sub)),
-       |${dpChain("e", "lat5")},
-       |uc6 AS (SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |        FROM (SELECT unnest(string_split(path, ' ')) AS token, freq
-       |              FROM sege) t
-       |        GROUP BY token),
-       |tot6 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM uc6),
-       |vc6 AS (SELECT sub, cnt,
-       |          CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |        FROM uc6 CROSS JOIN tot6)
-       |SELECT CAST(k.rnk AS INT) AS rnk, k.ex AS token,
-       |  CAST(k.ll_loss AS BIGINT) AS ll_loss_e6,
-       |  CAST(v.cnt AS BIGINT) AS cnt2, v.lp AS lp2_e6
-       |FROM keepm2 k LEFT JOIN vc6 v ON v.sub = k.ex
-       |ORDER BY rnk""".stripMargin) { (s, dir) =>
+    s"""WITH $seedUsageSql,
+       |${llLossPruneRoundSql("1", "uc0", TargetMulti)},
+       |${llLossPruneRoundSql("2", "ucp1", TargetMulti2)},
+       |${llLossReportSql("2")}""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val ed = edges(wordFreqs(sp))
       .staged // seed counts, every lattice, and both char floors read it
@@ -975,59 +846,17 @@ object UnigramTokenizer {
     * build and one word-grain Viterbi — never a corpus rescan. */
   val q434UnigramVocabSweep: QuerySpec = {
     val perSizeCtes = SweepMultis.map { k =>
-      s"""keep_$k AS (SELECT sub, cnt FROM uc WHERE len(sub) = 1
-         |            UNION ALL SELECT ex AS sub, cnt FROM rkm WHERE rnk <= $k
-         |            UNION ALL SELECT sub, cnt FROM chfloor),
-         |tot_$k AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM keep_$k),
-         |vc_$k AS MATERIALIZED (
-         |  SELECT sub, cnt,
-         |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-         |  FROM keep_$k CROSS JOIN tot_$k),
-         |lat_$k AS MATERIALIZED (
-         |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-         |  FROM ed e JOIN vc_$k v USING (sub)),
-         |${dpChain(s"m$k", s"lat_$k")},
+      s"""${prunedVocabSql(s"m$k", "uc0", s"SELECT ex AS sub, cnt FROM rkm1 WHERE rnk <= $k")},
+         |${dpChain(s"m$k", s"latm$k")},
          |rep_$k AS (${TextAnalysis.fertilityByLangSql(s"segm$k", PathTokensSql,
             s"$k AS vocab_multi, ")})""".stripMargin
     }.mkString(",\n")
     val unionAll = SweepMultis
       .map(k => s"SELECT * FROM rep_$k").mkString(" UNION ALL ")
     QuerySpec("q434_unigram_vocab_sweep",
-      s"""WITH $oracleSeed,
-         |${dpChain("a", "lat0")},
-         |$emRetrainCtes,
-         |${dpChain("b", "lat1")},
-         |cand AS MATERIALIZED (
-         |  SELECT DISTINCT word, freq, token AS ex
-         |  FROM (SELECT word, freq, unnest(string_split(path, ' ')) AS token
-         |        FROM segb) t
-         |  WHERE len(token) > 1),
-         |latx AS MATERIALIZED (
-         |  SELECT c.word, c.ex, l.j, l.i, l.sub, l.lp
-         |  FROM cand c JOIN lat1 l USING (word)
-         |  WHERE l.sub != c.ex),
-         |${dpChainKeyed("latx", "cand")},
-         |pw AS (SELECT c.ex, c.freq, sb.score, sx.score AS score_wo
-         |       FROM cand c JOIN segb sb USING (word)
-         |       LEFT JOIN segx sx ON sx.word = c.word AND sx.ex = c.ex),
-         |pt AS (SELECT ex,
-         |         MAX(CASE WHEN score_wo IS NULL THEN 1 ELSE 0 END) AS ess,
-         |         CAST(SUM(CASE WHEN score_wo IS NOT NULL
-         |                       THEN freq * (score - score_wo) END) AS BIGINT)
-         |           AS loss_raw
-         |       FROM pw GROUP BY ex),
-         |dom AS (SELECT u.sub AS ex, u.cnt, COALESCE(pt.ess, 0) AS ess,
-         |          CASE WHEN COALESCE(pt.ess, 0) = 1 THEN NULL
-         |               ELSE COALESCE(pt.loss_raw, 0) END AS ll_loss
-         |        FROM uc u LEFT JOIN pt ON pt.ex = u.sub
-         |        WHERE len(u.sub) > 1),
-         |rkm AS (SELECT ex, cnt, ess, ll_loss,
-         |          ROW_NUMBER() OVER (ORDER BY ess DESC,
-         |            ll_loss DESC NULLS LAST, ex) AS rnk
-         |        FROM dom),
-         |chfloor AS (SELECT sub, CAST($CharFloor AS BIGINT) AS cnt
-         |            FROM (SELECT DISTINCT sub FROM ed WHERE len(sub) = 1) s
-         |            WHERE sub NOT IN (SELECT sub FROM uc)),
+      s"""WITH $seedEmSql,
+         |${dpChain("1", "lat1")},
+         |${llLossRankedSql("1", "uc0")},
          |${TextAnalysis.wordCountsBySql("wl", "lang")},
          |$perSizeCtes
          |SELECT CAST(vocab_multi AS INT) AS vocab_multi, lang, n_words,
@@ -1142,20 +971,9 @@ object UnigramTokenizer {
       .mkString(", ")
     QuerySpec(
       "q413_unigram_encode_expr",
-      s"""WITH wf AS (
-         |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) u
-         |  WHERE word != '' GROUP BY word),
-         |ed AS MATERIALIZED (
-         |  SELECT word, freq, CAST(j AS INT) AS j, CAST(j + l AS INT) AS i,
-         |         word[j + 1 : j + l] AS sub
-         |  FROM wf,
-         |    LATERAL (SELECT unnest(range(0, len(word))) AS j) a,
-         |    LATERAL (SELECT unnest(range(1, least($SubMaxLen, len(word) - j) + 1)) AS l) b),
+      s"""WITH $wordLatticeSql,
          |vcs(sub, lp) AS (VALUES $vals),
-         |lats AS MATERIALIZED (
-         |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-         |  FROM ed e JOIN vcs v USING (sub)),
+         |${latticeSql("s")},
          |${dpChain("s", "lats")},
          |enc AS (SELECT w.word, w.freq, COALESCE(s.path, '$Unk') AS path
          |        FROM wf w LEFT JOIN segs s USING (word))
@@ -1184,43 +1002,12 @@ object UnigramTokenizer {
     * barrier. */
   val q421UnigramEm2: QuerySpec = QuerySpec(
     "q421_unigram_em2",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |${dpChain("b", "lat1")},
-       |ucb AS MATERIALIZED (
-       |  SELECT token AS sub, CAST(SUM(freq) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(string_split(path, ' ')) AS token, freq FROM segb) t
-       |  GROUP BY token),
-       |totb AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tot FROM ucb),
-       |vcb AS MATERIALIZED (
-       |  SELECT sub, cnt,
-       |         CAST(ROUND(LN(CAST(cnt AS DOUBLE) / tot) * 1e6) AS BIGINT) AS lp
-       |  FROM ucb CROSS JOIN totb),
-       |latb AS MATERIALIZED (
-       |  SELECT e.word, e.freq, e.j, e.i, e.sub, v.lp
-       |  FROM ed e JOIN vcb v USING (sub)),
-       |${dpChain("c", "latb")},
-       |r0 AS (SELECT CAST(0 AS BIGINT) AS round,
-       |              (SELECT CAST(COUNT(*) AS BIGINT) FROM vc0) AS vocab_size,
-       |              CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |                AS tokens_total,
-       |              CAST(SUM(freq * score) AS BIGINT) AS ll_e6
-       |       FROM sega),
-       |r1 AS (SELECT CAST(1 AS BIGINT) AS round,
-       |              (SELECT CAST(COUNT(*) AS BIGINT) FROM vc1) AS vocab_size,
-       |              CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |                AS tokens_total,
-       |              CAST(SUM(freq * score) AS BIGINT) AS ll_e6
-       |       FROM segb),
-       |r2 AS (SELECT CAST(2 AS BIGINT) AS round,
-       |              (SELECT CAST(COUNT(*) AS BIGINT) FROM vcb) AS vocab_size,
-       |              CAST(SUM(freq * len(string_split(path, ' '))) AS BIGINT)
-       |                AS tokens_total,
-       |              CAST(SUM(freq * score) AS BIGINT) AS ll_e6
-       |       FROM segc)
-       |SELECT * FROM r0 UNION ALL SELECT * FROM r1 UNION ALL SELECT * FROM r2
-       |ORDER BY round""".stripMargin) { (s, dir) =>
+    s"""WITH $seedEmSql,
+       |${dpChain("1", "lat1")},
+       |${usageSql("1")},
+       |${modelSql("2", "uc1")},
+       |${dpChain("2", "lat2")}
+       |${emReportSql(2)}""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val ed = edges(wordFreqs(sp)).staged // seed counts + all three lattices
     val vc0 = seedVocab(ed).staged
@@ -1261,41 +1048,6 @@ object UnigramTokenizer {
       "best2",
       array(struct(lit(null).cast("long").as("score"), lit(Unk).as("path"))))
 
-  /** The 2-best DP chain unrolled for DuckDB: `dp2{p}` holds up to TWO
-    * rows per word into position p (rn 1..2), candidates ranked by the
-    * same total order as the expression side. */
-  private def dp2Chain(latRel: String, spine: String): String = {
-    val parts = Seq.newBuilder[String]
-    parts += s"""dp2x0 AS (SELECT word, freq, 0 AS pos,
-                |  CAST(0 AS BIGINT) AS score, '' AS path, 1 AS rn
-                |  FROM $spine)""".stripMargin
-    for (p <- 1 to MaxWordLen) {
-      val prevs = (math.max(0, p - SubMaxLen) until p)
-        .map(q => s"SELECT word, freq, pos, score, path, rn FROM dp2x$q")
-        .mkString(" UNION ALL ")
-      parts += s"""dp2x$p AS MATERIALIZED (
-                  |  SELECT word, freq, pos, score, path, rn FROM (
-                  |    SELECT e.word, e.freq, $p AS pos, d.score + e.lp AS score,
-                  |           d.path || ' ' || e.sub AS path,
-                  |           ROW_NUMBER() OVER (PARTITION BY e.word
-                  |             ORDER BY d.score + e.lp DESC, e.j DESC, d.rn ASC)
-                  |             AS rn
-                  |    FROM $latRel e JOIN ($prevs) d
-                  |      ON e.word = d.word AND e.j = d.pos
-                  |    WHERE e.i = $p) z
-                  |  WHERE rn <= 2)""".stripMargin
-    }
-    val finals = (1 to MaxWordLen)
-      .map(p => s"SELECT word, freq, pos, score, path, rn FROM dp2x$p")
-      .mkString(" UNION ALL ")
-    parts += s"""seg2 AS (
-                |  SELECT d.word, d.freq, d.rn, d.score, trim(d.path) AS path
-                |  FROM ($finals) d
-                |  JOIN (SELECT word AS w2, len(word) AS lw FROM wf) x
-                |    ON d.word = x.w2 AND d.pos = x.lw)""".stripMargin
-    parts.result().mkString(",\n")
-  }
-
   /** 2-best segmentations of the 10 most frequent corpus words under
     * the seed model — per word: both paths with exact e6 scores, the
     * relation a subword-regularization sampler draws from (Kudo's
@@ -1305,15 +1057,15 @@ object UnigramTokenizer {
     * corpus-generic and embarrassingly parallel). */
   val q420Unigram2Best: QuerySpec = QuerySpec(
     "q420_unigram_2best",
-    s"""WITH $oracleSeed,
+    s"""WITH $seedSql,
        |top10 AS (SELECT word, freq FROM wf ORDER BY freq DESC, word LIMIT 10),
        |latt AS MATERIALIZED (
        |  SELECT l.word, l.freq, l.j, l.i, l.sub, l.lp
        |  FROM lat0 l JOIN top10 USING (word)),
-       |${dp2Chain("latt", "top10")}
+       |${dpChain("t", "latt", spine = "top10", k = 2)}
        |SELECT s.word, s.freq, CAST(s.rn AS INT) AS rnk,
        |       s.score AS score_e6, s.path AS seg
-       |FROM seg2 s
+       |FROM segt s
        |ORDER BY s.freq DESC, s.word, rnk""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val ed = edges(wordFreqs(sp)).staged // vocab counts + spine + lattice
@@ -1350,17 +1102,14 @@ object UnigramTokenizer {
     * the streaming-deployable zero-join form. Per-source compression is
     * the held-out signal, exactly the q412 report shape. The char floor
     * makes vc2 covering, so the UNK arm is unreachable here (pinned by
-    * UnigramSpec; the oracle's segc spine relies on it the same way
+    * UnigramSpec; the oracle's seg2 spine relies on it the same way
     * q412's does). */
   val q417UnigramArtifactEncode: QuerySpec = QuerySpec(
     "q417_unigram_artifact_encode",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |$prunedModelCtes,
-       |${dpChain("c", "lat2")},
+    s"""WITH $seedEmPrunedSql,
+       |${dpChain("2", "lat2")},
        |${TextAnalysis.wordCountsBySql("ws", "source")}
-       |${TextAnalysis.perSourceCompressionSql("segc", PathTokensSql)}""".stripMargin) {
+       |${TextAnalysis.perSourceCompressionSql("seg2", PathTokensSql)}""".stripMargin) {
     (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
       val artifact = shippedModel(sp)
@@ -1393,13 +1142,10 @@ object UnigramTokenizer {
     * the word grain. */
   val q424UnigramFertility: QuerySpec = QuerySpec(
     "q424_unigram_fertility",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |$prunedModelCtes,
-       |${dpChain("c", "lat2")},
+    s"""WITH $seedEmPrunedSql,
+       |${dpChain("2", "lat2")},
        |${TextAnalysis.wordCountsBySql("wl", "lang")}
-       |${TextAnalysis.fertilityByLangSql("segc", PathTokensSql)}
+       |${TextAnalysis.fertilityByLangSql("seg2", PathTokensSql)}
        |ORDER BY lang""".stripMargin) { (s, dir) =>
     val sp = QuerySpec.prepared(s, dir)
     val artifact = shippedModel(sp)
@@ -1478,10 +1224,6 @@ object UnigramTokenizer {
     sampledSegmentsUnder(sp, ed, seedVocab(ed), alpha)
   }
 
-  /** [[sampledSegments]] under an EXPLICIT `(sub, lp)` model — the form
-    * a SHIPPED artifact feeds (q429 samples under the q414-pruned
-    * model; the seed model is just the default instance). `ed` is the
-    * corpus lattice ([[edges]], typically staged by the caller). */
   /** The flattened 2-best relation `(word, s1, p1, s2, p2)` under a
     * model — what a release SHIPS for the sampling path (the q417
     * artifact story at the distinct-word grain): built once per
@@ -1523,6 +1265,10 @@ object UnigramTokenizer {
         when(col("s2").isNull || col("u_e6") < col("p1_e6"), col("p1"))
           .otherwise(col("p2")))
 
+  /** [[sampledSegments]] under an EXPLICIT `(sub, lp)` model — the form
+    * a SHIPPED artifact feeds (q429 samples under the q414-pruned
+    * model; the seed model is just the default instance). `ed` is the
+    * corpus lattice ([[edges]], typically staged by the caller). */
   private[graft] def sampledSegmentsUnder(sp: SparkSession, ed: DataFrame,
                                           vocab: DataFrame,
                                           alpha: Double): DataFrame = {
@@ -1532,6 +1278,31 @@ object UnigramTokenizer {
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("nocc"))
     samplePick(dw.join(best2Under(ed, vocab), Seq("word")), alpha)
   }
+
+  /** The DuckDB text of [[sampledSegmentsUnder]] (and its
+    * [[samplePick]]) over a 2-best segmentation `seg` ([[dpChain]] at
+    * k = 2): the (doc, word) rollup `dw`, the two ranks, the frozen
+    * hash and quantized softmax gate `ch`, and the sampled
+    * `pick(doc_id, word, nocc, path)`. */
+  private[llmops] def samplePickSql(seg: String): String =
+    s"""dw AS MATERIALIZED (
+       |  SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS nocc
+       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
+       |        FROM documents) u
+       |  WHERE word != '' GROUP BY doc_id, word),
+       |b1 AS (SELECT word, score AS s1, path AS p1 FROM $seg WHERE rn = 1),
+       |b2 AS (SELECT word, score AS s2, path AS p2 FROM $seg WHERE rn = 2),
+       |ch AS (SELECT dw.doc_id, dw.word, dw.nocc, b1.s1, b1.p1, b2.s2, b2.p2,
+       |         ($SampleHashSqlDuck) AS u_e6,
+       |         CASE WHEN b2.s2 IS NULL THEN 1000000
+       |              ELSE CAST(ROUND(1e6 / (1 + EXP($SampleAlpha
+       |                * CAST(b2.s2 - b1.s1 AS DOUBLE) / 1e6))) AS BIGINT)
+       |         END AS p1_e6
+       |       FROM dw JOIN b1 USING (word) LEFT JOIN b2 USING (word)),
+       |pick AS (SELECT doc_id, word, nocc,
+       |           CASE WHEN s2 IS NULL OR u_e6 < p1_e6 THEN p1 ELSE p2 END
+       |             AS path
+       |         FROM ch)""".stripMargin
 
   /** The sampled-encode report: corpus-weighted top-30 tokens of the
     * SAMPLED segmentations — the token distribution a subword-
@@ -1546,26 +1317,9 @@ object UnigramTokenizer {
     * would take the Spark <unk> arm but drop from the replay's spine. */
   val q425UnigramSampledEncode: QuerySpec = QuerySpec(
     "q425_unigram_sampled_encode",
-    s"""WITH $oracleSeed,
-       |${dp2Chain("lat0", "wf")},
-       |dw AS MATERIALIZED (
-       |  SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS nocc
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-       |        FROM documents) u
-       |  WHERE word != '' GROUP BY doc_id, word),
-       |b1 AS (SELECT word, score AS s1, path AS p1 FROM seg2 WHERE rn = 1),
-       |b2 AS (SELECT word, score AS s2, path AS p2 FROM seg2 WHERE rn = 2),
-       |ch AS (SELECT dw.doc_id, dw.word, dw.nocc, b1.s1, b1.p1, b2.s2, b2.p2,
-       |         ($SampleHashSqlDuck) AS u_e6,
-       |         CASE WHEN b2.s2 IS NULL THEN 1000000
-       |              ELSE CAST(ROUND(1e6 / (1 + EXP($SampleAlpha
-       |                * CAST(b2.s2 - b1.s1 AS DOUBLE) / 1e6))) AS BIGINT)
-       |         END AS p1_e6
-       |       FROM dw JOIN b1 USING (word) LEFT JOIN b2 USING (word)),
-       |pick AS (SELECT doc_id, word, nocc,
-       |           CASE WHEN s2 IS NULL OR u_e6 < p1_e6 THEN p1 ELSE p2 END
-       |             AS path
-       |         FROM ch)
+    s"""WITH $seedSql,
+       |${dpChain("k", "lat0", k = 2)},
+       |${samplePickSql("segk")}
        |${TextAnalysis.topTokensSql("pick", PathTokensSql, "nocc")}""".stripMargin) {
     (s, dir) =>
       TextAnalysis.topTokens(sampledSegments(QuerySpec.prepared(s, dir), SampleAlpha),
@@ -1582,29 +1336,9 @@ object UnigramTokenizer {
     * derivation q414 already prices. */
   val q429UnigramSampledArtifact: QuerySpec = QuerySpec(
     "q429_unigram_sampled_artifact",
-    s"""WITH $oracleSeed,
-       |${dpChain("a", "lat0")},
-       |$emRetrainCtes,
-       |$prunedModelCtes,
-       |${dp2Chain("lat2", "wf")},
-       |dw AS MATERIALIZED (
-       |  SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS nocc
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-       |        FROM documents) u
-       |  WHERE word != '' GROUP BY doc_id, word),
-       |b1 AS (SELECT word, score AS s1, path AS p1 FROM seg2 WHERE rn = 1),
-       |b2 AS (SELECT word, score AS s2, path AS p2 FROM seg2 WHERE rn = 2),
-       |ch AS (SELECT dw.doc_id, dw.word, dw.nocc, b1.s1, b1.p1, b2.s2, b2.p2,
-       |         ($SampleHashSqlDuck) AS u_e6,
-       |         CASE WHEN b2.s2 IS NULL THEN 1000000
-       |              ELSE CAST(ROUND(1e6 / (1 + EXP($SampleAlpha
-       |                * CAST(b2.s2 - b1.s1 AS DOUBLE) / 1e6))) AS BIGINT)
-       |         END AS p1_e6
-       |       FROM dw JOIN b1 USING (word) LEFT JOIN b2 USING (word)),
-       |pick AS (SELECT doc_id, word, nocc,
-       |           CASE WHEN s2 IS NULL OR u_e6 < p1_e6 THEN p1 ELSE p2 END
-       |             AS path
-       |         FROM ch)
+    s"""WITH $seedEmPrunedSql,
+       |${dpChain("k", "lat2", k = 2)},
+       |${samplePickSql("segk")}
        |${TextAnalysis.topTokensSql("pick", PathTokensSql, "nocc")}""".stripMargin) {
     (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)

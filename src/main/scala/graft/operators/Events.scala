@@ -636,21 +636,6 @@ object Events {
       |      FROM events GROUP BY user_id) u
       |WHERE first_signup IS NOT NULL""".stripMargin)
 
-  /** As-of join: attach each view event's most recent prior purchase
-    * (ts-inclusive) for the same user. The reference has no as-of
-    * operator; per the build brief's preference order this composes
-    * existing ops rather than adding a plan node: build and probe streams
-    * are UNIONed with a side tag (build sorts before probe at equal ts,
-    * giving inclusive semantics) and a last_value(IGNORE NULLS) running
-    * window carries the build value forward — ONE shuffle on user_id,
-    * one local sort, no range self-join (which would be O(n·m) per user
-    * and is the classic as-of scaling trap). Ties are pinned by ordering
-    * the window by (ts, side, value): among same-(user, ts) purchases the
-    * running last_value lands on the MAX value — identical to the
-    * oracle's per-(user, ts) MAX pre-aggregation but without the extra
-    * shuffle a pre-aggregation would plan (verified via graft.Explain:
-    * exactly one wide exchange before the window). Oracle: DuckDB's
-    * native ASOF LEFT JOIN over the pre-aggregated build side. */
   /** Reusable as-of composition: for each probe row, the value of the
     * latest build row with the same user_id and build.ts <= probe.ts
     * (ties at equal ts resolve to the MAX build value, nulls-first — a
@@ -677,6 +662,21 @@ object Events {
         col("last_carried.value").as("last_value"))
   }
 
+  /** As-of join: attach each view event's most recent prior purchase
+    * (ts-inclusive) for the same user. The reference has no as-of
+    * operator; per the build brief's preference order this composes
+    * existing ops rather than adding a plan node: build and probe streams
+    * are UNIONed with a side tag (build sorts before probe at equal ts,
+    * giving inclusive semantics) and a last_value(IGNORE NULLS) running
+    * window carries the build value forward — ONE shuffle on user_id,
+    * one local sort, no range self-join (which would be O(n·m) per user
+    * and is the classic as-of scaling trap). Ties are pinned by ordering
+    * the window by (ts, side, value): among same-(user, ts) purchases the
+    * running last_value lands on the MAX value — identical to the
+    * oracle's per-(user, ts) MAX pre-aggregation but without the extra
+    * shuffle a pre-aggregation would plan (verified via graft.Explain:
+    * exactly one wide exchange before the window). Oracle: DuckDB's
+    * native ASOF LEFT JOIN over the pre-aggregated build side. */
   val q121AsofJoin: QuerySpec = QuerySpec(
     "q121_join_asof",
     """WITH p AS (

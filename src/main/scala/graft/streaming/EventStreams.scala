@@ -1009,14 +1009,6 @@ object EventStreams {
     retentionSweep(fs, root, committed, retainVersions, curStage = s"_stage_$ver")
   }
 
-  /** Retention, shared by the writer and [[compact]]: prune manifests
-    * beyond the newest `retainVersions`, then sweep bucket directories
-    * no retained manifest references (which also clears crash orphans —
-    * a v_ dir written but never committed). Manifest deletion comes
-    * FIRST: a mid-sweep crash strands only unreferenced data, never a
-    * ghost manifest, and [[committedVersion]] needs no data-existence
-    * probing. `committed` is the ascending version list INCLUDING the
-    * commit just written. */
   /** Txn replay markers outlive the data versions they committed by
     * this many versions: a marker is a zero-byte file, so a deep ledger
     * is nearly free, and it is what keeps [[upsertLatest]]'s replay
@@ -1030,6 +1022,14 @@ object EventStreams {
     * delete after the restore. */
   private[graft] val TxnMarkerGraceVersions = 64L
 
+  /** Retention, shared by the writer and [[compact]]: prune manifests
+    * beyond the newest `retainVersions`, then sweep bucket directories
+    * no retained manifest references (which also clears crash orphans —
+    * a v_ dir written but never committed). Manifest deletion comes
+    * FIRST: a mid-sweep crash strands only unreferenced data, never a
+    * ghost manifest, and [[committedVersion]] needs no data-existence
+    * probing. `committed` is the ascending version list INCLUDING the
+    * commit just written. */
   private def retentionSweep(
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       committed: Seq[Long], retainVersions: Int, curStage: String): Unit = {

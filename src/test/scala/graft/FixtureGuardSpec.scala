@@ -50,18 +50,21 @@ class FixtureGuardSpec extends EngineSuite {
   }
 
   test("max word length fits the q410/q411 oracle's positional DP unroll") {
-    // UnigramTokenizer's DuckDB replay unrolls one Viterbi-DP CTE per
-    // word position up to MaxWordLen; a longer word would silently fall
-    // out of the oracle's segmentation (no dp row at pos = len) while
-    // the Spark side still segments it — an inscrutable hash mismatch.
+    // UnigramTokenizer.dpChain, the one DuckDB Viterbi-DP generator,
+    // unrolls one CTE per word position up to MaxWordLen; a longer word
+    // would silently fall out of the oracle's segmentation (no dp row at
+    // pos = len) while the Spark side still segments it — an
+    // inscrutable hash mismatch.
     for (dir <- sfDirs) {
       val maxLen = spark.read.parquet(s"$dir/documents.parquet")
         .select(explode(split(col("text"), " ")).as("w"))
         .agg(max(length(col("w")))).collect()(0).getInt(0)
       assert(maxLen <= llmops.UnigramTokenizer.MaxWordLen,
         s"$dir: max word length $maxLen exceeds the oracle unroll bound " +
-          s"${llmops.UnigramTokenizer.MaxWordLen} — raise MaxWordLen in " +
-          "UnigramTokenizer.scala")
+          s"${llmops.UnigramTokenizer.MaxWordLen} of UnigramTokenizer.dpChain, " +
+          "the one DuckDB DP chain generator that every unigram-family " +
+          "oracle (q410-q434), q415 and q428 depend on — raise MaxWordLen " +
+          "in UnigramTokenizer.scala")
     }
   }
 

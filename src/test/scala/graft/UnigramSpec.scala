@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 /** Pins the unigram-LM tokenizer (llmops.UnigramTokenizer): the Viterbi
   * DP against an independent reference implementation on the real
@@ -8,7 +10,10 @@ import org.apache.spark.sql.functions._
   * guard, the coverage invariant, and the EM round's pruning/likelihood
   * behavior — the properties the q410/q411 DuckDB oracles rely on
   * matching bit-for-bit. */
-class UnigramSpec extends EngineSuite {
+class UnigramSpec extends EngineSuite with TimeLimits {
+
+  /** failAfter interrupts the test thread at the deadline. */
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private val SubMax = 4
 
@@ -720,14 +725,21 @@ class UnigramSpec extends EngineSuite {
     assert(out.last == ((30, "za", 7L)), out.last)
   }
 
-  test("report helpers: an empty corpus gives empty reports and no " +
-    "divide, even under ANSI arithmetic") {
+  /** A child session under ANSI arithmetic whose `documents` is an
+    * empty table of the fixture's schema. */
+  private def emptyCorpus(): org.apache.spark.sql.SparkSession = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.ansi.enabled", "true")
     s2.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id BIGINT, source STRING, lang STRING, text STRING"))
       .createOrReplaceTempView("documents")
+    s2
+  }
+
+  test("report helpers: an empty corpus gives empty reports and no " +
+    "divide, even under ANSI arithmetic") {
+    val s2 = emptyCorpus()
     val ta = llmops.TextAnalysis
     def bpeCounts(w: org.apache.spark.sql.DataFrame) =
       ta.tokenCounts(w.select(col("word")).distinct(),
@@ -739,5 +751,29 @@ class UnigramSpec extends EngineSuite {
     assert(ta.topTokens(ta.bpeEncodedVocab(s2), split(trim(col("seq")), "  "), "n")
       .collect().isEmpty)
     assert(top(segs()).isEmpty)
+  }
+
+  test("unigram model steps: an empty corpus ends every step with an " +
+    "empty result, with no divide and no hang, under ANSI arithmetic") {
+    val s2 = emptyCorpus()
+    val u = llmops.UnigramTokenizer
+    failAfter(300.seconds) {
+      val ed = u.edges(s2.table("documents")
+        .select(explode(split(col("text"), " ")).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")))
+      val vc0 = u.seedVocab(ed)
+      assert(vc0.collect().isEmpty)
+      val seg = u.viterbi(ed, vc0)
+      assert(seg.collect().isEmpty)
+      val uc = u.usageCounts(seg)
+      assert(uc.collect().isEmpty)
+      assert(u.withLogProbs(uc).collect().isEmpty)
+      val (keepm, ucNext) = u.llLossPruneRound(ed, uc, u.TargetMulti)
+      assert(keepm.collect().isEmpty)
+      assert(ucNext.collect().isEmpty)
+      llmops.Checkpoints.unpersist(keepm)
+      assert(u.shippedModel(s2).isEmpty)
+    }
   }
 }
