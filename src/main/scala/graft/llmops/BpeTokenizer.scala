@@ -261,29 +261,28 @@ object BpeTokenizer {
     * `syms{k}` — neighbours, pair counts, the ≤ m winners `win{k}(l, r,
     * c, brk)`, candidates → run parity → rewrite into `syms{k+1}` —
     * generated programmatically so the two engines can never drift on
-    * round count. The winners are selected as [[winners]] selects them:
-    * at m = 1 the top pair (rank 1 is never blocked), otherwise the
-    * top-`pool` candidates with rank-blind blocking. The equality left
-    * join of the winners mirrors the Spark side's empty-winner guard. */
-  private def roundSql(k: Int, m: Int, pool: Int): String = {
-    val win =
-      if (m == 1)
-        s"win$k AS (SELECT l, r, c, 1 AS brk FROM pairs$k ORDER BY c DESC, l, r LIMIT 1)"
-      else
-        s"""pool$k AS (SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY c DESC, l, r) AS rk
-           |           FROM pairs$k ORDER BY c DESC, l, r LIMIT $pool),
-           |win$k AS (
-           |  SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY rk) AS brk FROM (
-           |    SELECT p.l, p.r, p.c, p.rk FROM pool$k p WHERE NOT EXISTS (
-           |      SELECT 1 FROM pool$k q WHERE q.rk < p.rk AND
-           |        (q.l = p.l OR q.l = p.r OR q.r = p.l OR q.r = p.r))
-           |    ORDER BY rk LIMIT $m) z)""".stripMargin
+    * round count. The winners are [[batchWinners]]' selection at every m
+    * — the top-`pool` candidates with rank-blind blocking — so at m = 1
+    * the oracle checks [[winners]]' TopN shortcut instead of copying it.
+    * The equality left join of the winners mirrors the Spark side's
+    * empty-winner guard. `win{k}` is MATERIALIZED: the rewrite and every
+    * merge-table reader (q406's encode reads it once per merge step)
+    * would otherwise each re-run the pair count and the blocking
+    * anti-join. */
+  private def roundSql(k: Int, m: Int, pool: Int): String =
     s"""nx$k AS MATERIALIZED (SELECT word, freq, pos, sym,
        |    LEAD(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
        |  FROM syms$k),
        |pairs$k AS (SELECT sym AS l, nxt AS r, CAST(SUM(freq) AS BIGINT) AS c
        |  FROM nx$k WHERE nxt IS NOT NULL GROUP BY 1, 2),
-       |$win,
+       |pool$k AS (SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY c DESC, l, r) AS rk
+       |           FROM pairs$k ORDER BY c DESC, l, r LIMIT $pool),
+       |win$k AS MATERIALIZED (
+       |  SELECT l, r, c, ROW_NUMBER() OVER (ORDER BY rk) AS brk FROM (
+       |    SELECT p.l, p.r, p.c, p.rk FROM pool$k p WHERE NOT EXISTS (
+       |      SELECT 1 FROM pool$k q WHERE q.rk < p.rk AND
+       |        (q.l = p.l OR q.l = p.r OR q.r = p.l OR q.r = p.r))
+       |    ORDER BY rk LIMIT $m) z),
        |m$k AS (
        |  SELECT s.word, s.freq, s.pos, s.sym, w.l, w.r,
        |    CASE WHEN w.l IS NOT NULL THEN 1 ELSE 0 END AS cand
@@ -304,7 +303,6 @@ object BpeTokenizer {
        |  FROM (SELECT *, COALESCE(LAG(take) OVER (PARTITION BY word ORDER BY pos), 0)
        |          AS ptake FROM h$k) z
        |  WHERE ptake = 0)""".stripMargin
-  }
 
   /** The [[trainMerges]] oracle CTEs: the seed symbol table `syms0`,
     * then `rounds` × [[roundSql]], ending in `syms{rounds}` with each

@@ -79,7 +79,7 @@ object UnigramTokenizer {
   /** Corpus words with total occurrence counts — the ONLY corpus-grain
     * pass (empty tokens guarded: Spark's sequence(1, 0) throws where
     * DuckDB's range is just empty). */
-  private[llmops] def wordFreqs(sp: SparkSession): DataFrame =
+  private[graft] def wordFreqs(sp: SparkSession): DataFrame =
     sp.table("documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")

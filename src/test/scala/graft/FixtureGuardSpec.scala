@@ -62,9 +62,10 @@ class FixtureGuardSpec extends EngineSuite {
       assert(maxLen <= llmops.UnigramTokenizer.MaxWordLen,
         s"$dir: max word length $maxLen exceeds the oracle unroll bound " +
           s"${llmops.UnigramTokenizer.MaxWordLen} of UnigramTokenizer.dpChain, " +
-          "the one DuckDB DP chain generator that every unigram-family " +
-          "oracle (q410-q434), q415 and q428 depend on — raise MaxWordLen " +
-          "in UnigramTokenizer.scala")
+          "the one DuckDB DP chain generator that the unigram family " +
+          "(q410-q414, q417, q420, q421, q423-q425, q429, q430, q434), " +
+          "q415 and q428 depend on — raise MaxWordLen in " +
+          "UnigramTokenizer.scala")
     }
   }
 

@@ -758,10 +758,7 @@ class UnigramSpec extends EngineSuite with TimeLimits {
     val s2 = emptyCorpus()
     val u = llmops.UnigramTokenizer
     failAfter(300.seconds) {
-      val ed = u.edges(s2.table("documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("freq")))
+      val ed = u.edges(u.wordFreqs(s2))
       val vc0 = u.seedVocab(ed)
       assert(vc0.collect().isEmpty)
       val seg = u.viterbi(ed, vc0)
